@@ -562,9 +562,11 @@ object Hnsw {
       * one parsed Index across tasks — the monitor makes concurrent use
       * safe instead of silently corrupting walks (ADVICE r17). Within
       * one Spark job each graph row is walked by one task, so the lock
-      * is uncontended on every existing path; distinct graphs never
-      * share a monitor. Inserts stay single-threaded by construction
-      * (each build task owns a private index). */
+      * is uncontended there; concurrent SQL probes walk the same
+      * cached graphs on the driver ([[graft.plans.HnswProbeRule]]) and
+      * take turns on it. Distinct graphs never share a monitor. Inserts
+      * stay single-threaded by construction (each build task owns a
+      * private index). */
     private def searchImpl(qd: Int => Double, k: Int, ef: Int): Seq[(Long, Double)] =
       this.synchronized {
         if (entry < 0) return Seq.empty
@@ -714,7 +716,10 @@ object Hnsw {
     *    parquet bytes (re-parsing a bit-identical blob is the only
     *    work ever skipped).
     *  - READ-ONLY sharing: only the walk paths (the search, batch,
-    *    routed and filtered families) consume cached indexes, and
+    *    routed and filtered families, and the SQL probe's driver-side
+    *    walk in [[graft.plans.HnswProbeRule]], whose store-blob memo is
+    *    re-checked against [[graft.Sidecar.key]] on every probe and
+    *    evicted by `DROP INDEX`) consume cached indexes, and
     *    walks mutate nothing but the per-index visited stamps, which
     *    [[Index.searchImpl]] serializes with a monitor (walks against
     *    ONE graph are brief; distinct graphs walk fully parallel).

@@ -25,9 +25,13 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType
   * a [[VectorDistanceExpr]] between the registered embedding column
   * and a LITERAL query vector, with the sort's metric equal to the
   * index opclass metric (a pgvector `vector_l2_ops` index serves only
-  * `<->` — same rule here). On match it runs the ef-beam walk over the
-  * graph store AT REWRITE TIME (one bounded job: P graph loads, the
-  * same work the query itself would do) and injects
+  * `<->` — same rule here). On match it beam-walks the graph store AT
+  * REWRITE TIME, on the driver, with no Spark job per query: the
+  * store's `(part_id, graph)` blobs are collected once into a driver
+  * memo ([[HnswProbeRule.graphBlobs]]) and each probe takes every
+  * parsed graph from the bounded [[graft.operators.Hnsw.WalkCache]]
+  * it shares with serving — pgvector's parse-into-shared_buffers-once,
+  * walk-in-the-backend shape. It then injects
   * `id IN (<candidate ids>)` above the table scan — the Sort+Limit on
   * top then ranks the ≤ k·P survivors by EXACT distance, so the served
   * result is the exact top-k OF the graph candidates (recall = HNSW
@@ -38,24 +42,66 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType
   * pgvector, caps the per-graph candidate count at N, so
   * `ef_search < k` visibly shrinks the injected IN list.
   *
-  * Scale shape: rewrite cost is P graph deserializations + P beam
-  * walks (corpus-size-independent for a fixed graph layout; cell-
-  * routed stores pin it to nprobe), and the injected IN list is k·P
-  * ids — KB-scale plan metadata. The table scan then reads only the
-  * candidate rows' row groups (the IN filter reaches the parquet scan
-  * as PushedFilters).
+  * Scale shape: rewrite cost is P beam walks over cached graphs plus
+  * one store listing for the staleness check (corpus-size-independent
+  * for a fixed graph layout); a cold or changed store adds one collect
+  * of its blobs and P parses. The memo keeps every probed store's
+  * compressed blobs on the driver (the DDL's store lives in the
+  * driver's `java.io.tmpdir`), so a store must fit there; a graph
+  * larger than the WalkCache bound is re-parsed on each probe. The
+  * injected IN list is k·P ids — KB-scale plan metadata. The table
+  * scan then reads only the candidate rows' row groups (the IN filter
+  * reaches the parquet scan as PushedFilters).
   */
 object HnswProbeRule {
 
-  /** Gates the rewrite's graph-walk job (launched at OPTIMIZATION
-    * time, so even `explain()` on a matching plan runs it — the
-    * [[IvfProbeRule.JoinEvalKey]] precedent). Default on. */
+  /** Gates the rewrite-time graph walk (run at OPTIMIZATION time, so
+    * even `explain()` on a matching plan walks, and a cold store is
+    * collected — the [[IvfProbeRule.JoinEvalKey]] precedent). Default
+    * on. */
   val EvalKey = "spark.graft.hnsw.probeEval"
 
-  /** Test hook: counts actual graph-blob deserializations so specs pin
-    * the "≤ parts graph loads" contract as a measured number (the
-    * HnswRoutedSpec accumulator trick). */
+  /** Test hook: counts graphs walked per probe — one per blob, whether
+    * the parse ran or [[graft.operators.Hnsw.WalkCache]] answered it —
+    * so specs pin the "≤ parts graph loads" contract as a measured
+    * number (the HnswRoutedSpec accumulator trick). */
   @volatile var deserCounter: Option[org.apache.spark.util.LongAccumulator] = None
+
+  /** Driver memo of each probed store's `(part_id, graph)` blobs: store
+    * path → ([[graft.Sidecar.key]] fingerprint at load, blobs). A probe
+    * re-lists the store and reloads when the (path, length, mtime)
+    * fingerprint changed — a rebuilt or overwritten store is never
+    * served from stale bytes — and `DROP INDEX` [[evict]]s the entry.
+    * Parsed graphs are NOT held here: they live in the bounded
+    * WalkCache, keyed by blob content. */
+  private val blobMemo =
+    scala.collection.concurrent.TrieMap.empty[String, (String, Array[(Int, Array[Byte])])]
+
+  /** The store's blobs, from the memo when its fingerprint still
+    * matches, else by one collect (explicit schema: no inference job).
+    * The fingerprint is taken BEFORE the load, so a store rewritten
+    * mid-load mismatches on the next probe; a failed load leaves no
+    * entry behind. */
+  private[graft] def graphBlobs(session: SparkSession,
+      path: String): Array[(Int, Array[Byte])] = {
+    val fp = graft.Sidecar.key(path)
+    blobMemo.get(path) match {
+      case Some((`fp`, blobs)) => blobs
+      case _ =>
+        blobMemo.remove(path)
+        import session.implicits._
+        val blobs = session.read.schema("part_id INT, graph BINARY").parquet(path)
+          .as[(Int, Array[Byte])].collect()
+        blobMemo(path) = (fp, blobs)
+        blobs
+    }
+  }
+
+  /** Forget a store's blobs (`DROP INDEX`). */
+  private[graft] def evict(path: String): Unit = { blobMemo.remove(path); () }
+
+  /** Test hook: whether `path`'s blobs are memoized. */
+  private[graft] def memoized(path: String): Boolean = blobMemo.contains(path)
 
   def install(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraOptimizations
@@ -427,37 +473,33 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
       case _ => None
     }
 
-  /** The bounded rewrite-time job: beam-walk every partition graph
-    * (blob scan pushed to the store parquet; each blob deserialized
-    * once), return the union of per-graph top-`fetch` candidates as
-    * (part_id, id, distance) — strict_order's global ordered merge
-    * needs the distances; relaxed_order's global budget division
-    * (r17) needs the graph identity; partition graphs hold disjoint
-    * id sets so no cross-graph dedup is required. Any failure falls
-    * back to the exact plan. */
+  /** The rewrite-time probe: beam-walk every partition graph on the
+    * driver — blobs from [[HnswProbeRule.graphBlobs]], each graph
+    * parsed through the shared WalkCache — and return the union of
+    * per-graph top-`fetch` candidates as (part_id, id, distance) —
+    * strict_order's global ordered merge needs the distances;
+    * relaxed_order's global budget division (r17) needs the graph
+    * identity; partition graphs hold disjoint id sets so no cross-graph
+    * dedup is required. Walks on a shared graph serialize on its
+    * monitor (Index.searchImpl), so concurrent sessions stay exact.
+    * Any failure falls back to the exact plan. */
   private def walkGraphs(e: HnswSqlCatalog.Entry, query: Array[Double],
       fetch: Int, ef: Int,
       sparseIdx: Array[Long] = null): Option[Array[(Int, Long, Double)]] = {
     try {
-      val spark = session
-      import spark.implicits._
       val cnt = HnswProbeRule.deserCounter
       // halfvec index: the graph stores float16-rounded vectors —
       // walk with the rounded query too (pgvector casts both sides)
       val q = if (e.storage == "halfvec")
         graft.functions.Half.unpackToDouble(graft.functions.Half.pack(query))
       else query
-      val cands = session.read.parquet(e.path)
-        .select(org.apache.spark.sql.functions.col("part_id"),
-          org.apache.spark.sql.functions.col("graph")).as[(Int, Array[Byte])]
-        .flatMap { case (pid, blob) =>
-          cnt.foreach(_.add(1))
-          val ix = graft.operators.Hnsw.deser(blob)
-          val hits = if (sparseIdx != null) ix.searchKnnSparse(sparseIdx, q, fetch, ef)
-          else ix.searchKnn(q, fetch, ef)
-          hits.map { case (id, d) => (pid, id, d) }
-        }
-        .collect().distinct
+      val cands = HnswProbeRule.graphBlobs(session, e.path).flatMap { case (pid, blob) =>
+        cnt.foreach(_.add(1))
+        val ix = graft.operators.Hnsw.deserCached(blob)
+        val hits = if (sparseIdx != null) ix.searchKnnSparse(sparseIdx, q, fetch, ef)
+        else ix.searchKnn(q, fetch, ef)
+        hits.map { case (id, d) => (pid, id, d) }
+      }.distinct
       Some(cands)
     } catch { case scala.util.control.NonFatal(_) => None }
   }

@@ -144,7 +144,9 @@ final case class DropVectorIndexCommand(stmt: VectorIndexDdl.DropStmt)
       case Some(c) =>
         c.method match {
           case "ivfflat" => IvfCatalog.invalidate(c.storePath)
-          case _ => HnswSqlCatalog.remove(stmt.name)
+          case _ =>
+            HnswSqlCatalog.remove(stmt.name)
+            HnswProbeRule.evict(c.storePath)
         }
         c.restoreBinding()
         // drop the materialized store (pgvector DROP INDEX frees the

@@ -1089,7 +1089,7 @@ class VectorIndexDdlSpec extends SparkSpec {
               LIMIT 5""")
         val got = df.collect().map(_.getLong(0)).toSeq
         // the graph walk ran, loading each of the 4 partition graphs
-        // exactly once (the rewrite-time job IS the index probe)
+        // exactly once (the rewrite-time walk IS the index probe)
         assert(acc.value > 0 && acc.value <= 4,
           s"graph path not taken or over-read: ${acc.value} deserializations")
         // the candidate filter reached the optimized plan as an IN on
@@ -1124,6 +1124,191 @@ class VectorIndexDdlSpec extends SparkSpec {
     }
   }
 
+  // ------------------------- hnsw probe: driver walk over the blob memo
+  /** The reference's verbatim top-5 text against `table`. */
+  private def verbatimTop5(table: String, v: Seq[Double]): String =
+    s"""SELECT vec_id FROM $table
+        ORDER BY embedding <-> '${v.mkString("[", ",", "]")}'::vector
+        LIMIT 5"""
+
+  private def embeddingOf(s: SparkSession, id: Long): Seq[Double] =
+    Tables.embeddings(s, Sf).filter(col("vec_id") === id)
+      .select(col("embedding").cast("array<double>"))
+      .head.getSeq[Double](0)
+
+  /** Spark jobs this thread starts while `body` runs. A sentinel job
+    * in another group flushes the listener: events arrive in posting
+    * order, so once its start is seen every earlier start has been. */
+  private def jobsStartedBy(s: SparkSession)(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val group = s"jobs-started-by-${System.nanoTime()}"
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    def groupOf(e: SparkListenerJobStart): String =
+      Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (groupOf(e) == group) started.incrementAndGet()
+        else if (groupOf(e) == s"$group-flush") flushed.countDown()
+    }
+    val sc = s.sparkContext
+    sc.addSparkListener(l)
+    try {
+      sc.setJobGroup(group, "measured")
+      try body finally sc.clearJobGroup()
+      sc.setJobGroup(s"$group-flush", "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the flush job")
+      started.get
+    } finally sc.removeSparkListener(l)
+  }
+
+  test("hnsw probe: a warm query walks cached graphs with no Spark job at rewrite time") {
+    withExtSession { s =>
+      HnswSqlCatalog.clear()
+      Tables.embeddings(s, Sf).createOrReplaceTempView("ddl_hnsw_warm")
+      s.sql("""CREATE INDEX idx_hnsw_warm ON ddl_hnsw_warm
+               USING hnsw (embedding vector_l2_ops)
+               WITH (m = 8, ef_construction = 32, parts = 4, id = 'vec_id')""")
+      val q = verbatimTop5("ddl_hnsw_warm", embeddingOf(s, 0))
+      try {
+        val first = s.sql(q).collect().map(_.getLong(0)).toSeq
+        val (h0, m0) = (graft.operators.Hnsw.WalkCache.hits,
+          graft.operators.Hnsw.WalkCache.misses)
+        val df = s.sql(q)
+        val jobs = jobsStartedBy(s)(df.queryExecution.optimizedPlan)
+        assert(jobs == 0, s"warm probe started $jobs Spark jobs at rewrite time")
+        assert(graft.operators.Hnsw.WalkCache.hits - h0 == 4,
+          "warm probe did not take all 4 graphs from the WalkCache")
+        assert(graft.operators.Hnsw.WalkCache.misses - m0 == 0,
+          "warm probe re-parsed a graph")
+        assert(df.collect().map(_.getLong(0)).toSeq == first)
+      } finally s.sql("DROP INDEX idx_hnsw_warm")
+    }
+  }
+
+  test("hnsw probe: a rebuilt or overwritten store is never served stale; DROP evicts the memo") {
+    withExtSession { s =>
+      import graft.operators.Hnsw
+      import graft.plans.HnswProbeRule
+      HnswSqlCatalog.clear()
+      val a = Tables.embeddings(s, Sf).select(col("vec_id"), col("embedding"))
+      // table B: the same ids over negated vectors, at its own root
+      val bDir = java.nio.file.Files.createTempDirectory("graft_hnsw_stale_b").toString
+      a.select(col("vec_id"), transform(col("embedding"), x => -x).as("embedding"))
+        .write.mode("overwrite").parquet(bDir)
+      val b = s.read.parquet(bDir)
+      a.createOrReplaceTempView("ddl_stale_a")
+      b.createOrReplaceTempView("ddl_stale_b")
+      val vec = embeddingOf(s, 0)
+      val qvec = Tables.embeddings(s, Sf).filter(col("vec_id") === 0)
+        .select(col("embedding").as("qvec"))
+      def exact(t: org.apache.spark.sql.DataFrame): Seq[Long] =
+        graft.operators.Knn.topK(t, "vec_id", "embedding", qvec, "qvec",
+          graft.functions.VectorFunctions.l2Distance, 5)
+          .collect().map(_.getLong(0)).toSeq
+      def ids(table: String): Seq[Long] =
+        s.sql(verbatimTop5(table, vec)).collect().map(_.getLong(0)).toSeq
+      // ef_search ≥ nodes per graph: each beam is exhaustive, so the
+      // served top-5 is the exact one and any stale graph shows
+      s.sql("SET hnsw.ef_search = 1000")
+      try {
+        val ddl = "USING hnsw (embedding vector_l2_ops) " +
+          "WITH (m = 8, ef_construction = 32, parts = 4, id = 'vec_id')"
+        s.sql(s"CREATE INDEX idx_hnsw_stale ON ddl_stale_a $ddl")
+        val path = HnswSqlCatalog.get("idx_hnsw_stale").get.path
+        assert(ids("ddl_stale_a") == exact(a))
+        assert(HnswProbeRule.memoized(path))
+        s.sql("DROP INDEX idx_hnsw_stale")
+        assert(!HnswProbeRule.memoized(path), "DROP INDEX left the blob memo behind")
+
+        // same name, so the same store path, over B's vectors
+        s.sql(s"CREATE INDEX idx_hnsw_stale ON ddl_stale_b $ddl")
+        assert(HnswSqlCatalog.get("idx_hnsw_stale").get.path == path)
+        val wantB = exact(b)
+        assert(wantB != exact(a), "tables A and B share a top-5: the check is blind")
+        assert(ids("ddl_stale_b") == wantB)
+
+        // overwrite the store in place without B's top-5: the next
+        // probe must walk the new graphs
+        val rest = b.filter(!col("vec_id").isin(wantB: _*))
+        Hnsw.writeGraphs(Hnsw.buildPartitioned(rest, "vec_id", "embedding",
+          m = 8, efC = 32, parts = 4), path)
+        val wantRest = exact(rest)
+        assert(ids("ddl_stale_b") == wantRest, "probe served the overwritten store's old graphs")
+
+        s.sql("DROP INDEX idx_hnsw_stale")
+        assert(!HnswProbeRule.memoized(path), "DROP INDEX left the blob memo behind")
+      } finally {
+        s.conf.unset("hnsw.ef_search")
+        s.sql("DROP INDEX IF EXISTS idx_hnsw_stale")
+      }
+    }
+  }
+
+  test("hnsw probe: 4 concurrent verbatim queries on one index match the serial run") {
+    withExtSession { s =>
+      HnswSqlCatalog.clear()
+      Tables.embeddings(s, Sf).createOrReplaceTempView("ddl_hnsw_conc")
+      // two 250-node graphs and a wide beam: walks are long enough, and
+      // few enough graphs, that concurrent probes collide on one graph
+      s.sql("""CREATE INDEX idx_hnsw_conc ON ddl_hnsw_conc
+               USING hnsw (embedding vector_l2_ops)
+               WITH (m = 8, ef_construction = 32, parts = 2, id = 'vec_id')""")
+      s.sql("SET hnsw.ef_search = 200")
+      try {
+        import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
+        val qs = (0L until 8L).map(i => verbatimTop5("ddl_hnsw_conc", embeddingOf(s, i)))
+        def ids(i: Int): Seq[Long] = s.sql(qs(i)).collect().map(_.getLong(0)).toSeq
+        // the injected candidate list: the walk's output, bit for bit
+        def candidates(i: Int): Seq[String] =
+          s.sql(qs(i)).queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
+            case In(a: AttributeReference, list) if a.name == "vec_id" => list.map(_.sql)
+          })).flatten
+        val serialIds = qs.indices.map(ids)
+        val serialCands = qs.indices.map(candidates)
+        assert(serialCands.forall(_.nonEmpty), "probe did not fire")
+        val (h0, m0) = (graft.operators.Hnsw.WalkCache.hits,
+          graft.operators.Hnsw.WalkCache.misses)
+        val threads = 4
+        val rounds = 20
+        val go = new java.util.concurrent.CountDownLatch(1)
+        val pool = java.util.concurrent.Executors.newFixedThreadPool(threads)
+        try {
+          // each thread issues all 8 queries from its own offset, so
+          // different queries walk the same graphs at the same time;
+          // later rounds plan only, keeping the walk the hot part
+          val futures = (0 until threads).map { t =>
+            pool.submit(new java.util.concurrent.Callable[Seq[String]] {
+              def call(): Seq[String] = {
+                go.await()
+                val order = qs.indices.map(j => (j + 2 * t) % qs.size)
+                order.flatMap { i =>
+                  val got = ids(i)
+                  if (got == serialIds(i)) None
+                  else Some(s"thread $t query $i: ids $got vs serial ${serialIds(i)}")
+                } ++ (1 until rounds).flatMap(r => order.flatMap { i =>
+                  if (candidates(i) == serialCands(i)) None
+                  else Some(s"thread $t round $r query $i: candidate list differs")
+                })
+              }
+            })
+          }
+          go.countDown()
+          val diffs = futures.flatMap(_.get(300, java.util.concurrent.TimeUnit.SECONDS))
+          assert(diffs.isEmpty, diffs.take(5).mkString("\n"))
+        } finally pool.shutdownNow()
+        // every concurrent probe walked both graphs from the cache
+        assert(graft.operators.Hnsw.WalkCache.hits - h0 == threads * rounds * qs.size * 2)
+        assert(graft.operators.Hnsw.WalkCache.misses - m0 == 0)
+      } finally {
+        s.conf.unset("hnsw.ef_search")
+        s.sql("DROP INDEX idx_hnsw_conc")
+      }
+    }
+  }
+
   test("hnsw probe soundness: metric mismatch and probeEval=false keep the exact plan") {
     withExtSession { s =>
       graft.plans.HnswSqlCatalog.clear()
@@ -1150,7 +1335,7 @@ class VectorIndexDdlSpec extends SparkSpec {
             ORDER BY embedding <=> '$vecText'::vector LIMIT 5""")
       assert(!probed(cosine), "cosine query served by an l2 hnsw index")
       assert(cosine.collect().length == 5) // exact plan still answers
-      // eval gate off: same l2 query, no rewrite-time job, exact plan
+      // eval gate off: same l2 query, no rewrite-time walk, exact plan
       s.conf.set(graft.plans.HnswProbeRule.EvalKey, "false")
       try {
         val gated = s.sql(
