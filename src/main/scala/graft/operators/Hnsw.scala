@@ -33,13 +33,6 @@ import scala.collection.mutable
   */
 object Hnsw {
 
-  /** Distance kernels a graph can be built WITH — persisted in the
-    * blob (v2), so build and every later walk run the same arithmetic.
-    * pgvector's hnsw AM builds and searches with the opclass distance
-    * (vector_l2_ops / _cosine_ops / _ip_ops / _l1_ops); a graph built
-    * under one metric descends wrong under another (inner product
-    * favors large-norm vectors an L2 descent never reaches), so the
-    * metric is index STATE, not a search-time argument. */
   /** Growable UNBOXED int list for adjacency (r18 — VERDICT r17 #4,
     * guide §5 allocation in the build hot loop): `ArrayBuffer[Int]`
     * stores boxed `java.lang.Integer`s (~20 B + a pointer chase per
@@ -79,6 +72,13 @@ object Hnsw {
     override def toString: String = toSeq.mkString("IntBuf(", ", ", ")")
   }
 
+  /** Distance kernels a graph can be built WITH — persisted in the
+    * blob (v2), so build and every later walk run the same arithmetic.
+    * pgvector's hnsw AM builds and searches with the opclass distance
+    * (vector_l2_ops / _cosine_ops / _ip_ops / _l1_ops); a graph built
+    * under one metric descends wrong under another (inner product
+    * favors large-norm vectors an L2 descent never reaches), so the
+    * metric is index STATE, not a search-time argument. */
   object Metric {
     val L2 = 0; val Cosine = 1; val Ip = 2; val L1 = 3
     /** Bit metrics (pgvector `bit_hamming_ops` / `bit_jaccard_ops`,
@@ -124,21 +124,75 @@ object Hnsw {
     out
   }
 
+  // ---------------------------------------------------------- queries
+  /** One vector a graph is built from or walked with — the single
+    * query type of every entry point, as pgvector's one hnsw access
+    * method serves every opclass. [[Dense]] covers vector, halfvec
+    * (values already half-rounded) and bit (the 0/1 expansion of the
+    * packed words, [[expandWords]]); [[Sparse]] is a sparsevec's
+    * sorted-ascending dimension ids with their aligned values. A
+    * graph accepts only its own kind ([[Index.qdist]] resolves the
+    * kind once per (query, graph)). */
+  sealed trait Query
+  final case class Dense(values: Array[Double]) extends Query
+  final case class Sparse(indices: Array[Long], values: Array[Double]) extends Query
+
+  /** How a DataFrame column holds its vectors, read from the schema
+    * (no analysis pass — serving calls this per micro-batch): a
+    * top-level struct with `indices` and `values` fields (the
+    * one-column sparsevec, or [[sparseColumn]] over a column pair) is
+    * [[Sparse]]; anything else casts to array<double> and is
+    * [[Dense]]. */
+  private def isSparseColumn(df: DataFrame, vecCol: String): Boolean =
+    df.schema.find(_.name == vecCol).map(_.dataType) match {
+      case Some(st: org.apache.spark.sql.types.StructType) =>
+        st.fieldNames.contains("indices") && st.fieldNames.contains("values")
+      case _ => false
+    }
+
+  /** The columns to project in place of `vecCol` ([[isSparseColumn]]
+    * decides the kind) and the decoder of a projected row's query from
+    * column position `at`. */
+  private[graft] def queryColumns(df: DataFrame, vecCol: String)
+      : (Seq[org.apache.spark.sql.Column], (Row, Int) => Query) =
+    if (isSparseColumn(df, vecCol))
+      (Seq(col(vecCol).getField("indices").cast("array<bigint>"),
+          col(vecCol).getField("values").cast("array<double>")),
+        (r, at) => Sparse(r.getSeq[Long](at).toArray, r.getSeq[Double](at + 1).toArray))
+    else
+      (Seq(col(vecCol).cast("array<double>")),
+        (r, at) => Dense(r.getSeq[Double](at).toArray))
+
+  /** A dense query rounded to binary16 — the values a half graph
+    * stores and walks (pgvector casts both sides of a halfvec
+    * operator); sparse queries pass through. */
+  private[graft] def halfRounded(q: Query): Query = q match {
+    case Dense(v) => Dense(graft.functions.Half.unpackToDouble(graft.functions.Half.pack(v)))
+    case other => other
+  }
+
+  /** The sparse vector column over an (indices, values) column pair —
+    * what the DataFrame entry points read as [[Sparse]]. */
+  def sparseColumn(indices: String, values: String): org.apache.spark.sql.Column =
+    struct(col(indices).as("indices"), col(values).as("values"))
+
   // ---------------------------------------------------------- local index
-  /** One in-memory HNSW graph (double vectors; metric from
-    * [[Metric]], default L2). `m` = neighbors per node per layer (2m
-    * at layer 0), `efC` = construction beam.
+  /** One in-memory HNSW graph (metric from [[Metric]], default L2).
+    * `m` = neighbors per node per layer (2m at layer 0), `efC` =
+    * construction beam.
     * Deliberately NOT java-Serializable: blobs go through the explicit
     * binary layout in [[Hnsw.ser]]/[[Hnsw.deser]], which is stable
     * across Scala/JVM/library versions and deserializes data only
     * (ObjectInputStream over a blob column would instantiate arbitrary
-    * classes — a stored-data deserialization gadget risk). */
-  /** `half = true` stores vectors as IEEE binary16 in the blob —
+    * classes — a stored-data deserialization gadget risk).
+    *
+    * `half = true` stores vectors as IEEE binary16 in the blob —
     * HALF the index bytes, the pgvector `halfvec_*` opclass storage
     * trade. Vectors must be half-ROUNDED before insert (the build
     * helpers do it), so build-time and serve-time arithmetic see the
-    * same values and ser/deser is lossless. */
-  /** `sparse = true` (r14 — pgvector `sparsevec_*_ops` on hnsw):
+    * same values and ser/deser is lossless.
+    *
+    * `sparse = true` (r14 — pgvector `sparsevec_*_ops` on hnsw):
     * every node carries an (indices, values) pair — `idxs(n)` holds
     * the sorted-ascending int64 dimension ids, `vecs(n)` the aligned
     * values — and distances run the two-pointer merge kernel
@@ -336,28 +390,36 @@ object Hnsw {
     }
 
     /** Distance-to-node closure for one query — the walk kernels are
-      * representation-agnostic through it (dense array vs sparse
-      * (idx, vals) pair; `qi` null means dense). Cosine closures fold
-      * the query norm ONCE here instead of per distance call. */
-    private def qdist(qi: Array[Long], qv: Array[Double]): Int => Double =
-      if (!sparse) {
+      * representation-agnostic through it: the [[Query]] kind is
+      * matched HERE, once per (query, graph), never per distance.
+      * Cosine closures fold the query norm ONCE here instead of per
+      * distance call. A query of the other kind fails with the fix
+      * named (its arithmetic family cannot walk this graph). */
+    private[Hnsw] def qdist(q: Query): Int => Double = q match {
+      case Dense(qv) =>
+        require(!sparse, "sparse graph: its vectors are Hnsw.Sparse(indices, values) " +
+          "(a sparsevec struct column on the DataFrame paths)")
         if (metric == Metric.Cosine) {
           val qn2 = norm2Of(qv)
           n => denseCosCached(qv, qn2, n)
         } else n => dist(qv, vecs(n))
-      } else metric match {
-        case Metric.Cosine =>
-          val qn2 = norm2Of(qv)
-          val qn = math.sqrt(qn2)
-          n => {
-            val den = qn * math.sqrt(norms2(n))
-            if (den == 0.0) 1.0
-            else 1.0 - sparseDotOnly(qi, qv, idxs(n), vecs(n)) / den
-          }
-        case Metric.Ip => n => -sparseDotOnly(qi, qv, idxs(n), vecs(n))
-        case Metric.L1 => n => sparseL1Only(qi, qv, idxs(n), vecs(n))
-        case _ => n => math.sqrt(sparseL2Only(qi, qv, idxs(n), vecs(n)))
-      }
+      case Sparse(qi, qv) =>
+        require(sparse, "dense graph: its vectors are Hnsw.Dense(values) " +
+          "(an array column on the DataFrame paths)")
+        metric match {
+          case Metric.Cosine =>
+            val qn2 = norm2Of(qv)
+            val qn = math.sqrt(qn2)
+            n => {
+              val den = qn * math.sqrt(norms2(n))
+              if (den == 0.0) 1.0
+              else 1.0 - sparseDotOnly(qi, qv, idxs(n), vecs(n)) / den
+            }
+          case Metric.Ip => n => -sparseDotOnly(qi, qv, idxs(n), vecs(n))
+          case Metric.L1 => n => sparseL1Only(qi, qv, idxs(n), vecs(n))
+          case _ => n => math.sqrt(sparseL2Only(qi, qv, idxs(n), vecs(n)))
+        }
+    }
 
     /** Node-to-node distance (edge pruning). */
     private def ndist(a: Int, b: Int): Double =
@@ -405,15 +467,6 @@ object Hnsw {
       cur
     }
 
-    /** Beam search at one level: returns up to `ef` (nodeIdx, dist)
-      * sorted ascending by (dist, node).
-      *
-      * Heaps order by (dist, NODE) — r13, the oracle-replay contract:
-      * a dist-only ordering left equal-distance pops, evictions and
-      * the take(k) cut to heap internals, so the walk result was not
-      * a pure function of (graph, query). With the lexicographic
-      * tie-break every step is deterministic, which is what lets the
-      * DuckDB oracle replay the walk bit-for-bit. */
     /** Generation-stamped visited marks (r17, guide §1.2): the beam
       * used to allocate a boxed HashSet per call — membership test +
       * box per visited edge in the single hottest loop of build and
@@ -435,6 +488,15 @@ object Hnsw {
     }
     private val byDistRev = byDist.reverse
 
+    /** Beam search at one level: returns up to `ef` (nodeIdx, dist)
+      * sorted ascending by (dist, node).
+      *
+      * Heaps order by (dist, NODE) — r13, the oracle-replay contract:
+      * a dist-only ordering left equal-distance pops, evictions and
+      * the take(k) cut to heap internals, so the walk result was not
+      * a pure function of (graph, query). With the lexicographic
+      * tie-break every step is deterministic, which is what lets the
+      * DuckDB oracle replay the walk bit-for-bit. */
     private def beam(qd: Int => Double, start: Int, level: Int, ef: Int): mutable.ArrayBuffer[(Int, Double)] = {
       if (visitStamp.length < ids.length)
         visitStamp = new Array[Int](math.max(ids.length, visitStamp.length * 2))
@@ -492,28 +554,24 @@ object Hnsw {
       kept.toSeq
     }
 
-    def insert(id: Long, v: Array[Double]): Unit = {
-      require(!sparse, "sparse graph: use insertSparse(id, idx, vals)")
-      insertImpl(id, null, v)
-    }
-
-    /** Sparse insert: `idx` sorted-ascending dimension ids aligned
-      * with `v` (the SparseDistExpr layout). */
-    def insertSparse(id: Long, idx: Array[Long], v: Array[Double]): Unit = {
-      require(sparse, "dense graph: use insert(id, vals)")
-      require(idx.length == v.length, "sparse (indices, values) length mismatch")
-      insertImpl(id, idx, v)
-    }
-
-    private def insertImpl(id: Long, qi: Array[Long], v: Array[Double]): Unit = {
+    /** Insert one node: a [[Sparse]] vector's indices are sorted
+      * ascending and aligned with its values (the SparseDistExpr
+      * layout). The vector's kind must be the graph's. */
+    def insert(id: Long, q: Query): Unit = {
+      val qd = qdist(q) // the kind check runs before any state changes
+      val v = q match {
+        case Dense(dv) => dv
+        case Sparse(si, sv) =>
+          require(si.length == sv.length, "sparse (indices, values) length mismatch")
+          idxs += si
+          sv
+      }
       val node = ids.length
       val lvl = levelOf(id)
       ids += id; vecs += v; nodeLevel += lvl
-      if (sparse) idxs += qi
       if (metric == Metric.Cosine) norms2 += norm2Of(v)
       links += Array.fill(lvl + 1)(new IntBuf)
       if (entry < 0) { entry = node; maxLevel = lvl; return }
-      val qd = qdist(qi, v)
       var cur = entry
       // descend levels above lvl greedily
       var l = maxLevel
@@ -545,17 +603,8 @@ object Hnsw {
       if (lvl > maxLevel) { maxLevel = lvl; entry = node }
     }
 
-    def searchKnn(q: Array[Double], k: Int, ef: Int): Seq[(Long, Double)] = {
-      require(!sparse, "sparse graph: use searchKnnSparse")
-      searchImpl(qdist(null, q), k, ef)
-    }
-
-    /** Sparse query walk — same beam, two-pointer distances. */
-    def searchKnnSparse(qIdx: Array[Long], qVal: Array[Double],
-        k: Int, ef: Int): Seq[(Long, Double)] = {
-      require(sparse, "dense graph: use searchKnn")
-      searchImpl(qdist(qIdx, qVal), k, ef)
-    }
+    def searchKnn(q: Query, k: Int, ef: Int): Seq[(Long, Double)] =
+      searchImpl(qdist(q), k, ef)
 
     /** Walks are serialized per index (r18): the generation-stamped
       * visited array makes beam non-reentrant, and [[WalkCache]] shares
@@ -723,8 +772,8 @@ object Hnsw {
     *    walks mutate nothing but the per-index visited stamps, which
     *    [[Index.searchImpl]] serializes with a monitor (walks against
     *    ONE graph are brief; distinct graphs walk fully parallel).
-    *    Mutating consumers ([[appendBatch]]/[[appendBatchSparse]]) and
-    *    the oracle dump keep calling [[deser]] for a private copy.
+    *    The mutating consumer ([[appendBatch]]) and the oracle dump
+    *    keep calling [[deser]] for a private copy.
     *  - BOUNDED: `GRAFT_HNSW_CACHE_MB` caps resident bytes (estimated
     *    per index; default heap/8 capped at 4 GiB — executor-sized on
     *    a real cluster via the env, not a local[32] constant); `0`
@@ -858,6 +907,13 @@ object Hnsw {
     * partition. `parts` bounds graph (= executor memory) size; the
     * repartition is the build's ONLY shuffle.
     *
+    * `vecCol` is read by [[queryColumns]]: a dense array column, or a
+    * sparse struct column (pgvector `sparsevec_*_ops` on hnsw, r14 —
+    * the graph is then built AND walked with the two-pointer sparse
+    * kernel under `metric`, l2/cosine/ip/l1, and at 100 TB the sizing
+    * knob is Σnnz per partition, not rows × dims). `half` is
+    * dense-only.
+    *
     * `targetVectorsPerGraph` (VERDICT r5 #4) makes the sizing
     * mechanical instead of a doc-comment promise: when set (> 0), the
     * partition count is derived as ceil(|corpus| / target) — one
@@ -871,23 +927,23 @@ object Hnsw {
     val spark = corpus.sparkSession
     import org.apache.spark.sql.types._
     val met = Metric.of(metric) // validate driver-side, ship the id
+    val sparse = isSparseColumn(corpus, vecCol)
+    val (vecCols, decode) = queryColumns(corpus, vecCol)
     val nParts =
       if (targetVectorsPerGraph <= 0) parts
       else math.max(1L, (corpus.count() + targetVectorsPerGraph - 1)
         / targetVectorsPerGraph).toInt
     val rdd = corpus
-      .select(col(idCol).cast("long"), col(vecCol).cast("array<double>"))
+      .select(col(idCol).cast("long") +: vecCols: _*)
       .repartition(nParts)
       .rdd.mapPartitionsWithIndex { (pid, iter) =>
-        val ix = new Index(m, efC, met, half)
+        val ix = new Index(m, efC, met, half, sparse)
         // half storage: round BEFORE insert so the graph is built with
         // the same float16 values the blob stores (ser is lossless)
-        def vec(r: Row): Array[Double] = {
-          val v = r.getSeq[Double](1).toArray
-          if (half) graft.functions.Half.unpackToDouble(graft.functions.Half.pack(v))
-          else v
+        iter.foreach { r =>
+          val q = decode(r, 1)
+          ix.insert(r.getLong(0), if (half) halfRounded(q) else q)
         }
-        iter.foreach(r => ix.insert(r.getLong(0), vec(r)))
         if (ix.ids.isEmpty) Iterator.empty
         else Iterator(Row(pid, ser(ix)))
       }
@@ -896,108 +952,85 @@ object Hnsw {
       StructField("graph", BinaryType, nullable = false))))
   }
 
-  /** SPARSE partition-local graphs (pgvector `sparsevec_*_ops` on
-    * hnsw, r14): same one-mapPartitions-pass shape as
-    * [[buildPartitioned]], but every node is an (indices, values)
-    * pair — `idxCol` array<bigint> sorted ascending, `valCol`
-    * array<double> aligned (the [[graft.functions.SparseDistExpr]] /
-    * sparseTf store layout) — and the graph is built AND walked with
-    * the two-pointer sparse kernel under `metric`
-    * (l2/cosine/ip/l1, pgvector's sparsevec opclass set). At 100 TB
-    * the sizing knob is Σnnz per partition, not rows × dims. */
-  def buildPartitionedSparse(corpus: DataFrame, idCol: String,
-      idxCol: String, valCol: String,
-      m: Int = 16, efC: Int = 64, parts: Int = 8,
-      metric: String = "l2"): DataFrame = {
-    val spark = corpus.sparkSession
-    import org.apache.spark.sql.types._
-    val met = Metric.of(metric)
-    val rdd = corpus
-      .select(col(idCol).cast("long"), col(idxCol).cast("array<bigint>"),
-        col(valCol).cast("array<double>"))
-      .repartition(parts)
-      .rdd.mapPartitionsWithIndex { (pid, iter) =>
-        val ix = new Index(m, efC, met, half = false, sparse = true)
-        iter.foreach(r => ix.insertSparse(r.getLong(0),
-          r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray))
-        if (ix.ids.isEmpty) Iterator.empty
-        else Iterator(Row(pid, ser(ix)))
-      }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("part_id", IntegerType, nullable = false),
-      StructField("graph", BinaryType, nullable = false))))
+  /** The one read-only per-graph walk: parse `blob` once (through
+    * [[WalkCache]]) and return its top-`k` beam walk (beam `ef`) for
+    * any number of queries. Every read-only entry point walks here —
+    * the search, filtered, batch and routed families and the SQL
+    * probe ([[graft.plans.HnswProbeRule]]). */
+  private[graft] def walk(blob: Array[Byte], k: Int, ef: Int): Query => Seq[(Long, Double)] = {
+    val ix = deserCached(blob)
+    q => ix.searchKnn(q, k, ef)
   }
 
-  /** Sparse-query walk over every partition graph + exact k·P merge —
-    * [[search]]'s twin for sparse stores. */
-  def searchSparse(graphs: DataFrame, qIdx: Array[Long], qVal: Array[Double],
-      k: Int, ef: Int = 64): DataFrame = {
+  /** Walk every graph row of `graphs` for one query: each graph's
+    * top-`k` as (vec_id, dist) rows. `deserCounter` (specs) counts
+    * graph-blob LOADS — one per blob walked, whether the parse ran or
+    * [[WalkCache]] answered it (r18). */
+  private def walkEach(graphs: DataFrame, query: Query, k: Int, ef: Int,
+      deserCounter: Option[org.apache.spark.util.LongAccumulator]): DataFrame = {
     val spark = graphs.sparkSession
     import spark.implicits._
     graphs.select(col("graph")).as[Array[Byte]]
-      .flatMap(blob => deserCached(blob).searchKnnSparse(qIdx, qVal, k, ef))
+      .flatMap { blob =>
+        deserCounter.foreach(_.add(1))
+        walk(blob, k, ef)(query)
+      }
       .toDF("vec_id", "dist")
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
   }
 
   /** Search every partition graph with the ef-beam walk and merge the
     * per-graph top-k exactly: k·P rows reach the final sort. */
-  def search(graphs: DataFrame, query: Array[Double], k: Int, ef: Int = 64): DataFrame = {
-    val spark = graphs.sparkSession
-    import spark.implicits._
-    graphs.select(col("graph")).as[Array[Byte]]
-      .flatMap(blob => deserCached(blob).searchKnn(query, k, ef))
-      .toDF("vec_id", "dist")
+  def search(graphs: DataFrame, query: Query, k: Int, ef: Int = 64): DataFrame =
+    walkEach(graphs, query, k, ef, None)
       .orderBy(col("dist"), col("vec_id"))
       .limit(k)
-  }
 
   /** FILTERED graph search (the pgvector ≥0.8 hnsw iterative-scan
-    * analogue, statically bounded like the IVF rule's widening): the
-    * graph stores no metadata, so the beam over-fetches `widen`·k per
-    * graph, the candidate ids join the metadata frame (k·widen·P
-    * rows — broadcast-scale, never the corpus), the predicate is
-    * applied post-join, and the exact top-k of the survivors is
-    * returned. Recall degrades with predicate selectivity exactly as
-    * pgvector's ef_search bound does; the gate measures it. */
+    * analogue, statically bounded like the IVF rule's widening; the
+    * sparse form, r15, is lexical/SPLADE retrieval with metadata
+    * predicates): the graph stores no metadata, so the beam
+    * over-fetches `widen`·k per graph, the candidate ids semi-join the
+    * metadata frame's predicate survivors (k·widen·P rows —
+    * broadcast-scale, never the corpus), and the exact top-k of the
+    * survivors is returned. Recall degrades with predicate selectivity
+    * exactly as pgvector's ef_search bound does; the gate measures
+    * it. */
   def searchFiltered(graphs: DataFrame, meta: DataFrame, metaIdCol: String,
-      pred: org.apache.spark.sql.Column, query: Array[Double], k: Int,
-      ef: Int = 64, widen: Int = 8): DataFrame = {
-    val spark = graphs.sparkSession
-    import spark.implicits._
-    val cands = graphs.select(col("graph")).as[Array[Byte]]
-      .flatMap(blob => deserCached(blob).searchKnn(query, k * widen, math.max(ef, k * widen)))
-      .toDF("vec_id", "dist")
-    cands
+      pred: org.apache.spark.sql.Column, query: Query, k: Int,
+      ef: Int = 64, widen: Int = 8): DataFrame =
+    walkEach(graphs, query, k * widen, math.max(ef, k * widen), None)
       .join(meta.filter(pred).select(col(metaIdCol)).withColumnRenamed(metaIdCol, "__mid"),
         col("vec_id") === col("__mid"), "left_semi")
       .orderBy(col("dist"), col("vec_id"))
       .limit(k)
-  }
 
-  /** FILTERED sparse graph search (r15 — [[searchFiltered]]'s
-    * sparsevec twin; lexical/SPLADE retrieval with metadata predicates
-    * is the common production shape): the graph stores no metadata, so
-    * the two-pointer beam over-fetches `widen`·k per graph, the
-    * candidate ids semi-join the metadata frame's predicate survivors
-    * (k·widen·P rows — broadcast-scale, never the corpus), and the
-    * exact top-k of the survivors is returned. Recall degrades with
-    * predicate selectivity exactly as the dense twin's does; gated. */
-  def searchFilteredSparse(graphs: DataFrame, meta: DataFrame, metaIdCol: String,
-      pred: org.apache.spark.sql.Column, qIdx: Array[Long], qVal: Array[Double],
-      k: Int, ef: Int = 64, widen: Int = 8): DataFrame = {
+  /** The one batch walk: each (part_id, graph) row parses ONCE and
+    * walks the queries routed to it — every query when `routes` is
+    * None (the flat layout), else the query ids `routes` lists under
+    * the row's part_id. Returns each (query, graph) top-`k` as
+    * (qid, vec_id, dist) rows. Query ids key the per-query result sets
+    * downstream, so a duplicate id would silently merge two queries
+    * into one set of k rows: every batch path refuses it here. */
+  private def walkBatch(graphs: DataFrame, queries: Seq[(Long, Query)],
+      routes: Option[Map[Int, Seq[Long]]], k: Int, ef: Int,
+      deserCounter: Option[org.apache.spark.util.LongAccumulator]): DataFrame = {
     val spark = graphs.sparkSession
     import spark.implicits._
-    val cands = graphs.select(col("graph")).as[Array[Byte]]
-      .flatMap(blob => deserCached(blob)
-        .searchKnnSparse(qIdx, qVal, k * widen, math.max(ef, k * widen)))
-      .toDF("vec_id", "dist")
-    cands
-      .join(meta.filter(pred).select(col(metaIdCol)).withColumnRenamed(metaIdCol, "__mid"),
-        col("vec_id") === col("__mid"), "left_semi")
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    val qids = queries.map(_._1)
+    require(qids.distinct.length == qids.length,
+      s"duplicate query ids in batch — ${qids.diff(qids.distinct).distinct.mkString(", ")}")
+    val byId = queries.toMap // task-serialized with the closure: one tiny map
+    val probed = routes.fold(graphs)(r =>
+      graphs.filter(col("part_id").isin(r.keys.toSeq.sorted.map(Int.box): _*)))
+    probed.select(col("part_id"), col("graph")).as[(Int, Array[Byte])]
+      .flatMap { case (cell, blob) =>
+        deserCounter.foreach(_.add(1))
+        val w = walk(blob, k, ef)
+        routes.fold(qids)(_.getOrElse(cell, Seq.empty)).iterator.flatMap { qid =>
+          w(byId(qid)).map { case (id, d) => (qid, id, d) }
+        }
+      }
+      .toDF("qid", "vec_id", "dist")
   }
 
   /** Batch search: each graph row is deserialized ONCE and walks every
@@ -1006,46 +1039,11 @@ object Hnsw {
     * per query cross to the final per-query rank, never the corpus.
     * The per-batch cost is P deserializations + |queries|·P beam
     * walks — the serving shape ([[graft.streaming.KnnServing]]). */
-  def searchBatch(graphs: DataFrame, queries: Seq[(Long, Array[Double])],
+  def searchBatch(graphs: DataFrame, queries: Seq[(Long, Query)],
       k: Int, ef: Int = 64): DataFrame = {
-    val spark = graphs.sparkSession
-    import spark.implicits._
     import org.apache.spark.sql.expressions.Window
-    val qs = queries // task-serialized with the closure: one tiny array
     val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
-    graphs.select(col("graph")).as[Array[Byte]]
-      .flatMap { blob =>
-        val ix = deserCached(blob)
-        qs.iterator.flatMap { case (qid, qv) =>
-          ix.searchKnn(qv, k, ef).map { case (id, d) => (qid, id, d) }
-        }
-      }
-      .toDF("qid", "vec_id", "dist")
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("qid"), col("vec_id"), col("dist"))
-      .orderBy(col("qid"), col("dist"), col("vec_id"))
-  }
-
-  /** Sparse batch search — [[searchBatch]]'s twin for sparse stores:
-    * each graph row deserializes once and walks every (qid, idx, vals)
-    * query; per-(query, graph) top-k merge exactly as in dense. */
-  def searchBatchSparse(graphs: DataFrame,
-      queries: Seq[(Long, Array[Long], Array[Double])],
-      k: Int, ef: Int = 64): DataFrame = {
-    val spark = graphs.sparkSession
-    import spark.implicits._
-    import org.apache.spark.sql.expressions.Window
-    val qs = queries
-    val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
-    graphs.select(col("graph")).as[Array[Byte]]
-      .flatMap { blob =>
-        val ix = deserCached(blob)
-        qs.iterator.flatMap { case (qid, qi, qv) =>
-          ix.searchKnnSparse(qi, qv, k, ef).map { case (id, d) => (qid, id, d) }
-        }
-      }
-      .toDF("qid", "vec_id", "dist")
+    walkBatch(graphs, queries, None, k, ef, None)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k)
       .select(col("qid"), col("vec_id"), col("dist"))
@@ -1089,7 +1087,7 @@ object Hnsw {
         val byCell = mutable.Map.empty[Int, Index]
         iter.foreach { r =>
           byCell.getOrElseUpdate(r.getInt(0), new Index(m, efC, met))
-            .insert(r.getLong(1), r.getSeq[Double](2).toArray)
+            .insert(r.getLong(1), Dense(r.getSeq[Double](2).toArray))
         }
         byCell.iterator.map { case (cell, ix) => Row(cell, ser(ix)) }
       }
@@ -1124,23 +1122,20 @@ object Hnsw {
   def searchRouted(graphs: DataFrame, centroids: DataFrame,
       query: Array[Double], k: Int, nprobe: Int, ef: Int = 64,
       deserCounter: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val spark = graphs.sparkSession
-    import spark.implicits._
     val cells = rankCells(centroids, query, nprobe)
-    graphs
-      .filter(col("cell_id").isin(cells.map(Int.box): _*))
-      .select(col("graph")).as[Array[Byte]]
-      .flatMap { blob =>
-        deserCounter.foreach(_.add(1))
-        deserCached(blob).searchKnn(query, k, ef)
-      }
-      .toDF("vec_id", "dist")
-      // spill copies return identical (id, dist) rows from sibling
-      // graphs — dedup k·nprobe rows, never corpus-scale
+    routedTopK(graphs.filter(col("cell_id").isin(cells.map(Int.box): _*)),
+      Dense(query), k, ef, deserCounter)
+  }
+
+  /** The routed single-query tail: walk the probed graphs, collapse
+    * spill copies (identical (id, dist) rows from sibling graphs —
+    * dedup k·nprobe rows, never corpus-scale), exact top-k. */
+  private def routedTopK(probed: DataFrame, query: Query, k: Int, ef: Int,
+      deserCounter: Option[org.apache.spark.util.LongAccumulator]): DataFrame =
+    walkEach(probed, query, k, ef, deserCounter)
       .dropDuplicates("vec_id")
       .orderBy(col("dist"), col("vec_id"))
       .limit(k)
-  }
 
   // ------------------------------------------- cell-routed SPARSE graphs
   /** Top-mass-cell routing for sparse vectors (r15 — VERDICT r14 #1,
@@ -1199,8 +1194,9 @@ object Hnsw {
     * runs. An all-empty sparse vector has no cells and is not
     * indexed — consistent with pgvector, whose sparsevec requires at
     * least one element (the flat layout would store it at cosine
-    * distance 1.0 from everything). */
-  /** `maxCell` (r16 — VERDICT r15 #2): term-mass cells are SKEWED
+    * distance 1.0 from everything).
+    *
+    * `maxCell` (r16 — VERDICT r15 #2): term-mass cells are SKEWED
     * (Zipf-of-Zipf), and one build task per cell makes the build's
     * wall-clock the LARGEST cell's serial insert loop (measured: a
     * cell holding 3× the median made the whole build 4.8× the flat
@@ -1264,8 +1260,8 @@ object Hnsw {
         iter.foreach { r =>
           byCell.getOrElseUpdate((r.getInt(0), r.getInt(4)),
               new Index(m, efC, met, half = false, sparse = true))
-            .insertSparse(r.getLong(1), r.getSeq[Long](2).toArray,
-              r.getSeq[Double](3).toArray)
+            .insert(r.getLong(1), Sparse(r.getSeq[Long](2).toArray,
+              r.getSeq[Double](3).toArray))
         }
         byCell.iterator.map { case ((cell, _), ix) => Row(cell, ser(ix)) }
       }
@@ -1296,20 +1292,9 @@ object Hnsw {
       qIdx: Array[Long], qVal: Array[Double], k: Int, nprobe: Int = 0,
       ef: Int = 64,
       deserCounter: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val spark = graphs.sparkSession
-    import spark.implicits._
     val cells = rankCellsSparse(qIdx, qVal, nlist, resolveNprobe(nprobe, nlist))
-    graphs
-      .filter(col("part_id").isin(cells.map(Int.box): _*))
-      .select(col("graph")).as[Array[Byte]]
-      .flatMap { blob =>
-        deserCounter.foreach(_.add(1))
-        deserCached(blob).searchKnnSparse(qIdx, qVal, k, ef)
-      }
-      .toDF("vec_id", "dist")
-      .dropDuplicates("vec_id")
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+    routedTopK(graphs.filter(col("part_id").isin(cells.map(Int.box): _*)),
+      Sparse(qIdx, qVal), k, ef, deserCounter)
   }
 
   /** Batch routed sparse search — the serving kernel
@@ -1324,26 +1309,13 @@ object Hnsw {
       queries: Seq[(Long, Array[Long], Array[Double])],
       k: Int, nprobe: Int = 0, ef: Int = 64,
       deserCounter: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val spark = graphs.sparkSession
-    import spark.implicits._
     import org.apache.spark.sql.expressions.Window
     val np = resolveNprobe(nprobe, nlist)
-    // qids key the per-query routing maps below — a duplicate would be
-    // silently collapsed to one answer while the flat twin emits one
-    // result set per input row; fail fast instead (ADVICE r15, the
-    // maxBatch-guard discipline in serveHnswSparseRouted)
-    require(queries.map(_._1).distinct.length == queries.length,
-      s"searchBatchRoutedSparse: duplicate query ids in batch — " +
-        s"${queries.map(_._1).diff(queries.map(_._1).distinct).distinct.mkString(", ")}")
-    val cellsOf: Map[Long, Seq[Int]] = queries.map { case (qid, qi, qv) =>
-      qid -> rankCellsSparse(qi, qv, nlist, np)
-    }.toMap
-    val byCell: Map[Int, Seq[Long]] = cellsOf.toSeq
-      .flatMap { case (qid, cs) => cs.map(_ -> qid) }
+    // cell → the queries probing it: |batch|·nprobe entries, shipped
+    // with the walk (duplicate query ids are refused by walkBatch)
+    val byCell: Map[Int, Seq[Long]] = queries
+      .flatMap { case (qid, qi, qv) => rankCellsSparse(qi, qv, nlist, np).map(_ -> qid) }
       .groupBy(_._1).map { case (c, qs) => c -> qs.map(_._2) }
-    val probedUnion = byCell.keys.toSeq.sorted
-    val qByIdTask = queries.map(q => (q._1, (q._2, q._3))).toMap
-    val byCellTask = byCell // task-serialized: |batch|·nprobe entries
     // ONE exchange for dedup + rank (r18, guide §2.4 — the old
     // dropDuplicates(qid, vec_id) hashed by (qid, vec_id) and the rank
     // window re-hashed by qid: two exchanges over k·|batch|·nprobe
@@ -1357,19 +1329,8 @@ object Hnsw {
     // dropDuplicates + row_number ≤ k, one exchange, one sort.
     val wOrd = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
     val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    graphs
-      .filter(col("part_id").isin(probedUnion.map(Int.box): _*))
-      .select(col("part_id"), col("graph"))
-      .as[(Int, Array[Byte])]
-      .flatMap { case (cell, blob) =>
-        deserCounter.foreach(_.add(1))
-        val ix = deserCached(blob)
-        byCellTask.getOrElse(cell, Seq.empty).iterator.flatMap { qid =>
-          val (qi, qv) = qByIdTask(qid)
-          ix.searchKnnSparse(qi, qv, k, ef).map { case (id, d) => (qid, id, d) }
-        }
-      }
-      .toDF("qid", "vec_id", "dist")
+    walkBatch(graphs, queries.map { case (qid, qi, qv) => (qid, Sparse(qi, qv)) },
+        Some(byCell), k, ef, deserCounter)
       .withColumn("__first",
         when(lag(col("vec_id"), 1).over(wOrd).isNull ||
           lag(col("vec_id"), 1).over(wOrd) =!= col("vec_id"), 1).otherwise(0))
@@ -1469,7 +1430,9 @@ object Hnsw {
     * New-node routing is hash-based, not proximity-based, and that is
     * correct here: partition graphs are independent indexes over
     * disjoint subsets (search always merges all of them), so placement
-    * only affects balance, never recall. */
+    * only affects balance, never recall. `vecCol` is read as in
+    * [[buildPartitioned]] (r14 added the sparse kind); a batch of the
+    * other kind than the store fails with the fix named. */
   def appendBatch(graphs: DataFrame, batch: DataFrame,
       idCol: String, vecCol: String): DataFrame = {
     val spark = graphs.sparkSession
@@ -1479,12 +1442,15 @@ object Hnsw {
     // silently (vectors never inserted, never searchable)
     val pids = graphs.select(col("part_id")).collect().map(_.getInt(0)).sorted
     require(pids.nonEmpty, "appendBatch needs at least one existing partition graph")
+    val (vecCols, decode) = queryColumns(batch, vecCol)
+    val addCols = col("__aid") +: vecCols.indices.map(i => col(s"__av$i"))
     val assigned = batch
-      .select(col(idCol).cast("long").as("__aid"), col(vecCol).cast("array<double>").as("__avec"))
+      .select(col(idCol).cast("long").as("__aid") +:
+        vecCols.zipWithIndex.map { case (c, i) => c.as(s"__av$i") }: _*)
       .withColumn("part_id",
         element_at(typedLit(pids.toSeq), (pmod(hash(col("__aid")), lit(pids.length)) + 1).cast("int")))
       .groupBy(col("part_id"))
-      .agg(collect_list(struct(col("__aid"), col("__avec"))).as("adds"))
+      .agg(collect_list(struct(addCols: _*)).as("adds"))
     val mergedRdd = graphs.join(assigned, Seq("part_id"), "left_outer")
       .rdd.map { row =>
         val pid = row.getInt(0)
@@ -1493,51 +1459,10 @@ object Hnsw {
           if (row.isNullAt(2)) null else row.getSeq[Row](2)
         if (adds == null) Row(pid, blob)
         else {
+          // a vector of the other kind fails its insert with the fix
+          // named (Index.qdist) — never a merge under wrong arithmetic
           val ix = deser(blob)
-          // a dense add into a sparse graph would walk wrong
-          // arithmetic — fail with the fix named, not a wrong merge
-          require(!ix.sparse,
-            "appendBatch(dense rows) into a SPARSE graph store — use " +
-              "appendBatchSparse(idCol, idxCol, valCol)")
-          adds.foreach(r => ix.insert(r.getLong(0), r.getSeq[Double](1).toArray))
-          Row(pid, ser(ix))
-        }
-      }
-    import org.apache.spark.sql.types._
-    spark.createDataFrame(mergedRdd, StructType(Seq(
-      StructField("part_id", IntegerType, nullable = false),
-      StructField("graph", BinaryType, nullable = false))))
-  }
-
-  /** [[appendBatch]]'s sparse twin (r14): new (id, indices, values)
-    * rows hash-route to an existing partition graph and run the SAME
-    * sparse diverse-prune insert the build used. */
-  def appendBatchSparse(graphs: DataFrame, batch: DataFrame,
-      idCol: String, idxCol: String, valCol: String): DataFrame = {
-    val spark = graphs.sparkSession
-    val pids = graphs.select(col("part_id")).collect().map(_.getInt(0)).sorted
-    require(pids.nonEmpty, "appendBatchSparse needs at least one existing partition graph")
-    val assigned = batch
-      .select(col(idCol).cast("long").as("__aid"),
-        col(idxCol).cast("array<bigint>").as("__aidx"),
-        col(valCol).cast("array<double>").as("__avec"))
-      .withColumn("part_id",
-        element_at(typedLit(pids.toSeq), (pmod(hash(col("__aid")), lit(pids.length)) + 1).cast("int")))
-      .groupBy(col("part_id"))
-      .agg(collect_list(struct(col("__aid"), col("__aidx"), col("__avec"))).as("adds"))
-    val mergedRdd = graphs.join(assigned, Seq("part_id"), "left_outer")
-      .rdd.map { row =>
-        val pid = row.getInt(0)
-        val blob = row.getAs[Array[Byte]]("graph")
-        val adds: scala.collection.Seq[Row] =
-          if (row.isNullAt(2)) null else row.getSeq[Row](2)
-        if (adds == null) Row(pid, blob)
-        else {
-          val ix = deser(blob)
-          require(ix.sparse,
-            "appendBatchSparse into a DENSE graph store — use appendBatch")
-          adds.foreach(r => ix.insertSparse(r.getLong(0),
-            r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray))
+          adds.foreach(r => ix.insert(r.getLong(0), decode(r, 1)))
           Row(pid, ser(ix))
         }
       }

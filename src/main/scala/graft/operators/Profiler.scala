@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dataset profiling for pipeline QA (SURVEY.md §2): per-column
@@ -9,28 +9,20 @@ import org.apache.spark.sql.functions._
   *
   * One wide aggregation row computes every statistic map-side
   * (count/count-nulls/min/max are partial-aggregable), then the row
-  * unpivots to the (column, stat…) shape. [[describe]] uses an HLL
-  * sketch for cardinality (single pass at any scale); [[describeExact]]
-  * uses exact distincts (oracle-friendly, but shuffles per column).
+  * unpivots to the (column, stat…) shape. Cardinality is an exact
+  * distinct count (oracle-friendly, but shuffles per column).
   */
 object Profiler {
 
-  def describe(df: DataFrame, cols: Seq[String]): DataFrame =
-    profile(df, cols, c => approx_count_distinct(col(c)), "approx_distinct")
-
-  def describeExact(df: DataFrame, cols: Seq[String]): DataFrame =
-    profile(df, cols, c => countDistinct(col(c)), "n_distinct")
-
-  /** (column, n_rows, n_null, <distinctName>, min_s, max_s), one row
-    * per profiled column; min/max rendered as strings so mixed column
+  /** (column, n_rows, n_null, n_distinct, min_s, max_s), one row per
+    * profiled column; min/max rendered as strings so mixed column
     * types coexist. */
-  private def profile(df: DataFrame, cols: Seq[String],
-      distinctAgg: String => Column, distinctName: String): DataFrame = {
+  def describeExact(df: DataFrame, cols: Seq[String]): DataFrame = {
     require(cols.nonEmpty, "profile needs at least one column")
     val aggs = count(lit(1)).as("__n") +: cols.flatMap { c =>
       Seq(
         count(col(c)).as(s"__cnt_$c"),
-        distinctAgg(c).as(s"__d_$c"),
+        countDistinct(col(c)).as(s"__d_$c"),
         min(col(c)).cast("string").as(s"__min_$c"),
         max(col(c)).cast("string").as(s"__max_$c"))
     }
@@ -40,7 +32,7 @@ object Profiler {
         lit(c).as("column"),
         col("__n").as("n_rows"),
         (col("__n") - col(s"__cnt_$c")).as("n_null"),
-        col(s"__d_$c").as(distinctName),
+        col(s"__d_$c").as("n_distinct"),
         col(s"__min_$c").as("min_s"),
         col(s"__max_$c").as("max_s"))
     }

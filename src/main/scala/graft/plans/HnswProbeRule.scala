@@ -1,13 +1,14 @@
 package graft.plans
 
 import graft.functions.{VectorDistance, VectorDistanceExpr}
+import graft.operators.Hnsw.{Dense, Query, Sparse}
+import graft.plans.ProbeMatch.{literalVector, resolveThroughProjects, resolveToAttribute}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, Expression, In, Literal, UnaryMinus}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, In, Literal, UnaryMinus}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LogicalPlan, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType, LongType}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 
 /** Plan-time HNSW index selection (VERDICT r10 #2 / r11 #1 — the
   * pgvector parity gap): after `CREATE INDEX ... USING hnsw`, the
@@ -114,38 +115,14 @@ object HnswProbeRule {
 final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
-    case gl @ GlobalLimit(Literal(k: Int, IntegerType), _) => gl.child match {
-      case ll: LocalLimit =>
-        val (rewrap, core) = peelProjects(ll.child)
-        core match {
-          case srt: Sort if srt.global =>
-            rewrite(srt, k)
-              .map(s => gl.withNewChildren(Seq(ll.withNewChildren(Seq(rewrap(s))))))
-              .getOrElse(gl)
-          case _ => gl
-        }
-      case _ => gl
-    }
+    case gl @ GlobalLimit(Literal(k: Int, IntegerType), _) =>
+      ProbeMatch.rewriteTopK(gl)(rewrite(_, k))
   }
-
-  /** Numeric GUC parse with pgvector's rejection semantics (r15 —
-    * the iterative_scan enum-validation discipline extended to the
-    * numeric knobs): a malformed or out-of-range value throws at the
-    * first probe instead of silently behaving as the default. */
-  private def intKnob(key: String, default: Int, lo: Int, hi: Int): Int =
-    session.conf.getOption(key).map { v =>
-      val n = scala.util.Try(v.trim.toInt).getOrElse(
-        throw new IllegalArgumentException(
-          s"""invalid value for parameter "$key": "$v" (expected an integer)"""))
-      if (n < lo || n > hi) throw new IllegalArgumentException(
-        s"$n is outside the valid range for parameter " +
-          s""""$key" ($lo .. $hi)""")
-      n
-    }.getOrElse(default)
 
   /** pgvector's `SET hnsw.ef_search` (default 40 and range 1..1000,
     * pgvector's own). */
-  private def efSearch: Int = intKnob("hnsw.ef_search", 40, 1, 1000)
+  private def efSearch: Int =
+    ProbeMatch.intKnob(session, "hnsw.ef_search", 1, 1000).getOrElse(40)
 
   /** pgvector ≥0.8's `SET hnsw.iterative_scan` (r14, modes split in
     * r16): `off` disables the filtered-query over-fetch — a selective
@@ -204,7 +181,7 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     * below k silently under-filled plain top-k queries pgvector
     * would fill). */
   private def maxScanTuples: Int =
-    intKnob("hnsw.max_scan_tuples", 20000, 1, Int.MaxValue)
+    ProbeMatch.intKnob(session, "hnsw.max_scan_tuples", 1, Int.MaxValue).getOrElse(20000)
 
   private def rewrite(srt: Sort, k: Int): Option[Sort] =
     for {
@@ -213,14 +190,16 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
       key <- asSortKey(resolveThroughProjects(head.child, srt.child))
       vecAttr <- resolveToAttribute(key.colSide, srt.child)
       if session.conf.get(HnswProbeRule.EvalKey, "true").toBoolean
-      rewritten <- injectCandidates(srt.child, vecAttr, key.query, key.metric,
-        k, key.sparseIdx, key.half)
+      rewritten <- injectCandidates(srt.child, vecAttr, key, k)
     } yield srt.copy(child = rewritten)
 
   /** One recognized index-servable sort key: the column side, the
     * literal query (bit metrics: the packed words EXPANDED to the 0/1
-    * doubles the graph stores — [[graft.operators.Hnsw.expandWords]]),
-    * and the opclass metric string it may serve. pgvector parity: an
+    * doubles the graph stores — [[graft.operators.Hnsw.expandWords]];
+    * the sparsevec opclasses, r14: a [[Sparse]] query, the sorted
+    * dimension ids and values riding inside
+    * [[graft.functions.SparseDistExpr]] or a sparsevec literal), and
+    * the opclass metric string it may serve. pgvector parity: an
     * index serves ONLY its opclass's operator (`<->` ↔ vector_l2_ops,
     * `<=>` ↔ _cosine_ops, `<#>` ↔ _ip_ops, `<+>` ↔ _l1_ops,
     * `<~>` ↔ bit_hamming_ops, `<%>` ↔ bit_jaccard_ops). The graph
@@ -228,16 +207,13 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     * .Metric]] in the blob), so the beam walk ranks candidates with
     * the same arithmetic the sort re-ranks with — ADVICE r12's
     * low-recall cosine/ip hazard (L2 graph serving a cosine sort)
-    * cannot recur. */
-  /** `sparseIdx` (r14, the sparsevec opclasses): non-null for a
-    * SPARSE sort key — the query's sorted dimension ids riding inside
-    * [[graft.functions.SparseDistExpr]]; the walk then runs
-    * searchKnnSparse over a sparsevec-storage entry. The recognized
-    * shapes are the engine's sparse operators in ascending-distance
-    * form: `1 - sparse_cos_sim(idx, val, qi, qv)` (↔
-    * sparsevec_cosine_ops) and `-sparse_dot(...)` (↔
-    * sparsevec_ip_ops). */
-  /** `half` (r17, VERDICT r16 #7): true for a [[graft.functions
+    * cannot recur. The recognized sparse shapes are the engine's
+    * sparse operators in ascending-distance form:
+    * `1 - sparse_cos_sim(idx, val, qi, qv)` (↔ sparsevec_cosine_ops),
+    * `-sparse_dot(...)` (↔ sparsevec_ip_ops), and the bare L2/L1 and
+    * one-column sparsevec distances.
+    *
+    * `half` (r17, VERDICT r16 #7): true for a [[graft.functions
     * .HalfDistExpr]] sort key — the query scans the PACKED binary16
     * column itself (the vs_knn_half/vs_half_cos sidecar shape) rather
     * than a float column a halfvec index rounds on the storage side.
@@ -245,8 +221,7 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     * graph (matchEntry), where the stored rounded doubles are exactly
     * what HalfDistExpr dequantizes at scan time. */
   private final case class SortKey(
-      colSide: Expression, query: Array[Double], metric: String,
-      sparseIdx: Array[Long] = null, half: Boolean = false)
+      colSide: Expression, query: Query, metric: String, half: Boolean = false)
 
   /** Split a one-column sparsevec distance into (column side, query
     * indices, query values): exactly one operand must be a FOLDABLE
@@ -272,23 +247,23 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     // negated dot (below, under UnaryMinus)
     case h: graft.functions.HalfDistExpr
         if h.mode == VectorDistance.L2.id =>
-      Some(SortKey(h.child, h.query, "l2", half = true))
+      Some(SortKey(h.child, Dense(h.query), "l2", half = true))
     case h: graft.functions.HalfDistExpr
         if h.mode == VectorDistance.CosineDist.id =>
-      Some(SortKey(h.child, h.query, "cosine", half = true))
+      Some(SortKey(h.child, Dense(h.query), "cosine", half = true))
     case h: graft.functions.HalfDistExpr
         if h.mode == VectorDistance.L1.id =>
-      Some(SortKey(h.child, h.query, "l1", half = true))
+      Some(SortKey(h.child, Dense(h.query), "l1", half = true))
     // sparse L2/L1 distance ascending (r15 — ADVICE r14: the accepted
     // sparsevec_l2_ops/_l1_ops DDL had no recognizable sort key, so
     // those indexes could never serve): the bare SparseDistExpr in its
     // union-merge distance modes IS the ascending index order
     case s: graft.functions.SparseDistExpr
         if s.mode == VectorDistance.L2.id =>
-      Some(SortKey(s.left, s.qVal, "l2", s.qIdx))
+      Some(SortKey(s.left, Sparse(s.qIdx, s.qVal), "l2"))
     case s: graft.functions.SparseDistExpr
         if s.mode == VectorDistance.L1.id =>
-      Some(SortKey(s.left, s.qVal, "l1", s.qIdx))
+      Some(SortKey(s.left, Sparse(s.qIdx, s.qVal), "l1"))
     // ONE-COLUMN sparsevec operators (r17): the verbatim
     // `sv <-> '...'::sparsevec` over a stored struct column plans as
     // SparseStructDistExpr in the ascending-distance modes directly
@@ -299,9 +274,9 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     case s: graft.functions.SparseStructDistExpr =>
       structSparseKey(s).flatMap { case (c, qi, qv) =>
         s.mode match {
-          case VectorDistance.L2.id => Some(SortKey(c, qv, "l2", qi))
-          case VectorDistance.L1.id => Some(SortKey(c, qv, "l1", qi))
-          case VectorDistance.CosineDist.id => Some(SortKey(c, qv, "cosine", qi))
+          case VectorDistance.L2.id => Some(SortKey(c, Sparse(qi, qv), "l2"))
+          case VectorDistance.L1.id => Some(SortKey(c, Sparse(qi, qv), "l1"))
+          case VectorDistance.CosineDist.id => Some(SortKey(c, Sparse(qi, qv), "cosine"))
           case _ => None // bare dot/sim ASC is not an index order
         }
       }
@@ -315,7 +290,7 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
           case VectorDistance.L1.id => Some("l1")
           case _ => None // bare dot ASC is not an index order
         }
-      } yield SortKey(colSide, query, metric)
+      } yield SortKey(colSide, Dense(query), metric)
     case u: UnaryMinus => u.child match {
       // `<#>` plans as -dot ascending (pgvector's negative inner
       // product ordering score)
@@ -323,17 +298,17 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
         for {
           query <- literalVector(v)
           colSide <- Seq(v.left, v.right).find(x => !x.isInstanceOf[Literal])
-        } yield SortKey(colSide, query, "ip")
+        } yield SortKey(colSide, Dense(query), "ip")
       // sparse max-inner-product: -sparse_dot(idx, val, qi, qv) ASC
       case s: graft.functions.SparseDistExpr if s.mode == VectorDistance.Dot.id =>
-        Some(SortKey(s.left, s.qVal, "ip", s.qIdx))
+        Some(SortKey(s.left, Sparse(s.qIdx, s.qVal), "ip"))
       // one-column sparsevec `<#>`: -struct_dist(sv, q, dot) ASC (r17)
       case s: graft.functions.SparseStructDistExpr
           if s.mode == VectorDistance.Dot.id =>
-        structSparseKey(s).map { case (c, qi, qv) => SortKey(c, qv, "ip", qi) }
+        structSparseKey(s).map { case (c, qi, qv) => SortKey(c, Sparse(qi, qv), "ip") }
       // halfvec `<#>`: -half_dist(hv, q, dot) ASC (r17)
       case h: graft.functions.HalfDistExpr if h.mode == VectorDistance.Dot.id =>
-        Some(SortKey(h.child, h.query, "ip", half = true))
+        Some(SortKey(h.child, Dense(h.query), "ip", half = true))
       case _ => None
     }
     // sparse cosine DISTANCE ascending: 1 - sparse_cos_sim(...)
@@ -341,20 +316,18 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
       (sub.left, sub.right) match {
         case (Literal(one: Double, DoubleType), s: graft.functions.SparseDistExpr)
             if one == 1.0 && s.mode == VectorDistance.CosineSim.id =>
-          Some(SortKey(s.left, s.qVal, "cosine", s.qIdx))
+          Some(SortKey(s.left, Sparse(s.qIdx, s.qVal), "cosine"))
         case _ => None
       }
     case h: graft.functions.HammingDistExpr =>
-      Some(SortKey(h.child, graft.operators.Hnsw.expandWords(h.query), "hamming"))
+      Some(SortKey(h.child, Dense(graft.operators.Hnsw.expandWords(h.query)), "hamming"))
     case j: graft.functions.JaccardDistExpr =>
-      Some(SortKey(j.child, graft.operators.Hnsw.expandWords(j.query), "jaccard"))
+      Some(SortKey(j.child, Dense(graft.operators.Hnsw.expandWords(j.query)), "jaccard"))
     case _ => None
   }
 
   private def injectCandidates(plan: LogicalPlan,
-      vecAttr: AttributeReference, query: Array[Double], metric: String,
-      k: Int, sparseIdx: Array[Long] = null,
-      half: Boolean = false): Option[LogicalPlan] = {
+      vecAttr: AttributeReference, key: SortKey, k: Int): Option[LogicalPlan] = {
     // validate the knob on EVERY probe, not just filtered ones: in
     // pgvector the SET itself would have failed, so a typo'd value
     // must never let any indexed query run as if defaulted
@@ -363,8 +336,7 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     val out = plan transform {
       case lr: LogicalRelation if !done && !hasProbeAbove(plan, lr) =>
         (for {
-          entry <- matchEntry(lr, vecAttr, metric, sparse = sparseIdx != null,
-            half = half)
+          entry <- matchEntry(lr, vecAttr, key)
           idAttr <- lr.output.find(_.name == entry.idCol)
           if idAttr.dataType == LongType || idAttr.dataType == IntegerType
           // a user predicate between sort and scan filters the
@@ -384,7 +356,7 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
             val base = math.min(k * widen, math.max(1, ef))
             if (iterating) math.min(base, maxScanTuples) else base
           }
-          cands <- walkGraphs(entry, query, fetch, math.max(ef, fetch), sparseIdx)
+          cands <- walkGraphs(entry, key.query, fetch, math.max(ef, fetch))
           // strict_order (r16): the candidate stream is consumed in
           // strict distance order, so the scan budget truncates the
           // GLOBAL merged stream (pgvector's single-index budget).
@@ -444,10 +416,9 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   /** The registered index (if any) whose table root paths back this
     * scan, whose indexed column is the sort's distance column on THIS
-    * relation, and whose opclass metric is the sort's metric. */
+    * relation, and whose opclass metric is the sort key's metric. */
   private def matchEntry(lr: LogicalRelation, vecAttr: AttributeReference,
-      metric: String, sparse: Boolean = false,
-      half: Boolean = false): Option[HnswSqlCatalog.Entry] =
+      key: SortKey): Option[HnswSqlCatalog.Entry] =
     lr.relation match {
       case fs: HadoopFsRelation =>
         val scanPaths = fs.location.rootPaths.map(_.toUri.getPath).toSet
@@ -456,7 +427,7 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
             e.rootPaths.exists(scanPaths.contains) &&
             e.vecCol == vecAttr.name &&
             e.idCol.nonEmpty &&
-            e.metric == metric &&
+            e.metric == key.metric &&
             // kind consistency, both ways: a sparse sort key only
             // walks a sparsevec store and vice versa (the arithmetic
             // families must agree, the IvfProbeRule bit discipline);
@@ -466,8 +437,8 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
             // float-column operator over a halfvec index (storage-
             // side rounding) remains servable: `half=false` does not
             // exclude halfvec storage.
-            (e.storage == "sparsevec") == sparse &&
-            (!half || e.storage == "halfvec") &&
+            (e.storage == "sparsevec") == key.query.isInstanceOf[Sparse] &&
+            (!key.half || e.storage == "halfvec") &&
             lr.output.exists(_.exprId == vecAttr.exprId) => e
         }
       case _ => None
@@ -483,22 +454,16 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     * dedup is required. Walks on a shared graph serialize on its
     * monitor (Index.searchImpl), so concurrent sessions stay exact.
     * Any failure falls back to the exact plan. */
-  private def walkGraphs(e: HnswSqlCatalog.Entry, query: Array[Double],
-      fetch: Int, ef: Int,
-      sparseIdx: Array[Long] = null): Option[Array[(Int, Long, Double)]] = {
+  private def walkGraphs(e: HnswSqlCatalog.Entry, query: Query,
+      fetch: Int, ef: Int): Option[Array[(Int, Long, Double)]] = {
     try {
       val cnt = HnswProbeRule.deserCounter
       // halfvec index: the graph stores float16-rounded vectors —
       // walk with the rounded query too (pgvector casts both sides)
-      val q = if (e.storage == "halfvec")
-        graft.functions.Half.unpackToDouble(graft.functions.Half.pack(query))
-      else query
+      val q = if (e.storage == "halfvec") graft.operators.Hnsw.halfRounded(query) else query
       val cands = HnswProbeRule.graphBlobs(session, e.path).flatMap { case (pid, blob) =>
         cnt.foreach(_.add(1))
-        val ix = graft.operators.Hnsw.deserCached(blob)
-        val hits = if (sparseIdx != null) ix.searchKnnSparse(sparseIdx, q, fetch, ef)
-        else ix.searchKnn(q, fetch, ef)
-        hits.map { case (id, d) => (pid, id, d) }
+        graft.operators.Hnsw.walk(blob, fetch, ef)(q).map { case (id, d) => (pid, id, d) }
       }.distinct
       Some(cands)
     } catch { case scala.util.control.NonFatal(_) => None }
@@ -521,40 +486,4 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     plan.collect {
       case Filter(_, child) if child.collectLeaves().exists(_ eq lr) => true
     }.nonEmpty
-
-  // ----- shared plan-walk helpers (the IvfProbeRule shapes) -----
-
-  private def peelProjects(p: LogicalPlan): (LogicalPlan => LogicalPlan, LogicalPlan) =
-    p match {
-      case proj: Project =>
-        val (inner, core) = peelProjects(proj.child)
-        (child => proj.withNewChildren(Seq(inner(child))), core)
-      case other => (identity, other)
-    }
-
-  private def resolveThroughProjects(e: Expression, plan: LogicalPlan): Expression = e match {
-    case attr: AttributeReference =>
-      plan match {
-        case Project(projectList, child) =>
-          projectList.collectFirst {
-            case a: Alias if a.exprId == attr.exprId => resolveThroughProjects(a.child, child)
-          }.getOrElse(attr)
-        case Filter(_, child) => resolveThroughProjects(attr, child)
-        case _ => attr
-      }
-    case other => other
-  }
-
-  private def literalVector(v: VectorDistanceExpr): Option[Array[Double]] =
-    Seq(v.left, v.right).collectFirst {
-      case Literal(data: ArrayData, ArrayType(DoubleType, _)) => data.toDoubleArray()
-      case Literal(data: ArrayData, ArrayType(FloatType, _)) => data.toFloatArray().map(_.toDouble)
-    }
-
-  private def resolveToAttribute(
-      e: Expression, plan: LogicalPlan): Option[AttributeReference] =
-    resolveThroughProjects(e, plan) match {
-      case a: AttributeReference => Some(a)
-      case _ => None
-    }
 }

@@ -1,11 +1,11 @@
 package graft.plans
 
 import graft.functions.{VectorDistance, VectorDistanceExpr}
+import graft.plans.ProbeMatch.{literalVector, resolveThroughProjects}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, Attribute, AttributeReference, ElementAt, EqualTo, Expression, In, IsNull, LessThanOrEqual, Literal, NamedExpression, Not, Or, UnaryMinus}
-import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LocalLimit, LogicalPlan, Project, Sort}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, ElementAt, EqualTo, Expression, In, IsNull, LessThanOrEqual, Literal, Not, Or, UnaryMinus}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LogicalPlan, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType, IntegerType}
 
@@ -40,26 +40,32 @@ import scala.collection.concurrent.TrieMap
   */
 object IvfCatalog {
 
-  /** `radii(i)` is cell i's bounding radius
+  /** One registered store's probe statistics.
+    *
+    * `radii(i)` is cell i's bounding radius
     * ([[graft.operators.IvfIndex.cellRadii]]); empty when the store
     * was registered without radius statistics — knn probing works
-    * either way, range-query cell pruning needs them (soundness). */
-  /** `filteredWiden`: probe-width multiplier applied when the query
+    * either way, range-query cell pruning needs them (soundness).
+    *
+    * `filteredWiden`: probe-width multiplier applied when the query
     * carries a selective metadata predicate (the pgvector ≥0.8
     * iterative-scan analogue, statically bounded): a filter shrinks
     * the per-cell survivor count, so the same recall needs more
-    * cells — and the filter itself pays the extra scan back. */
-  /** `table`: present when the store is a [[graft.sources.GraftTable]]
+    * cells — and the filter itself pays the extra scan back.
+    *
+    * `table`: present when the store is a [[graft.sources.GraftTable]]
     * — the probe rule then ALSO prunes the scan's file list against
     * the commit log's per-file `centroid_id` [min,max] stats, so
     * file-level skipping stacks with the injected cell filter (the
-    * lakehouse replacement for hive-partition pruning). */
-  /** `packedCol`: a halfvec-opclass store carries the float16-packed
+    * lakehouse replacement for hive-partition pruning).
+    *
+    * `packedCol`: a halfvec-opclass store carries the float16-packed
     * sidecar column instead of the wide vector; the rebind view
     * exposes the original name as its unpack, so the sort's column
     * side resolves to the PACKED attribute — the rule matches either
-    * name (VectorIndexDdl r13). */
-  /** `kind` (r14, the ivfflat bit_hamming_ops wiring): "float" stores
+    * name (VectorIndexDdl r13).
+    *
+    * `kind` (r14, the ivfflat bit_hamming_ops wiring): "float" stores
     * hold real-vector centroids and serve any float-metric sort
     * (l2/ip/cosine — the probe ranks with the sort's own metric);
     * "bit-hamming" stores hold k-majority 0/1 bit centroids
@@ -170,24 +176,11 @@ object IvfProbeRule {
 
 final class IvfProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
 
-  /** Numeric GUC parse with pgvector's rejection semantics (r15 — the
-    * HnswProbeRule.intKnob discipline): malformed / out-of-range
-    * values throw at the first probe instead of silently defaulting. */
-  private def intKnob(key: String, lo: Int, hi: Int): Option[Int] =
-    session.conf.getOption(key).map { v =>
-      val n = scala.util.Try(v.trim.toInt).getOrElse(
-        throw new IllegalArgumentException(
-          s"""invalid value for parameter "$key": "$v" (expected an integer)"""))
-      if (n < lo || n > hi) throw new IllegalArgumentException(
-        s"$n is outside the valid range for parameter " +
-          s""""$key" ($lo .. $hi)""")
-      n
-    }
-
   /** `SET ivfflat.probes = N` — pgvector's exact session knob name
     * works verbatim (Spark's SET command accepts arbitrary dotted conf
     * keys); range 1..32768, pgvector's own. */
-  private def sessionProbes: Option[Int] = intKnob("ivfflat.probes", 1, 32768)
+  private def sessionProbes: Option[Int] =
+    ProbeMatch.intKnob(session, "ivfflat.probes", 1, 32768)
 
   /** pgvector ≥0.8's `SET ivfflat.iterative_scan` (r15 — VERDICT r14
     * "what's missing" #2, the hnsw-knob asymmetry): `off` disables the
@@ -223,24 +216,10 @@ final class IvfProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     * never pushes the probe count below `ivfflat.probes` — a plain
     * (unfiltered, or iterative_scan=off) query is unaffected. */
   private def maxProbes: Int =
-    intKnob("ivfflat.max_probes", 1, 32768).getOrElse(32768)
+    ProbeMatch.intKnob(session, "ivfflat.max_probes", 1, 32768).getOrElse(32768)
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
-    case gl: GlobalLimit => gl.child match {
-      case ll: LocalLimit =>
-        // a projection after the knn (user `.select(...)`) optimizes to
-        // Project nodes interposed in the Limit▸Sort chain; peel them
-        // so the probe still fires, and re-wrap unchanged
-        val (rewrap, core) = peelProjects(ll.child)
-        core match {
-          case srt: Sort if srt.global =>
-            rewrite(srt)
-              .map(s => gl.withNewChildren(Seq(ll.withNewChildren(Seq(rewrap(s))))))
-              .getOrElse(gl)
-          case _ => gl
-        }
-      case _ => gl
-    }
+    case gl: GlobalLimit => ProbeMatch.rewriteTopK(gl)(rewrite)
     // the pgvector range shape: WHERE dist(embedding, <literal>) < τ
     // over a registered store — triangle-inequality cell pruning
     // (EXACT, unlike nprobe knn: a pruned cell provably holds no
@@ -272,7 +251,7 @@ final class IvfProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
       if vde.mode == VectorDistance.L2.id
       query <- literalVector(vde)
       colSide <- vectorColumn(vde)
-      vecAttr <- resolveToAttribute(colSide, f.child)
+      vecAttr <- resolveVectorAttribute(colSide, f.child)
       rewritten <- injectRangeProbe(f.child, vecAttr, query, tau)
     } yield f.copy(child = rewritten)
 
@@ -309,16 +288,6 @@ final class IvfProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     if (done) Some(out) else None
   }
 
-  /** Peel consecutive Project nodes, returning a function that
-    * re-wraps a replacement plan in the same projections. */
-  private def peelProjects(p: LogicalPlan): (LogicalPlan => LogicalPlan, LogicalPlan) =
-    p match {
-      case proj: Project =>
-        val (inner, core) = peelProjects(proj.child)
-        (child => proj.withNewChildren(Seq(inner(child))), core)
-      case other => (identity, other)
-    }
-
   private def rewrite(srt: Sort): Option[Sort] =
     literalRewrite(srt).orElse(joinRewrite(srt))
 
@@ -354,7 +323,7 @@ final class IvfProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     for {
       head <- srt.order.headOption
       key <- asDistKey(resolveThroughProjects(head.child, srt.child))
-      vecAttr <- resolveToAttribute(key.colSide, srt.child)
+      vecAttr <- resolveVectorAttribute(key.colSide, srt.child)
       rewritten <- injectProbe(srt.child, key.mode, vecAttr, key.query, key.negated)
     } yield srt.copy(child = rewritten)
   }
@@ -427,20 +396,6 @@ final class IvfProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** Follow an attribute through Project aliases down the child chain. */
-  private def resolveThroughProjects(e: Expression, plan: LogicalPlan): Expression = e match {
-    case attr: AttributeReference =>
-      plan match {
-        case Project(projectList, child) =>
-          projectList.collectFirst {
-            case a: Alias if a.exprId == attr.exprId => resolveThroughProjects(a.child, child)
-          }.getOrElse(attr)
-        case Filter(_, child) => resolveThroughProjects(attr, child)
-        case _ => attr
-      }
-    case other => other
-  }
-
   private def asDistance(e: Expression): Option[(VectorDistanceExpr, Boolean)] = e match {
     case v: VectorDistanceExpr => Some((v, false))
     case u: UnaryMinus => u.child match {
@@ -450,36 +405,20 @@ final class IvfProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  private def literalVector(v: VectorDistanceExpr): Option[Array[Double]] =
-    Seq(v.left, v.right).collectFirst {
-      case Literal(data: ArrayData, ArrayType(DoubleType, _)) => data.toDoubleArray()
-      case Literal(data: ArrayData, ArrayType(FloatType, _)) => data.toFloatArray().map(_.toDouble)
-    }
-
   private def vectorColumn(v: VectorDistanceExpr): Option[Expression] =
     Seq(v.left, v.right).find(e => !e.isInstanceOf[Literal])
 
-  /** Resolve an expression through Project aliases to a bare column
-    * attribute; non-column distance operands abort the rewrite. A
+  /** [[ProbeMatch.resolveToAttribute]], plus the halfvec rebind: a
     * halfvec store's rebind view exposes the vector column as
     * `half_unpack(packed)` — the packed attribute IS the indexed
     * column then (Entry.packedCol matches it). */
-  private def resolveToAttribute(
+  private def resolveVectorAttribute(
       e: Expression, plan: LogicalPlan): Option[AttributeReference] =
     resolveThroughProjects(e, plan) match {
-      case a: AttributeReference => Some(a)
       case graft.functions.HalfUnpackExpr(a: AttributeReference) => Some(a)
-      case _ => None
+      case _ => ProbeMatch.resolveToAttribute(e, plan)
     }
 
-  /** Rank registered cells with the sort's own metric; inject the IN
-    * filter right above the store scan. `vecAttr` is the column side
-    * of the sort's distance expression: the probe only fires when that
-    * attribute IS the registered store's indexed embedding column of
-    * THIS relation (name + exprId) — a distance over some other vector
-    * column, or over a joined table that merely sits near a registered
-    * scan, must keep its exact plan (pruning it would silently drop
-    * valid top-k rows). */
   /** An entry serves a sort mode iff their arithmetic families agree:
     * bit-hamming centroids rank only the `<~>` sort; float centroids
     * rank any float metric (the probe uses the sort's own metric).
@@ -489,6 +428,14 @@ final class IvfProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     if (kind == "bit-hamming") mode == IvfProbeRule.HammingMode
     else mode != IvfProbeRule.HammingMode
 
+  /** Rank registered cells with the sort's own metric; inject the IN
+    * filter right above the store scan. `vecAttr` is the column side
+    * of the sort's distance expression: the probe only fires when that
+    * attribute IS the registered store's indexed embedding column of
+    * THIS relation (name + exprId) — a distance over some other vector
+    * column, or over a joined table that merely sits near a registered
+    * scan, must keep its exact plan (pruning it would silently drop
+    * valid top-k rows). */
   private def injectProbe(
       plan: LogicalPlan, mode: Int, vecAttr: AttributeReference,
       query: Array[Double], negated: Boolean): Option[LogicalPlan] = {

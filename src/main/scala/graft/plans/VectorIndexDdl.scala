@@ -419,74 +419,52 @@ final case class CreateVectorIndexCommand(stmt: VectorIndexDdl.Stmt)
     * so the DDL indexes the sorted array<bigint> indices column and
     * names the aligned array<double> values column via WITH. The
     * graph builds and walks with the two-pointer sparse kernel under
-    * the opclass metric. */
-  private def buildHnswSparse(session: SparkSession,
-      df: org.apache.spark.sql.DataFrame): Unit = {
-    import graft.operators.Hnsw
+    * the opclass metric.
+    *
+    * ONE-COLUMN sparsevec (r17): `USING hnsw (sv sparsevec_*_ops)` on
+    * a struct<indices, values, dims> column needs no WITH
+    * (values = …) — the build reads the struct itself, and the catalog
+    * entry anchors on the STRUCT column name so the verbatim
+    * `sv <-> '...'::sparsevec` sort key ([[HnswProbeRule]]'s
+    * SparseStructDistExpr shape) serves from this graph.
+    *
+    * Returns the frame to build from and its sparse vector column. */
+  private def sparseSource(df: org.apache.spark.sql.DataFrame)
+      : (org.apache.spark.sql.DataFrame, String) = {
     import org.apache.spark.sql.types._
-    val m = intOpt("m", 16)
-    val efC = intOpt("ef_construction", 64)
-    val parts = intOpt("parts", 8)
-    val id = idCol(df)
     def colType(c: String) = df.schema.fields.find(_.name == c).map(_.dataType)
-    // ONE-COLUMN sparsevec (r17): `USING hnsw (sv sparsevec_*_ops)`
-    // on a struct<indices, values, dims> column needs no WITH
-    // (values = …) — the build unpacks the fields, and the catalog
-    // entry anchors on the STRUCT column name so the verbatim
-    // `sv <-> '...'::sparsevec` sort key ([[HnswProbeRule]]'s
-    // SparseStructDistExpr shape) serves from this graph.
-    val isStruct = colType(stmt.column)
-      .exists(graft.functions.SparseVec.isSparseStructType)
-    val (buildDf, idxCol, valCol) =
-      if (isStruct) {
-        import org.apache.spark.sql.functions.col
-        (df.withColumn("__graft_si", col(s"${stmt.column}.indices"))
-           .withColumn("__graft_sv", col(s"${stmt.column}.values")),
-          "__graft_si", "__graft_sv")
-      } else {
-        colType(stmt.column) match {
-          case Some(ArrayType(LongType, _)) => ()
-          case other => throw new IllegalArgumentException(
-            s"opclass ${stmt.opclass.get} indexes a sparse (indices, values) column " +
-              s"pair or a struct<indices, values, dims> sparsevec column: " +
-              s"${stmt.column} must be the sorted array<bigint> indices column " +
-              s"or the struct, got ${other.map(_.simpleString).getOrElse("missing")}")
-        }
-        val vc = stmt.options.getOrElse("values", throw new IllegalArgumentException(
-          s"opclass ${stmt.opclass.get} over an indices column needs WITH " +
-            "(values = 'col') naming the aligned array<double>/array<float> " +
-            "values column (pair layout; a struct<indices, values, dims> " +
-            "column needs no option)"))
-        colType(vc) match {
-          case Some(ArrayType(DoubleType, _)) | Some(ArrayType(FloatType, _)) => ()
-          case other => throw new IllegalArgumentException(
-            s"sparsevec values column $vc must be array<double>/array<float>, " +
-              s"got ${other.map(_.simpleString).getOrElse("missing")}")
-        }
-        (df, stmt.column, vc)
+    if (colType(stmt.column).exists(graft.functions.SparseVec.isSparseStructType))
+      (df, stmt.column)
+    else {
+      colType(stmt.column) match {
+        case Some(ArrayType(LongType, _)) => ()
+        case other => throw new IllegalArgumentException(
+          s"opclass ${stmt.opclass.get} indexes a sparse (indices, values) column " +
+            s"pair or a struct<indices, values, dims> sparsevec column: " +
+            s"${stmt.column} must be the sorted array<bigint> indices column " +
+            s"or the struct, got ${other.map(_.simpleString).getOrElse("missing")}")
       }
-    val graphs = Hnsw.buildPartitionedSparse(buildDf, id, idxCol, valCol,
-      m = m, efC = efC, parts = parts, metric = metric)
-    Hnsw.writeGraphs(graphs, storePath)
-    // root paths: how HnswProbeRule recognizes a scan of THIS table
-    // (the sparse sort keys `1 - sparse_cos_sim(...)` / `-sparse_dot`
-    // then serve from the graph walk, r14)
-    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
-    val roots = df.queryExecution.analyzed.collect {
-      case lr: LogicalRelation => lr.relation match {
-        case fs: HadoopFsRelation => fs.location.rootPaths.map(_.toUri.getPath)
-        case _ => Seq.empty[String]
+      val vc = stmt.options.getOrElse("values", throw new IllegalArgumentException(
+        s"opclass ${stmt.opclass.get} over an indices column needs WITH " +
+          "(values = 'col') naming the aligned array<double>/array<float> " +
+          "values column (pair layout; a struct<indices, values, dims> " +
+          "column needs no option)"))
+      colType(vc) match {
+        case Some(ArrayType(DoubleType, _)) | Some(ArrayType(FloatType, _)) => ()
+        case other => throw new IllegalArgumentException(
+          s"sparsevec values column $vc must be array<double>/array<float>, " +
+            s"got ${other.map(_.simpleString).getOrElse("missing")}")
       }
-    }.flatten
-    HnswSqlCatalog.put(indexName, HnswSqlCatalog.Entry(
-      storePath, stmt.table, stmt.column, metric, m, efC,
-      idCol = id, rootPaths = roots, storage = "sparsevec"))
-    HnswProbeRule.install(session)
+      (df.withColumn("__graft_sv", graft.operators.Hnsw.sparseColumn(stmt.column, vc)),
+        "__graft_sv")
+    }
   }
 
+  /** Build, persist and register the hnsw graphs for every opclass
+    * storage; the sort keys of the indexed table then serve from the
+    * graph walk ([[HnswProbeRule]]). */
   private def buildHnsw(session: SparkSession,
       df: org.apache.spark.sql.DataFrame): Unit = {
-    if (storage == "sparsevec") return buildHnswSparse(session, df)
     import graft.operators.Hnsw
     val m = intOpt("m", 16)
     val efC = intOpt("ef_construction", 64)
@@ -498,7 +476,11 @@ final case class CreateVectorIndexCommand(stmt: VectorIndexDdl.Stmt)
     // exact in binary16, so bit graphs always take half storage.
     import org.apache.spark.sql.GraftSqlBridge.{toColumn, toExpression}
     val (src, vecCol, half) =
-      if (storage == "halfvec" &&
+      if (storage == "sparsevec") {
+        val (sdf, sc) = sparseSource(df)
+        (sdf, sc, false)
+      }
+      else if (storage == "halfvec" &&
           df.schema(stmt.column).dataType == org.apache.spark.sql.types.BinaryType) {
         // halfvec opclass over an already-PACKED binary16 column (the
         // vs_knn_half/vs_half_cos sidecar shape, r17 — VERDICT r16
@@ -509,7 +491,14 @@ final case class CreateVectorIndexCommand(stmt: VectorIndexDdl.Stmt)
         (df.withColumn(unp, toColumn(graft.functions.HalfUnpackExpr(
           toExpression(col(stmt.column))))), unp, true)
       }
-      else if (storage != "bit") (df, stmt.column, storage == "halfvec")
+      else if (storage != "bit") {
+        // a dense opclass reads its column as array<double>: a sparse
+        // struct column fails this cast instead of building a sparse
+        // graph under a dense opclass
+        val dense = s"__dense_${stmt.column}"
+        (df.withColumn(dense, col(stmt.column).cast("array<double>")), dense,
+          storage == "halfvec")
+      }
       else {
         requirePackedColumn(df)
         val bits = s"__bits_${stmt.column}"

@@ -244,7 +244,8 @@ object VectorQueries {
     val q = queryVec(s, d).select(col("qvec").cast("array<double>"))
       .head.getSeq[Double](0).toArray
     graft.operators.Hnsw.search(
-      graft.operators.Hnsw.readGraphs(s, graphsP), q, K, ef = HnswEf)
+      graft.operators.Hnsw.readGraphs(s, graphsP), graft.operators.Hnsw.Dense(q), K,
+      ef = HnswEf)
   }
 
   /** Build-once BIT graph stores (pgvector `bit_hamming_ops` /
@@ -292,7 +293,8 @@ object VectorQueries {
         .select(col("embedding").cast("array<double>"))
         .head.getSeq[Double](0).toArray))
     graft.operators.Hnsw.search(
-      graft.operators.Hnsw.readGraphs(s, graphsP), q, K, ef = HnswEf)
+      graft.operators.Hnsw.readGraphs(s, graphsP), graft.operators.Hnsw.Dense(q), K,
+      ef = HnswEf)
   }
 
   /** Build-once bit-IVF store (pgvector `ivfflat (bq bit_hamming_ops)`
@@ -412,9 +414,10 @@ object VectorQueries {
     val dumpP = new java.io.File(base, "dump").toString
     VectorQueries.synchronized {
       if (!new java.io.File(dumpP, "_SUCCESS").exists()) {
-        val graphs = graft.operators.Hnsw.buildPartitionedSparse(
-          s.read.parquet(ensureSparseTfStore(s, d)), "doc_id", "sidx", "sval",
-          m = HnswM, efC = HnswEfC, parts = HnswParts, metric = "cosine")
+        val graphs = graft.operators.Hnsw.buildPartitioned(
+          s.read.parquet(ensureSparseTfStore(s, d))
+            .withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval")),
+          "doc_id", "sv", m = HnswM, efC = HnswEfC, parts = HnswParts, metric = "cosine")
         graft.operators.Hnsw.writeGraphs(graphs, graphsP)
         graft.operators.Hnsw.dumpParsed(
           graft.operators.Hnsw.readGraphs(s, graphsP))
@@ -433,8 +436,8 @@ object VectorQueries {
   private def hnswSparseKnn(s: SparkSession, d: String): DataFrame = {
     val (graphsP, _) = ensureHnswSparseStore(s, d)
     val (qi, qv) = graft.functions.SparseVec.queryOf(SparseQueryTerms)
-    graft.operators.Hnsw.searchSparse(
-      graft.operators.Hnsw.readGraphs(s, graphsP), qi, qv, K, ef = HnswEf)
+    graft.operators.Hnsw.search(graft.operators.Hnsw.readGraphs(s, graphsP),
+      graft.operators.Hnsw.Sparse(qi, qv), K, ef = HnswEf)
       .select(col("vec_id").as("doc_id"), col("dist"))
   }
 
@@ -617,23 +620,23 @@ object VectorQueries {
     * retrieval under a metadata predicate (`WHERE source = 'src1'
     * ORDER BY sparse cosine LIMIT k` through the sparse hnsw index) —
     * widened beam over-fetch + documents semi-join + exact top-k of
-    * the survivors ([[graft.operators.Hnsw.searchFilteredSparse]]),
+    * the survivors ([[graft.operators.Hnsw.searchFiltered]]),
     * the production SPLADE-with-filters shape. Deterministic given the
     * persisted flat sparse graphs: the walk replay is metric-generic
     * and the survivor join is relational — hash gate from birth. */
   private def hnswSparseFiltered(s: SparkSession, d: String): DataFrame = {
     val (graphsP, _) = ensureHnswSparseStore(s, d)
     val (qi, qv) = graft.functions.SparseVec.queryOf(SparseQueryTerms)
-    graft.operators.Hnsw.searchFilteredSparse(
+    graft.operators.Hnsw.searchFiltered(
       graft.operators.Hnsw.readGraphs(s, graphsP),
       Tables.documents(s, d), "doc_id", col("source") === "src1",
-      qi, qv, K, ef = HnswEf, widen = HnswFilterWiden)
+      graft.operators.Hnsw.Sparse(qi, qv), K, ef = HnswEf, widen = HnswFilterWiden)
       .select(col("vec_id").as("doc_id"), col("dist"))
   }
 
   /** Replay: widened per-graph fetch (k·widen), survivor semi-join on
     * the documents predicate, exact top-k —
-    * [[graft.operators.Hnsw.searchFilteredSparse]] replayed over the
+    * [[graft.operators.Hnsw.searchFiltered]] replayed over the
     * same flat sparse dump as vs_hnsw_sparse. */
   private def hnswSparseFilteredOracle(d: String): String = {
     val dump = new java.io.File(new java.io.File(sys.props("java.io.tmpdir"),
@@ -683,7 +686,8 @@ object VectorQueries {
           .head.getSeq[Double](0).toArray))
     }
     (build, () => graft.operators.Hnsw.search(
-      graft.operators.Hnsw.readGraphs(s, graphsP), q, K, ef = HnswEf))
+      graft.operators.Hnsw.readGraphs(s, graphsP), graft.operators.Hnsw.Dense(q), K,
+      ef = HnswEf))
   }
 
   private def hnswBitOracle(d: String, metric: String): String = {
@@ -714,7 +718,8 @@ object VectorQueries {
       .head.getSeq[Double](0).toArray
     graft.operators.Hnsw.searchFiltered(
       graft.operators.Hnsw.readGraphs(s, graphsP), Tables.embeddings(s, d), "vec_id",
-      col("label") === 3, q, K, ef = HnswEf, widen = HnswFilterWiden)
+      col("label") === 3, graft.operators.Hnsw.Dense(q), K, ef = HnswEf,
+      widen = HnswFilterWiden)
   }
 
   // -------------------------------------------- cell-routed HNSW (r7)
@@ -1007,7 +1012,8 @@ object VectorQueries {
       q = queryVec(s, d).select(col("qvec").cast("array<double>"))
         .head.getSeq[Double](0).toArray
     }
-    (build, () => graft.operators.Hnsw.search(graphs, q, K, ef = HnswEf))
+    (build, () => graft.operators.Hnsw.search(graphs, graft.operators.Hnsw.Dense(q), K,
+      ef = HnswEf))
   }
 
   /** Build-once LSH bucket store: (vec_id, embedding, table_id, sig)

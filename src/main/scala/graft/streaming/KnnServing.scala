@@ -19,6 +19,29 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object KnnServing {
 
+  /** The one driver-side collect of the serving family, bounded:
+    * `batch`'s `cols` rows, decoded. limit(maxBatch+1) keeps the guard
+    * itself driver-bounded — at most maxBatch+1 rows ever land here —
+    * so a mis-wired source (say, a corpus stream routed into the query
+    * port) fails fast, naming `who`, instead of OOMing the driver. */
+  private def collectBatch[T](batch: DataFrame, cols: Seq[org.apache.spark.sql.Column],
+      maxBatch: Int, who: String)(decode: org.apache.spark.sql.Row => T): Seq[T] = {
+    val rows = batch.select(cols: _*).limit(maxBatch + 1).collect()
+    require(rows.length <= maxBatch,
+      s"$who micro-batch exceeds maxBatch=$maxBatch query " +
+        "vectors; raise maxBatch or trigger smaller batches")
+    rows.toSeq.map(decode)
+  }
+
+  /** [[collectBatch]] of (qid, query) pairs; `qVecCol` is dense or
+    * sparse ([[graft.operators.Hnsw.queryColumns]]). */
+  private def collectQueries(batch: DataFrame, qIdCol: String, qVecCol: String,
+      maxBatch: Int, who: String): Seq[(Long, graft.operators.Hnsw.Query)] = {
+    val (vecCols, decode) = graft.operators.Hnsw.queryColumns(batch, qVecCol)
+    collectBatch(batch, org.apache.spark.sql.functions.col(qIdCol).cast("long") +: vecCols,
+      maxBatch, who)(r => (r.getLong(0), decode(r, 1)))
+  }
+
   /** @param queries streaming frame with (qIdCol, qVecCol)
     * @param store   static corpus with (idCol, vecCol)
     * @param writeBatch persists one answered micro-batch */
@@ -78,8 +101,9 @@ object KnnServing {
     * (query, hit_rank, pos) — the incremental per-hit arrival order
     * the reference streams over SSE. Per-batch cost: one store scan +
     * a k·|queries|-row pruned doc fetch; summarize work never touches
-    * the corpus. */
-  /** `fetchDocs` (r14): callers with a range-clustered doc store can
+    * the corpus.
+    *
+    * `fetchDocs` (r14): callers with a range-clustered doc store can
     * route the per-batch doc fetch through its point-read seam (e.g.
     * `ids => table.readWhere(col(id).isin(ids: _*))` on a
     * [[graft.sources.GraftTable]]) — file-level stats pruning instead
@@ -168,17 +192,8 @@ object KnnServing {
       docIdCol: String, textCol: String, terms: Seq[String],
       k: Int, ef: Int, m: Int, windowTokens: Int,
       maxBatch: Int = 65536): DataFrame = {
-    import org.apache.spark.sql.functions._
     val spark = batch.sparkSession
-    // the serveHnsw collect discipline: bounded, fails fast on mis-wire
-    val qRows = batch
-      .select(col(qIdCol).cast("long"), col(qVecCol).cast("array<double>"))
-      .limit(maxBatch + 1)
-      .collect()
-    require(qRows.length <= maxBatch,
-      s"summarizeIndexedBatch micro-batch exceeds maxBatch=$maxBatch query " +
-        "vectors; raise maxBatch or trigger smaller batches")
-    val qs = qRows.map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+    val qs = collectQueries(batch, qIdCol, qVecCol, maxBatch, "summarizeIndexedBatch")
     val hits = graft.operators.Hnsw.searchBatch(graphs, qs, k, ef)
       .withColumnRenamed("qid", qIdCol)
     // k·|batch| rows by construction of searchBatch — driver-bounded
@@ -258,7 +273,10 @@ object KnnServing {
     * ([[graft.operators.Hnsw.searchBatch]]); per-batch cost is
     * P graph loads + |batch|·P beam walks, independent of corpus
     * row count. Graphs come from [[graft.operators.Hnsw
-    * .buildPartitioned]] (optionally persisted via writeGraphs). */
+    * .buildPartitioned]] (optionally persisted via writeGraphs).
+    * `qVecCol` is a dense array column, or a sparse struct column
+    * ([[graft.operators.Hnsw.sparseColumn]], r14) for term queries
+    * over sparse graphs — the lexical/SPLADE retrieval serving shape. */
   def serveHnsw(
       queries: DataFrame, graphs: DataFrame,
       qIdCol: String, qVecCol: String,
@@ -268,21 +286,7 @@ object KnnServing {
       .outputMode("append")
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
-          // the one driver-side collect in the serving family — bound
-          // it explicitly so a mis-wired source (say, a corpus stream
-          // routed into the query port) fails fast instead of OOMing
-          // the driver. limit(maxBatch+1) keeps the guard itself
-          // driver-bounded: at most maxBatch+1 rows ever land here.
-          val rows = batch
-            .select(org.apache.spark.sql.functions.col(qIdCol).cast("long"),
-              org.apache.spark.sql.functions.col(qVecCol).cast("array<double>"))
-            .limit(maxBatch + 1)
-            .collect()
-          require(rows.length <= maxBatch,
-            s"serveHnsw micro-batch exceeds maxBatch=$maxBatch query " +
-              "vectors; raise maxBatch or trigger smaller batches")
-          val qs = rows
-            .map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+          val qs = collectQueries(batch, qIdCol, qVecCol, maxBatch, "serveHnsw")
           val answered = graft.operators.Hnsw.searchBatch(graphs, qs, k, ef)
             .withColumnRenamed("qid", qIdCol)
           writeBatch(answered, batchId)
@@ -290,44 +294,9 @@ object KnnServing {
       }
       .start()
 
-  /** SPARSE-query HNSW serving (r14) — the sparsevec twin of
-    * [[serveHnsw]]: each micro-batch's (qid, indices, values) rows are
-    * collected (maxBatch-bounded, fail-fast) and every sparse
-    * partition graph answers all of them through the two-pointer beam
-    * walk ([[graft.operators.Hnsw.searchBatchSparse]]); per-batch cost
-    * is P graph loads + |batch|·P walks, independent of corpus rows —
-    * the lexical/SPLADE-style retrieval serving shape. */
-  def serveHnswSparse(
-      queries: DataFrame, graphs: DataFrame,
-      qIdCol: String, qIdxCol: String, qValCol: String,
-      k: Int, ef: Int = 64,
-      maxBatch: Int = 65536)(writeBatch: (DataFrame, Long) => Unit): StreamingQuery =
-    queries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          import org.apache.spark.sql.functions.col
-          val rows = batch
-            .select(col(qIdCol).cast("long"),
-              col(qIdxCol).cast("array<bigint>"),
-              col(qValCol).cast("array<double>"))
-            .limit(maxBatch + 1)
-            .collect()
-          require(rows.length <= maxBatch,
-            s"serveHnswSparse micro-batch exceeds maxBatch=$maxBatch query " +
-              "vectors; raise maxBatch or trigger smaller batches")
-          val qs = rows.map(r => (r.getLong(0),
-            r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray)).toSeq
-          val answered = graft.operators.Hnsw.searchBatchSparse(graphs, qs, k, ef)
-            .withColumnRenamed("qid", qIdCol)
-          writeBatch(answered, batchId)
-        }
-      }
-      .start()
-
   /** ROUTED sparse-query HNSW serving (r15 — closes VERDICT r14's one
-    * perf-weak, the flat-sparse P-growth): the cell-routed twin of
-    * [[serveHnswSparse]]. Each micro-batch's (qid, indices, values)
+    * perf-weak, the flat-sparse P-growth): the cell-routed form of
+    * sparse [[serveHnsw]]. Each micro-batch's (qid, indices, values)
     * rows are collected (maxBatch-bounded, fail-fast) and answered by
     * [[graft.operators.Hnsw.searchBatchRoutedSparse]] — each query
     * walks only its nprobe top-mass cells' graphs, each graph in the
@@ -347,17 +316,11 @@ object KnnServing {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         if (!batch.isEmpty) {
           import org.apache.spark.sql.functions.col
-          val rows = batch
-            .select(col(qIdCol).cast("long"),
-              col(qIdxCol).cast("array<bigint>"),
-              col(qValCol).cast("array<double>"))
-            .limit(maxBatch + 1)
-            .collect()
-          require(rows.length <= maxBatch,
-            s"serveHnswSparseRouted micro-batch exceeds maxBatch=$maxBatch query " +
-              "vectors; raise maxBatch or trigger smaller batches")
-          val qs = rows.map(r => (r.getLong(0),
-            r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray)).toSeq
+          val qs = collectBatch(batch, Seq(col(qIdCol).cast("long"),
+              col(qIdxCol).cast("array<bigint>"), col(qValCol).cast("array<double>")),
+            maxBatch, "serveHnswSparseRouted") { r =>
+            (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray)
+          }
           val answered = graft.operators.Hnsw.searchBatchRoutedSparse(
             graphs, nlist, qs, k, nprobe, ef)
             .withColumnRenamed("qid", qIdCol)

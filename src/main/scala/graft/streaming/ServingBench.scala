@@ -265,17 +265,18 @@ object ServingBench {
     Probe(
       build = () => {
         val tf = graft.queries.VectorQueries.sparseTf(s, d).localCheckpoint()
-        val graphs = graft.operators.Hnsw.buildPartitionedSparse(
-          tf, "doc_id", "sidx", "sval",
-          m = 16, efC = 64, parts = 8, metric = "cosine").localCheckpoint()
+        val graphs = graft.operators.Hnsw.buildPartitioned(
+          tf.withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval")),
+          "doc_id", "sv", m = 16, efC = 64, parts = 8, metric = "cosine").localCheckpoint()
         qrows = tf.filter(col("doc_id") < BatchSize)
           .select(col("doc_id"), col("sidx"), col("sval"))
           .collect()
           .map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Double](2)))
         input = MemoryStream[(Long, Seq[Long], Seq[Double])]
-        q = KnnServing.serveHnswSparse(
-          input.toDF().toDF("qid", "qidx", "qval"), graphs,
-          "qid", "qidx", "qval", K, ef = 64) { (b, _) => b.count(); () }
+        q = KnnServing.serveHnsw(
+          input.toDF().toDF("qid", "qidx", "qval")
+            .select(col("qid"), graft.operators.Hnsw.sparseColumn("qidx", "qval").as("q")),
+          graphs, "qid", "q", K, ef = 64) { (b, _) => b.count(); () }
         feed() // warm-up
       },
       probe = () => feed(),

@@ -10,9 +10,9 @@ import org.apache.spark.sql.functions._
   * loads cannot explain). Phases, each min-of-5 after one warm pass:
   *   read_df      — spark.read.parquet(store) alone (listing+schema)
   *   scan_collect — probed blobs fetched to the driver (scan + In prune)
-  *   walk_driver  — driver-side deserCached + walks over those blobs
+  *   walk_driver  — driver-side Hnsw.walk over those blobs
   *   full_routed  — Hnsw.searchRoutedSparse end to end
-  *   full_flat    — Hnsw.searchSparse end to end (the contrast row)
+  *   full_flat    — Hnsw.search end to end (the contrast row)
   * full_routed − (scan_collect + walk_driver) ≈ the Spark plan floor
   * (dedup exchange, AQE stages, job scheduling).
   * Usage: runMain graft.tools.ProfileRoutedFloor <storeDir> <flatDir> <nlist>
@@ -48,8 +48,8 @@ object ProfileRoutedFloor {
     }
     println(s"[floor] probed_blobs=${blobs.length} bytes=${blobs.map(_.length.toLong).sum}")
     minOf5("walk_driver") {
-      blobs.foreach(b => graft.operators.Hnsw.deserCached(b)
-        .searchKnnSparse(qi, qv, 10, 96))
+      blobs.foreach(b => graft.operators.Hnsw.walk(b, 10, 96)(
+        graft.operators.Hnsw.Sparse(qi, qv)))
     }
     minOf5("full_routed") {
       graft.operators.Hnsw.searchRoutedSparse(
@@ -57,8 +57,8 @@ object ProfileRoutedFloor {
         qi, qv, 10, nprobe = 4, ef = 96).collect(); ()
     }
     minOf5("full_flat") {
-      graft.operators.Hnsw.searchSparse(
-        graft.operators.Hnsw.readGraphs(spark, flatP), qi, qv, 10, ef = 96)
+      graft.operators.Hnsw.search(graft.operators.Hnsw.readGraphs(spark, flatP),
+        graft.operators.Hnsw.Sparse(qi, qv), 10, ef = 96)
         .collect(); ()
     }
     // batch-16 serving shapes
@@ -70,8 +70,9 @@ object ProfileRoutedFloor {
         10, nprobe = 4, ef = 96).collect(); ()
     }
     minOf5("batch16_flat") {
-      graft.operators.Hnsw.searchBatchSparse(
-        graft.operators.Hnsw.readGraphs(spark, flatP), qs, 10, 96).collect(); ()
+      graft.operators.Hnsw.searchBatch(graft.operators.Hnsw.readGraphs(spark, flatP),
+        qs.map { case (id, qi, qv) => (id, graft.operators.Hnsw.Sparse(qi, qv)) },
+        10, 96).collect(); ()
     }
     spark.stop()
   }

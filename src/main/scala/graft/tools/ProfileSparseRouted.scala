@@ -42,8 +42,9 @@ object ProfileSparseRouted {
     val routedP = new java.io.File(base, "routed").toString
     if (!new java.io.File(routedP, "_SUCCESS").exists()) {
       graft.operators.Hnsw.writeGraphs(
-        graft.operators.Hnsw.buildPartitionedSparse(
-          tf, "doc_id", "sidx", "sval", parts = 8, metric = "cosine"), flatP)
+        graft.operators.Hnsw.buildPartitioned(
+          tf.withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval")),
+          "doc_id", "sv", parts = 8, metric = "cosine"), flatP)
       graft.operators.Hnsw.writeGraphsClustered(
         graft.operators.Hnsw.buildCellRoutedSparse(
           tf, "doc_id", "sidx", "sval",
@@ -55,8 +56,8 @@ object ProfileSparseRouted {
       val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
     }
     def flatProbe(): Unit = {
-      graft.operators.Hnsw.searchSparse(
-        graft.operators.Hnsw.readGraphs(spark, flatP), qi, qv, 10, ef = 96)
+      graft.operators.Hnsw.search(graft.operators.Hnsw.readGraphs(spark, flatP),
+        graft.operators.Hnsw.Sparse(qi, qv), 10, ef = 96)
         .collect(); ()
     }
     def routedProbe(): Unit = {

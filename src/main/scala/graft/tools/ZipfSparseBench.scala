@@ -169,8 +169,9 @@ object ZipfSparseBench {
       new java.io.File(flatP).exists()
     val tFlatBuild = if (skipBuild) -1.0 else timed {
       graft.operators.Hnsw.writeGraphs(
-        graft.operators.Hnsw.buildPartitionedSparse(
-          tf, "doc_id", "sidx", "sval", parts = 8, metric = "cosine"), flatP)
+        graft.operators.Hnsw.buildPartitioned(
+          tf.withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval")),
+          "doc_id", "sv", parts = 8, metric = "cosine"), flatP)
     }
     val tRoutedBuild = if (skipBuild) -1.0 else timed {
       graft.operators.Hnsw.writeGraphsClustered(
@@ -185,8 +186,8 @@ object ZipfSparseBench {
       .select(col("sidx"), col("sval")).head
     val (qi, qv) = (q1.getSeq[Long](0).toArray, q1.getSeq[Double](1).toArray)
     def flatProbe(): Unit =
-      graft.operators.Hnsw.searchSparse(
-        graft.operators.Hnsw.readGraphs(spark, flatP), qi, qv, 10, ef = 96)
+      graft.operators.Hnsw.search(graft.operators.Hnsw.readGraphs(spark, flatP),
+        graft.operators.Hnsw.Sparse(qi, qv), 10, ef = 96)
         .collect()
     val routedDeser = spark.sparkContext.longAccumulator("zipf-routed-deser")
     def routedProbe(): Unit =

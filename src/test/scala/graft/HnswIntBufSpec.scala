@@ -61,7 +61,7 @@ class HnswIntBufSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(42)
     val ix = new Hnsw.Index(8, 32, Hnsw.Metric.Cosine)
     for (i <- 0 until 300)
-      ix.insert(i.toLong, Array.fill(8)(rnd.nextGaussian()))
+      ix.insert(i.toLong, Hnsw.Dense(Array.fill(8)(rnd.nextGaussian())))
     ix
   }
   private def sparseFixture(): Hnsw.Index = {
@@ -71,7 +71,7 @@ class HnswIntBufSpec extends AnyFunSuite {
       val nnz = 3 + rnd.nextInt(6)
       val dims = Array.fill(nnz)(rnd.nextInt(500).toLong).distinct.sorted
       val vals = dims.map(_ => (1 + rnd.nextInt(5)).toDouble)
-      ix.insertSparse(i.toLong, dims, vals)
+      ix.insert(i.toLong, Hnsw.Sparse(dims, vals))
     }
     ix
   }
@@ -103,7 +103,7 @@ class HnswIntBufSpec extends AnyFunSuite {
     assert(!(b1 eq a1))
     // cached walk ≡ fresh walk, bit for bit
     val rnd = new scala.util.Random(7)
-    val q = Array.fill(8)(rnd.nextGaussian())
+    val q = Hnsw.Dense(Array.fill(8)(rnd.nextGaussian()))
     assert(a1.searchKnn(q, 10, 64) == Hnsw.deser(blobA).searchKnn(q, 10, 64))
     assert(Hnsw.WalkCache.residentBytes > 0)
     Hnsw.WalkCache.clear()
@@ -115,7 +115,7 @@ class HnswIntBufSpec extends AnyFunSuite {
     Hnsw.WalkCache.clear()
     val shared = Hnsw.deserCached(blob)
     val rnd = new scala.util.Random(11)
-    val queries = Array.fill(16)(Array.fill(8)(rnd.nextGaussian()))
+    val queries = Array.fill(16)(Hnsw.Dense(Array.fill(8)(rnd.nextGaussian())))
     val expected = queries.map(q => Hnsw.deser(blob).searchKnn(q, 10, 64))
     val errs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val threads = (0 until 4).map { t =>
@@ -161,7 +161,7 @@ class HnswIntBufSpec extends AnyFunSuite {
         val ix = Hnsw.deser(blob)
         byCell.getOrElse(cell, Seq.empty).iterator.flatMap { qid =>
           val (_, qi, qv) = qs.find(_._1 == qid).get
-          ix.searchKnnSparse(qi, qv, 5, 64).map { case (id, d) => (qid, id, d) }
+          ix.searchKnn(Hnsw.Sparse(qi, qv), 5, 64).map { case (id, d) => (qid, id, d) }
         }
       }
       .toDF("qid", "vec_id", "dist")

@@ -55,7 +55,7 @@ class HnswRoutedSpec extends SparkSpec {
     spark.read.parquet(gp).collect().foreach { row =>
       val ix = Hnsw.deser(row.getAs[Array[Byte]]("graph"))
       val n = ix.ids.length
-      val got = ix.searchKnn(query, k = 5, ef = n).map { case (id, d) => (d, id) }
+      val got = ix.searchKnn(Hnsw.Dense(query), k = 5, ef = n).map { case (id, d) => (d, id) }
       val want = (0 until n).map { i =>
         var s = 0.0
         val v = ix.vecs(i)
@@ -76,7 +76,7 @@ class HnswRoutedSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val flat = Hnsw.search(
       Hnsw.buildPartitioned(corpus, "vec_id", "embedding", parts = 8),
-      query, k = 10, ef = 512)
+      Hnsw.Dense(query), k = 10, ef = 512)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(routedAll == flat,
       "with every cell probed and a saturating beam, routing must not change the answer")

@@ -35,10 +35,10 @@ class HnswSparseRoutedSpec extends SparkSpec {
 
   private def flatTop(k: Int, ef: Int): Seq[(Long, Double)] = {
     val (qi, qv) = query
-    Hnsw.searchSparse(
-      Hnsw.buildPartitionedSparse(tf, "doc_id", "sidx", "sval",
-        parts = 4, metric = "cosine"),
-      qi, qv, k, ef)
+    Hnsw.search(
+      Hnsw.buildPartitioned(tf.withColumn("sv", Hnsw.sparseColumn("sidx", "sval")),
+        "doc_id", "sv", parts = 4, metric = "cosine"),
+      Hnsw.Sparse(qi, qv), k, ef)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
   }
 
@@ -91,6 +91,15 @@ class HnswSparseRoutedSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("duplicate query ids"))
     assert(e.getMessage.contains("7"))
+    // the flat dense batch walk refuses them too
+    val dense = Hnsw.buildPartitioned(Tables.embeddings(spark, Sf).limit(50),
+      "vec_id", "embedding", m = 8, efC = 32, parts = 2)
+    val v = Hnsw.Dense(Array.fill(64)(0.25))
+    val eFlat = intercept[IllegalArgumentException] {
+      Hnsw.searchBatch(dense, Seq((7L, v), (7L, v)), k = 5)
+    }
+    assert(eFlat.getMessage.contains("duplicate query ids"))
+    assert(eFlat.getMessage.contains("7"))
   }
 
   test("batch serving kernel agrees with the per-query routed path") {
@@ -122,12 +131,12 @@ class HnswSparseRoutedSpec extends SparkSpec {
 
   test("searchFilteredSparse: widened over-fetch + semi-join returns the exact top-k of survivors") {
     val (qi, qv) = query
-    val flat = Hnsw.buildPartitionedSparse(tf, "doc_id", "sidx", "sval",
-      parts = 4, metric = "cosine").localCheckpoint()
+    val flat = Hnsw.buildPartitioned(tf.withColumn("sv", Hnsw.sparseColumn("sidx", "sval")),
+      "doc_id", "sv", parts = 4, metric = "cosine").localCheckpoint()
     val docs = Tables.documents(spark, Sf)
     val pred = col("source") === "src1"
-    val filtered = Hnsw.searchFilteredSparse(flat, docs, "doc_id", pred,
-      qi, qv, k = 5, ef = 96, widen = 8)
+    val filtered = Hnsw.searchFiltered(flat, docs, "doc_id", pred,
+      Hnsw.Sparse(qi, qv), k = 5, ef = 96, widen = 8)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     // every survivor satisfies the predicate
     val allowed = docs.filter(pred).select(col("doc_id"))
@@ -137,8 +146,8 @@ class HnswSparseRoutedSpec extends SparkSpec {
     // with a saturating widen the result IS the exact filtered top-k:
     // exhaustive per-graph fetch → the semi-join sees every allowed id
     val n = tf.count().toInt
-    val exhaustive = Hnsw.searchFilteredSparse(flat, docs, "doc_id", pred,
-      qi, qv, k = 5, ef = n, widen = n)
+    val exhaustive = Hnsw.searchFiltered(flat, docs, "doc_id", pred,
+      Hnsw.Sparse(qi, qv), k = 5, ef = n, widen = n)
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     val brute = tf
       .select(col("doc_id"),
@@ -309,8 +318,9 @@ class HnswSparseRoutedSpec extends SparkSpec {
     // flat at production granularity (~500 docs/graph): per-graph
     // size is executor-memory-bounded at 100 TB, so flat's P grows
     // with the corpus — that P-growth is exactly what routing escapes
-    val flatStore = Hnsw.buildPartitionedSparse(
-      docs, "doc_id", "sidx", "sval", parts = 40, metric = "cosine")
+    val flatStore = Hnsw.buildPartitioned(
+      docs.withColumn("sv", Hnsw.sparseColumn("sidx", "sval")), "doc_id", "sv",
+      parts = 40, metric = "cosine")
       .localCheckpoint()
     val (qi, qv) = (docs.filter(col("doc_id") === 7L).collect().head match {
       case r => (r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray)
@@ -366,7 +376,8 @@ class HnswSparseRoutedSpec extends SparkSpec {
     }
     def flatOnce(): Double = {
       val t0 = System.nanoTime()
-      Hnsw.searchBatchSparse(flatStore, qs, 10, 96).collect()
+      Hnsw.searchBatch(flatStore, qs.map { case (id, qi, qv) => (id, Hnsw.Sparse(qi, qv)) },
+        10, 96).collect()
       (System.nanoTime() - t0) / 1e9
     }
     routedOnce(); flatOnce() // warm

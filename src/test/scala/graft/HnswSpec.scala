@@ -14,9 +14,9 @@ class HnswSpec extends SparkSpec {
     val ix = new Hnsw.Index(8, 32)
     val rnd = new scala.util.Random(3)
     val vs = Array.tabulate(500)(i => (i.toLong, Array.fill(16)(rnd.nextGaussian())))
-    vs.foreach { case (id, v) => ix.insert(id, v) }
+    vs.foreach { case (id, v) => ix.insert(id, Hnsw.Dense(v)) }
     for ((id, v) <- vs.take(25)) {
-      val hits = ix.searchKnn(v, 3, 32)
+      val hits = ix.searchKnn(Hnsw.Dense(v), 3, 32)
       assert(hits.head._1 == id, s"self-query missed for $id: $hits")
       assert(hits.head._2 == 0.0)
     }
@@ -36,15 +36,16 @@ class HnswSpec extends SparkSpec {
       val m = Hnsw.Metric.of(metric)
       val dense = new Hnsw.Index(8, 32, m)
       val sparse = new Hnsw.Index(8, 32, m, half = false, sparse = true)
-      vs.foreach { case (id, v) => dense.insert(id, v) }
-      vs.foreach { case (id, v) => sparse.insertSparse(id, fullIdx, v) }
+      vs.foreach { case (id, v) => dense.insert(id, Hnsw.Dense(v)) }
+      vs.foreach { case (id, v) => sparse.insert(id, Hnsw.Sparse(fullIdx, v)) }
       assert(dense.entry == sparse.entry && dense.maxLevel == sparse.maxLevel)
       assert(dense.links.map(_.map(_.toSeq).toSeq) ==
         sparse.links.map(_.map(_.toSeq).toSeq),
         s"$metric: sparse/dense adjacency diverged")
       for ((_, v) <- vs.take(10)) {
         val q = Array.fill(dims)(rnd.nextGaussian())
-        assert(dense.searchKnn(q, 5, 32) == sparse.searchKnnSparse(fullIdx, q, 5, 32),
+        assert(dense.searchKnn(Hnsw.Dense(q), 5, 32) ==
+          sparse.searchKnn(Hnsw.Sparse(fullIdx, q), 5, 32),
           s"$metric: walk results diverged")
         // ragged truly-sparse query against the densified graph: the
         // two-pointer merge treats absent indices as zeros
@@ -55,32 +56,33 @@ class HnswSpec extends SparkSpec {
         if (metric != "cosine") // cosine norms fold in ARRAY order: a
           // padded dense array sums zeros in different positions —
           // equal mathematically, not necessarily bit-equal
-          assert(dense.searchKnn(padded, 5, 32) ==
-            sparse.searchKnnSparse(sq, sv, 5, 32),
+          assert(dense.searchKnn(Hnsw.Dense(padded), 5, 32) ==
+            sparse.searchKnn(Hnsw.Sparse(sq, sv), 5, 32),
             s"$metric: sparse query != zero-padded dense query")
         ()
       }
       // v4 blob round-trip carries the idx arrays exactly
       val back = Hnsw.deser(Hnsw.ser(sparse))
       assert(back.sparse && back.idxs.map(_.toSeq) == sparse.idxs.map(_.toSeq))
-      assert(back.searchKnnSparse(fullIdx, vs.head._2, 3, 32) ==
-        sparse.searchKnnSparse(fullIdx, vs.head._2, 3, 32))
+      assert(back.searchKnn(Hnsw.Sparse(fullIdx, vs.head._2), 3, 32) ==
+        sparse.searchKnn(Hnsw.Sparse(fullIdx, vs.head._2), 3, 32))
     }
   }
 
   test("appendBatchSparse inserts sparse rows with full linking; cross-kind appends refused (r14)") {
     import org.apache.spark.sql.functions.col
-    val tf = graft.queries.VectorQueries.sparseTf(spark, Sf).localCheckpoint()
+    val tf = graft.queries.VectorQueries.sparseTf(spark, Sf)
+      .withColumn("sv", Hnsw.sparseColumn("sidx", "sval")).localCheckpoint()
     val base = tf.filter(col("doc_id") >= 10)
     val adds = tf.filter(col("doc_id") < 10)
-    val graphs = Hnsw.buildPartitionedSparse(base, "doc_id", "sidx", "sval",
+    val graphs = Hnsw.buildPartitioned(base, "doc_id", "sv",
       m = 8, efC = 32, parts = 2, metric = "cosine").localCheckpoint()
-    val merged = Hnsw.appendBatchSparse(graphs, adds, "doc_id", "sidx", "sval")
+    val merged = Hnsw.appendBatch(graphs, adds, "doc_id", "sv")
       .localCheckpoint()
     // every appended doc finds itself at distance 0
     for (r <- adds.collect()) {
       val (id, qi, qv) = (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray)
-      val hits = Hnsw.searchSparse(merged, qi, qv, 1, ef = 64).collect()
+      val hits = Hnsw.search(merged, Hnsw.Sparse(qi, qv), 1, ef = 64).collect()
       // cosine self-distance carries one ulp of sqrt rounding
       // (1 − aa/(√aa·√aa)); exact zero is an L2-only property
       assert(hits.head.getLong(0) == id && hits.head.getDouble(1) < 1e-12,
@@ -92,27 +94,27 @@ class HnswSpec extends SparkSpec {
       Hnsw.appendBatch(graphs, Tables.embeddings(spark, Sf).limit(2),
         "vec_id", "embedding").collect()
     }
-    assert(eD.getMessage.contains("appendBatchSparse"))
+    assert(eD.getMessage.contains("Hnsw.Sparse(indices, values)"))
     val denseGraphs = Hnsw.buildPartitioned(
       Tables.embeddings(spark, Sf).limit(50), "vec_id", "embedding",
       m = 8, efC = 32, parts = 2).localCheckpoint()
     val eS = intercept[org.apache.spark.SparkException] {
-      Hnsw.appendBatchSparse(denseGraphs, adds, "doc_id", "sidx", "sval").collect()
+      Hnsw.appendBatch(denseGraphs, adds, "doc_id", "sv").collect()
     }
-    assert(eS.getMessage.contains("use appendBatch"))
+    assert(eS.getMessage.contains("Hnsw.Dense(values)"))
   }
 
   test("local index recall vs brute force on a gaussian cloud") {
     val ix = new Hnsw.Index(16, 64)
     val rnd = new scala.util.Random(5)
     val vs = Array.tabulate(2000)(i => (i.toLong, Array.fill(32)(rnd.nextGaussian())))
-    vs.foreach { case (id, v) => ix.insert(id, v) }
+    vs.foreach { case (id, v) => ix.insert(id, Hnsw.Dense(v)) }
     def l2(a: Array[Double], b: Array[Double]) =
       math.sqrt(a.zip(b).map { case (x, y) => (x - y) * (x - y) }.sum)
     val recalls = for (qi <- 0 until 20) yield {
       val q = Array.fill(32)(rnd.nextGaussian())
       val exact = vs.map { case (id, v) => (id, l2(q, v)) }.sortBy(_._2).take(10).map(_._1).toSet
-      val got = ix.searchKnn(q, 10, 96).map(_._1).toSet
+      val got = ix.searchKnn(Hnsw.Dense(q), 10, 96).map(_._1).toSet
       (exact & got).size / 10.0
     }
     val mean = recalls.sum / recalls.size
@@ -137,7 +139,7 @@ class HnswSpec extends SparkSpec {
     graphs.collect().foreach { row =>
       val ix = Hnsw.deser(row.getAs[Array[Byte]]("graph"))
       val n = ix.ids.length
-      val got = ix.searchKnn(q, k = 10, ef = n).map { case (id, d) => (d, id) }
+      val got = ix.searchKnn(Hnsw.Dense(q), k = 10, ef = n).map { case (id, d) => (d, id) }
       val want = (0 until n)
         .map { i =>
           var s = 0.0
@@ -159,7 +161,7 @@ class HnswSpec extends SparkSpec {
     val graphs = Hnsw.readGraphs(spark, dir).cache()
     val queries = emb.filter(col("vec_id") < 3)
       .select(col("vec_id"), col("embedding").cast("array<double>"))
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1).toArray)).toSeq
+      .collect().map(r => (r.getLong(0), Hnsw.Dense(r.getSeq[Double](1).toArray))).toSeq
     val batch = Hnsw.searchBatch(graphs, queries, k = 5)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
       .groupBy(_._1).view.mapValues(_.map(x => (x._2, x._3)).toSeq).toMap
@@ -175,7 +177,7 @@ class HnswSpec extends SparkSpec {
     val ix = new Hnsw.Index(8, 32)
     val rnd = new scala.util.Random(7)
     val vs = Array.tabulate(300)(i => (i.toLong, Array.fill(16)(rnd.nextGaussian())))
-    vs.foreach { case (id, v) => ix.insert(id, v) }
+    vs.foreach { case (id, v) => ix.insert(id, Hnsw.Dense(v)) }
     val back = Hnsw.deser(Hnsw.ser(ix))
     assert(back.m == ix.m && back.efC == ix.efC)
     assert(back.entry == ix.entry && back.maxLevel == ix.maxLevel)
@@ -185,7 +187,7 @@ class HnswSpec extends SparkSpec {
       a.length == b.length && a.zip(b).forall { case (x, y) => x == y } })
     // identical search behavior through the round-trip
     val q = Array.fill(16)(rnd.nextGaussian())
-    assert(back.searchKnn(q, 10, 64) == ix.searchKnn(q, 10, 64))
+    assert(back.searchKnn(Hnsw.Dense(q), 10, 64) == ix.searchKnn(Hnsw.Dense(q), 10, 64))
     // data-only decode: a non-graph payload fails the magic check
     // instead of instantiating whatever the bytes claim to be
     intercept[IllegalArgumentException] {
@@ -209,7 +211,7 @@ class HnswSpec extends SparkSpec {
     // the exact k·P merge keeps search correct however many graphs exist
     val query = emb.filter(col("vec_id") === 0)
       .select(col("embedding").cast("array<double>")).head.getSeq[Double](0).toArray
-    val got = Hnsw.search(graphs, query, 10, ef = 96)
+    val got = Hnsw.search(graphs, Hnsw.Dense(query), 10, ef = 96)
       .collect().map(_.getLong(0)).toSeq
     val exact = graft.operators.Knn.topK(corpus, "vec_id", "embedding",
         emb.filter(col("vec_id") === 0).select(col("embedding").as("qvec")),
@@ -243,7 +245,7 @@ class HnswSpec extends SparkSpec {
     } finally q.stop()
     val healed = Hnsw.readGraphs(spark, s"$dir/graphs")
     assert(healed.count() == before)
-    val hit = Hnsw.search(healed, Array.fill(64)(0.25), 1)
+    val hit = Hnsw.search(healed, Hnsw.Dense(Array.fill(64)(0.25)), 1)
       .collect().map(r => (r.getLong(0), r.getDouble(1)))
     assert(hit.head == ((777777L, 0.0)), s"appended vector not found: ${hit.toSeq}")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/graphs.old")))
@@ -268,7 +270,7 @@ class HnswSpec extends SparkSpec {
     } finally q.stop()
     assert(results.size == 9)
     val direct = Hnsw.searchBatch(graphs,
-      queries.map { case (id, v) => (id, v.map(_.toDouble).toArray) }.toSeq, k = 3)
+      queries.map { case (id, v) => (id, Hnsw.Dense(v.map(_.toDouble).toArray)) }.toSeq, k = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(results.sortBy(x => (x._1, x._3, x._2)).toSeq ==
       direct.sortBy(x => (x._1, x._3, x._2)).toSeq)
@@ -306,7 +308,7 @@ class HnswSpec extends SparkSpec {
     assert(merged.count() == 4) // same partition graphs, larger
     val probe = newVecs.limit(1).select(col("vec_id"),
       col("embedding").cast("array<double>")).collect().head
-    val hits = Hnsw.search(merged, probe.getSeq[Double](1).toArray, 3).collect()
+    val hits = Hnsw.search(merged, Hnsw.Dense(probe.getSeq[Double](1).toArray), 3).collect()
     // the appended vector duplicates an existing one's embedding, so
     // BOTH must surface at distance 0 (the original wins the id tie)
     assert(hits.filter(_.getDouble(1) == 0.0).map(_.getLong(0)).contains(probe.getLong(0)),
@@ -314,7 +316,7 @@ class HnswSpec extends SparkSpec {
     // pre-existing vectors are still findable too
     val oldVec = emb.filter(col("vec_id") === 11)
       .select(col("embedding").cast("array<double>")).head.getSeq[Double](0).toArray
-    assert(Hnsw.search(merged, oldVec, 1).collect().head.getLong(0) == 11L)
+    assert(Hnsw.search(merged, Hnsw.Dense(oldVec), 1).collect().head.getLong(0) == 11L)
   }
 
   test("appendBatch routes into EXISTING part ids (hole-y id space loses nothing)") {
@@ -335,7 +337,7 @@ class HnswSpec extends SparkSpec {
     val probes = adds.select(col("vec_id"), col("embedding").cast("array<double>"))
       .collect()
     for (p <- probes.take(10)) {
-      val hits = Hnsw.search(merged, p.getSeq[Double](1).toArray, 5).collect()
+      val hits = Hnsw.search(merged, Hnsw.Dense(p.getSeq[Double](1).toArray), 5).collect()
       assert(hits.exists(h => h.getLong(0) == p.getLong(0) && h.getDouble(1) == 0.0),
         s"appended vector ${p.getLong(0)} not findable")
     }
@@ -359,7 +361,7 @@ class HnswSpec extends SparkSpec {
     } finally q.stop()
     val graphs = Hnsw.readGraphs(spark, s"$dir/graphs")
     val qv = fresh.head._2.map(_.toDouble).toArray
-    val hits = Hnsw.search(graphs, qv, 3).collect()
+    val hits = Hnsw.search(graphs, Hnsw.Dense(qv), 3).collect()
     assert(hits.filter(_.getDouble(1) == 0.0).map(_.getLong(0)).contains(fresh.head._1),
       s"appended vector not found after swap: ${hits.mkString(",")}")
   }
@@ -371,7 +373,7 @@ class HnswSpec extends SparkSpec {
     // stored vector must surface that vector at distance 0
     val someVec = emb.filter(col("vec_id") === 7)
       .select(col("embedding").cast("array<double>")).head.getSeq[Double](0).toArray
-    val hits = Hnsw.search(graphs, someVec, 5).collect()
+    val hits = Hnsw.search(graphs, Hnsw.Dense(someVec), 5).collect()
     assert(hits.head.getLong(0) == 7L && hits.head.getDouble(1) == 0.0)
     assert(hits.map(_.getLong(0)).distinct.length == 5)
     // ascending by distance

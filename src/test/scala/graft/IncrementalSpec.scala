@@ -247,7 +247,7 @@ class IncrementalSpec extends SparkSpec {
     // (a) the hits are EXACTLY the hnsw batch answer
     val direct = graft.operators.Hnsw.searchBatch(graphs,
       batch.collect().map(r =>
-        (r.getLong(0), r.getSeq[Float](1).map(_.toDouble).toArray)).toSeq,
+        (r.getLong(0), graft.operators.Hnsw.Dense(r.getSeq[Float](1).map(_.toDouble).toArray))).toSeq,
       k = 3, ef = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(rows.map(r => (r._1, r._3)).toSet == direct)
@@ -277,8 +277,9 @@ class IncrementalSpec extends SparkSpec {
     implicit val sqlCtx = spark.sqlContext
     import spark.implicits._
     val tf = graft.queries.VectorQueries.sparseTf(spark, Sf).localCheckpoint()
-    val graphs = graft.operators.Hnsw.buildPartitionedSparse(
-      tf, "doc_id", "sidx", "sval", m = 8, efC = 32, parts = 2,
+    val graphs = graft.operators.Hnsw.buildPartitioned(
+      tf.withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval")),
+      "doc_id", "sv", m = 8, efC = 32, parts = 2,
       metric = "cosine").localCheckpoint()
     val qs = tf.filter(col("doc_id") < 3)
       .select(col("doc_id"), col("sidx"), col("sval"))
@@ -286,9 +287,10 @@ class IncrementalSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Double](2)))
     val input = MemoryStream[(Long, Seq[Long], Seq[Double])]
     val results = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
-    val q = KnnServing.serveHnswSparse(
-      input.toDF().toDF("qid", "qidx", "qval"), graphs,
-      "qid", "qidx", "qval", k = 3, ef = 64) { (batch, _) =>
+    val q = KnnServing.serveHnsw(
+      input.toDF().toDF("qid", "qidx", "qval")
+        .select(col("qid"), graft.operators.Hnsw.sparseColumn("qidx", "qval").as("q")),
+      graphs, "qid", "q", k = 3, ef = 64) { (batch, _) =>
       results ++= batch.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     }
     try {
@@ -296,8 +298,9 @@ class IncrementalSpec extends SparkSpec {
       q.processAllAvailable()
     } finally q.stop()
     assert(results.size == 9)
-    val direct = graft.operators.Hnsw.searchBatchSparse(graphs,
-      qs.map(x => (x._1, x._2.toArray, x._3.toArray)).toSeq, k = 3, ef = 64)
+    val direct = graft.operators.Hnsw.searchBatch(graphs,
+      qs.map(x => (x._1, graft.operators.Hnsw.Sparse(x._2.toArray, x._3.toArray))).toSeq,
+      k = 3, ef = 64)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(results.sortBy(x => (x._1, x._3, x._2)).toSeq ==
       direct.sortBy(x => (x._1, x._3, x._2)).toSeq)

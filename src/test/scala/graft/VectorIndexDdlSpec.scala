@@ -488,8 +488,8 @@ class VectorIndexDdlSpec extends SparkSpec {
       // integer weights make distances exact, no flake margin)
       val (qi, qv) = graft.functions.SparseVec.queryOf(
         graft.queries.VectorQueries.SparseQueryTerms)
-      val served = graft.operators.Hnsw.searchSparse(
-        graft.operators.Hnsw.readGraphs(s, ent.path), qi, qv, 10, ef = 96)
+      val served = graft.operators.Hnsw.search(graft.operators.Hnsw.readGraphs(s, ent.path),
+        graft.operators.Hnsw.Sparse(qi, qv), 10, ef = 96)
         .collect().map(r => (r.getLong(0), r.getDouble(1)))
       val exact = s.read.parquet(tfDir)
         .select(col("doc_id"),
@@ -1063,7 +1063,7 @@ class VectorIndexDdlSpec extends SparkSpec {
       val q = Tables.embeddings(s, Sf).filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>"))
         .head.getSeq[Double](0).toArray
-      val got = graft.operators.Hnsw.search(graphs, q, k = 5, ef = 64)
+      val got = graft.operators.Hnsw.search(graphs, graft.operators.Hnsw.Dense(q), k = 5, ef = 64)
       assert(got.count() == 5)
     }
   }
