@@ -103,17 +103,12 @@ object Bench {
     // two run modes apart.
     val wipedStores = sys.env.get("SPARK_GRAFT_WIPE_STORES").contains("1") && {
       val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-      def rm(f: java.io.File): Unit = {
-        if (f.isDirectory)
-          Option(f.listFiles).getOrElse(Array.empty[java.io.File]).foreach(rm)
-        f.delete(); ()
-      }
       Option(tmp.listFiles).getOrElse(Array.empty[java.io.File])
         .filter(f => f.isDirectory && f.getName.startsWith("graft_") &&
           !f.getName.startsWith("graft_sf"))
         .foreach { f =>
           System.err.println(s"[bench] SPARK_GRAFT_WIPE_STORES: removing $f")
-          rm(f)
+          Sidecar.drop(f.toString)
         }
       true
     }
@@ -251,15 +246,16 @@ object Bench {
     // committed row then silently reads as "builds are free". A build
     // row is stamped into the artifact's `cached` list when it BOTH
     // finished under the ensure floor AND wrote no store artifact
-    // (_SUCCESS/_txlog) under tmp's graft_* roots — consumers must not
-    // read stamped rows as cold build cost. Honest in-memory builds
-    // (localCheckpoint graphs, per-run txn tables) cost real time and
-    // stay unstamped; the conjunction errs conservative both ways.
+    // (a Sidecar done marker, _SUCCESS or _txlog) under tmp's graft_*
+    // roots — consumers must not read stamped rows as cold build
+    // cost. Honest in-memory builds (localCheckpoint graphs, per-run
+    // txn tables) cost real time and stay unstamped; the conjunction
+    // errs conservative both ways.
     val CachedBuildMax = 0.3
     def wroteStores(sinceMs: Long): Boolean = {
       val tmp = new java.io.File(sys.props("java.io.tmpdir"))
       def fresh(f: java.io.File, depth: Int): Boolean = {
-        if (f.getName == "_SUCCESS" || f.getName == "_txlog")
+        if (Set(Sidecar.Done, "_SUCCESS", "_txlog")(f.getName))
           f.lastModified >= sinceMs
         else if (!f.isDirectory || depth <= 0) false
         else Option(f.listFiles).getOrElse(Array.empty[java.io.File])

@@ -1,16 +1,36 @@
 package graft
 
-/** Content-coupled keys for persisted sidecar/index stores.
+/** Persisted sidecar/index stores: their key, their directory and
+  * their one lifecycle.
   *
   * Every engine-built artifact that outlives one query run (IVF/PQ/SQ
-  * stores, LSH bands, KLL sketch state, classifier weights, …) lives
-  * under `java.io.tmpdir/graft_<tag>_v<N>_<key>`. Through r12 the key
-  * was `Integer.toHexString(sfDir.hashCode)` — a PATH hash, so a
-  * fixture regenerated IN PLACE silently served stale sketch/weight/
-  * band state to both engines (ADVICE r12: the oracle gate still
-  * "passes" because both sides read the stale sidecar). The key now
-  * folds a fingerprint of the fixture's actual files — (relative
-  * path, length, mtime) of every data file, one driver-side directory
+  * stores, graph dumps, LSH bands, KLL sketch state, classifier
+  * weights, txn tables, …) lives in [[dir]] =
+  * `java.io.tmpdir/graft_<tag>_<key>`, where the tag `<name>_v<N>`
+  * carries the store's layout version and is declared once as a `val`
+  * that the builder, the oracle SQL and the specs all read. A
+  * change to a store's writer, layout or parameters bumps its tag
+  * version: the old directory is then simply never read again.
+  *
+  * Lifecycle ([[built]]): a store is done iff its directory holds the
+  * [[Done]] marker, which is created only after the whole build
+  * returned. A missing marker means the build never ran or was killed
+  * part-way; the leftovers are deleted and the build runs again in
+  * place, so a half-written store is never read. The build runs in
+  * the final directory rather than a temp dir renamed in at the end,
+  * because some stores record absolute paths of their own files
+  * (a GraftTable clone's log names its source's files). Builds,
+  * marker checks and [[drop]] all hold this object's one reentrant
+  * monitor: one build per store per JVM, and a build may ensure
+  * another store it reads.
+  *
+  * Key ([[key]]): through r12 the key was
+  * `Integer.toHexString(sfDir.hashCode)` — a PATH hash, so a fixture
+  * regenerated IN PLACE silently served stale sketch/weight/band
+  * state to both engines (ADVICE r12: the oracle gate still "passes"
+  * because both sides read the stale sidecar). The key now folds a
+  * fingerprint of the fixture's actual files — (relative path,
+  * length, mtime) of every data file, one driver-side directory
   * listing — so regenerating a fixture at the same path changes the
   * key and every dependent store rebuilds.
   *
@@ -20,6 +40,9 @@ package graft
   * a preserved mtime is indistinguishable from no change — which is
   * exactly the case where stale ≡ fresh. */
 object Sidecar {
+
+  /** Completion marker, created last in a built store's directory. */
+  private[graft] val Done = "_GRAFT_DONE"
 
   /** Store key for the fixture rooted at `d`: path hash ⊕ content
     * fingerprint, hex-encoded. Deterministic within a fixture
@@ -45,5 +68,36 @@ object Sidecar {
         fp = fp * 1000003L + mt
       }
     java.lang.Long.toHexString((d.hashCode.toLong << 32) ^ fp)
+  }
+
+  /** Directory of the `tag` store derived from the fixture at `d`. */
+  def dir(tag: String, d: String): String = dir(s"${tag}_${key(d)}")
+
+  /** Directory of a `tag` store that does not depend on any fixture. */
+  def dir(tag: String): String =
+    new java.io.File(sys.props("java.io.tmpdir"), s"graft_$tag").toString
+
+  /** `dir` once its store is complete: returned as is when marked
+    * done, otherwise cleared, built in place by `build(dir)` and
+    * marked done. A `build` that throws leaves no marker, so the next
+    * call starts over. */
+  def built(dir: String)(build: String => Unit): String = synchronized {
+    val marker = new java.io.File(dir, Done)
+    if (!marker.exists()) {
+      drop(dir)
+      new java.io.File(dir).mkdirs()
+      build(dir)
+      require(marker.createNewFile(), s"failed to mark $dir complete")
+    }
+    dir
+  }
+
+  /** Delete the store (or any file tree) at `dir`; the next [[built]]
+    * rebuilds it. */
+  def drop(dir: String): Unit = synchronized {
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
+    }
+    rm(new java.io.File(dir))
   }
 }

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sidecar, Tables}
 import graft.operators.AsOfJoin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -360,43 +360,36 @@ object AnalyticsQueries {
     * RANGE-frame cumulative weight reaches ceil(p·total). The
     * sketch's rank-error quality stays separately gated in
     * RecallGateSpec. */
-  private def kllPath(d: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_kll_v1_${graft.Sidecar.key(d)}").toString
+  private val KllTag = "kll_v1"
 
-  private def ensureKllStore(s: SparkSession, d: String): String = {
-    val p = kllPath(d)
-    AnalyticsQueries.synchronized {
-      if (!new java.io.File(p, "_SUCCESS").exists()) {
-        import graft.functions.KllSketch
-        // one sketch per (event_type, partition): bounded executor
-        // state, P·|types| KB-scale blobs to the driver — the
-        // standard mergeable-sketch topology at any corpus size
-        val parts = Tables.events(s, d)
-          .select(col("event_type"), col("value").cast("double"))
-          .filter(col("value").isNotNull) // the agg path's null skip
-          .rdd.mapPartitionsWithIndex { (pid, it) =>
-            val m = scala.collection.mutable.Map.empty[String, KllSketch]
-            it.foreach { r =>
-              m.getOrElseUpdate(r.getString(0), new KllSketch(200))
-                .update(r.getDouble(1))
-            }
-            m.iterator.map { case (et, sk) => (et, pid, sk.serialize()) }
-          }.collect()
-        // deterministic merge: partition-index order per type
-        val merged = parts.groupBy(_._1).toSeq.sortBy(_._1).map { case (et, blobs) =>
-          val sks = blobs.sortBy(_._2).map(b => KllSketch.deserialize(200, b._3))
-          et -> sks.reduceLeft((a, b) => a.merge(b))
-        }
-        import s.implicits._
-        merged.flatMap { case (et, sk) =>
-          sk.weightedItems.map { case (v, w) => (et, v, w) }
-        }.toDF("event_type", "value", "weight")
-          .coalesce(1).write.mode("overwrite").parquet(p)
+  private def ensureKllStore(s: SparkSession, d: String): String =
+    Sidecar.built(Sidecar.dir(KllTag, d)) { p =>
+      import graft.functions.KllSketch
+      // one sketch per (event_type, partition): bounded executor
+      // state, P·|types| KB-scale blobs to the driver — the
+      // standard mergeable-sketch topology at any corpus size
+      val parts = Tables.events(s, d)
+        .select(col("event_type"), col("value").cast("double"))
+        .filter(col("value").isNotNull) // the agg path's null skip
+        .rdd.mapPartitionsWithIndex { (pid, it) =>
+          val m = scala.collection.mutable.Map.empty[String, KllSketch]
+          it.foreach { r =>
+            m.getOrElseUpdate(r.getString(0), new KllSketch(200))
+              .update(r.getDouble(1))
+          }
+          m.iterator.map { case (et, sk) => (et, pid, sk.serialize()) }
+        }.collect()
+      // deterministic merge: partition-index order per type
+      val merged = parts.groupBy(_._1).toSeq.sortBy(_._1).map { case (et, blobs) =>
+        val sks = blobs.sortBy(_._2).map(b => KllSketch.deserialize(200, b._3))
+        et -> sks.reduceLeft((a, b) => a.merge(b))
       }
+      import s.implicits._
+      merged.flatMap { case (et, sk) =>
+        sk.weightedItems.map { case (v, w) => (et, v, w) }
+      }.toDF("event_type", "value", "weight")
+        .coalesce(1).write.mode("overwrite").parquet(p)
     }
-    p
-  }
 
   private def quantilesSketch(s: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -424,18 +417,14 @@ object AnalyticsQueries {
     * only the KB-scale probe and hide the real work. */
   def quantilesSketchBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     val build = () => {
-      val base = new java.io.File(kllPath(d))
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      AnalyticsQueries.synchronized { rm(base) }
+      Sidecar.drop(Sidecar.dir(KllTag, d))
       ensureKllStore(s, d); ()
     }
     (build, () => quantilesSketch(s, d))
   }
 
   private def quantilesSketchSql(d: String): String = {
-    val p = kllPath(d)
+    val p = Sidecar.dir(KllTag, d)
     val psRows = SketchPs.map(v => s"($v)").mkString(", ")
     s"""
     WITH it AS (SELECT event_type, value, weight

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sidecar, Tables}
 import graft.functions.TextFunctions._
 import graft.operators.{Decontaminate, Pack, Pii}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -544,43 +544,36 @@ object CurationQueries {
   private def classifier(s: SparkSession, d: String): DataFrame =
     scoreQuantized(s, d, ensureClsGdStore(s, d))
 
-  private def clsGdPath(d: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_clsgd_v1_${graft.Sidecar.key(d)}").toString
+  private val ClsGdTag = "clsgd_v1"
 
   /** Train NB warm start + [[ClsEpochs]] GD calibration epochs once
     * per sfDir and persist the 2^30-quantized weights — the
     * deterministic-replay sidecar discipline (probe over a persisted
     * artifact, as for every ANN store). */
-  private def ensureClsGdStore(s: SparkSession, d: String): String = {
-    val p = clsGdPath(d)
-    CurationQueries.synchronized {
-      if (!new java.io.File(p, "_SUCCESS").exists()) {
-        val (featU, freeFeat0, labels) = clsFeat(s, d)
-        val feat = featU.persist()
-        try {
-          val cls = graft.operators.Classifier
-          val w0 = cls.nbLogOdds(s, feat, labels, ClsBuckets + 1, ClsBuckets)
-          freeFeat0() // feat is materialized by the NB pass; the
-          // pre-union aggregate's blocks are dead from here on
-          val w = cls.trainLogReg(
-            s, feat, labels, ClsBuckets + 1, ClsEpochs, ClsLr, init = w0)
-          import s.implicits._
-          w.zipWithIndex.toSeq
-            .map { case (v, b) => (b, Math.round(v * ClsNbScale)) }
-            .toDF("b", "wq").coalesce(1)
-            .write.mode("overwrite").parquet(p)
-        } finally {
-          feat.unpersist()
-          // unpersist is idempotent: the mid-try call releases the
-          // aggregate's blocks early on the happy path, this one
-          // guarantees release when nbLogOdds throws (ADVICE r17)
-          freeFeat0()
-        }
+  private def ensureClsGdStore(s: SparkSession, d: String): String =
+    Sidecar.built(Sidecar.dir(ClsGdTag, d)) { p =>
+      val (featU, freeFeat0, labels) = clsFeat(s, d)
+      val feat = featU.persist()
+      try {
+        val cls = graft.operators.Classifier
+        val w0 = cls.nbLogOdds(s, feat, labels, ClsBuckets + 1, ClsBuckets)
+        freeFeat0() // feat is materialized by the NB pass; the
+        // pre-union aggregate's blocks are dead from here on
+        val w = cls.trainLogReg(
+          s, feat, labels, ClsBuckets + 1, ClsEpochs, ClsLr, init = w0)
+        import s.implicits._
+        w.zipWithIndex.toSeq
+          .map { case (v, b) => (b, Math.round(v * ClsNbScale)) }
+          .toDF("b", "wq").coalesce(1)
+          .write.mode("overwrite").parquet(p)
+      } finally {
+        feat.unpersist()
+        // unpersist is idempotent: the mid-try call releases the
+        // aggregate's blocks early on the happy path, this one
+        // guarantees release when nbLogOdds throws (ADVICE r17)
+        freeFeat0()
       }
     }
-    p
-  }
 
   /** Split bench: `_build` = full retrain (sidecar cleared first so
     * the one-time training cost is measured, not amortized away),
@@ -588,11 +581,7 @@ object CurationQueries {
     * touches 100 TB. */
   def classifierBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     val build = () => {
-      val base = new java.io.File(clsGdPath(d))
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      CurationQueries.synchronized { rm(base) }
+      Sidecar.drop(Sidecar.dir(ClsGdTag, d))
       ensureClsGdStore(s, d); ()
     }
     (build, () => classifier(s, d))
@@ -649,31 +638,24 @@ object CurationQueries {
     * weights sweep — the part that touches 100 TB); the GD
     * calibration refinement stays accuracy-gated under
     * curate_classifier. */
-  private def clsNbPath(d: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_clsnb_v1_${graft.Sidecar.key(d)}").toString
+  private val ClsNbTag = "clsnb_v1"
 
   private val ClsNbScale = 1L << 30
 
-  private def ensureClsNbStore(s: SparkSession, d: String): String = {
-    val p = clsNbPath(d)
-    CurationQueries.synchronized {
-      if (!new java.io.File(p, "_SUCCESS").exists()) {
-        val (featU, freeFeat0, labels) = clsFeat(s, d)
-        val feat = featU.persist()
-        try {
-          val w0 = graft.operators.Classifier
-            .nbLogOdds(s, feat, labels, ClsBuckets + 1, ClsBuckets)
-          import s.implicits._
-          w0.zipWithIndex.toSeq
-            .map { case (v, b) => (b, Math.round(v * ClsNbScale)) }
-            .toDF("b", "wq").coalesce(1)
-            .write.mode("overwrite").parquet(p)
-        } finally { feat.unpersist(); freeFeat0() }
-      }
+  private def ensureClsNbStore(s: SparkSession, d: String): String =
+    Sidecar.built(Sidecar.dir(ClsNbTag, d)) { p =>
+      val (featU, freeFeat0, labels) = clsFeat(s, d)
+      val feat = featU.persist()
+      try {
+        val w0 = graft.operators.Classifier
+          .nbLogOdds(s, feat, labels, ClsBuckets + 1, ClsBuckets)
+        import s.implicits._
+        w0.zipWithIndex.toSeq
+          .map { case (v, b) => (b, Math.round(v * ClsNbScale)) }
+          .toDF("b", "wq").coalesce(1)
+          .write.mode("overwrite").parquet(p)
+      } finally { feat.unpersist(); freeFeat0() }
     }
-    p
-  }
 
   private def classifierNb(s: SparkSession, d: String): DataFrame =
     scoreQuantized(s, d, ensureClsNbStore(s, d))
@@ -713,10 +695,10 @@ object CurationQueries {
   }
 
   private def classifierNbSql(d: String): String =
-    quantizedScoreSql(clsNbPath(d))
+    quantizedScoreSql(Sidecar.dir(ClsNbTag, d))
 
   private def classifierSql(d: String): String =
-    quantizedScoreSql(clsGdPath(d))
+    quantizedScoreSql(Sidecar.dir(ClsGdTag, d))
 
   private def quantizedScoreSql(p: String): String = {
     s"""

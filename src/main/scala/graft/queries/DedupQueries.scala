@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sidecar, Tables}
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 import graft.operators.Dedup
@@ -113,9 +113,7 @@ object DedupQueries {
     * batch probed against the PERSISTED bands/shingles — the
     * per-batch cost that matters at scale, which the self-contained
     * query above conflates with corpus banding. */
-  private def incBandsPath(d: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_incbands_v2_${graft.Sidecar.key(d)}").toString
+  private val IncBandsTag = "incbands_v2"
 
   /** FINE row groups for the probe stores (r14): a probed key's read
     * granule is one row group, so the per-batch read is
@@ -126,50 +124,41 @@ object DedupQueries {
     * per group; footer metadata stays KB-scale. */
   private val IncStoreBlockBytes = 256 * 1024
 
-  private[graft] def ensureIncStore(s: SparkSession, d: String): String = {
-    val p = incBandsPath(d)
-    DedupQueries.synchronized {
-      // gate on the LAST-written artifact (the ADVICE r13 ordering
-      // discipline): bloom is written after bands
-      if (!new java.io.File(s"$p/bloom.bin").exists()) {
-        val corpus = docs(s, d).filter(col("doc_id") % 10 =!= 0)
-        val corpusSh = Dedup.shingleRows(corpus, "doc_id", "text", 3)
+  private[graft] def ensureIncStore(s: SparkSession, d: String): String =
+    Sidecar.built(Sidecar.dir(IncBandsTag, d)) { p =>
+      val corpus = docs(s, d).filter(col("doc_id") % 10 =!= 0)
+      val corpusSh = Dedup.shingleRows(corpus, "doc_id", "text", 3)
+        .persist()
+      try {
+        // stores CLUSTERED on their probe keys (r13): the per-batch
+        // probe pushes literal key predicates on doc_id / band_key,
+        // and range-clustered files + fine row groups turn those
+        // into row-group point reads — per-batch cost ∝ batch
+        corpusSh.repartitionByRange(32, col("doc_id"))
+          .sortWithinPartitions("doc_id")
+          .write.mode("overwrite")
+          .option("parquet.block.size", IncStoreBlockBytes)
+          .option("parquet.page.size", 64 * 1024)
+          .parquet(s"$p/sh")
+        val bands = Dedup.lshBands(Dedup.minhashSignatures(corpusSh, 32), 32, 8)
           .persist()
-        try {
-          // stores CLUSTERED on their probe keys (r13): the per-batch
-          // probe pushes literal key predicates on doc_id / band_key,
-          // and range-clustered files + fine row groups turn those
-          // into row-group point reads — per-batch cost ∝ batch
-          corpusSh.repartitionByRange(32, col("doc_id"))
-            .sortWithinPartitions("doc_id")
-            .write.mode("overwrite")
-            .option("parquet.block.size", IncStoreBlockBytes)
-            .option("parquet.page.size", 64 * 1024)
-            .parquet(s"$p/sh")
-          val bands = Dedup.lshBands(Dedup.minhashSignatures(corpusSh, 32), 32, 8)
-            .persist()
-          bands.repartitionByRange(32, col("band_key"))
-            .sortWithinPartitions("band_key")
-            .write.mode("overwrite")
-            .option("parquet.block.size", IncStoreBlockBytes)
-            .option("parquet.page.size", 64 * 1024)
-            .parquet(s"$p/bands")
-          // corpus band-key Bloom (r14): built once here, loaded once
-          // per serving process — the driver-side prefilter that
-          // collapses a batch's |batch|·bands uniform keys to ~true
-          // collisions before the push (Dedup.incrementalMinhash docs)
-          val nKeys = math.max(1L, bands.count())
-          val bf = bands.stat.bloomFilter(col("band_key"), nKeys, 0.001)
-          bands.unpersist(blocking = false)
-          val os = new java.io.FileOutputStream(s"$p/bloom.bin.tmp")
-          try bf.writeTo(os) finally os.close()
-          require(new java.io.File(s"$p/bloom.bin.tmp")
-            .renameTo(new java.io.File(s"$p/bloom.bin")), s"bloom rename failed at $p")
-        } finally { corpusSh.unpersist(blocking = false); () }
-      }
+        bands.repartitionByRange(32, col("band_key"))
+          .sortWithinPartitions("band_key")
+          .write.mode("overwrite")
+          .option("parquet.block.size", IncStoreBlockBytes)
+          .option("parquet.page.size", 64 * 1024)
+          .parquet(s"$p/bands")
+        // corpus band-key Bloom (r14): built once here, loaded once
+        // per serving process — the driver-side prefilter that
+        // collapses a batch's |batch|·bands uniform keys to ~true
+        // collisions before the push (Dedup.incrementalMinhash docs)
+        val nKeys = math.max(1L, bands.count())
+        val bf = bands.stat.bloomFilter(col("band_key"), nKeys, 0.001)
+        bands.unpersist(blocking = false)
+        val os = new java.io.FileOutputStream(s"$p/bloom.bin")
+        try bf.writeTo(os) finally os.close()
+      } finally { corpusSh.unpersist(blocking = false); () }
     }
-    p
-  }
 
   private[graft] def loadIncBloom(p: String): org.apache.spark.util.sketch.BloomFilter = {
     val is = new java.io.FileInputStream(s"$p/bloom.bin")
@@ -178,11 +167,7 @@ object DedupQueries {
 
   def incrementalBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     val build = () => {
-      val base = new java.io.File(incBandsPath(d))
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      DedupQueries.synchronized { rm(base) }
+      Sidecar.drop(Sidecar.dir(IncBandsTag, d))
       ensureIncStore(s, d); ()
     }
     val probe = () => {
@@ -347,28 +332,21 @@ object DedupQueries {
     * clone-size join — is deterministic SQL the oracle replays.
     * Recall/precision gates in RecallGateSpec still quantify the
     * approximation vs the exact all-pairs ground truth. */
-  private[graft] def dedupIvfStorePath(d: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_dedupivf_v1_${graft.Sidecar.key(d)}").toString
+  private val DedupIvfTag = "dedupivf_v1"
 
-  private def ensureDedupIvfStore(s: SparkSession, d: String): String = {
-    val p = dedupIvfStorePath(d)
-    DedupQueries.synchronized {
-      if (!new java.io.File(p, "_SUCCESS").exists()) {
-        val reps = Tables.embeddings(s, d)
-          .groupBy(col("embedding"))
-          .agg(min(col("vec_id")).as("vec_id"), count(lit(1)).as("grp"))
-        val mat = graft.operators.Materializer.local()
-        val centroids = graft.operators.IvfIndex.trainCentroids(
-          reps, "vec_id", "embedding", nlist = 16, iters = 2, mat)
-        graft.operators.IvfIndex.rankedCells(reps, "embedding", centroids, spill = 3)
-          .select(col("vec_id"), col("embedding"), col("grp"), col("cells"))
-          .write.mode("overwrite").parquet(p)
-        mat.releaseAll()
-      }
+  private def ensureDedupIvfStore(s: SparkSession, d: String): String =
+    Sidecar.built(Sidecar.dir(DedupIvfTag, d)) { p =>
+      val reps = Tables.embeddings(s, d)
+        .groupBy(col("embedding"))
+        .agg(min(col("vec_id")).as("vec_id"), count(lit(1)).as("grp"))
+      val mat = graft.operators.Materializer.local()
+      val centroids = graft.operators.IvfIndex.trainCentroids(
+        reps, "vec_id", "embedding", nlist = 16, iters = 2, mat)
+      graft.operators.IvfIndex.rankedCells(reps, "embedding", centroids, spill = 3)
+        .select(col("vec_id"), col("embedding"), col("grp"), col("cells"))
+        .write.mode("overwrite").parquet(p)
+      mat.releaseAll()
     }
-    p
-  }
 
   private def embeddingIvf(s: SparkSession, d: String): DataFrame = {
     val st = s.read.parquet(ensureDedupIvfStore(s, d))
@@ -390,7 +368,7 @@ object DedupQueries {
     * cos), clone sizes joined back. */
   private def embeddingIvfOracle(d: String): String = s"""
     WITH st AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, grp, cells
-                FROM read_parquet('${dedupIvfStorePath(d)}/*.parquet')),
+                FROM read_parquet('${Sidecar.dir(DedupIvfTag, d)}/*.parquet')),
     rows_ AS (SELECT vec_id, v, unnest(cells) AS cell FROM st),
     bsz AS (SELECT cell, count(*) AS n FROM rows_ GROUP BY cell),
     pruned AS (SELECT r.vec_id, r.v, r.cell

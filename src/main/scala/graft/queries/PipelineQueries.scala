@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sidecar, Tables}
 import graft.functions.TextFunctions._
 import graft.pipeline.Ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -158,29 +158,19 @@ object PipelineQueries {
     * v3 snapshot is multiset-identical to the relational oracle, but
     * only a reader that resolves the remove/add history correctly
     * reproduces it. */
-  private def registryDir(d: String): java.io.File =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_registry_v1_${graft.Sidecar.key(d)}")
+  private val RegistryTag = "registry_v1"
 
   private[graft] def ensureRegistry(s: SparkSession, d: String): String = {
-    val base = registryDir(d)
+    val base = Sidecar.dir(RegistryTag, d)
     val tablePath = new java.io.File(base, "table").toString
-    PipelineQueries.synchronized {
-      if (!new java.io.File(base, "_GRAFT_DONE").exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(base); base.mkdirs()
-        val rows = statusBase(s, d)
-        val t = graft.sources.GraftTable.create(s, tablePath,
-          rows.repartition(8), statsCols = Seq("filename", "doc_id"))
-        val reupload = rows.orderBy(col("filename"), col("doc_id"))
-          .select(col("filename")).first().getString(0)
-        t.delete(col("filename") === lit(reupload))
-        t.append(rows.filter(col("filename") === lit(reupload)))
-        require(new java.io.File(base, "_GRAFT_DONE").createNewFile(),
-          s"failed to mark $base complete")
-      }
+    Sidecar.built(base) { _ =>
+      val rows = statusBase(s, d)
+      val t = graft.sources.GraftTable.create(s, tablePath,
+        rows.repartition(8), statsCols = Seq("filename", "doc_id"))
+      val reupload = rows.orderBy(col("filename"), col("doc_id"))
+        .select(col("filename")).first().getString(0)
+      t.delete(col("filename") === lit(reupload))
+      t.append(rows.filter(col("filename") === lit(reupload)))
     }
     tablePath
   }
@@ -205,12 +195,7 @@ object PipelineQueries {
       : (() => Unit, () => DataFrame) = {
     var path: String = null
     val build = () => {
-      PipelineQueries.synchronized {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(registryDir(d))
-      }
+      Sidecar.drop(Sidecar.dir(RegistryTag, d))
       path = ensureRegistry(s, d)
     }
     (build, () => readListing(s, path, completed))
@@ -252,56 +237,46 @@ object PipelineQueries {
     * document) is corpus-preparation, not pipeline work — both ingest
     * queries read the cached binaries and the timed path is exactly
     * the reference's: stored blob → parse → extract. */
-  // cache key carries a generator version tag + the page-size
-  // constant: changing either must invalidate fixtures, or Spark
-  // would parse stale bytes while the oracle recomputes from current
-  // text (breaking the round-trip property the docstring promises).
-  private def blobDir(d: String, tag: String): java.io.File =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_pdfblobs_${tag}_${PdfPageChars}_${graft.Sidecar.key(d)}")
+  // store tags carry a generator version + the page-size constant:
+  // changing either must invalidate fixtures, or Spark would parse
+  // stale bytes while the oracle recomputes from current text
+  // (breaking the round-trip property the docstring promises).
+  private val PdfBlobsTag = s"pdfblobs_v2_$PdfPageChars"
+  private val EncPdfBlobsTag = s"pdfblobs_enc_v2_$PdfPageChars"
+  private val ModPdfBlobsTag = s"pdfblobs_mod_v2_$PdfPageChars"
 
-  // Validity = Spark's _SUCCESS marker, not bare dir existence — a
-  // killed run leaves a partial dir that must be rebuilt, not read.
   private def ensureBlobs(s: SparkSession, d: String, tag: String,
-      content: org.apache.spark.sql.Column): String = {
-    val dir = blobDir(d, tag).toString
-    PipelineQueries.synchronized {
-      if (!new java.io.File(dir, "_SUCCESS").exists()) {
-        // repartition-up (r10, the Lloyd-fix discipline): a single-file
-        // documents fixture scans as ONE partition, which would (a)
-        // synthesize the blobs single-threaded and (b) leave ONE blob
-        // file, serializing every downstream parse probe on a 32-core
-        // box (measured: the 10× encrypted-parse probe at 59 s with 31
-        // cores idle). Real blob storage is many objects — many splits.
-        Tables.documents(s, d)
-          .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
-          .select(col("doc_id"), col("source"), content.as("content"))
-          .write.mode("overwrite").parquet(dir)
-      }
+      content: org.apache.spark.sql.Column): String =
+    Sidecar.built(Sidecar.dir(tag, d)) { dir =>
+      // repartition-up (r10, the Lloyd-fix discipline): a single-file
+      // documents fixture scans as ONE partition, which would (a)
+      // synthesize the blobs single-threaded and (b) leave ONE blob
+      // file, serializing every downstream parse probe on a 32-core
+      // box (measured: the 10× encrypted-parse probe at 59 s with 31
+      // cores idle). Real blob storage is many objects — many splits.
+      Tables.documents(s, d)
+        .repartition(s.sparkContext.defaultParallelism, col("doc_id"))
+        .select(col("doc_id"), col("source"), content.as("content"))
+        .write.mode("overwrite").parquet(dir)
     }
-    dir
-  }
 
   private def ensurePdfBlobs(s: SparkSession, d: String): String =
-    ensureBlobs(s, d, "v2", mkPdf(col("text")))
+    ensureBlobs(s, d, PdfBlobsTag, mkPdf(col("text")))
 
   private def ensureEncPdfBlobs(s: SparkSession, d: String): String =
-    ensureBlobs(s, d, "enc_v2", mkEncPdf(col("doc_id"), col("text")))
+    ensureBlobs(s, d, EncPdfBlobsTag, mkEncPdf(col("doc_id"), col("text")))
 
   /** Bench build thunk: force a fresh synthesis so `_build` measures
     * the same work on every machine (a pre-existing cache would time
     * a no-op exists() check and make totals machine-state dependent). */
   private def rebuildBlobs(s: SparkSession, d: String, tag: String,
       ensure: (SparkSession, String) => String): String = {
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-    }
-    PipelineQueries.synchronized { rm(blobDir(d, tag)) }
+    Sidecar.drop(Sidecar.dir(tag, d))
     ensure(s, d)
   }
 
   def rebuildPdfBlobs(s: SparkSession, d: String): String =
-    rebuildBlobs(s, d, "v2", ensurePdfBlobs)
+    rebuildBlobs(s, d, PdfBlobsTag, ensurePdfBlobs)
 
   private def pdfPagesQ(s: SparkSession, d: String): DataFrame = {
     val pdfs = s.read.parquet(ensurePdfBlobs(s, d))
@@ -328,10 +303,10 @@ object PipelineQueries {
   }
 
   def pdfEncBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    (() => { rebuildBlobs(s, d, "enc_v2", ensureEncPdfBlobs); () }, () => pdfEncQ(s, d))
+    (() => { rebuildBlobs(s, d, EncPdfBlobsTag, ensureEncPdfBlobs); () }, () => pdfEncQ(s, d))
 
   private def ensureModPdfBlobs(s: SparkSession, d: String): String =
-    ensureBlobs(s, d, "mod_v2", mkModPdf(col("doc_id"), col("text")))
+    ensureBlobs(s, d, ModPdfBlobsTag, mkModPdf(col("doc_id"), col("text")))
 
   /** The CONTEMPORARY file shape through the same parse path: xref
     * streams + object streams ([[graft.pipeline.Pdf.writeModern]]),
@@ -346,7 +321,7 @@ object PipelineQueries {
   }
 
   def pdfModBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    (() => { rebuildBlobs(s, d, "mod_v2", ensureModPdfBlobs); () }, () => pdfModQ(s, d))
+    (() => { rebuildBlobs(s, d, ModPdfBlobsTag, ensureModPdfBlobs); () }, () => pdfModQ(s, d))
 
   // --------------------------------------- cross-page chunk stitching
   /** The reference chunks each page separately (Function.java:115-135

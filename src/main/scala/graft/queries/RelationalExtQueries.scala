@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sidecar, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -158,19 +158,15 @@ object RelationalExtQueries {
 
   /** 2^30 fixed-point ln(m/v) sidecar for the linear-counting branch —
     * content depends only on p, so the path is fixture-independent. */
-  private[graft] def hllLutPath: String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_hll_lut_p${HllP}_v1").toString
+  private[graft] def hllLutPath: String = Sidecar.dir(s"hll_lut_p${HllP}_v1")
 
   private def ensureHllLut(s: SparkSession): Unit =
-    RelationalExtQueries.synchronized {
-      if (!new java.io.File(hllLutPath, "_SUCCESS").exists()) {
-        val m = 1 << HllP
-        val rows = (1 to m).map(v =>
-          (v.toLong, graft.functions.HllEstimator.lnBits(m, v)))
-        s.createDataFrame(rows).toDF("v", "ln_bits")
-          .coalesce(1).write.mode("overwrite").parquet(hllLutPath)
-      }
+    Sidecar.built(hllLutPath) { p =>
+      val m = 1 << HllP
+      val rows = (1 to m).map(v =>
+        (v.toLong, graft.functions.HllEstimator.lnBits(m, v)))
+      s.createDataFrame(rows).toDF("v", "ln_bits")
+        .coalesce(1).write.mode("overwrite").parquet(p)
     }
 
   /** DuckDB replay of the whole HLL estimator on exact operands. */

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sidecar, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -160,6 +160,9 @@ object RelationalQueries {
     ORDER BY bucket_start, event_type"""
 
   // ----------------------------------------------------- stream_window_agg
+  private val StreamEventsTag = "stream_events_v1"
+  private val StreamSessTag = "stream_sess_v1"
+
   /** The STREAMING twin on the hash-oracle gate (VERDICT r8 #5): the
     * same fixture runs through Structured Streaming —
     * [[graft.streaming.EventStream.windowedCounts]] fed by a real
@@ -170,12 +173,9 @@ object RelationalQueries {
     * aggregate independent of how the stream slices the rows; the
     * memory sink holds windows × types rows, never the corpus. */
   private def streamWindowAgg(s: SparkSession, d: String): DataFrame = {
-    val src = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_stream_events_v1_${graft.Sidecar.key(d)}").toString
-    RelationalQueries.synchronized {
-      if (!new java.io.File(src, "_SUCCESS").exists())
-        Tables.events(s, d).repartition(4, col("user_id"))
-          .write.mode("overwrite").parquet(src)
+    val src = Sidecar.built(Sidecar.dir(StreamEventsTag, d)) { p =>
+      Tables.events(s, d).repartition(4, col("user_id"))
+        .write.mode("overwrite").parquet(p)
     }
     val schema = s.read.parquet(src).schema
     val stream = s.readStream.schema(schema)
@@ -216,39 +216,32 @@ object RelationalQueries {
     * the per-user running count. */
   private def streamSessionize(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_stream_sess_v1_${graft.Sidecar.key(d)}")
+    val base = Sidecar.dir(StreamSessTag, d)
     val srcDir = new java.io.File(base, "src")
-    RelationalQueries.synchronized {
-      if (!new java.io.File(base, "_GRAFT_DONE").exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(base); srcDir.mkdirs()
-        val ev = Tables.events(s, d)
-          .select(col("event_id"), col("ts"), col("user_id"),
-            col("event_type"), col("value"))
-        val mm = ev.agg(min(col("ts")), max(col("ts"))).head
-        val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-        val step = math.max(1L, (hi - lo) / 4 + 1)
-        val sentinelTs = hi + 86400L * 1000000000L // +1 day: past any gap
-        val slices = (0 until 4).map { i =>
-          ev.filter(col("ts") >= lo + i * step && col("ts") < lo + (i + 1) * step)
-        } :+ ev.select(col("user_id")).distinct()
-          .select(lit(-1L).as("event_id"), lit(sentinelTs).as("ts"),
-            col("user_id"), lit("sentinel").as("event_type"), lit(0.0).as("value"))
-        slices.zipWithIndex.foreach { case (df, i) =>
-          val tmp = new java.io.File(base, s"tmp_$i")
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
-          val dst = new java.io.File(srcDir, f"chunk_$i%02d.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath)
-          rm(tmp)
-          // file-source ordering: modification time (and path as the
-          // tie-break — names are already ascending)
-          require(dst.setLastModified((i + 1) * 60000L))
-        }
-        require(new java.io.File(base, "_GRAFT_DONE").createNewFile())
+    Sidecar.built(base) { _ =>
+      srcDir.mkdirs()
+      val ev = Tables.events(s, d)
+        .select(col("event_id"), col("ts"), col("user_id"),
+          col("event_type"), col("value"))
+      val mm = ev.agg(min(col("ts")), max(col("ts"))).head
+      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
+      val step = math.max(1L, (hi - lo) / 4 + 1)
+      val sentinelTs = hi + 86400L * 1000000000L // +1 day: past any gap
+      val slices = (0 until 4).map { i =>
+        ev.filter(col("ts") >= lo + i * step && col("ts") < lo + (i + 1) * step)
+      } :+ ev.select(col("user_id")).distinct()
+        .select(lit(-1L).as("event_id"), lit(sentinelTs).as("ts"),
+          col("user_id"), lit("sentinel").as("event_type"), lit(0.0).as("value"))
+      slices.zipWithIndex.foreach { case (df, i) =>
+        val tmp = new java.io.File(base, s"tmp_$i")
+        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+        val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
+        val dst = new java.io.File(srcDir, f"chunk_$i%02d.parquet")
+        java.nio.file.Files.move(part.toPath, dst.toPath)
+        Sidecar.drop(tmp.toString)
+        // file-source ordering: modification time (and path as the
+        // tie-break — names are already ascending)
+        require(dst.setLastModified((i + 1) * 60000L))
       }
     }
     val schema = s.read.parquet(srcDir.toString).schema

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sidecar, Tables}
 import graft.streaming.EventStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -35,51 +35,44 @@ import org.apache.spark.sql.functions._
 object StreamingTwinQueries {
 
   private def sliceDir(s: SparkSession, d: String, sentinel: Boolean): String = {
-    val tag = if (sentinel) "sent" else "plain"
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_stream_feed_v1_${tag}_${graft.Sidecar.key(d)}")
+    val base = Sidecar.dir(
+      if (sentinel) "stream_feed_v1_sent" else "stream_feed_v1_plain", d)
     val srcDir = new java.io.File(base, "src")
-    StreamingTwinQueries.synchronized {
-      if (!new java.io.File(base, "_GRAFT_DONE").exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(base); srcDir.mkdirs()
-        val ev = Tables.events(s, d)
-          .select(col("event_id"), col("ts"), col("user_id"),
-            col("event_type"), col("value"))
-        val mm = ev.agg(min(col("ts")), max(col("ts"))).head
-        val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-        val step = math.max(1L, (hi - lo) / 4 + 1)
-        val sentinelTs = hi + 2L * 86400L * 1000000000L // +2 days in nanos
-        val slices = (0 until 4).map { i =>
-          ev.filter(col("ts") >= lo + i * step && col("ts") < lo + (i + 1) * step)
-        } ++ (if (!sentinel) Nil else Seq(
-          // one click + one purchase marker: their only job is to push
-          // BOTH join-side watermarks past every real row's join window
-          // so outer-state flushes; user_id −1 keeps them out of real
-          // matches and the queries filter event_id < 0 regardless
-          s.range(1).select(
-            lit(-1L).as("event_id"), lit(sentinelTs).as("ts"),
-            lit(-1L).as("user_id"), lit("click").as("event_type"),
-            lit(0.0).as("value"))
-            .unionByName(s.range(1).select(
-              lit(-2L).as("event_id"), lit(sentinelTs).as("ts"),
-              lit(-1L).as("user_id"), lit("purchase").as("event_type"),
-              lit(0.0).as("value")))))
-        slices.zipWithIndex.foreach { case (df, i) =>
-          val tmp = new java.io.File(base, s"tmp_$i")
-          // ONE sorted partition per slice file: arrival order within a
-          // micro-batch is file order, and file order is (ts, event_id)
-          df.repartition(1).sortWithinPartitions(col("ts"), col("event_id"))
-            .write.mode("overwrite").parquet(tmp.toString)
-          val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
-          val dst = new java.io.File(srcDir, f"chunk_$i%02d.parquet")
-          java.nio.file.Files.move(part.toPath, dst.toPath)
-          rm(tmp)
-          require(dst.setLastModified((i + 1) * 60000L))
-        }
-        require(new java.io.File(base, "_GRAFT_DONE").createNewFile())
+    Sidecar.built(base) { _ =>
+      srcDir.mkdirs()
+      val ev = Tables.events(s, d)
+        .select(col("event_id"), col("ts"), col("user_id"),
+          col("event_type"), col("value"))
+      val mm = ev.agg(min(col("ts")), max(col("ts"))).head
+      val (lo, hi) = (mm.getLong(0), mm.getLong(1))
+      val step = math.max(1L, (hi - lo) / 4 + 1)
+      val sentinelTs = hi + 2L * 86400L * 1000000000L // +2 days in nanos
+      val slices = (0 until 4).map { i =>
+        ev.filter(col("ts") >= lo + i * step && col("ts") < lo + (i + 1) * step)
+      } ++ (if (!sentinel) Nil else Seq(
+        // one click + one purchase marker: their only job is to push
+        // BOTH join-side watermarks past every real row's join window
+        // so outer-state flushes; user_id −1 keeps them out of real
+        // matches and the queries filter event_id < 0 regardless
+        s.range(1).select(
+          lit(-1L).as("event_id"), lit(sentinelTs).as("ts"),
+          lit(-1L).as("user_id"), lit("click").as("event_type"),
+          lit(0.0).as("value"))
+          .unionByName(s.range(1).select(
+            lit(-2L).as("event_id"), lit(sentinelTs).as("ts"),
+            lit(-1L).as("user_id"), lit("purchase").as("event_type"),
+            lit(0.0).as("value")))))
+      slices.zipWithIndex.foreach { case (df, i) =>
+        val tmp = new java.io.File(base, s"tmp_$i")
+        // ONE sorted partition per slice file: arrival order within a
+        // micro-batch is file order, and file order is (ts, event_id)
+        df.repartition(1).sortWithinPartitions(col("ts"), col("event_id"))
+          .write.mode("overwrite").parquet(tmp.toString)
+        val part = tmp.listFiles().filter(_.getName.endsWith(".parquet")).head
+        val dst = new java.io.File(srcDir, f"chunk_$i%02d.parquet")
+        java.nio.file.Files.move(part.toPath, dst.toPath)
+        Sidecar.drop(tmp.toString)
+        require(dst.setLastModified((i + 1) * 60000L))
       }
     }
     srcDir.toString

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sidecar, Tables}
 import graft.sources.GraftTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -10,9 +10,8 @@ import org.apache.spark.sql.functions._
   * change data feed) exercised end-to-end against DuckDB oracles that
   * reconstruct the same result relationally from the base parquet.
   *
-  * Each query builds its table ONCE per sfDir under java.io.tmpdir
-  * (same marker-file discipline as VectorQueries.ensureAutoStore: the
-  * marker is written after the last mutation commits, so a killed
+  * Each query builds its table ONCE per sfDir as a [[graft.Sidecar]]
+  * store (marked done after the last mutation commits, so a killed
   * build is rebuilt, never read half-mutated) and then reads the
   * final snapshot — so what the oracle checks is the CONTENT the
   * mutation protocol produced, not a re-derivation.
@@ -26,28 +25,24 @@ object TxnQueries {
   private val partCols =
     Seq("p_partkey", "p_name", "p_brand", "p_type", "p_size", "p_retailprice")
 
-  private def freshDir(tag: String, d: String): java.io.File =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_txn_${tag}_v1_${graft.Sidecar.key(d)}")
+  private val MergeTag = "txn_merge_v1"
+  private val ChangesTag = "txn_changes_v1"
+  private val RestoreTag = "txn_restore_v1"
+  private val EvolveTag = "txn_evolve_v1"
+  private val ClusterTag = "txn_cluster_v1"
+  private val ReclusterTag = "txn_recluster_v1"
+  private val IvfSyncTag = "txn_ivfsync_v1"
+  private val CloneTag = "txn_clone_v1"
+  private val IncrTag = "txn_incr_v1"
+  private val CompactTag = "txn_compact_v1"
 
-  private def wipe(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(wipe)
-    f.delete(); ()
-  }
-
-  private def built(base: java.io.File)(build: String => Unit): String = {
-    val tablePath = new java.io.File(base, "table").toString
-    TxnQueries.synchronized {
-      if (!new java.io.File(base, "_GRAFT_DONE").exists()) {
-        // a killed build leaves no marker — wipe the debris and rebuild
-        if (base.exists()) wipe(base)
-        base.mkdirs()
-        build(tablePath)
-        require(new java.io.File(base, "_GRAFT_DONE").createNewFile(),
-          s"failed to mark $base complete")
-      }
-    }
-    tablePath
+  /** The `tag` store's table path (`table/` in the store dir, beside
+    * any sibling table the build makes), built by `build` if needed. */
+  private def table(tag: String, d: String)(build: String => Unit): String = {
+    val dir = Sidecar.dir(tag, d)
+    val p = new java.io.File(dir, "table").toString
+    Sidecar.built(dir)(_ => build(p))
+    p
   }
 
   // -------------------------------------------------------- txn_merge
@@ -61,7 +56,7 @@ object TxnQueries {
     * copy-on-write rewrite of touched files only. */
   private def mergePath(s: SparkSession, d: String): String = {
     val part = Tables.part(s, d)
-    built(freshDir("merge", d)) { p =>
+    table(MergeTag, d) { p =>
       val t = GraftTable.create(s, p, part.repartition(8),
         statsCols = Seq("p_partkey"))
       val src = part.filter(col("p_partkey") % 10 === 0)
@@ -102,7 +97,7 @@ object TxnQueries {
     * difference. The oracle states that contract relationally. */
   private def changesPath(s: SparkSession, d: String): String = {
     val part = Tables.part(s, d)
-    built(freshDir("changes", d)) { p =>
+    table(ChangesTag, d) { p =>
       val t = GraftTable.create(s, p, part.repartition(8),
         statsCols = Seq("p_partkey"))
       t.delete(col("p_size") < 10)
@@ -158,7 +153,7 @@ object TxnQueries {
     * txn_timetravel / txn_stats_agg. */
   private def restorePath(s: SparkSession, d: String): String = {
     val part = Tables.part(s, d)
-    built(freshDir("restore", d)) { p =>
+    table(RestoreTag, d) { p =>
       val t = GraftTable.create(s, p, part.repartition(8),
         statsCols = Seq("p_partkey"))
       val src = part.filter(col("p_partkey") % 10 === 0)
@@ -191,7 +186,7 @@ object TxnQueries {
 
   private def evolvePath(s: SparkSession, d: String): String = {
     val part = Tables.part(s, d)
-    built(freshDir("evolve", d)) { p =>
+    table(EvolveTag, d) { p =>
       val t = GraftTable.create(s, p,
         part.select(evolveCols.map(col): _*).repartition(4),
         statsCols = Seq("p_partkey"))
@@ -250,7 +245,7 @@ object TxnQueries {
     * move, never values. */
   private def clusterPath(s: SparkSession, d: String): String = {
     val part = Tables.part(s, d)
-    built(freshDir("cluster", d)) { p =>
+    table(ClusterTag, d) { p =>
       val t = GraftTable.create(s, p, part.repartition(8),
         statsCols = Seq("p_partkey", "p_size"))
       t.delete(col("p_partkey") % 11 === 0)
@@ -284,7 +279,7 @@ object TxnQueries {
     * GraftTableSpec. */
   private def reclusterPath(s: SparkSession, d: String): String = {
     val part = Tables.part(s, d)
-    built(freshDir("recluster", d)) { p =>
+    table(ReclusterTag, d) { p =>
       val t = GraftTable.create(s, p,
         part.repartitionByRange(8, col("p_partkey")),
         statsCols = Seq("p_partkey"))
@@ -326,7 +321,7 @@ object TxnQueries {
     * synced-≡-fresh-assignment contract. */
   private def indexSyncPath(s: SparkSession, d: String): String = {
     val emb = Tables.embeddings(s, d)
-    built(freshDir("ivfsync", d)) { p =>
+    table(IvfSyncTag, d) { p =>
       val baseP = new java.io.File(new java.io.File(p).getParentFile, "base").toString
       val base = GraftTable.create(s, baseP, emb, statsCols = Seq("vec_id"))
       val v1 = base.version
@@ -387,9 +382,8 @@ object TxnQueries {
     * SF. Source and clone live under ONE marker dir so the cache
     * wipe can never leave a clone dangling on rebuilt source files. */
   private def clonePath(s: SparkSession, d: String): String = {
-    val base = freshDir("clone", d)
-    built(base) { p =>
-      val srcPath = new java.io.File(base, "source").toString
+    table(CloneTag, d) { p =>
+      val srcPath = new java.io.File(new java.io.File(p).getParentFile, "source").toString
       val src = GraftTable.create(s, srcPath,
         Tables.part(s, d).repartition(8), statsCols = Seq("p_partkey"))
       val clone = src.cloneTo(p)
@@ -426,7 +420,7 @@ object TxnQueries {
     * maintenance defect breaks the hash. */
   private def incrPath(s: SparkSession, d: String): String = {
     val orders = Tables.orders(s, d)
-    built(freshDir("incr", d)) { p =>
+    table(IncrTag, d) { p =>
       val t = GraftTable.create(s, p, orders.repartition(8),
         statsCols = Seq("o_orderkey"))
       t.delete(col("o_orderkey") % 5 === 0)
@@ -487,7 +481,7 @@ object TxnQueries {
     * preservation at every SF. */
   private def compactPath(s: SparkSession, d: String): String = {
     val supplier = Tables.supplier(s, d)
-    built(freshDir("compact", d)) { p =>
+    table(CompactTag, d) { p =>
       val t = GraftTable.create(s, p,
         supplier.filter(col("s_suppkey") % 10 === 0).repartition(2),
         statsCols = Seq("s_suppkey"))
@@ -515,7 +509,7 @@ object TxnQueries {
   // ------------------------------------------------------ bench split
   /** Bench splits (VERDICT r7 "What's wrong" #2): the conflated
     * entries hid the snapshot-read cost behind the one-shot table
-    * construction + mutation history. `_build` wipes the marker dir
+    * construction + mutation history. `_build` drops the store
     * first so it is an honest cold build (create + full mutation
     * history), `_probe` is the read the oracle checks, at the scan
     * floor. txn_timetravel / txn_stats_agg share txn_merge's table;
@@ -530,22 +524,17 @@ object TxnQueries {
   )(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     var path: String = null
     val build = () => {
-      tag.foreach { t =>
-        TxnQueries.synchronized {
-          val base = freshDir(t, d)
-          if (base.exists()) wipe(base)
-        }
-      }
+      tag.foreach(t => Sidecar.drop(Sidecar.dir(t, d)))
       path = buildPath(s, d)
     }
     (build, () => read(s, path))
   }
 
   def mergeBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(mergePath, Some("merge"), readMergeSnapshot)(s, d)
+    benchSplit(mergePath, Some(MergeTag), readMergeSnapshot)(s, d)
 
   def changesBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(changesPath, Some("changes"), readChanges)(s, d)
+    benchSplit(changesPath, Some(ChangesTag), readChanges)(s, d)
 
   def timetravelBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
     benchSplit(mergePath, None, readAtV1)(s, d)
@@ -558,25 +547,25 @@ object TxnQueries {
     benchSplit(mergePath, None, (s, _) => txnStatsAuto(s, d))(s, d)
 
   def clusterBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(clusterPath, Some("cluster"), readClustered)(s, d)
+    benchSplit(clusterPath, Some(ClusterTag), readClustered)(s, d)
 
   def indexSyncBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(indexSyncPath, Some("ivfsync"), readSyncedIds)(s, d)
+    benchSplit(indexSyncPath, Some(IvfSyncTag), readSyncedIds)(s, d)
 
   def restoreBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(restorePath, Some("restore"), readRestored)(s, d)
+    benchSplit(restorePath, Some(RestoreTag), readRestored)(s, d)
 
   def evolveBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(evolvePath, Some("evolve"), readEvolved)(s, d)
+    benchSplit(evolvePath, Some(EvolveTag), readEvolved)(s, d)
 
   def cloneBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(clonePath, Some("clone"), readClone)(s, d)
+    benchSplit(clonePath, Some(CloneTag), readClone)(s, d)
 
   def incrViewBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(incrPath, Some("incr"), readIncrView)(s, d)
+    benchSplit(incrPath, Some(IncrTag), readIncrView)(s, d)
 
   def compactBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(compactPath, Some("compact"), readCompacted)(s, d)
+    benchSplit(compactPath, Some(CompactTag), readCompacted)(s, d)
 
   val defs: Map[String, QueryDef] = Map(
     "txn_merge"      -> QueryDef(txnMerge _, txnMergeSql),

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.{QueryDef, Tables}
+import graft.{QueryDef, Sidecar, Tables}
 import graft.functions.VectorFunctions._
 import graft.operators.{IvfIndex, Knn, LshAnn, PqIndex}
 import graft.plans.{IvfCatalog, IvfProbeRule}
@@ -139,26 +139,22 @@ object VectorQueries {
     * the PQ codes on every row (at 100 TB codes live inside the
     * cell-partitioned files — the probe reads codes-only from the
     * probed cells), plus centroids + codebooks sidecars. */
-  private[graft] def ivfPqBasePath(d: String): java.io.File =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_ivfpq_v1_${graft.Sidecar.key(d)}")
+  private val IvfPqTag = "ivfpq_v1"
 
   private def ensureIvfPqStore(s: SparkSession, d: String): (String, String, String) = {
-    val base = ivfPqBasePath(d)
+    val base = Sidecar.dir(IvfPqTag, d)
     val storeP = new java.io.File(base, "store").toString
     val centP = new java.io.File(base, "centroids").toString
     val cbP = new java.io.File(base, "codebooks").toString
-    VectorQueries.synchronized {
-      if (!new java.io.File(cbP, "_SUCCESS").exists()) {
-        val emb = Tables.embeddings(s, d)
-        val (indexed, centroids) = IvfIndex.buildIndex(
-          emb, "vec_id", "embedding", nlist = IvfNlist, spill = IvfSpill)
-        val cb = PqIndex.train(emb, "embedding", dims = 64, m = 16, ksub = 32)
-        IvfIndex.writePartitioned(
-          PqIndex.encode(indexed, "embedding", cb), storeP)
-        centroids.write.mode("overwrite").parquet(centP)
-        PqIndex.writeCodebooks(s, cb, cbP)
-      }
+    Sidecar.built(base) { _ =>
+      val emb = Tables.embeddings(s, d)
+      val (indexed, centroids) = IvfIndex.buildIndex(
+        emb, "vec_id", "embedding", nlist = IvfNlist, spill = IvfSpill)
+      val cb = PqIndex.train(emb, "embedding", dims = 64, m = 16, ksub = 32)
+      IvfIndex.writePartitioned(
+        PqIndex.encode(indexed, "embedding", cb), storeP)
+      centroids.write.mode("overwrite").parquet(centP)
+      PqIndex.writeCodebooks(s, cb, cbP)
     }
     (storeP, centP, cbP)
   }
@@ -220,21 +216,20 @@ object VectorQueries {
     * of (graph, query), so persisting the parsed adjacency lets the
     * DuckDB oracle replay the walk bit-for-bit (r13 — the flip that
     * moved the hnsw trio off the rows-only tier). */
+  private val HnswFlatTag = "hnswflat_v1"
+
   private[graft] def ensureHnswStore(s: SparkSession, d: String): (String, String) = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_hnswflat_v1_${graft.Sidecar.key(d)}")
+    val base = Sidecar.dir(HnswFlatTag, d)
     val graphsP = new java.io.File(base, "graphs").toString
     val dumpP = new java.io.File(base, "dump").toString
-    VectorQueries.synchronized {
-      if (!new java.io.File(dumpP, "_SUCCESS").exists()) {
-        val graphs = graft.operators.Hnsw.buildPartitioned(
-          corpus(s, d), "vec_id", "embedding",
-          m = HnswM, efC = HnswEfC, parts = HnswParts)
-        graft.operators.Hnsw.writeGraphs(graphs, graphsP)
-        graft.operators.Hnsw.dumpParsed(
-          graft.operators.Hnsw.readGraphs(s, graphsP))
-          .write.mode("overwrite").parquet(dumpP)
-      }
+    Sidecar.built(base) { _ =>
+      val graphs = graft.operators.Hnsw.buildPartitioned(
+        corpus(s, d), "vec_id", "embedding",
+        m = HnswM, efC = HnswEfC, parts = HnswParts)
+      graft.operators.Hnsw.writeGraphs(graphs, graphsP)
+      graft.operators.Hnsw.dumpParsed(
+        graft.operators.Hnsw.readGraphs(s, graphsP))
+        .write.mode("overwrite").parquet(dumpP)
     }
     (graphsP, dumpP)
   }
@@ -255,26 +250,25 @@ object VectorQueries {
     * is index state, so each opclass gets its own store). 0/1 are
     * exact in binary16 → half storage. Same parsed-dump replay
     * contract as the real-vector graphs. */
+  private def hnswBitTag(metric: String): String =
+    if (metric == "hamming") "hnswbit_ham_v1" else "hnswbit_jac_v1"
+
   private[graft] def ensureHnswBitStore(
       s: SparkSession, d: String, metric: String): (String, String) = {
-    val tag = if (metric == "hamming") "ham" else "jac"
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_hnswbit_${tag}_v1_${graft.Sidecar.key(d)}")
+    val base = Sidecar.dir(hnswBitTag(metric), d)
     val graphsP = new java.io.File(base, "graphs").toString
     val dumpP = new java.io.File(base, "dump").toString
-    VectorQueries.synchronized {
-      if (!new java.io.File(dumpP, "_SUCCESS").exists()) {
-        val src = s.read.parquet(ensureBqStore(s, d))
-          .withColumn("bits", expr("flatten(transform(bq, w -> " +
-            "transform(sequence(0, 63), j -> cast(getbit(w, j) as double))))"))
-        val graphs = graft.operators.Hnsw.buildPartitioned(
-          src, "vec_id", "bits", m = HnswM, efC = HnswEfC,
-          parts = HnswParts, metric = metric, half = true)
-        graft.operators.Hnsw.writeGraphs(graphs, graphsP)
-        graft.operators.Hnsw.dumpParsed(
-          graft.operators.Hnsw.readGraphs(s, graphsP))
-          .write.mode("overwrite").parquet(dumpP)
-      }
+    Sidecar.built(base) { _ =>
+      val src = s.read.parquet(ensureBqStore(s, d))
+        .withColumn("bits", expr("flatten(transform(bq, w -> " +
+          "transform(sequence(0, 63), j -> cast(getbit(w, j) as double))))"))
+      val graphs = graft.operators.Hnsw.buildPartitioned(
+        src, "vec_id", "bits", m = HnswM, efC = HnswEfC,
+        parts = HnswParts, metric = metric, half = true)
+      graft.operators.Hnsw.writeGraphs(graphs, graphsP)
+      graft.operators.Hnsw.dumpParsed(
+        graft.operators.Hnsw.readGraphs(s, graphsP))
+        .write.mode("overwrite").parquet(dumpP)
     }
     (graphsP, dumpP)
   }
@@ -304,30 +298,18 @@ object VectorQueries {
     * by cell, centroids persisted as 0/1 arrays for the replay. */
   private[graft] val IvfBitNlist = 16
   private[graft] val IvfBitNprobe = 4
-  private def ivfBitBasePath(d: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_ivfbit_v1_${graft.Sidecar.key(d)}").toString
+  private val IvfBitTag = "ivfbit_v1"
 
-  private def ensureIvfBitStore(s: SparkSession, d: String): String = {
-    val base = ivfBitBasePath(d)
-    VectorQueries.synchronized {
-      // gate on the LAST-written artifact (ADVICE r13): gating on
-      // store/_SUCCESS with centroids written after left a crash
-      // window that permanently poisoned the cache (store present,
-      // centroids missing — every later probe/oracle run fails until
-      // the directory is deleted by hand)
-      if (!new java.io.File(new java.io.File(base, "centroids"), "_SUCCESS").exists()) {
-        val (indexed, cents) = graft.operators.IvfIndex.buildBitIndex(
-          s.read.parquet(ensureBqStore(s, d)), "vec_id", "bq",
-          nlist = IvfBitNlist, iters = 2)
-        graft.operators.IvfIndex.writePartitioned(
-          indexed, new java.io.File(base, "store").toString)
-        cents.write.mode("overwrite")
-          .parquet(new java.io.File(base, "centroids").toString)
-      }
+  private def ensureIvfBitStore(s: SparkSession, d: String): String =
+    Sidecar.built(Sidecar.dir(IvfBitTag, d)) { base =>
+      val (indexed, cents) = graft.operators.IvfIndex.buildBitIndex(
+        s.read.parquet(ensureBqStore(s, d)), "vec_id", "bq",
+        nlist = IvfBitNlist, iters = 2)
+      graft.operators.IvfIndex.writePartitioned(
+        indexed, new java.io.File(base, "store").toString)
+      cents.write.mode("overwrite")
+        .parquet(new java.io.File(base, "centroids").toString)
     }
-    base
-  }
 
   /** vs_ivf_bit: cell-probed hamming search — rank the nlist bit
     * centroids by hamming driver-side (KB-scale, the rankCells
@@ -369,7 +351,7 @@ object VectorQueries {
     * probe, sign-bit hamming vs the raw embeddings (≡ the packed
     * store's HammingDistExpr — pack is the sign bits). */
   private def ivfBitOracle(d: String): String = {
-    val base = ivfBitBasePath(d)
+    val base = Sidecar.dir(IvfBitTag, d)
     s"""
     WITH q AS (SELECT embedding AS qv FROM embeddings WHERE vec_id = 0),
     probed AS (
@@ -407,22 +389,21 @@ object VectorQueries {
     * ([[graft.operators.Hnsw]] sparse Index). Integer tf weights make
     * every dot/norm an exact integer, so the walk replay needs no
     * accumulation-order argument at all — hash-exact from birth. */
+  private val HnswSparseTag = "hnswsparse_v1"
+
   private[graft] def ensureHnswSparseStore(s: SparkSession, d: String): (String, String) = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_hnswsparse_v1_${graft.Sidecar.key(d)}")
+    val base = Sidecar.dir(HnswSparseTag, d)
     val graphsP = new java.io.File(base, "graphs").toString
     val dumpP = new java.io.File(base, "dump").toString
-    VectorQueries.synchronized {
-      if (!new java.io.File(dumpP, "_SUCCESS").exists()) {
-        val graphs = graft.operators.Hnsw.buildPartitioned(
-          s.read.parquet(ensureSparseTfStore(s, d))
-            .withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval")),
-          "doc_id", "sv", m = HnswM, efC = HnswEfC, parts = HnswParts, metric = "cosine")
-        graft.operators.Hnsw.writeGraphs(graphs, graphsP)
-        graft.operators.Hnsw.dumpParsed(
-          graft.operators.Hnsw.readGraphs(s, graphsP))
-          .write.mode("overwrite").parquet(dumpP)
-      }
+    Sidecar.built(base) { _ =>
+      val graphs = graft.operators.Hnsw.buildPartitioned(
+        s.read.parquet(ensureSparseTfStore(s, d))
+          .withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval")),
+        "doc_id", "sv", m = HnswM, efC = HnswEfC, parts = HnswParts, metric = "cosine")
+      graft.operators.Hnsw.writeGraphs(graphs, graphsP)
+      graft.operators.Hnsw.dumpParsed(
+        graft.operators.Hnsw.readGraphs(s, graphsP))
+        .write.mode("overwrite").parquet(dumpP)
     }
     (graphsP, dumpP)
   }
@@ -512,8 +493,7 @@ object VectorQueries {
   }
 
   private def hnswSparseOracle(d: String): String = {
-    val dump = new java.io.File(new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_hnswsparse_v1_${graft.Sidecar.key(d)}"), "dump").toString
+    val dump = new java.io.File(Sidecar.dir(HnswSparseTag, d), "dump").toString
     val parts = 0 until HnswParts
     s"""WITH RECURSIVE
     ${hnswSparsePrelude(s"$dump/*.parquet")},
@@ -535,9 +515,7 @@ object VectorQueries {
   private[graft] val SparseRoutedSpill = 2
   private[graft] val SparseRoutedNprobe = 4
 
-  private def sparseRoutedBase(d: String): java.io.File =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_hnswsproute_v2_${graft.Sidecar.key(d)}")
+  private val SparseRoutedTag = "hnswsproute_v2"
 
   /** Build-once cell-ROUTED sparse graph store — the vs_hnsw_routed
     * treatment for the sparsevec family (VERDICT r14's one perf-weak:
@@ -546,27 +524,24 @@ object VectorQueries {
     * ([[graft.operators.Hnsw.rankCellsSparse]] — pmod term cells,
     * integer mass sums, the impact-partitioned inverted-index layout),
     * one sparse COSINE graph per cell with spill-2 boundary copies,
-    * parsed dump for the walk replay written LAST (the ensure-gate
-    * discipline). No centroid artifact: routing is a pure integer
-    * function of the vector. */
+    * parsed dump for the walk replay. No centroid artifact: routing
+    * is a pure integer function of the vector. */
   private[graft] def ensureSparseRoutedGraphs(s: SparkSession, d: String): String = {
-    val base = sparseRoutedBase(d)
+    val base = Sidecar.dir(SparseRoutedTag, d)
     val graphsP = new java.io.File(base, "graphs").toString
     val dumpP = new java.io.File(base, "dump").toString
-    VectorQueries.synchronized {
-      if (!new java.io.File(dumpP, "_SUCCESS").exists()) {
-        val graphs = graft.operators.Hnsw.buildCellRoutedSparse(
-          s.read.parquet(ensureSparseTfStore(s, d)), "doc_id", "sidx", "sval",
-          nlist = SparseRoutedNlist, spill = SparseRoutedSpill,
-          m = HnswM, efC = HnswEfC, metric = "cosine")
-        // cell-clustered layout: probes prune at row-group granularity
-        // under a constant footer count (the scale-measured layout —
-        // see writeGraphsClustered's scaladoc)
-        graft.operators.Hnsw.writeGraphsClustered(graphs, graphsP)
-        graft.operators.Hnsw.dumpParsed(
-          graft.operators.Hnsw.readGraphs(s, graphsP))
-          .write.mode("overwrite").parquet(dumpP)
-      }
+    Sidecar.built(base) { _ =>
+      val graphs = graft.operators.Hnsw.buildCellRoutedSparse(
+        s.read.parquet(ensureSparseTfStore(s, d)), "doc_id", "sidx", "sval",
+        nlist = SparseRoutedNlist, spill = SparseRoutedSpill,
+        m = HnswM, efC = HnswEfC, metric = "cosine")
+      // cell-clustered layout: probes prune at row-group granularity
+      // under a constant footer count (the scale-measured layout —
+      // see writeGraphsClustered's scaladoc)
+      graft.operators.Hnsw.writeGraphsClustered(graphs, graphsP)
+      graft.operators.Hnsw.dumpParsed(
+        graft.operators.Hnsw.readGraphs(s, graphsP))
+        .write.mode("overwrite").parquet(dumpP)
     }
     graphsP
   }
@@ -594,7 +569,7 @@ object VectorQueries {
     * rows) exactly as [[graft.operators.Hnsw.searchRoutedSparse]]
     * does. */
   private def hnswSparseRoutedOracle(d: String): String = {
-    val base = sparseRoutedBase(d)
+    val base = Sidecar.dir(SparseRoutedTag, d)
     val dump = new java.io.File(base, "dump").toString
     val cells = 0 until SparseRoutedNlist
     val gate = "AND part_id IN (SELECT part_id FROM probed)"
@@ -639,8 +614,7 @@ object VectorQueries {
     * [[graft.operators.Hnsw.searchFiltered]] replayed over the
     * same flat sparse dump as vs_hnsw_sparse. */
   private def hnswSparseFilteredOracle(d: String): String = {
-    val dump = new java.io.File(new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_hnswsparse_v1_${graft.Sidecar.key(d)}"), "dump").toString
+    val dump = new java.io.File(Sidecar.dir(HnswSparseTag, d), "dump").toString
     val parts = 0 until HnswParts
     val fetch = K * HnswFilterWiden
     val ef = math.max(HnswEf, fetch)
@@ -691,9 +665,7 @@ object VectorQueries {
   }
 
   private def hnswBitOracle(d: String, metric: String): String = {
-    val tag = if (metric == "hamming") "ham" else "jac"
-    val dump = new java.io.File(new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_hnswbit_${tag}_v1_${graft.Sidecar.key(d)}"), "dump").toString
+    val dump = new java.io.File(Sidecar.dir(hnswBitTag(metric), d), "dump").toString
     val dist: String => String =
       if (metric == "hamming") hnswHamDistSql _ else hnswJacDistSql _
     val parts = 0 until HnswParts
@@ -727,43 +699,37 @@ object VectorQueries {
   private[graft] val RoutedSpill = 2
   private[graft] val RoutedNprobe = 4
 
+  private val RoutedTag = "hnswcell_v3"
+
   /** Build-once cell-routed graph store: coarse k-means centroids +
-    * one graph per cell (spill-2 boundary copies), persisted under
-    * tmpdir with the ensureAutoStore _SUCCESS discipline. */
+    * one graph per cell (spill-2 boundary copies). */
   private[graft] def ensureRoutedGraphs(s: SparkSession, d: String): (String, String) = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_hnswcell_v3_${graft.Sidecar.key(d)}")
+    val base = Sidecar.dir(RoutedTag, d)
     val graphsP = new java.io.File(base, "graphs").toString
     val centP = new java.io.File(base, "centroids").toString
-    VectorQueries.synchronized {
-      if (!new java.io.File(centP, "_SUCCESS").exists()) {
-        val mat = graft.operators.Materializer.local()
-        val centroids = IvfIndex.trainCentroids(
-          Tables.embeddings(s, d), "vec_id", "embedding",
-          nlist = RoutedNlist, iters = 2, mat = mat)
-        val graphs = graft.operators.Hnsw.buildCellRouted(
-          corpus(s, d), "vec_id", "embedding", centroids,
-          spill = RoutedSpill, m = HnswM, efC = HnswEfC)
-        // cell-clustered persist (r15): probes prune at row-group
-        // granularity under a constant footer count, the same layout
-        // the sparse routed store measured its way to
-        graft.operators.Hnsw.writeGraphsClustered(graphs, graphsP,
-          cellCol = "cell_id")
-        // relational dump beside the blobs: the DuckDB oracle replays
-        // the probed cells' walks over exactly this adjacency (r13)
-        graft.operators.Hnsw.dumpParsed(
-          graft.operators.Hnsw.readGraphs(s, graphsP))
-          .write.mode("overwrite").parquet(new java.io.File(base, "dump").toString)
-        centroids.write.mode("overwrite").parquet(centP)
-        mat.releaseAll()
-      }
+    Sidecar.built(base) { _ =>
+      val mat = graft.operators.Materializer.local()
+      val centroids = IvfIndex.trainCentroids(
+        Tables.embeddings(s, d), "vec_id", "embedding",
+        nlist = RoutedNlist, iters = 2, mat = mat)
+      val graphs = graft.operators.Hnsw.buildCellRouted(
+        corpus(s, d), "vec_id", "embedding", centroids,
+        spill = RoutedSpill, m = HnswM, efC = HnswEfC)
+      // cell-clustered persist (r15): probes prune at row-group
+      // granularity under a constant footer count, the same layout
+      // the sparse routed store measured its way to
+      graft.operators.Hnsw.writeGraphsClustered(graphs, graphsP,
+        cellCol = "cell_id")
+      // relational dump beside the blobs: the DuckDB oracle replays
+      // the probed cells' walks over exactly this adjacency (r13)
+      graft.operators.Hnsw.dumpParsed(
+        graft.operators.Hnsw.readGraphs(s, graphsP))
+        .write.mode("overwrite").parquet(new java.io.File(base, "dump").toString)
+      centroids.write.mode("overwrite").parquet(centP)
+      mat.releaseAll()
     }
     (graphsP, centP)
   }
-
-  private def routedDumpPath(d: String): String =
-    new java.io.File(new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_hnswcell_v3_${graft.Sidecar.key(d)}"), "dump").toString
 
   // ---------------------------------------- hnsw beam-walk oracles (r13)
   /** DuckDB replay of [[graft.operators.Hnsw.Index.searchKnn]] over
@@ -907,8 +873,7 @@ object VectorQueries {
   /** vs_hnsw_knn: per-graph top-K walks, exact (dist, vec_id) merge —
     * [[graft.operators.Hnsw.search]] replayed. */
   private def hnswKnnOracle(d: String): String = {
-    val dump = new java.io.File(new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_hnswflat_v1_${graft.Sidecar.key(d)}"), "dump").toString
+    val dump = new java.io.File(Sidecar.dir(HnswFlatTag, d), "dump").toString
     val parts = 0 until HnswParts
     s"""WITH RECURSIVE
     ${hnswWalkPrelude(s"$dump/*.parquet")},
@@ -923,8 +888,7 @@ object VectorQueries {
     * semi-join on the metadata predicate, exact top-k —
     * [[graft.operators.Hnsw.searchFiltered]] replayed. */
   private def hnswFilteredOracle(d: String): String = {
-    val dump = new java.io.File(new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_hnswflat_v1_${graft.Sidecar.key(d)}"), "dump").toString
+    val dump = new java.io.File(Sidecar.dir(HnswFlatTag, d), "dump").toString
     val parts = 0 until HnswParts
     val fetch = K * HnswFilterWiden
     val ef = math.max(HnswEf, fetch)
@@ -943,8 +907,7 @@ object VectorQueries {
     * spill copies collapse to one row per vec_id —
     * [[graft.operators.Hnsw.searchRouted]] replayed. */
   private def hnswRoutedOracle(d: String): String = {
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_hnswcell_v3_${graft.Sidecar.key(d)}")
+    val base = Sidecar.dir(RoutedTag, d)
     val dump = new java.io.File(base, "dump").toString
     val cent = new java.io.File(base, "centroids").toString
     val cells = 0 until RoutedNlist
@@ -1022,23 +985,17 @@ object VectorQueries {
     * query was the old shape). The signatures are deterministic
     * (md5-derived planes), so the store makes the bucket probe
     * REPLAYABLE: the oracle recomputes only the QUERY's signatures. */
-  private[graft] def lshStorePath(d: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_lsh_v1_${graft.Sidecar.key(d)}").toString
+  private val LshTag = "lsh_v1"
 
   private[graft] val LshTables = 8
   private[graft] val LshBits = 4
 
-  private def ensureLshStore(s: SparkSession, d: String): String = {
-    val p = lshStorePath(d)
-    VectorQueries.synchronized {
-      if (!new java.io.File(p, "_SUCCESS").exists())
-        LshAnn.bucketRows(corpus(s, d), "vec_id", "embedding",
-          tables = LshTables, bits = LshBits, dims = 64)
-          .write.mode("overwrite").parquet(p)
+  private def ensureLshStore(s: SparkSession, d: String): String =
+    Sidecar.built(Sidecar.dir(LshTag, d)) { p =>
+      LshAnn.bucketRows(corpus(s, d), "vec_id", "embedding",
+        tables = LshTables, bits = LshBits, dims = 64)
+        .write.mode("overwrite").parquet(p)
     }
-    p
-  }
 
   /** Bucket-probed ANN over the persisted bucket store. Approximate
     * vs exact search (bucket recall, gated in RecallGateSpec) but
@@ -1191,10 +1148,7 @@ object VectorQueries {
     * real per-refresh work — is the probe. */
   def kjBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     val build = () => {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      VectorQueries.synchronized { rm(new java.io.File(kjInitStorePath(d))) }
+      Sidecar.drop(Sidecar.dir(KjInitTag, d))
       ensureKjInitStore(s, d); ()
     }
     (build, () => knnJoinQ(s, d))
@@ -1208,7 +1162,7 @@ object VectorQueries {
     * is bit-identical to the engine's sequential-fold L2 on these
     * operands (proven by the init entry's hash match). */
   private def knnJoinSql(d: String): String = {
-    val p = kjInitStorePath(d)
+    val p = Sidecar.dir(KjInitTag, d)
     val ki = 3 * KjK
     s"""
     WITH store AS (
@@ -1264,25 +1218,18 @@ object VectorQueries {
     * NN-Descent refinement on top stays recall-gated (vs_knn_join).
     * Primary side sampled (vec_id % 17) so the replay stays cheap at
     * 10×; the blocking geometry exercised is identical. */
-  private def kjInitStorePath(d: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_kjinit_v1_${graft.Sidecar.key(d)}").toString
+  private val KjInitTag = "kjinit_v1"
 
-  private def ensureKjInitStore(s: SparkSession, d: String): String = {
-    val p = kjInitStorePath(d)
-    VectorQueries.synchronized {
-      if (!new java.io.File(p, "_SUCCESS").exists()) {
-        val emb = Tables.embeddings(s, d)
-        val n = emb.count()
-        val nlist = math.max(16, math.min(1024, math.ceil(math.sqrt(n.toDouble)).toInt))
-        val centroids = IvfIndex.trainCentroids(emb, "vec_id", "embedding", nlist, iters = 2)
-        IvfIndex.rankedCells(emb, "embedding", centroids, KjSpill)
-          .select(col("vec_id"), col("embedding"), col("cells"))
-          .write.mode("overwrite").parquet(p)
-      }
+  private def ensureKjInitStore(s: SparkSession, d: String): String =
+    Sidecar.built(Sidecar.dir(KjInitTag, d)) { p =>
+      val emb = Tables.embeddings(s, d)
+      val n = emb.count()
+      val nlist = math.max(16, math.min(1024, math.ceil(math.sqrt(n.toDouble)).toInt))
+      val centroids = IvfIndex.trainCentroids(emb, "vec_id", "embedding", nlist, iters = 2)
+      IvfIndex.rankedCells(emb, "embedding", centroids, KjSpill)
+        .select(col("vec_id"), col("embedding"), col("cells"))
+        .write.mode("overwrite").parquet(p)
     }
-    p
-  }
 
   private def knnJoinInitQ(s: SparkSession, d: String): DataFrame = {
     val store = s.read.parquet(ensureKjInitStore(s, d))
@@ -1304,7 +1251,7 @@ object VectorQueries {
   }
 
   private def knnJoinInitOracle(d: String): String = {
-    val p = kjInitStorePath(d)
+    val p = Sidecar.dir(KjInitTag, d)
     s"""
     WITH store AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS emb, cells
                    FROM read_parquet('$p/*.parquet')),
@@ -1488,27 +1435,20 @@ object VectorQueries {
     math.max(16, (nVecs / 2000L).toInt)
   private[graft] val PairCellSpill = 3
 
-  private[graft] def pairCellStorePath(d: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_paircell_v1_${graft.Sidecar.key(d)}").toString
+  private val PairCellTag = "paircell_v1"
 
-  private def ensurePairCellStore(s: SparkSession, d: String): String = {
-    val p = pairCellStorePath(d)
-    VectorQueries.synchronized {
-      if (!new java.io.File(p, "_SUCCESS").exists()) {
-        val emb = Tables.embeddings(s, d)
-        val mat = graft.operators.Materializer.local()
-        val centroids = IvfIndex.trainCentroids(
-          emb, "vec_id", "embedding", nlist = pairCellNlist(emb.count()),
-          iters = 2, mat)
-        IvfIndex.rankedCells(emb, "embedding", centroids, spill = PairCellSpill)
-          .select(col("vec_id"), col("embedding"), col("cells"))
-          .write.mode("overwrite").parquet(p)
-        mat.releaseAll()
-      }
+  private def ensurePairCellStore(s: SparkSession, d: String): String =
+    Sidecar.built(Sidecar.dir(PairCellTag, d)) { p =>
+      val emb = Tables.embeddings(s, d)
+      val mat = graft.operators.Materializer.local()
+      val centroids = IvfIndex.trainCentroids(
+        emb, "vec_id", "embedding", nlist = pairCellNlist(emb.count()),
+        iters = 2, mat)
+      IvfIndex.rankedCells(emb, "embedding", centroids, spill = PairCellSpill)
+        .select(col("vec_id"), col("embedding"), col("cells"))
+        .write.mode("overwrite").parquet(p)
+      mat.releaseAll()
     }
-    p
-  }
 
   /** The md5 hash-sample selector (deterministic, engine ≡ DuckDB:
     * the 60-bit integer from the first 15 hex digits of
@@ -1545,7 +1485,7 @@ object VectorQueries {
 
   private def embPairsBlockedOracle(d: String): String = s"""
     WITH st AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS v, cells
-                FROM read_parquet('${pairCellStorePath(d)}/*.parquet')),
+                FROM read_parquet('${Sidecar.dir(PairCellTag, d)}/*.parquet')),
     rows_ AS (SELECT vec_id, v, unnest(cells) AS cell FROM st),
     anch AS (
       SELECT cell, vec_id AS anchor_id, v AS avec FROM rows_
@@ -1916,17 +1856,14 @@ object VectorQueries {
   private val MrlShortlist = 50
 
   /** Build-once (vec_id, head) sidecar: the first [[MrlHead]] dims. */
-  private def ensureMrlStore(s: SparkSession, d: String): String = {
-    val p = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_mrl_v1_${graft.Sidecar.key(d)}").toString
-    VectorQueries.synchronized {
-      if (!new java.io.File(p, "_SUCCESS").exists())
-        corpus(s, d)
-          .select(col("vec_id"), slice(col("embedding"), 1, MrlHead).as("head"))
-          .write.mode("overwrite").parquet(p)
+  private val MrlTag = "mrl_v1"
+
+  private def ensureMrlStore(s: SparkSession, d: String): String =
+    Sidecar.built(Sidecar.dir(MrlTag, d)) { p =>
+      corpus(s, d)
+        .select(col("vec_id"), slice(col("embedding"), 1, MrlHead).as("head"))
+        .write.mode("overwrite").parquet(p)
     }
-    p
-  }
 
   /** Exposed for MrlSpec's ReadSchema assertion. */
   private[graft] def mrlShortlistPlan(s: SparkSession, d: String): DataFrame = {
@@ -1975,15 +1912,12 @@ object VectorQueries {
     * artifact a pipeline materializes once and every index build
     * reads. Safe for oracle purposes: the walk replays read the graph
     * DUMPS, never this store. */
-  private[graft] def ensureSparseTfStore(s: SparkSession, d: String): String = {
-    val p = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_sparsetf_v1_${graft.Sidecar.key(d)}").toString
-    VectorQueries.synchronized {
-      if (!new java.io.File(p, "_SUCCESS").exists())
-        sparseTf(s, d).write.mode("overwrite").parquet(p)
+  private val SparseTfTag = "sparsetf_v1"
+
+  private[graft] def ensureSparseTfStore(s: SparkSession, d: String): String =
+    Sidecar.built(Sidecar.dir(SparseTfTag, d)) { p =>
+      sparseTf(s, d).write.mode("overwrite").parquet(p)
     }
-    p
-  }
 
   /** Corpus as sparse term-frequency vectors — the pgvector
     * `sparsevec` layout: per doc, (sidx, sval) sorted-ascending
@@ -2330,20 +2264,17 @@ object VectorQueries {
     FROM r WHERE rn <= 2
     ORDER BY vec_id, pos"""
 
+  private val BqTag = "bq_v1"
+
   /** Build-once persisted (vec_id, bq) sidecar for the binary-quant
     * search — the packed store phase 1 scans INSTEAD of the float
-    * column (same build-once _SUCCESS discipline as ensureAutoStore). */
-  private def ensureBqStore(s: SparkSession, d: String): String = {
-    val p = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_bq_v1_${graft.Sidecar.key(d)}").toString
-    VectorQueries.synchronized {
-      if (!new java.io.File(p, "_SUCCESS").exists())
-        graft.operators.BinaryQuant.writeStore(
-          Tables.embeddings(s, d).filter(col("vec_id") =!= 0),
-          "vec_id", "embedding", p)
+    * column. */
+  private def ensureBqStore(s: SparkSession, d: String): String =
+    Sidecar.built(Sidecar.dir(BqTag, d)) { p =>
+      graft.operators.BinaryQuant.writeStore(
+        Tables.embeddings(s, d).filter(col("vec_id") =!= 0),
+        "vec_id", "embedding", p)
     }
-    p
-  }
 
   /** Binary-quantized search (pgvector `bit(n)` mode; two-phase since
     * r7): hamming pass over the persisted (id, packed-sign-bits)
@@ -2364,20 +2295,14 @@ object VectorQueries {
   /** Build-once SQ8 sidecar (FAISS `QT_8bit` rung of the compression
     * ladder): (vec_id, sq binary) + trained per-dim params — 4× less
     * scan IO than float32. */
-  private[graft] def sqStorePath(d: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_sq_v1_${graft.Sidecar.key(d)}").toString
+  private val SqTag = "sq_v1"
 
-  private def ensureSqStore(s: SparkSession, d: String): String = {
-    val p = sqStorePath(d)
-    VectorQueries.synchronized {
-      if (!new java.io.File(p, "_SUCCESS").exists())
-        graft.operators.ScalarQuant.writeStore(
-          Tables.embeddings(s, d).filter(col("vec_id") =!= 0),
-          "vec_id", "embedding", p)
+  private def ensureSqStore(s: SparkSession, d: String): String =
+    Sidecar.built(Sidecar.dir(SqTag, d)) { p =>
+      graft.operators.ScalarQuant.writeStore(
+        Tables.embeddings(s, d).filter(col("vec_id") =!= 0),
+        "vec_id", "embedding", p)
     }
-    p
-  }
 
   /** SQ8 two-phase KNN: asymmetric-distance shortlist over the
     * 1-byte-per-dim sidecar (codes dequantize against the
@@ -2401,13 +2326,7 @@ object VectorQueries {
   def sqBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     var path: String = null
     val build = () => {
-      VectorQueries.synchronized {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_sq_v1_${graft.Sidecar.key(d)}"))
-      }
+      Sidecar.drop(Sidecar.dir(SqTag, d))
       path = ensureSqStore(s, d)
     }
     (build, () => sqKnn(s, d))
@@ -2419,21 +2338,16 @@ object VectorQueries {
     * can decode the half-rounded query from the same sidecar instead
     * of re-implementing the encoder's double→float→binary16 rounding
     * (pack is deterministic: the stored row 0 IS `Half.pack(q)`). */
-  private[graft] def halfStorePath(d: String): String =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_half_v2_${graft.Sidecar.key(d)}").toString
+  private val HalfTag = "half_v2"
 
   private def ensureHalfStore(s: SparkSession, d: String): String = {
     import org.apache.spark.sql.GraftSqlBridge.{toColumn, toExpression}
-    val p = halfStorePath(d)
-    VectorQueries.synchronized {
-      if (!new java.io.File(p, "_SUCCESS").exists())
-        Tables.embeddings(s, d)
-          .select(col("vec_id"),
-            toColumn(graft.functions.HalfPackExpr(toExpression(col("embedding")))).as("hv"))
-          .write.mode("overwrite").parquet(p)
+    Sidecar.built(Sidecar.dir(HalfTag, d)) { p =>
+      Tables.embeddings(s, d)
+        .select(col("vec_id"),
+          toColumn(graft.functions.HalfPackExpr(toExpression(col("embedding")))).as("hv"))
+        .write.mode("overwrite").parquet(p)
     }
-    p
   }
 
   /** halfvec KNN (pgvector `halfvec` parity): L2 top-k over the
@@ -2555,8 +2469,7 @@ object VectorQueries {
     var bqStore: DataFrame = null
     var query: Array[Double] = null
     val build = () => {
-      val p = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_bq_bench_${graft.Sidecar.key(d)}").toString
+      val p = Sidecar.dir("bq_bench", d)
       graft.operators.BinaryQuant.writeStore(
         emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", p)
       bqStore = s.read.parquet(p)
@@ -2573,23 +2486,19 @@ object VectorQueries {
     * layout, and what makes the ADC search REPLAYABLE: given the
     * stored codes and the exact codebook doubles, the shortlist is
     * deterministic arithmetic the oracle re-runs in DuckDB. */
-  private[graft] def pqBasePath(d: String): java.io.File =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_pq_v1_${graft.Sidecar.key(d)}")
+  private val PqTag = "pq_v1"
 
   private def ensurePqStore(s: SparkSession, d: String): (String, String) = {
-    val base = pqBasePath(d)
+    val base = Sidecar.dir(PqTag, d)
     val storeP = new java.io.File(base, "store").toString
     val cbP = new java.io.File(base, "codebooks").toString
-    VectorQueries.synchronized {
-      if (!new java.io.File(cbP, "_SUCCESS").exists()) {
-        val emb = Tables.embeddings(s, d)
-        val cb = PqIndex.train(emb, "embedding", dims = 64, m = 16, ksub = 32)
-        PqIndex.encode(emb.filter(col("vec_id") =!= 0), "embedding", cb)
-          .select(col("vec_id"), col("embedding"), col("codes"))
-          .write.mode("overwrite").parquet(storeP)
-        PqIndex.writeCodebooks(s, cb, cbP)
-      }
+    Sidecar.built(base) { _ =>
+      val emb = Tables.embeddings(s, d)
+      val cb = PqIndex.train(emb, "embedding", dims = 64, m = 16, ksub = 32)
+      PqIndex.encode(emb.filter(col("vec_id") =!= 0), "embedding", cb)
+        .select(col("vec_id"), col("embedding"), col("codes"))
+        .write.mode("overwrite").parquet(storeP)
+      PqIndex.writeCodebooks(s, cb, cbP)
     }
     (storeP, cbP)
   }
@@ -2611,36 +2520,29 @@ object VectorQueries {
   // ------------------------------------------- optimizer-picked IVF probe
   /** Build-once per sfDir: a cell-partitioned store + persisted
     * centroids (with per-cell bounding radii — the statistics the
-    * range rewrite needs for sound pruning) under java.io.tmpdir,
+    * range rewrite needs for sound pruning) as a [[Sidecar]] store,
     * registered in [[IvfCatalog]] with [[IvfProbeRule]] installed.
     * Deterministic: same corpus → same k-means → same layout, so
     * re-use across JVMs is safe. (Dir name carries a layout version:
     * v2 added the radius column.) */
-  private[graft] def autoBasePath(d: String): java.io.File =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_ivf_auto_v4_${graft.Sidecar.key(d)}")
+  // v4: spilled layout carries the ranked cells array + cell_rank
+  // (generalized dedup, any spill) instead of v3's primary_cell
+  private[graft] val IvfAutoTag = "ivf_auto_v4"
 
   private def ensureAutoStore(s: SparkSession, d: String): (String, String) = {
-    // v4: spilled layout carries the ranked cells array + cell_rank
-    // (generalized dedup, any spill) instead of v3's primary_cell
-    val base = autoBasePath(d)
+    val base = Sidecar.dir(IvfAutoTag, d)
     val storeP = new java.io.File(base, "store").toString
     val centP = new java.io.File(base, "centroids").toString
-    VectorQueries.synchronized {
-      // validity = the _SUCCESS marker of the LAST artifact written
-      // (centroids): present → both store and centroids completed; a
-      // killed build leaves no marker and is rebuilt, never read
-      if (!new java.io.File(centP, "_SUCCESS").exists()) {
-        val (indexed, centroids) = IvfIndex.buildIndex(
-          Tables.embeddings(s, d), "vec_id", "embedding",
-          nlist = IvfNlist, spill = IvfSpill)
-        IvfIndex.writePartitioned(indexed, storeP)
-        centroids
-          .join(IvfIndex.cellRadii(indexed, "embedding", centroids),
-            Seq("centroid_id"), "left")
-          .na.fill(0.0, Seq("radius")) // an empty cell intersects nothing
-          .write.mode("overwrite").parquet(centP)
-      }
+    Sidecar.built(base) { _ =>
+      val (indexed, centroids) = IvfIndex.buildIndex(
+        Tables.embeddings(s, d), "vec_id", "embedding",
+        nlist = IvfNlist, spill = IvfSpill)
+      IvfIndex.writePartitioned(indexed, storeP)
+      centroids
+        .join(IvfIndex.cellRadii(indexed, "embedding", centroids),
+          Seq("centroid_id"), "left")
+        .na.fill(0.0, Seq("radius")) // an empty cell intersects nothing
+        .write.mode("overwrite").parquet(centP)
     }
     IvfCatalog.register(storeP, s.read.parquet(centP), nprobe = IvfNprobe, vecCol = "embedding")
     IvfProbeRule.install(s)
@@ -2658,28 +2560,20 @@ object VectorQueries {
     * probe) and r7 (table format) wins. Spill=1: GraftTable files
     * carry data columns only, and the single-copy store needs no
     * probe dedup predicate. */
-  private[graft] def txnBasePath(d: String): java.io.File =
-    new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_ivf_txn_v1_${graft.Sidecar.key(d)}")
+  private val IvfTxnTag = "ivf_txn_v1"
 
   private[graft] def ensureTxnStore(s: SparkSession, d: String): (String, String) = {
-    val base = txnBasePath(d)
+    val base = Sidecar.dir(IvfTxnTag, d)
     val tableP = new java.io.File(base, "table").toString
     val centP = new java.io.File(base, "centroids").toString
-    VectorQueries.synchronized {
-      if (!new java.io.File(centP, "_SUCCESS").exists()) {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(base); base.mkdirs()
-        val (indexed, centroids) = IvfIndex.buildIndex(
-          Tables.embeddings(s, d), "vec_id", "embedding",
-          nlist = IvfNlist, spill = 1)
-        graft.sources.GraftTable.create(s, tableP,
-          indexed.repartitionByRange(IvfNlist, col("centroid_id")),
-          statsCols = Seq("centroid_id", "vec_id"))
-        centroids.write.mode("overwrite").parquet(centP)
-      }
+    Sidecar.built(base) { _ =>
+      val (indexed, centroids) = IvfIndex.buildIndex(
+        Tables.embeddings(s, d), "vec_id", "embedding",
+        nlist = IvfNlist, spill = 1)
+      graft.sources.GraftTable.create(s, tableP,
+        indexed.repartitionByRange(IvfNlist, col("centroid_id")),
+        statsCols = Seq("centroid_id", "vec_id"))
+      centroids.write.mode("overwrite").parquet(centP)
     }
     val t = graft.sources.GraftTable.open(s, tableP)
     // spill=1 loses the SOAR margin the spill-2 auto store gets, so
@@ -2716,13 +2610,7 @@ object VectorQueries {
     * snapshot knn. */
   def ivfTxnBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     val build = () => {
-      VectorQueries.synchronized {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(sys.props("java.io.tmpdir"),
-          s"graft_ivf_txn_v1_${graft.Sidecar.key(d)}"))
-      }
+      Sidecar.drop(Sidecar.dir(IvfTxnTag, d))
       ensureTxnStore(s, d); ()
     }
     (build, () => ivfTxn(s, d))
@@ -2834,12 +2722,7 @@ object VectorQueries {
       // force a fresh build so `_build` measures the same work on
       // every machine — a cache hit would time a no-op (r2 reported
       // 0.19 s for what is really a ~3 s build)
-      val base = new java.io.File(sys.props("java.io.tmpdir"),
-        s"graft_ivf_auto_v4_${graft.Sidecar.key(d)}")
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles).foreach(_.foreach(rm)); f.delete(); ()
-      }
-      VectorQueries.synchronized { rm(base) }
+      Sidecar.drop(Sidecar.dir(IvfAutoTag, d))
       storeP = ensureAutoStore(s, d)._1
     }
     (build, () => autoProbe(s, d, storeP))
@@ -2899,7 +2782,7 @@ object VectorQueries {
     * candidates by construction — IvfProbeRule ranks with the same
     * metric and injects the same dedup conjunct). */
   private def ivfProbeOracle(d: String): String = {
-    val base = autoBasePath(d)
+    val base = Sidecar.dir(IvfAutoTag, d)
     s"""
     WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qvec FROM embeddings WHERE vec_id = 0),
     probed AS (
@@ -2926,7 +2809,7 @@ object VectorQueries {
     * create-commit's part-*.parquet (the store is immutable once
     * built, so a raw glob IS the snapshot). */
   private def ivfTxnOracle(d: String): String = {
-    val base = txnBasePath(d)
+    val base = Sidecar.dir(IvfTxnTag, d)
     s"""
     WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qvec FROM embeddings WHERE vec_id = 0),
     probed AS (
@@ -2948,7 +2831,7 @@ object VectorQueries {
     * per-query spilled dedup, self-exclusion, exact top-5 per query
     * (TopKAggregate's (dist, id) eviction = the row_number order). */
   private def ivfBatchOracle(d: String): String = {
-    val base = autoBasePath(d)
+    val base = Sidecar.dir(IvfAutoTag, d)
     s"""
     WITH qs AS (SELECT vec_id AS qid, CAST(embedding AS DOUBLE[]) AS qvec
                 FROM embeddings WHERE vec_id < 5),
@@ -3000,7 +2883,7 @@ object VectorQueries {
     * pgvector-iterative-scan analogue IvfProbeRule applies), then the
     * label filter and the spilled dedup run inside the probed cells. */
   private def knnFilteredAutoOracle(d: String): String = {
-    val base = autoBasePath(d)
+    val base = Sidecar.dir(IvfAutoTag, d)
     val widened = math.min(IvfNlist, IvfNprobe * 2) // filteredWiden = 2
     s"""
     WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qvec FROM embeddings WHERE vec_id = 0),
@@ -3031,7 +2914,7 @@ object VectorQueries {
     * cnt(w) per schedule width, picks p, and replays the final probe
     * (dedup included) at that width. */
   private def knnFilteredIterOracle(d: String): String = {
-    val base = autoBasePath(d)
+    val base = Sidecar.dir(IvfAutoTag, d)
     s"""
     WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qvec FROM embeddings WHERE vec_id = 0),
     ranked AS (
@@ -3087,7 +2970,7 @@ object VectorQueries {
 
   /** Replay of the flat PQ/ADC search over the persisted code store. */
   private def pqKnnOracle(d: String): String = {
-    val base = pqBasePath(d)
+    val base = Sidecar.dir(PqTag, d)
     s"""
     WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qvec FROM embeddings WHERE vec_id = 0),
     ${pqAdcSql(s"SELECT vec_id, codes FROM read_parquet('$base/store/*.parquet')",
@@ -3102,7 +2985,7 @@ object VectorQueries {
   /** Replay of the IVF-PQ composite: cell probe + spilled dedup picks
     * the candidates, then the same ADC arithmetic on their codes. */
   private def ivfPqKnnOracle(d: String): String = {
-    val base = ivfPqBasePath(d)
+    val base = Sidecar.dir(IvfPqTag, d)
     s"""
     WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qvec FROM embeddings WHERE vec_id = 0),
     probed AS (
@@ -3157,7 +3040,7 @@ object VectorQueries {
       FROM qsig, (VALUES (0), (1), (2), (4), (8)) m(m)),
     cand AS (
       SELECT DISTINCT s.vec_id
-      FROM read_parquet('${lshStorePath(d)}/*.parquet') s
+      FROM read_parquet('${Sidecar.dir(LshTag, d)}/*.parquet') s
       JOIN probes p ON s.table_id = p.table_id AND s.sig = p.sig)
     SELECT e.vec_id AS vec_id,
            1.0 - list_cosine_similarity(CAST(e.embedding AS DOUBLE[]), q.qvec) AS dist
@@ -3179,7 +3062,7 @@ object VectorQueries {
     * column. list(… ORDER BY dim) + list_sum reproduces the
     * sequential accumulation contract. */
   private def sqKnnOracle(d: String): String = {
-    val p = sqStorePath(d)
+    val p = Sidecar.dir(SqTag, d)
     s"""
     WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qvec FROM embeddings WHERE vec_id = 0),
     qd AS (SELECT generate_subscripts(qvec, 1) AS qdim, unnest(qvec) AS qx FROM q),
@@ -3209,7 +3092,7 @@ object VectorQueries {
     * sequential L2 fold. No encoder replication: the sidecar IS the
     * rounding's output. */
   private def knnHalfOracle(d: String): String = {
-    val p = halfStorePath(d)
+    val p = Sidecar.dir(HalfTag, d)
     val u = hexByte("hx", "4*dim+1") + " + 256 * " + hexByte("hx", "4*dim+3")
     s"""
     WITH st AS (SELECT vec_id, hex(hv) AS hx, octet_length(hv) // 2 AS nd
@@ -3240,7 +3123,7 @@ object VectorQueries {
     * 1 − clamp(dot/(√‖x‖²·√‖q‖²)) combination (similarity clamped to
     * [-1,1] like pgvector/DuckDB and the engine's own kernels). */
   private def knnHalfCosOracle(d: String): String = {
-    val p = halfStorePath(d)
+    val p = Sidecar.dir(HalfTag, d)
     val u = hexByte("hx", "4*dim+1") + " + 256 * " + hexByte("hx", "4*dim+3")
     s"""
     WITH st AS (SELECT vec_id, hex(hv) AS hx, octet_length(hv) // 2 AS nd

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import graft.Tables
+import graft.{Sidecar, Tables}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -338,23 +338,21 @@ object ServingBench {
       stop = () => if (q != null) q.stop())
   }
 
+  private[graft] val DocStoreTag = "docstore_v1"
+
   /** Range-clustered docs GraftTable for point-read doc fetches:
     * built once per fixture generation (Sidecar content key), files
     * sorted/partitioned by doc_id so every id's stats envelope is
     * tight and the In prune touches only hit-bearing files. */
   private[graft] def ensureDocStore(s: SparkSession, d: String): graft.sources.GraftTable = {
-    val path = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_docstore_v1_${graft.Sidecar.key(d)}").toString
-    ServingBench.synchronized {
-      if (new java.io.File(new java.io.File(path), "_txlog").exists())
-        graft.sources.GraftTable.open(s, path, statsCols = Seq("doc_id"))
-      else
-        graft.sources.GraftTable.create(s, path,
-          Tables.documents(s, d)
-            .repartitionByRange(8, col("doc_id"))
-            .sortWithinPartitions("doc_id"),
-          statsCols = Seq("doc_id"))
+    val path = Sidecar.built(Sidecar.dir(DocStoreTag, d)) { p =>
+      graft.sources.GraftTable.create(s, p,
+        Tables.documents(s, d)
+          .repartitionByRange(8, col("doc_id"))
+          .sortWithinPartitions("doc_id"),
+        statsCols = Seq("doc_id"))
     }
+    graft.sources.GraftTable.open(s, path, statsCols = Seq("doc_id"))
   }
 
   /** name → probe factory, in bench execution order. */

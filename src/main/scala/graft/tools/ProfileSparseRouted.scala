@@ -35,12 +35,10 @@ object ProfileSparseRouted {
     val nDocs = tf.count()
     val nlist = if (args.length > 1) args(1).toInt
       else math.max(16, (nDocs / 500).toInt) // ~500 docs per cell pre-spill
-    val key = graft.Sidecar.key(sfDir)
-    val base = new java.io.File(sys.props("java.io.tmpdir"),
-      s"graft_sproute_profb_${nlist}_$key")
+    val base = graft.Sidecar.dir(s"sproute_profb_$nlist", sfDir)
     val flatP = new java.io.File(base, "flat").toString
     val routedP = new java.io.File(base, "routed").toString
-    if (!new java.io.File(routedP, "_SUCCESS").exists()) {
+    graft.Sidecar.built(base) { _ =>
       graft.operators.Hnsw.writeGraphs(
         graft.operators.Hnsw.buildPartitioned(
           tf.withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval")),

@@ -19,7 +19,7 @@ class OracleAnnSpec extends SparkSpec {
     // running the auto entry builds + registers the store and installs
     // the rule on this session — the exact environment of the bug
     SparkEntry.queries("vs_ivf_auto")(spark, Sf).collect()
-    val base = graft.queries.VectorQueries.autoBasePath(Sf)
+    val base = Sidecar.dir(graft.queries.VectorQueries.IvfAutoTag, Sf)
     val store = spark.read.parquet(new java.io.File(base, "store").toString)
     val cents = spark.read.parquet(new java.io.File(base, "centroids").toString)
       .select(col("centroid_id"), col("centroid"))

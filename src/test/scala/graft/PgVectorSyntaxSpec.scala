@@ -380,7 +380,7 @@ class PgVectorSyntaxSpec extends AnyFunSuite {
       // session (the query entry does all three)
       SparkEntry.queries("vs_ivf_auto")(s, Sf)
       val storeP = new java.io.File(
-        graft.queries.VectorQueries.autoBasePath(Sf), "store").toString
+        Sidecar.dir(graft.queries.VectorQueries.IvfAutoTag, Sf), "store").toString
       s.read.parquet(storeP).createOrReplaceTempView("vstore")
       val vec = queryVecText(s)
       val df = s.sql(
