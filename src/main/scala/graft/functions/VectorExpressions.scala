@@ -305,6 +305,28 @@ case class NearestCellsExpr(child: Expression,
 
   override def nullSafeEval(input: Any): Any = {
     val v = input.asInstanceOf[ArrayData]
+    val q = if (isFloat) {
+      val a = new Array[Double](v.numElements())
+      var i = 0
+      while (i < a.length) { a(i) = v.getFloat(i).toDouble; i += 1 }
+      a
+    } else v.toDoubleArray()
+    new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      NearestCellsExpr.nearest(q, centroidIds, centroids, spill))
+  }
+
+  override protected def withNewChildInternal(newChild: Expression): Expression =
+    copy(child = newChild)
+}
+
+object NearestCellsExpr {
+  /** The kernel: the `spill` nearest `centroids` to `v` (at most
+    * nlist), ranked by (L2 distance, centroid id) ascending. The
+    * corpus assignment ([[NearestCellsExpr.nullSafeEval]]) and the
+    * driver-side query routing ([[graft.operators.Hnsw.Centroids]])
+    * both call it, so a vector and a query rank cells alike. */
+  def nearest(v: Array[Double], centroidIds: Array[Int],
+      centroids: Array[Array[Double]], spill: Int): Array[Int] = {
     val k = math.min(spill, centroidIds.length)
     val bestD = new Array[Double](k)
     val bestI = new Array[Int](k)
@@ -312,11 +334,10 @@ case class NearestCellsExpr(child: Expression,
     var c = 0
     while (c < centroids.length) {
       val cent = centroids(c)
-      val n = math.min(v.numElements(), cent.length)
+      val n = math.min(v.length, cent.length)
       var s = 0.0
       var i = 0
-      if (isFloat) while (i < n) { val d = v.getFloat(i).toDouble - cent(i); s += d * d; i += 1 }
-      else while (i < n) { val d = v.getDouble(i) - cent(i); s += d * d; i += 1 }
+      while (i < n) { val d = v(i) - cent(i); s += d * d; i += 1 }
       val dist = math.sqrt(s)
       val id = centroidIds(c)
       // insertion position by (dist, id) ascending; ids are unique
@@ -332,12 +353,8 @@ case class NearestCellsExpr(child: Expression,
       }
       c += 1
     }
-    new org.apache.spark.sql.catalyst.util.GenericArrayData(
-      if (filled == k) bestI else java.util.Arrays.copyOf(bestI, filled))
+    if (filled == k) bestI else java.util.Arrays.copyOf(bestI, filled)
   }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }
 
 /** Sign-bit packing for binary vector quantization (the pgvector

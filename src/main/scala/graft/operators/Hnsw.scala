@@ -764,8 +764,8 @@ object Hnsw {
     *    persists across JVMs: every run still computes from the
     *    parquet bytes (re-parsing a bit-identical blob is the only
     *    work ever skipped).
-    *  - READ-ONLY sharing: only the walk paths (the search, batch,
-    *    routed and filtered families, and the SQL probe's driver-side
+    *  - READ-ONLY sharing: only the walk paths (search, batch and
+    *    filtered search, flat or routed, and the SQL probe's driver-side
     *    walk in [[graft.plans.HnswProbeRule]], whose store-blob memo is
     *    re-checked against [[graft.Sidecar.key]] on every probe and
     *    evicted by `DROP INDEX`) consume cached indexes, and
@@ -955,7 +955,7 @@ object Hnsw {
   /** The one read-only per-graph walk: parse `blob` once (through
     * [[WalkCache]]) and return its top-`k` beam walk (beam `ef`) for
     * any number of queries. Every read-only entry point walks here —
-    * the search, filtered, batch and routed families and the SQL
+    * search, filtered and batch search, flat or routed, and the SQL
     * probe ([[graft.plans.HnswProbeRule]]). */
   private[graft] def walk(blob: Array[Byte], k: Int, ef: Int): Query => Seq[(Long, Double)] = {
     val ix = deserCached(blob)
@@ -979,9 +979,27 @@ object Hnsw {
   }
 
   /** Search every partition graph with the ef-beam walk and merge the
-    * per-graph top-k exactly: k·P rows reach the final sort. */
-  def search(graphs: DataFrame, query: Query, k: Int, ef: Int = 64): DataFrame =
-    walkEach(graphs, query, k, ef, None)
+    * per-graph top-k exactly: k·P rows reach the final sort.
+    *
+    * `route` = (routing, nprobe) walks a cell-routed store
+    * ([[buildCellRouted]]) instead: ONLY the query's nprobe cells'
+    * graphs, selected by an `In` over part_id that pushes into the
+    * parquet scan, so un-probed blobs are never read, let alone
+    * deserialized (`nprobe <= 0` resolves through [[resolveNprobe]]).
+    * Spill copies — identical (id, dist) rows from sibling cell
+    * graphs — collapse before the top-k (k·nprobe rows, never
+    * corpus-scale); flat partition graphs hold disjoint ids and skip
+    * that step. `deserCounter` (specs) counts graph-blob LOADS — one
+    * per blob walked, whether the parse ran or [[WalkCache]] answered
+    * it (r18) — so the ≤ nprobe routing contract stays a measured
+    * number under the cache. */
+  def search(graphs: DataFrame, query: Query, k: Int, ef: Int = 64,
+      route: Option[(Routing, Int)] = None,
+      deserCounter: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame =
+    route.fold(walkEach(graphs, query, k, ef, deserCounter)) { r =>
+      walkEach(probed(graphs, probeCells(r, query)), query, k, ef, deserCounter)
+        .dropDuplicates("vec_id")
+    }
       .orderBy(col("dist"), col("vec_id"))
       .limit(k)
 
@@ -1020,9 +1038,8 @@ object Hnsw {
     require(qids.distinct.length == qids.length,
       s"duplicate query ids in batch — ${qids.diff(qids.distinct).distinct.mkString(", ")}")
     val byId = queries.toMap // task-serialized with the closure: one tiny map
-    val probed = routes.fold(graphs)(r =>
-      graphs.filter(col("part_id").isin(r.keys.toSeq.sorted.map(Int.box): _*)))
-    probed.select(col("part_id"), col("graph")).as[(Int, Array[Byte])]
+    routes.fold(graphs)(r => probed(graphs, r.keys))
+      .select(col("part_id"), col("graph")).as[(Int, Array[Byte])]
       .flatMap { case (cell, blob) =>
         deserCounter.foreach(_.add(1))
         val w = walk(blob, k, ef)
@@ -1038,107 +1055,83 @@ object Hnsw {
     * per-(query, graph) top-k merge exactly as in [[search]]: k·P rows
     * per query cross to the final per-query rank, never the corpus.
     * The per-batch cost is P deserializations + |queries|·P beam
-    * walks — the serving shape ([[graft.streaming.KnnServing]]). */
+    * walks — the serving shape ([[graft.streaming.KnnServing]]).
+    *
+    * With `route` each query's nprobe cells are ranked driver-side,
+    * each graph in the batch's probed UNION loads once and walks only
+    * for the queries that probed it: ≤ min(nlist, |batch|·nprobe)
+    * graph loads and |batch|·nprobe walks, never |batch|·P. */
   def searchBatch(graphs: DataFrame, queries: Seq[(Long, Query)],
-      k: Int, ef: Int = 64): DataFrame = {
+      k: Int, ef: Int = 64, route: Option[(Routing, Int)] = None,
+      deserCounter: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
     import org.apache.spark.sql.expressions.Window
+    // cell → the queries probing it: |batch|·nprobe entries, shipped
+    // with the walk (duplicate query ids are refused by walkBatch)
+    val routes = route.map { r =>
+      queries.flatMap { case (qid, q) => probeCells(r, q).map(_ -> qid) }
+        .groupBy(_._1).map { case (c, qs) => c -> qs.map(_._2) }
+    }
+    // ONE exchange for dedup + rank (r18, guide §2.4 — a
+    // dropDuplicates(qid, vec_id) hashes by (qid, vec_id) and the rank
+    // window re-hashes by qid: two exchanges, two stage floors per
+    // serving micro-batch). Spill copies are IDENTICAL full rows — the
+    // same node in sibling graphs carries the same vector, so
+    // (qid, vec_id) determines dist — so in the (dist, vec_id) order
+    // they are ties. Within one qid window: a row is the first of its
+    // tie group iff row_number = rank, and dense_rank is its rank among
+    // firsts. Same rows as dropDuplicates + row_number ≤ k; on a flat
+    // store (disjoint ids, no ties) exactly row_number ≤ k. All three
+    // are rank functions of one window, so the planner still inserts
+    // its per-qid group limit (on dense_rank ≤ k) before the exchange.
     val w = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
-    walkBatch(graphs, queries, None, k, ef, None)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
+    walkBatch(graphs, queries, routes, k, ef, deserCounter)
+      .withColumn("__rn", row_number().over(w))
+      .withColumn("__rk", rank().over(w))
+      .withColumn("__dk", dense_rank().over(w))
+      .filter(col("__rn") === col("__rk") && col("__dk") <= k)
       .select(col("qid"), col("vec_id"), col("dist"))
       .orderBy(col("qid"), col("dist"), col("vec_id"))
   }
 
   // ------------------------------------------------- cell-routed graphs
-  /** CELL-ROUTED graphs (VERDICT r6 #5 — kills the P-growth of the
-    * flat layout): partition the corpus by its IVF coarse cell
-    * ([[IvfIndex.assignCells]], the NearestCellsExpr kernel — no
-    * window, no extra exchange beyond the one build repartition) and
-    * build one graph PER CELL, so a query only walks the `nprobe`
-    * graphs owning its region instead of all P graphs. With
-    * `spill ≥ 2` each vector is inserted into its spill nearest
-    * cells' graphs (the SOAR trade: spill× storage buys boundary
-    * recall), and the cross-graph merge dedups the copies — identical
-    * (id, dist) rows, a pure dropDuplicates on k·nprobe rows.
-    *
-    * At 100 TB: flat layout costs P graph deserializations per query
-    * and P grows with the corpus; cell routing pins per-query cost to
-    * nprobe graph loads — corpus-size-INDEPENDENT — while the cell
-    * filter prunes the (cell_id, blob) parquet scan itself
-    * (plan-asserted pushdown in HnswRoutedSpec). nlist is the √N-ish
-    * scale knob exactly as for the IVF store. */
-  def buildCellRouted(corpus: DataFrame, idCol: String, vecCol: String,
-      centroids: DataFrame, spill: Int = 2,
-      m: Int = 16, efC: Int = 64, metric: String = "l2"): DataFrame = {
-    val spark = corpus.sparkSession
-    import org.apache.spark.sql.types._
-    val met = Metric.of(metric)
-    val nlist = centroids.count().toInt
-    val assigned = IvfIndex.assignCells(
-        corpus.select(col(idCol), col(vecCol)), vecCol, centroids, spill)
-      .select(col("centroid_id").cast("int"),
-        col(idCol).cast("long"), col(vecCol).cast("array<double>"))
-    val rdd = assigned
-      .repartition(nlist, col("centroid_id"))
-      .rdd.mapPartitions { iter =>
-        // hash collisions can co-locate several cells in one task;
-        // one graph per CELL regardless (the routing contract)
-        val byCell = mutable.Map.empty[Int, Index]
-        iter.foreach { r =>
-          byCell.getOrElseUpdate(r.getInt(0), new Index(m, efC, met))
-            .insert(r.getLong(1), Dense(r.getSeq[Double](2).toArray))
-        }
-        byCell.iterator.map { case (cell, ix) => Row(cell, ser(ix)) }
-      }
-    spark.createDataFrame(rdd, StructType(Seq(
-      StructField("cell_id", IntegerType, nullable = false),
-      StructField("graph", BinaryType, nullable = false))))
+  /** How a cell-routed store ([[buildCellRouted]]) ranks the cells of
+    * a vector: the build calls [[cells]] with `spill` (the graphs a
+    * vector is inserted into), a probe with `nprobe` (the graphs a
+    * query walks). ONE function both ways makes self-findability
+    * structural — a vector's top-1 cell is the same list both ways. A
+    * query of the other kind fails with the fix named, as
+    * [[Index.qdist]] does. */
+  sealed trait Routing extends Serializable {
+    /** The cell count — the scale of [[resolveNprobe]]. */
+    def nlist: Int
+    def cells(q: Query, n: Int): Seq[Int]
   }
 
-  /** Driver-side cell ranking for one query (centroids are nlist
-    * rows — KB-scale, the same driver-metadata budget as every other
-    * literal-query kernel). */
-  def rankCells(centroids: DataFrame, query: Array[Double], nprobe: Int): Seq[Int] =
-    centroids.select(col("centroid_id"), col("centroid").cast("array<double>"))
-      .collect()
-      .map { r =>
-        val c = r.getSeq[Double](1)
-        var s = 0.0; var i = 0
-        val n = math.min(query.length, c.length)
-        while (i < n) { val dd = query(i) - c(i); s += dd * dd; i += 1 }
-        (math.sqrt(s), r.getInt(0))
-      }
-      .sorted.take(nprobe).map(_._2).toSeq
-
-  /** Routed search: beam-walk ONLY the query's `nprobe` nearest
-    * cells' graphs. The cell filter is an `In` over the store's
-    * cell_id column — pushed to the parquet scan, so un-probed blobs
-    * are never read, let alone deserialized. `deserCounter` (specs)
-    * counts graph-blob LOADS — one per blob a probe touches, whether
-    * the parse ran or [[WalkCache]] answered it (r18) — so the
-    * ≤ nprobe routing contract stays a measured number under the
-    * cache, with counts identical to the pre-cache instrument. */
-  def searchRouted(graphs: DataFrame, centroids: DataFrame,
-      query: Array[Double], k: Int, nprobe: Int, ef: Int = 64,
-      deserCounter: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val cells = rankCells(centroids, query, nprobe)
-    routedTopK(graphs.filter(col("cell_id").isin(cells.map(Int.box): _*)),
-      Dense(query), k, ef, deserCounter)
+  /** L2-nearest coarse cells (the IVF k-means centroids,
+    * [[IvfIndex.trainCentroids]]), ranked by (distance, centroid id)
+    * with the kernel the IVF corpus assignment runs
+    * ([[graft.functions.NearestCellsExpr.nearest]]). The nlist rows
+    * are KB-scale driver metadata: [[Centroids.of]] collects them
+    * once, and one value serves every probe. */
+  final case class Centroids(ids: Array[Int], vecs: Array[Array[Double]]) extends Routing {
+    def nlist: Int = ids.length
+    def cells(q: Query, n: Int): Seq[Int] = q match {
+      case Dense(v) => graft.functions.NearestCellsExpr.nearest(v, ids, vecs, n).toSeq
+      case _: Sparse => throw new IllegalArgumentException(
+        "centroid routing ranks dense vectors: route a sparse store with Hnsw.TermMass(nlist)")
+    }
   }
 
-  /** The routed single-query tail: walk the probed graphs, collapse
-    * spill copies (identical (id, dist) rows from sibling graphs —
-    * dedup k·nprobe rows, never corpus-scale), exact top-k. */
-  private def routedTopK(probed: DataFrame, query: Query, k: Int, ef: Int,
-      deserCounter: Option[org.apache.spark.util.LongAccumulator]): DataFrame =
-    walkEach(probed, query, k, ef, deserCounter)
-      .dropDuplicates("vec_id")
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(k)
+  object Centroids {
+    /** The (centroid_id, centroid) frame's nlist rows, collected. */
+    def of(centroids: DataFrame): Centroids = {
+      val rows = centroids.select(col("centroid_id"), col("centroid").cast("array<double>"))
+        .collect().sortBy(_.getInt(0))
+      Centroids(rows.map(_.getInt(0)), rows.map(_.getSeq[Double](1).toArray))
+    }
+  }
 
-  // ------------------------------------------- cell-routed SPARSE graphs
-  /** Top-mass-cell routing for sparse vectors (r15 — VERDICT r14 #1,
+  /** Top-mass term cells for sparse vectors (r15 — VERDICT r14 #1,
     * the flat-sparse scale residual): cell(dim) = pmod(dim, nlist),
     * and a vector's ranked cells are its cells ordered by SUMMED
     * weight (mass DESC, cell ASC). This is impact-partitioned
@@ -1152,83 +1145,98 @@ object Hnsw {
     * 0.4 vs 0.9 for mass routing on the same store — the projection of
     * a short query barely correlates with doc-cluster centroids.)
     * Everything is integer-exact on tf weights — pmod + integer sums —
-    * so the oracle replays query routing with no float-order caveats,
-    * and BOTH sides (doc assignment, query probing) use this one
-    * function, which makes self-findability structural (a vector's
-    * top-1 cell is the same list both ways). Skew note for 100 TB: a
-    * stopword-dominated corpus concentrates mass in few cells — nlist
-    * is the spread knob, and upstream stopword/idf weighting (the
-    * hybridSparse BM25 store) flattens it at the source. */
-  def rankCellsSparse(qIdx: Array[Long], qVal: Array[Double],
-      nlist: Int, nprobe: Int): Seq[Int] = {
-    val mass = mutable.Map.empty[Int, Double]
-    var i = 0
-    while (i < qIdx.length) {
-      val c = (((qIdx(i) % nlist) + nlist) % nlist).toInt
-      mass(c) = mass.getOrElse(c, 0.0) + qVal(i)
-      i += 1
+    * so the oracle replays query routing with no float-order caveats.
+    * An all-empty sparse vector has no cells and is not indexed —
+    * consistent with pgvector, whose sparsevec requires at least one
+    * element. Skew note for 100 TB: a stopword-dominated corpus
+    * concentrates mass in few cells — nlist is the spread knob, and
+    * upstream stopword/idf weighting (the hybridSparse BM25 store)
+    * flattens it at the source. */
+  final case class TermMass(nlist: Int) extends Routing {
+    def cells(q: Query, n: Int): Seq[Int] = q match {
+      case Sparse(qIdx, qVal) =>
+        val mass = mutable.Map.empty[Int, Double]
+        var i = 0
+        while (i < qIdx.length) {
+          val c = (((qIdx(i) % nlist) + nlist) % nlist).toInt
+          mass(c) = mass.getOrElse(c, 0.0) + qVal(i)
+          i += 1
+        }
+        mass.toSeq.map { case (c, m) => (-m, c) }.sorted.take(n).map(_._2)
+      case _: Dense => throw new IllegalArgumentException(
+        "term-mass routing ranks sparse vectors: route a dense store with " +
+          "Hnsw.Centroids.of(centroids)")
     }
-    mass.toSeq.map { case (c, m) => (-m, c) }.sorted.take(nprobe).map(_._2)
   }
 
-  /** CELL-ROUTED sparse graphs — [[buildCellRouted]]'s sparsevec twin
-    * (r15): each vector is inserted into the graphs of its `spill`
-    * top-mass cells ([[rankCellsSparse]] — the same function queries
-    * route with), one SPARSE graph per cell built with the two-pointer
-    * kernel under `metric`. A query then walks only its nprobe cells'
-    * graphs ([[searchRoutedSparse]]) — per-query cost nprobe graph
-    * loads, corpus-size-INDEPENDENT, where the flat sparse layout pays
-    * P loads that grow with the corpus (the serve_sparse 3.5×-per-10×
-    * band VERDICT r14 carried as the round's one scale residual).
-    * Build shape (r16 — VERDICT r15 #2, the sf10 build hot-spot):
-    * cell assignment is a PURE per-row function ([[rankCellsSparse]],
-    * the same function queries route with), so it runs in a NARROW
-    * flatMap — the r15 explode→groupBy→window→join pipeline paid four
-    * wide exchanges, two of them carrying the full vector payloads;
-    * now the only exchange is the final repartition-by-cell. Mass
-    * sums are integer-valued doubles on the tf fixture, and
-    * rankCellsSparse's (mass DESC, cell ASC) tie-break matches the
-    * old windowed rank bit-for-bit. Rows are sorted (cell, id) within
-    * each build partition so insertion order — and therefore the
-    * graph structure the dump records — is deterministic across
-    * runs. An all-empty sparse vector has no cells and is not
-    * indexed — consistent with pgvector, whose sparsevec requires at
-    * least one element (the flat layout would store it at cosine
-    * distance 1.0 from everything).
+  /** The cells `route` = (routing, nprobe) probes for `q`. */
+  private def probeCells(route: (Routing, Int), q: Query): Seq[Int] = {
+    val (r, nprobe) = route
+    r.cells(q, resolveNprobe(nprobe, r.nlist))
+  }
+
+  /** `graphs` narrowed to the rows of `cells` — an `In` over part_id,
+    * pushed to the parquet scan. */
+  private def probed(graphs: DataFrame, cells: Iterable[Int]): DataFrame =
+    graphs.filter(col("part_id").isin(cells.toSeq.sorted.map(Int.box): _*))
+
+  /** CELL-ROUTED graphs (VERDICT r6 #5 — kills the P-growth of the
+    * flat layout): each vector is inserted into the graphs of its
+    * `spill` best cells under `routing` — [[Centroids]] for dense
+    * vectors, [[TermMass]] for sparse ones, the same function queries
+    * route with — one graph per cell built with the graph kernel of
+    * the vector's kind under `metric`. A query then walks only its
+    * nprobe cells' graphs ([[search]] / [[searchBatch]] with `route`):
+    * per-query cost is nprobe graph loads, corpus-size-INDEPENDENT,
+    * where the flat layout pays P loads that grow with the corpus.
+    * `spill ≥ 2` is the SOAR trade: spill× storage buys boundary
+    * recall, and the cross-graph merge collapses the copies. nlist is
+    * the √N-ish scale knob exactly as for the IVF store. `vecCol` is
+    * read by [[queryColumns]], as in [[buildPartitioned]]: a dense
+    * array column or a sparse struct column ([[sparseColumn]]).
     *
-    * `maxCell` (r16 — VERDICT r15 #2): term-mass cells are SKEWED
-    * (Zipf-of-Zipf), and one build task per cell makes the build's
-    * wall-clock the LARGEST cell's serial insert loop (measured: a
+    * Build shape (r16 — VERDICT r15 #2, the sf10 build hot-spot):
+    * cell assignment is a PURE per-row function, so it runs in a
+    * NARROW flatMap and the only exchange is the final
+    * repartition-by-cell. Rows are sorted (cell, split, id) within each
+    * build partition, so insertion order — and therefore the graph
+    * structure the dump records — is deterministic across runs. The
+    * store is (part_id, graph), part_id = the cell.
+    *
+    * `maxCell` (r16 — VERDICT r15 #2): cells are SKEWED (term-mass
+    * cells are Zipf-of-Zipf; k-means cells follow the data's density),
+    * and one build task per cell makes the build's wall-clock the
+    * LARGEST cell's serial insert loop (measured on term-mass cells: a
     * cell holding 3× the median made the whole build 4.8× the flat
     * layout's on identical insert volume). A finite cap splits each
     * over-full cell into ⌈n/maxCell⌉ SUB-GRAPHS — extra rows under
     * the same part_id, each built by its own task (one lightweight
     * ids-only census pass decides the split counts; split membership
-    * is pmod(id, splits), deterministic). Every search path already
-    * flatMaps over ALL blobs of a probed part_id and merges exactly,
-    * so results are the exact union of per-split walks; the deser
-    * bound becomes ≤ Σ blobs of the probed cells. Default UNCAPPED:
-    * the oracle-replayed inventory entries keep one-graph-per-cell
+    * is pmod(id, splits), deterministic). Every search path flatMaps
+    * over ALL blobs of a probed part_id and merges exactly, so results
+    * are the exact union of per-split walks; the deser bound becomes
+    * ≤ Σ blobs of the probed cells. Default UNCAPPED: the
+    * oracle-replayed inventory entries keep one-graph-per-cell
     * (dumpParsed keys nodes by part_id, so the DuckDB walk replay
     * requires it); the serving/scale paths pass a real cap. */
-  def buildCellRoutedSparse(corpus: DataFrame, idCol: String,
-      idxCol: String, valCol: String,
-      nlist: Int, spill: Int = 2,
+  def buildCellRouted(corpus: DataFrame, idCol: String, vecCol: String,
+      routing: Routing, spill: Int = 2,
       m: Int = 16, efC: Int = 64, metric: String = "l2",
       maxCell: Int = Int.MaxValue): DataFrame = {
     val spark = corpus.sparkSession
-    import spark.implicits._
     import org.apache.spark.sql.types._
     val met = Metric.of(metric)
-    val src = corpus.select(col(idCol).cast("long").as(idCol),
-      col(idxCol).cast("array<bigint>").as(idxCol),
-      col(valCol).cast("array<double>").as(valCol))
-    val assigned = src.as[(Long, Seq[Long], Seq[Double])]
-      .flatMap { case (id, qi, qv) =>
-        rankCellsSparse(qi.toArray, qv.toArray, nlist, spill)
-          .map(c => (c, id, qi, qv))
-      }
-      .toDF("__cell", idCol, idxCol, valCol)
+    val sparse = isSparseColumn(corpus, vecCol)
+    val (vecCols, decode) = queryColumns(corpus, vecCol)
+    val nlist = routing.nlist
+    val src = corpus.select(col(idCol).cast("long").as("__id") +:
+      vecCols.zipWithIndex.map { case (c, i) => c.as(s"__v$i") }: _*)
+    // row layout from here on: (__cell, __id, vector columns…[, __split])
+    val assigned = spark.createDataFrame(
+      src.rdd.flatMap { r =>
+        routing.cells(decode(r, 1), spill).map(c => Row.fromSeq(c +: r.toSeq))
+      },
+      StructType(StructField("__cell", IntegerType, nullable = false) +: src.schema.fields))
     val (parts, withSplit) =
       if (maxCell == Int.MaxValue) {
         (nlist, assigned.withColumn("__split", lit(0)))
@@ -1247,21 +1255,20 @@ object Hnsw {
           (((id % s) + s) % s).toInt
         }
         (totalSplits,
-          assigned.withColumn("__split", splitUdf(col("__cell"), col(idCol))))
+          assigned.withColumn("__split", splitUdf(col("__cell"), col("__id"))))
       }
     val rdd = withSplit
       .repartition(parts, col("__cell"), col("__split"))
-      .sortWithinPartitions(col("__cell"), col("__split"), col(idCol))
+      .sortWithinPartitions(col("__cell"), col("__split"), col("__id"))
       .rdd.mapPartitions { iter =>
         // hash collisions can co-locate several (cell, split) groups in
         // one task; one graph per GROUP regardless (the routing
         // contract)
         val byCell = mutable.Map.empty[(Int, Int), Index]
         iter.foreach { r =>
-          byCell.getOrElseUpdate((r.getInt(0), r.getInt(4)),
-              new Index(m, efC, met, half = false, sparse = true))
-            .insert(r.getLong(1), Sparse(r.getSeq[Long](2).toArray,
-              r.getSeq[Double](3).toArray))
+          byCell.getOrElseUpdate((r.getInt(0), r.getInt(r.length - 1)),
+              new Index(m, efC, met, sparse = sparse))
+            .insert(r.getLong(1), decode(r, 2))
         }
         byCell.iterator.map { case ((cell, _), ix) => Row(cell, ser(ix)) }
       }
@@ -1282,64 +1289,6 @@ object Hnsw {
     if (nprobe > 0) nprobe
     else math.max(1, math.ceil(math.sqrt(math.max(1, nlist).toDouble)).toInt)
 
-  /** Routed sparse search: rank the query's top-mass cells
-    * ([[rankCellsSparse]] — driver-side, O(nnz) integer work), walk
-    * ONLY those nprobe cells' graphs with the two-pointer kernel,
-    * collapse spill copies (identical (id, dist) rows), exact top-k.
-    * `deserCounter` pins the ≤ nprobe deserialization contract as a
-    * measured number (the HnswRoutedSpec discipline). */
-  def searchRoutedSparse(graphs: DataFrame, nlist: Int,
-      qIdx: Array[Long], qVal: Array[Double], k: Int, nprobe: Int = 0,
-      ef: Int = 64,
-      deserCounter: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    val cells = rankCellsSparse(qIdx, qVal, nlist, resolveNprobe(nprobe, nlist))
-    routedTopK(graphs.filter(col("part_id").isin(cells.map(Int.box): _*)),
-      Sparse(qIdx, qVal), k, ef, deserCounter)
-  }
-
-  /** Batch routed sparse search — the serving kernel
-    * ([[graft.streaming.KnnServing.serveHnswSparseRouted]]): rank each
-    * query's nprobe cells driver-side (O(nnz) integer work per query),
-    * load each graph in the probed UNION once, and walk it only for
-    * the queries that probed it — per-batch cost is ≤ min(nlist,
-    * |batch|·nprobe) graph loads and |batch|·nprobe walks, never
-    * |batch|·P. Spill copies collapse per (query, id); exact
-    * per-query top-k. */
-  def searchBatchRoutedSparse(graphs: DataFrame, nlist: Int,
-      queries: Seq[(Long, Array[Long], Array[Double])],
-      k: Int, nprobe: Int = 0, ef: Int = 64,
-      deserCounter: Option[org.apache.spark.util.LongAccumulator] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val np = resolveNprobe(nprobe, nlist)
-    // cell → the queries probing it: |batch|·nprobe entries, shipped
-    // with the walk (duplicate query ids are refused by walkBatch)
-    val byCell: Map[Int, Seq[Long]] = queries
-      .flatMap { case (qid, qi, qv) => rankCellsSparse(qi, qv, nlist, np).map(_ -> qid) }
-      .groupBy(_._1).map { case (c, qs) => c -> qs.map(_._2) }
-    // ONE exchange for dedup + rank (r18, guide §2.4 — the old
-    // dropDuplicates(qid, vec_id) hashed by (qid, vec_id) and the rank
-    // window re-hashed by qid: two exchanges over k·|batch|·nprobe
-    // rows, i.e. two stage floors per serving micro-batch). Spill
-    // copies are IDENTICAL full rows — the same node in sibling graphs
-    // carries the same vector, so (qid, vec_id) determines dist — and
-    // in the (dist, vec_id) sort order duplicates are ADJACENT. Within
-    // one qid-partitioned, (dist, vec_id)-sorted window pass: a row is
-    // the first of its vec_id iff lag(vec_id) differs, and the rank
-    // among FIRSTS is the running sum of the first-flags. Same rows as
-    // dropDuplicates + row_number ≤ k, one exchange, one sort.
-    val wOrd = Window.partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
-    val wRun = wOrd.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    walkBatch(graphs, queries.map { case (qid, qi, qv) => (qid, Sparse(qi, qv)) },
-        Some(byCell), k, ef, deserCounter)
-      .withColumn("__first",
-        when(lag(col("vec_id"), 1).over(wOrd).isNull ||
-          lag(col("vec_id"), 1).over(wOrd) =!= col("vec_id"), 1).otherwise(0))
-      .withColumn("__rk", sum(col("__first")).over(wRun))
-      .filter(col("__first") === 1 && col("__rk") <= k)
-      .select(col("qid"), col("vec_id"), col("dist"))
-      .orderBy(col("qid"), col("dist"), col("vec_id"))
-  }
-
   /** Persist / reload the partition graphs (parquet of
     * (part_id, blob)): build once, serve many — the graph analogue of
     * [[IvfIndex.writePartitioned]]. */
@@ -1357,11 +1306,10 @@ object Hnsw {
     * filter then prunes at ROW-GROUP granularity under a constant
     * footer count. Same discipline as the dedup stores' 256 KB row
     * groups and GraftTable's stats skipping. */
-  def writeGraphsClustered(graphs: DataFrame, path: String, buckets: Int = 8,
-      cellCol: String = "part_id"): Unit =
+  def writeGraphsClustered(graphs: DataFrame, path: String, buckets: Int = 8): Unit =
     graphs
-      .repartitionByRange(buckets, col(cellCol))
-      .sortWithinPartitions(cellCol)
+      .repartitionByRange(buckets, col("part_id"))
+      .sortWithinPartitions("part_id")
       .write.mode("overwrite")
       // small row groups (vs the 128 MB default): cell blobs are
       // MB-scale, and pruning happens at row-group granularity — a
@@ -1389,8 +1337,7 @@ object Hnsw {
     * level-indexed adjacency as a nested list — so an EXTERNAL engine
     * can replay the deterministic beam walk over exactly the data the
     * blobs carry (the DuckDB oracle for the vs_hnsw_* entries; r13).
-    * Works for both the flat (part_id) and cell-routed (cell_id)
-    * layouts: the first column is passed through as `part_id`. */
+    * Flat and cell-routed stores alike key their rows by part_id. */
   def dumpParsed(graphs: DataFrame): DataFrame = {
     val spark = graphs.sparkSession
     import org.apache.spark.sql.types._

@@ -84,10 +84,8 @@ object IvfIndex {
     * k-means bucketing metric; ties on centroid id. */
   private def nearestCells(vecCol: Column, centroids: DataFrame, spill: Int): Column = {
     import org.apache.spark.sql.GraftSqlBridge.{toColumn, toExpression}
-    val rows = centroids.select(col("centroid_id"), asDouble(col("centroid")))
-      .collect().sortBy(_.getInt(0))
-    toColumn(graft.functions.NearestCellsExpr(toExpression(vecCol),
-      rows.map(_.getInt(0)), rows.map(_.getSeq[Double](1).toArray), spill))
+    val c = Hnsw.Centroids.of(centroids)
+    toColumn(graft.functions.NearestCellsExpr(toExpression(vecCol), c.ids, c.vecs, spill))
   }
 
   /** Corpus + `cells` (array of the `spill` nearest centroid ids,
@@ -182,8 +180,12 @@ object IvfIndex {
     for (i <- 0 until iters) {
       val next = mat.mat(
         src
+          // the cell is computed once per ROW, below the explode: a
+          // non-generator expression selected beside posexplode is
+          // evaluated above the Generate, once per vector ELEMENT
           .select(element_at(nearestCells(col(vecCol), centroids, 1), 1)
-              .as("centroid_id"),
+              .as("centroid_id"), col(vecCol))
+          .select(col("centroid_id"),
             posexplode(asDouble(col(vecCol))).as(Seq("pos", "v")))
           .groupBy(col("centroid_id"), col("pos"))
           // DECIMAL mean (the q_salted_agg discipline): the decimal sum

@@ -40,10 +40,16 @@ object ScalarQuant {
     (mins, maxs.zip(mins).map { case (hi, lo) => hi - lo })
   }
 
+  /** The params' subdirectory of a store written by [[writeStore]]. */
+  val ParamsDir = "_params"
+
   /** Persist the (idCol, sq) sidecar — the search-time scan never
     * touches the float column — plus the trained params as a tiny
-    * `(dim, min, scale)` parquet next to it (re-openable without the
-    * corpus). */
+    * `(dim, min, scale)` parquet inside it, under [[ParamsDir]]
+    * (re-openable without the corpus). The params live in the store
+    * directory so whatever marks, drops or replaces the store covers
+    * them too; the leading underscore keeps them out of a
+    * `spark.read.parquet(path)` of the codes. */
   def writeStore(corpus: DataFrame, idCol: String, vecCol: String,
       path: String): (Array[Double], Array[Double]) = {
     import org.apache.spark.sql.GraftSqlBridge.{toColumn, toExpression}
@@ -56,12 +62,12 @@ object ScalarQuant {
     val spark = corpus.sparkSession
     import spark.implicits._
     mins.indices.map(i => (i, mins(i), scales(i))).toDF("dim", "min", "scale")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path.params")
+      .coalesce(1).write.mode("overwrite").parquet(s"$path/$ParamsDir")
     (mins, scales)
   }
 
   def readParams(spark: SparkSession, path: String): (Array[Double], Array[Double]) = {
-    val rows = spark.read.parquet(s"$path.params")
+    val rows = spark.read.parquet(s"$path/$ParamsDir")
       .orderBy("dim").collect()
     (rows.map(_.getDouble(1)), rows.map(_.getDouble(2)))
   }

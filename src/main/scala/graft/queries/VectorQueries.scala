@@ -312,7 +312,7 @@ object VectorQueries {
     }
 
   /** vs_ivf_bit: cell-probed hamming search — rank the nlist bit
-    * centroids by hamming driver-side (KB-scale, the rankCells
+    * centroids by hamming driver-side (KB-scale, the Hnsw.Centroids
     * budget), scan ONLY the nprobe cell partitions (partition-pruned
     * In), exact integer hamming top-k within. Deterministic end to
     * end: integer cell ranking (centroid_id tie-break) + integer
@@ -325,7 +325,7 @@ object VectorQueries {
         .select(col("embedding").cast("array<double>"))
         .head.getSeq[Double](0).toArray)
     val qBits = graft.operators.Hnsw.expandWords(qWords)
-    // nlist rows — driver metadata, same budget as Hnsw.rankCells
+    // nlist rows — driver metadata, same budget as Hnsw.Centroids
     val cells = s.read.parquet(new java.io.File(base, "centroids").toString)
       .select(col("centroid_id"), col("centroid").cast("array<double>"))
       .collect()
@@ -517,11 +517,13 @@ object VectorQueries {
 
   private val SparseRoutedTag = "hnswsproute_v2"
 
+  private val SparseRouting = graft.operators.Hnsw.TermMass(SparseRoutedNlist)
+
   /** Build-once cell-ROUTED sparse graph store — the vs_hnsw_routed
     * treatment for the sparsevec family (VERDICT r14's one perf-weak:
     * flat sparse serving loads all P graphs per query, and P grows
     * with the corpus): top-mass-cell routing
-    * ([[graft.operators.Hnsw.rankCellsSparse]] — pmod term cells,
+    * ([[graft.operators.Hnsw.TermMass]] — pmod term cells,
     * integer mass sums, the impact-partitioned inverted-index layout),
     * one sparse COSINE graph per cell with spill-2 boundary copies,
     * parsed dump for the walk replay. No centroid artifact: routing
@@ -531,9 +533,10 @@ object VectorQueries {
     val graphsP = new java.io.File(base, "graphs").toString
     val dumpP = new java.io.File(base, "dump").toString
     Sidecar.built(base) { _ =>
-      val graphs = graft.operators.Hnsw.buildCellRoutedSparse(
-        s.read.parquet(ensureSparseTfStore(s, d)), "doc_id", "sidx", "sval",
-        nlist = SparseRoutedNlist, spill = SparseRoutedSpill,
+      val graphs = graft.operators.Hnsw.buildCellRouted(
+        s.read.parquet(ensureSparseTfStore(s, d))
+          .withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval")),
+        "doc_id", "sv", SparseRouting, spill = SparseRoutedSpill,
         m = HnswM, efC = HnswEfC, metric = "cosine")
       // cell-clustered layout: probes prune at row-group granularity
       // under a constant footer count (the scale-measured layout —
@@ -556,9 +559,9 @@ object VectorQueries {
   private def hnswSparseRouted(s: SparkSession, d: String): DataFrame = {
     val graphsP = ensureSparseRoutedGraphs(s, d)
     val (qi, qv) = graft.functions.SparseVec.queryOf(SparseQueryTerms)
-    graft.operators.Hnsw.searchRoutedSparse(
-      graft.operators.Hnsw.readGraphs(s, graphsP), SparseRoutedNlist,
-      qi, qv, K, nprobe = SparseRoutedNprobe, ef = HnswEf)
+    graft.operators.Hnsw.search(
+      graft.operators.Hnsw.readGraphs(s, graphsP), graft.operators.Hnsw.Sparse(qi, qv),
+      K, ef = HnswEf, route = Some((SparseRouting, SparseRoutedNprobe)))
       .select(col("vec_id").as("doc_id"), col("dist"))
   }
 
@@ -566,7 +569,7 @@ object VectorQueries {
     * arithmetic (pmod term cells, mass DESC / cell ASC ranking — all
     * exact on the integer term weights), then walk ONLY the probed
     * cells' graphs and collapse spill copies (identical (id, dist)
-    * rows) exactly as [[graft.operators.Hnsw.searchRoutedSparse]]
+    * rows) exactly as the routed [[graft.operators.Hnsw.search]]
     * does. */
   private def hnswSparseRoutedOracle(d: String): String = {
     val base = Sidecar.dir(SparseRoutedTag, d)
@@ -633,16 +636,15 @@ object VectorQueries {
     * nprobe-pruned sparse beam walk. */
   def hnswSparseRoutedBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
     var graphsP: String = null
-    var qi: Array[Long] = null
-    var qv: Array[Double] = null
+    var q: graft.operators.Hnsw.Query = null
     val build = () => {
       graphsP = ensureSparseRoutedGraphs(s, d)
-      val q = graft.functions.SparseVec.queryOf(SparseQueryTerms)
-      qi = q._1; qv = q._2
+      val (qi, qv) = graft.functions.SparseVec.queryOf(SparseQueryTerms)
+      q = graft.operators.Hnsw.Sparse(qi, qv)
     }
-    val probe = () => graft.operators.Hnsw.searchRoutedSparse(
-      graft.operators.Hnsw.readGraphs(s, graphsP), SparseRoutedNlist,
-      qi, qv, K, nprobe = SparseRoutedNprobe, ef = HnswEf)
+    val probe = () => graft.operators.Hnsw.search(
+      graft.operators.Hnsw.readGraphs(s, graphsP), q, K, ef = HnswEf,
+      route = Some((SparseRouting, SparseRoutedNprobe)))
     (build, probe)
   }
 
@@ -699,7 +701,7 @@ object VectorQueries {
   private[graft] val RoutedSpill = 2
   private[graft] val RoutedNprobe = 4
 
-  private val RoutedTag = "hnswcell_v3"
+  private val RoutedTag = "hnswcell_v4"
 
   /** Build-once cell-routed graph store: coarse k-means centroids +
     * one graph per cell (spill-2 boundary copies). */
@@ -713,13 +715,13 @@ object VectorQueries {
         Tables.embeddings(s, d), "vec_id", "embedding",
         nlist = RoutedNlist, iters = 2, mat = mat)
       val graphs = graft.operators.Hnsw.buildCellRouted(
-        corpus(s, d), "vec_id", "embedding", centroids,
+        corpus(s, d), "vec_id", "embedding",
+        graft.operators.Hnsw.Centroids.of(centroids),
         spill = RoutedSpill, m = HnswM, efC = HnswEfC)
       // cell-clustered persist (r15): probes prune at row-group
       // granularity under a constant footer count, the same layout
       // the sparse routed store measured its way to
-      graft.operators.Hnsw.writeGraphsClustered(graphs, graphsP,
-        cellCol = "cell_id")
+      graft.operators.Hnsw.writeGraphsClustered(graphs, graphsP)
       // relational dump beside the blobs: the DuckDB oracle replays
       // the probed cells' walks over exactly this adjacency (r13)
       graft.operators.Hnsw.dumpParsed(
@@ -903,9 +905,9 @@ object VectorQueries {
   }
 
   /** vs_hnsw_routed: centroid ranking picks the nprobe cells (the
-    * rankCells (dist, cell) sort), only those cells' graphs walk, and
-    * spill copies collapse to one row per vec_id —
-    * [[graft.operators.Hnsw.searchRouted]] replayed. */
+    * [[graft.operators.Hnsw.Centroids]] (dist, cell) sort), only those
+    * cells' graphs walk, and spill copies collapse to one row per
+    * vec_id — the routed [[graft.operators.Hnsw.search]] replayed. */
   private def hnswRoutedOracle(d: String): String = {
     val base = Sidecar.dir(RoutedTag, d)
     val dump = new java.io.File(base, "dump").toString
@@ -940,26 +942,27 @@ object VectorQueries {
     val (graphsP, centP) = ensureRoutedGraphs(s, d)
     val q = queryVec(s, d).select(col("qvec").cast("array<double>"))
       .head.getSeq[Double](0).toArray
-    graft.operators.Hnsw.searchRouted(
-      s.read.parquet(graphsP), s.read.parquet(centP),
-      q, K, nprobe = RoutedNprobe, ef = HnswEf)
+    graft.operators.Hnsw.search(
+      s.read.parquet(graphsP), graft.operators.Hnsw.Dense(q), K, ef = HnswEf,
+      route = Some((graft.operators.Hnsw.Centroids.of(s.read.parquet(centP)), RoutedNprobe)))
   }
 
   /** Bench split for the routed variant: build = train + per-cell
-    * graph construction + persist; probe = nprobe-pruned beam walk. */
+    * graph construction + persist + the centroid collect; probe =
+    * nprobe-pruned beam walk. */
   def hnswRoutedBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    var q: Array[Double] = null
+    var q: graft.operators.Hnsw.Query = null
     var graphsP: String = null
-    var centP: String = null
+    var routing: graft.operators.Hnsw.Routing = null
     val build = () => {
-      val ps = ensureRoutedGraphs(s, d)
-      graphsP = ps._1; centP = ps._2
-      q = queryVec(s, d).select(col("qvec").cast("array<double>"))
-        .head.getSeq[Double](0).toArray
+      val (gp, centP) = ensureRoutedGraphs(s, d)
+      graphsP = gp
+      routing = graft.operators.Hnsw.Centroids.of(s.read.parquet(centP))
+      q = graft.operators.Hnsw.Dense(queryVec(s, d)
+        .select(col("qvec").cast("array<double>")).head.getSeq[Double](0).toArray)
     }
-    val probe = () => graft.operators.Hnsw.searchRouted(
-      s.read.parquet(graphsP), s.read.parquet(centP),
-      q, K, nprobe = RoutedNprobe, ef = HnswEf)
+    val probe = () => graft.operators.Hnsw.search(
+      s.read.parquet(graphsP), q, K, ef = HnswEf, route = Some((routing, RoutedNprobe)))
     (build, probe)
   }
 
@@ -2295,7 +2298,7 @@ object VectorQueries {
   /** Build-once SQ8 sidecar (FAISS `QT_8bit` rung of the compression
     * ladder): (vec_id, sq binary) + trained per-dim params — 4× less
     * scan IO than float32. */
-  private val SqTag = "sq_v1"
+  private[graft] val SqTag = "sq_v2"
 
   private def ensureSqStore(s: SparkSession, d: String): String =
     Sidecar.built(Sidecar.dir(SqTag, d)) { p =>
@@ -3066,7 +3069,7 @@ object VectorQueries {
     s"""
     WITH q AS (SELECT CAST(embedding AS DOUBLE[]) AS qvec FROM embeddings WHERE vec_id = 0),
     qd AS (SELECT generate_subscripts(qvec, 1) AS qdim, unnest(qvec) AS qx FROM q),
-    par AS (SELECT dim, "min" AS mn, "scale" AS sc FROM read_parquet('$p.params/*.parquet')),
+    par AS (SELECT dim, "min" AS mn, "scale" AS sc FROM read_parquet('$p/${graft.operators.ScalarQuant.ParamsDir}/*.parquet')),
     st AS (SELECT vec_id, hex(sq) AS hx FROM read_parquet('$p/*.parquet')),
     dec AS (
       SELECT s.vec_id, p.dim,

@@ -19,27 +19,33 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object KnnServing {
 
-  /** The one driver-side collect of the serving family, bounded:
-    * `batch`'s `cols` rows, decoded. limit(maxBatch+1) keeps the guard
-    * itself driver-bounded — at most maxBatch+1 rows ever land here —
-    * so a mis-wired source (say, a corpus stream routed into the query
-    * port) fails fast, naming `who`, instead of OOMing the driver. */
-  private def collectBatch[T](batch: DataFrame, cols: Seq[org.apache.spark.sql.Column],
-      maxBatch: Int, who: String)(decode: org.apache.spark.sql.Row => T): Seq[T] = {
-    val rows = batch.select(cols: _*).limit(maxBatch + 1).collect()
-    require(rows.length <= maxBatch,
-      s"$who micro-batch exceeds maxBatch=$maxBatch query " +
-        "vectors; raise maxBatch or trigger smaller batches")
-    rows.toSeq.map(decode)
-  }
+  /** The one micro-batch loop of the serving family: every non-empty
+    * micro-batch of `queries` goes to `answer` with its batch id. */
+  private def eachBatch(queries: DataFrame)(
+      answer: (DataFrame, Long) => Unit): StreamingQuery =
+    queries.writeStream
+      .outputMode("append")
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        if (!batch.isEmpty) answer(batch, batchId)
+      }
+      .start()
 
-  /** [[collectBatch]] of (qid, query) pairs; `qVecCol` is dense or
-    * sparse ([[graft.operators.Hnsw.queryColumns]]). */
+  /** The one driver-side collect of the serving family, bounded: the
+    * batch's (qid, query) pairs, `qVecCol` dense or sparse
+    * ([[graft.operators.Hnsw.queryColumns]]). limit(maxBatch+1) keeps
+    * the guard itself driver-bounded — at most maxBatch+1 rows ever
+    * land here — so a mis-wired source (say, a corpus stream routed
+    * into the query port) fails fast, naming `who`, instead of OOMing
+    * the driver. */
   private def collectQueries(batch: DataFrame, qIdCol: String, qVecCol: String,
       maxBatch: Int, who: String): Seq[(Long, graft.operators.Hnsw.Query)] = {
     val (vecCols, decode) = graft.operators.Hnsw.queryColumns(batch, qVecCol)
-    collectBatch(batch, org.apache.spark.sql.functions.col(qIdCol).cast("long") +: vecCols,
-      maxBatch, who)(r => (r.getLong(0), decode(r, 1)))
+    val rows = batch.select(org.apache.spark.sql.functions.col(qIdCol).cast("long") +: vecCols: _*)
+      .limit(maxBatch + 1).collect()
+    require(rows.length <= maxBatch,
+      s"$who micro-batch exceeds maxBatch=$maxBatch query " +
+        "vectors; raise maxBatch or trigger smaller batches")
+    rows.toSeq.map(r => (r.getLong(0), decode(r, 1)))
   }
 
   /** @param queries streaming frame with (qIdCol, qVecCol)
@@ -49,20 +55,14 @@ object KnnServing {
       queries: DataFrame, store: DataFrame,
       qIdCol: String, qVecCol: String, idCol: String, vecCol: String,
       k: Int)(writeBatch: (DataFrame, Long) => Unit): StreamingQuery =
-    queries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val answered = Knn.topKBatch(
-            store, idCol, vecCol,
-            batch, qIdCol, qVecCol,
-            VectorFunctions.cosineDistance, k,
-            // request ids and store ids are unrelated id spaces
-            excludeSelfMatches = false)
-          writeBatch(answered, batchId)
-        }
-      }
-      .start()
+    eachBatch(queries) { (batch, batchId) =>
+      writeBatch(Knn.topKBatch(
+        store, idCol, vecCol,
+        batch, qIdCol, qVecCol,
+        VectorFunctions.cosineDistance, k,
+        // request ids and store ids are unrelated id spaces
+        excludeSelfMatches = false), batchId)
+    }
 
   /** IVF-probed serving: the 100 TB path. Each micro-batch runs
     * [[graft.operators.IvfIndex.searchBatch]] against a
@@ -76,18 +76,12 @@ object KnnServing {
       queries: DataFrame, store: DataFrame, centroids: DataFrame,
       qIdCol: String, qVecCol: String, idCol: String, vecCol: String,
       k: Int, nprobe: Int)(writeBatch: (DataFrame, Long) => Unit): StreamingQuery =
-    queries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val answered = graft.operators.IvfIndex.searchBatch(
-            store, idCol, vecCol, centroids,
-            batch, qIdCol, qVecCol,
-            VectorFunctions.l2Distance, k, nprobe)
-          writeBatch(answered, batchId)
-        }
-      }
-      .start()
+    eachBatch(queries) { (batch, batchId) =>
+      writeBatch(graft.operators.IvfIndex.searchBatch(
+        store, idCol, vecCol, centroids,
+        batch, qIdCol, qVecCol,
+        VectorFunctions.l2Distance, k, nprobe), batchId)
+    }
 
   /** The reference's FULL online flow as a stream (SSE analogue,
     * SSEOpenAIController.java:143-240: embed → top-k → per-hit
@@ -117,16 +111,11 @@ object KnnServing {
       k: Int, m: Int = 2, windowTokens: Int = 12,
       fetchDocs: Option[Seq[Any] => DataFrame] = None)(
       writeBatch: (DataFrame, Long) => Unit): StreamingQuery =
-    queries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          writeBatch(summarizeBatch(batch, store, docs, qIdCol, qVecCol,
-            idCol, vecCol, docIdCol, textCol, terms, k, m, windowTokens,
-            fetchDocs = fetchDocs), batchId)
-        }
-      }
-      .start()
+    eachBatch(queries) { (batch, batchId) =>
+      writeBatch(summarizeBatch(batch, store, docs, qIdCol, qVecCol,
+        idCol, vecCol, docIdCol, textCol, terms, k, m, windowTokens,
+        fetchDocs = fetchDocs), batchId)
+    }
 
   /** One summarized-serving micro-batch (factored out so its plan is
     * directly spec-assertable). The doc-text fetch is the step that
@@ -256,16 +245,11 @@ object KnnServing {
       k: Int, ef: Int = 64, m: Int = 2, windowTokens: Int = 12,
       maxBatch: Int = 65536)(
       writeBatch: (DataFrame, Long) => Unit): StreamingQuery =
-    queries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          writeBatch(summarizeIndexedBatch(batch, graphs, fetchDocs,
-            qIdCol, qVecCol, docIdCol, textCol, terms,
-            k, ef, m, windowTokens, maxBatch), batchId)
-        }
-      }
-      .start()
+    eachBatch(queries) { (batch, batchId) =>
+      writeBatch(summarizeIndexedBatch(batch, graphs, fetchDocs,
+        qIdCol, qVecCol, docIdCol, textCol, terms,
+        k, ef, m, windowTokens, maxBatch), batchId)
+    }
 
   /** HNSW-served streaming KNN — the modern high-recall serving
     * default: per micro-batch, the (small) query set is collected and
@@ -276,58 +260,29 @@ object KnnServing {
     * .buildPartitioned]] (optionally persisted via writeGraphs).
     * `qVecCol` is a dense array column, or a sparse struct column
     * ([[graft.operators.Hnsw.sparseColumn]], r14) for term queries
-    * over sparse graphs — the lexical/SPLADE retrieval serving shape. */
+    * over sparse graphs — the lexical/SPLADE retrieval serving shape.
+    *
+    * `route` = (routing, nprobe) serves a cell-routed store
+    * ([[graft.operators.Hnsw.buildCellRouted]]; r15 — closes VERDICT
+    * r14's flat-sparse P-growth): each query walks only its nprobe
+    * cells' graphs and each graph in the batch's probed UNION loads
+    * once, so per-batch cost is ≤ min(nlist, |batch|·nprobe) graph
+    * loads instead of all P partition graphs; P grows with the corpus,
+    * nprobe does not. `nprobe <= 0` resolves to ⌈√nlist⌉
+    * ([[graft.operators.Hnsw.resolveNprobe]]) so recall tracks the
+    * cell count (r17 — pgvector's probes-vs-lists guidance). */
   def serveHnsw(
       queries: DataFrame, graphs: DataFrame,
       qIdCol: String, qVecCol: String,
       k: Int, ef: Int = 64,
-      maxBatch: Int = 65536)(writeBatch: (DataFrame, Long) => Unit): StreamingQuery =
-    queries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val qs = collectQueries(batch, qIdCol, qVecCol, maxBatch, "serveHnsw")
-          val answered = graft.operators.Hnsw.searchBatch(graphs, qs, k, ef)
-            .withColumnRenamed("qid", qIdCol)
-          writeBatch(answered, batchId)
-        }
-      }
-      .start()
-
-  /** ROUTED sparse-query HNSW serving (r15 — closes VERDICT r14's one
-    * perf-weak, the flat-sparse P-growth): the cell-routed form of
-    * sparse [[serveHnsw]]. Each micro-batch's (qid, indices, values)
-    * rows are collected (maxBatch-bounded, fail-fast) and answered by
-    * [[graft.operators.Hnsw.searchBatchRoutedSparse]] — each query
-    * walks only its nprobe top-mass cells' graphs, each graph in the
-    * batch's probed UNION is loaded once, so per-batch cost is
-    * ≤ min(nlist, |batch|·nprobe) graph loads instead of all P
-    * partition graphs; P grows with the corpus, nprobe does not.
-    * `nprobe <= 0` (the default) resolves to ⌈√nlist⌉ via
-    * [[graft.operators.Hnsw.resolveNprobe]] so recall tracks the cell
-    * count (r17 — pgvector's probes-vs-lists guidance). */
-  def serveHnswSparseRouted(
-      queries: DataFrame, graphs: DataFrame, nlist: Int,
-      qIdCol: String, qIdxCol: String, qValCol: String,
-      k: Int, nprobe: Int = 0, ef: Int = 64,
-      maxBatch: Int = 65536)(writeBatch: (DataFrame, Long) => Unit): StreamingQuery =
-    queries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          import org.apache.spark.sql.functions.col
-          val qs = collectBatch(batch, Seq(col(qIdCol).cast("long"),
-              col(qIdxCol).cast("array<bigint>"), col(qValCol).cast("array<double>")),
-            maxBatch, "serveHnswSparseRouted") { r =>
-            (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray)
-          }
-          val answered = graft.operators.Hnsw.searchBatchRoutedSparse(
-            graphs, nlist, qs, k, nprobe, ef)
-            .withColumnRenamed("qid", qIdCol)
-          writeBatch(answered, batchId)
-        }
-      }
-      .start()
+      maxBatch: Int = 65536,
+      route: Option[(graft.operators.Hnsw.Routing, Int)] = None)(
+      writeBatch: (DataFrame, Long) => Unit): StreamingQuery =
+    eachBatch(queries) { (batch, batchId) =>
+      val qs = collectQueries(batch, qIdCol, qVecCol, maxBatch, "serveHnsw")
+      writeBatch(graft.operators.Hnsw.searchBatch(graphs, qs, k, ef, route)
+        .withColumnRenamed("qid", qIdCol), batchId)
+    }
 
   /** Handle returned by [[serveCached]]: the streaming query plus a
     * cache-size probe (spec/observability surface — the capacity
@@ -417,125 +372,120 @@ object KnnServing {
         lit(t.toLong * (1L << lshBits)) +
           graft.operators.LshAnn.signature(vec, t, lshBits, dims)
       }: _*)
-    val sq = queries.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
-          val q = batch.select(col(qIdCol), col(qVecCol))
-          // r18 (VERDICT r17 #7, guide §1.2): the probe join used to be
-          // recomputed by every job of the batch (miss test, cache
-          // refresh, output write — 3 evaluations, each rebuilding the
-          // broadcast); it is persisted once per batch and released in
-          // the finally below. Same rows, same cache contents.
-          var scoredPin: DataFrame = null
-          val (hits, hitVecs, misses) =
-            if (cache == null) (None, None, q)
+    val sq = eachBatch(queries) { (batch, batchId) =>
+      val q = batch.select(col(qIdCol), col(qVecCol))
+      // r18 (VERDICT r17 #7, guide §1.2): the probe join used to be
+      // recomputed by every job of the batch (miss test, cache
+      // refresh, output write — 3 evaluations, each rebuilding the
+      // broadcast); it is persisted once per batch and released in
+      // the finally below. Same rows, same cache contents.
+      var scoredPin: DataFrame = null
+      val (hits, hitVecs, misses) =
+        if (cache == null) (None, None, q)
+        else {
+          val scored0 =
+            if (eps == 0)
+              // equality join: at most one cache row per query
+              // (c_vec is unique), and it is always a hit
+              exactCandidates(q, cache, qIdCol, qVecCol)
+                .withColumn("__hit", lit(true))
             else {
-              val scored0 =
-                if (eps == 0)
-                  // equality join: at most one cache row per query
-                  // (c_vec is unique), and it is always a hit
-                  exactCandidates(q, cache, qIdCol, qVecCol)
-                    .withColumn("__hit", lit(true))
-                else {
-                  // best same-band candidate per query, then the
-                  // sqrt-free cosine threshold decides the hit
-                  val w = org.apache.spark.sql.expressions.Window
-                    .partitionBy(col(qIdCol))
-                    .orderBy(col("__rank").desc, col("c_vec"))
-                  bandedCandidates(q, cache, qIdCol, qVecCol, lshTables, lshBits, dims)
-                    .withColumn("__dot", VectorFunctions.dot(col("__qv"), col("c_vec")))
-                    .withColumn("__qn2", VectorFunctions.dot(col("__qv"), col("__qv")))
-                    .withColumn("__rank", col("__dot") / sqrt(col("c_norm2")))
-                    .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
-                    .withColumn("__hit", col("__dot") >= 0 &&
-                      col("__dot") * col("__dot") >=
-                        lit((1.0 - eps) * (1.0 - eps)) * col("__qn2") * col("c_norm2"))
-                }
-              scoredPin = scored0.persist()
-              val hitRows = scoredPin.filter(col("__hit"))
-              val hit = hitRows
-                .select(col(qIdCol), explode(col("c_answers")).as("a"))
-                .select(col(qIdCol), col("a.id").as(idCol),
-                  col("a.dist").as("dist"), lit(true).as("cache_hit"))
-              // misses = the batch minus hit queries (novel vectors and
-              // band-orphaned near-repeats alike)
-              val miss = q.join(hitRows.select(col(qIdCol)), Seq(qIdCol), "left_anti")
-              (Some(hit), Some(hitRows.select(col("c_vec")).distinct()), miss)
+              // best same-band candidate per query, then the
+              // sqrt-free cosine threshold decides the hit
+              val w = org.apache.spark.sql.expressions.Window
+                .partitionBy(col(qIdCol))
+                .orderBy(col("__rank").desc, col("c_vec"))
+              bandedCandidates(q, cache, qIdCol, qVecCol, lshTables, lshBits, dims)
+                .withColumn("__dot", VectorFunctions.dot(col("__qv"), col("c_vec")))
+                .withColumn("__qn2", VectorFunctions.dot(col("__qv"), col("__qv")))
+                .withColumn("__rank", col("__dot") / sqrt(col("c_norm2")))
+                .withColumn("rn", row_number().over(w)).filter(col("rn") === 1)
+                .withColumn("__hit", col("__dot") >= 0 &&
+                  col("__dot") * col("__dot") >=
+                    lit((1.0 - eps) * (1.0 - eps)) * col("__qn2") * col("c_norm2"))
             }
-          try {
-          val freshRows =
-            if (misses.isEmpty) None
-            else {
-              val answered = Knn.topKBatch(
-                store, idCol, vecCol, misses, qIdCol, qVecCol,
-                VectorFunctions.cosineDistance, k, excludeSelfMatches = false)
-              Some(answered.withColumn("cache_hit", lit(false)))
-            }
-          // cache maintenance: admit misses, LRU-refresh hits, dedup
-          // newest-first, evict past capacity — all over ≤ capacity +
-          // |batch| rows (the bound makes every step cheap)
-          val newEntries = freshRows.map { fresh =>
-            val base = fresh
-              .groupBy(col(qIdCol))
-              .agg(collect_list(struct(col(idCol).as("id"), col("dist"))).as("c_answers0"))
-              .join(misses, qIdCol)
-              .select(col(qVecCol).cast("array<double>").as("c_vec"),
-                sort_array(col("c_answers0")).as("c_answers"))
-              .withColumn("c_norm2", VectorFunctions.dot(col("c_vec"), col("c_vec")))
-              .withColumn("c_gen", lit(batchId))
-            if (eps > 0) base.withColumn("c_bands", bandsOf(col("c_vec"))) else base
-          }
-          if (newEntries.isDefined || hitVecs.isDefined) {
-            val refreshed =
-              (cache, hitVecs) match {
-                case (null, _) => None
-                case (c, None) => Some(c)
-                case (c, Some(hv)) => Some(
-                  c.join(hv.withColumn("__hit", lit(true)), Seq("c_vec"), "left")
-                    .withColumn("c_gen",
-                      when(col("__hit"), lit(batchId)).otherwise(col("c_gen")))
-                    .drop("__hit"))
-              }
-            val all = (refreshed, newEntries) match {
-              case (Some(c), Some(e)) => c.unionByName(e)
-              case (Some(c), None) => c
-              case (None, Some(e)) => e
-              case (None, None) => null // unreachable: guarded above
-            }
-            val dedupW = org.apache.spark.sql.expressions.Window
-              .partitionBy(col("c_vec")).orderBy(col("c_gen").desc)
-            // LAZY checkpoint + count: the count IS the materializing
-            // action, so dedup + eviction + the capacity probe run as
-            // ONE job per batch instead of the old eager-checkpoint
-            // job followed by a count job (r18 — the matWithCount
-            // discipline). The old generation is released only after
-            // the new one is materialized, exactly as before.
-            val merged = all
-              .withColumn("rn", row_number().over(dedupW))
-              .filter(col("rn") === 1).drop("rn")
-              .orderBy(col("c_gen").desc, col("c_vec")) // LRU eviction:
-              .limit(capacity) // TakeOrderedAndProject, no global window
-              .localCheckpoint(false)
-            cacheCount = merged.count() // materializes the checkpoint
-            if (cache != null) cache.unpersist()
-            cache = merged
-          }
-          val out: Option[DataFrame] = (hits, freshRows) match {
-            case (Some(h), Some(f)) => Some(h.unionByName(
-              f.select(col(qIdCol), col(idCol), col("dist"), col("cache_hit"))))
-            case (Some(h), None) => Some(h)
-            case (None, Some(f)) =>
-              Some(f.select(col(qIdCol), col(idCol), col("dist"), col("cache_hit")))
-            case (None, None) => None // unreachable: a non-empty batch is hits ∪ misses
-          }
-          out.foreach(writeBatch(_, batchId))
-          } finally {
-            if (scoredPin != null) { scoredPin.unpersist(); () }
-          }
+          scoredPin = scored0.persist()
+          val hitRows = scoredPin.filter(col("__hit"))
+          val hit = hitRows
+            .select(col(qIdCol), explode(col("c_answers")).as("a"))
+            .select(col(qIdCol), col("a.id").as(idCol),
+              col("a.dist").as("dist"), lit(true).as("cache_hit"))
+          // misses = the batch minus hit queries (novel vectors and
+          // band-orphaned near-repeats alike)
+          val miss = q.join(hitRows.select(col(qIdCol)), Seq(qIdCol), "left_anti")
+          (Some(hit), Some(hitRows.select(col("c_vec")).distinct()), miss)
         }
+      try {
+        val freshRows =
+          if (misses.isEmpty) None
+          else {
+            val answered = Knn.topKBatch(
+              store, idCol, vecCol, misses, qIdCol, qVecCol,
+              VectorFunctions.cosineDistance, k, excludeSelfMatches = false)
+            Some(answered.withColumn("cache_hit", lit(false)))
+          }
+        // cache maintenance: admit misses, LRU-refresh hits, dedup
+        // newest-first, evict past capacity — all over ≤ capacity +
+        // |batch| rows (the bound makes every step cheap)
+        val newEntries = freshRows.map { fresh =>
+          val base = fresh
+            .groupBy(col(qIdCol))
+            .agg(collect_list(struct(col(idCol).as("id"), col("dist"))).as("c_answers0"))
+            .join(misses, qIdCol)
+            .select(col(qVecCol).cast("array<double>").as("c_vec"),
+              sort_array(col("c_answers0")).as("c_answers"))
+            .withColumn("c_norm2", VectorFunctions.dot(col("c_vec"), col("c_vec")))
+            .withColumn("c_gen", lit(batchId))
+          if (eps > 0) base.withColumn("c_bands", bandsOf(col("c_vec"))) else base
+        }
+        if (newEntries.isDefined || hitVecs.isDefined) {
+          val refreshed =
+            (cache, hitVecs) match {
+              case (null, _) => None
+              case (c, None) => Some(c)
+              case (c, Some(hv)) => Some(
+                c.join(hv.withColumn("__hit", lit(true)), Seq("c_vec"), "left")
+                  .withColumn("c_gen",
+                    when(col("__hit"), lit(batchId)).otherwise(col("c_gen")))
+                  .drop("__hit"))
+            }
+          val all = (refreshed, newEntries) match {
+            case (Some(c), Some(e)) => c.unionByName(e)
+            case (Some(c), None) => c
+            case (None, Some(e)) => e
+            case (None, None) => null // unreachable: guarded above
+          }
+          val dedupW = org.apache.spark.sql.expressions.Window
+            .partitionBy(col("c_vec")).orderBy(col("c_gen").desc)
+          // LAZY checkpoint + count: the count IS the materializing
+          // action, so dedup + eviction + the capacity probe run as
+          // ONE job per batch instead of the old eager-checkpoint
+          // job followed by a count job (r18 — the matWithCount
+          // discipline). The old generation is released only after
+          // the new one is materialized, exactly as before.
+          val merged = all
+            .withColumn("rn", row_number().over(dedupW))
+            .filter(col("rn") === 1).drop("rn")
+            .orderBy(col("c_gen").desc, col("c_vec")) // LRU eviction:
+            .limit(capacity) // TakeOrderedAndProject, no global window
+            .localCheckpoint(false)
+          cacheCount = merged.count() // materializes the checkpoint
+          if (cache != null) cache.unpersist()
+          cache = merged
+        }
+        val out: Option[DataFrame] = (hits, freshRows) match {
+          case (Some(h), Some(f)) => Some(h.unionByName(
+            f.select(col(qIdCol), col(idCol), col("dist"), col("cache_hit"))))
+          case (Some(h), None) => Some(h)
+          case (None, Some(f)) =>
+            Some(f.select(col(qIdCol), col(idCol), col("dist"), col("cache_hit")))
+          case (None, None) => None // unreachable: a non-empty batch is hits ∪ misses
+        }
+        out.foreach(writeBatch(_, batchId))
+      } finally {
+        if (scoredPin != null) { scoredPin.unpersist(); () }
       }
-      .start()
+    }
     CachedServing(sq, () => cacheCount)
   }
 }

@@ -249,7 +249,18 @@ object ServingBench {
     * lexical-retrieval serving shape. Query rows are real corpus
     * docs' sparse vectors (ids offset per feed like the dense
     * probes). */
-  def serveSparseProbe(s: SparkSession, d: String): Probe = {
+  def serveSparseProbe(s: SparkSession, d: String): Probe = sparseProbe(s, d, routed = false)
+
+  /** ROUTED sparse-query graph serving (r15): the cell-routed form of
+    * [[serveSparseProbe]] — same store corpus, same per-batch query
+    * rows, but each query walks only its nprobe top-mass cells'
+    * graphs. The contrast row for serve_sparse_probe's P-growth band
+    * (the VERDICT r14 perf-weak): per-batch graph loads are capped by
+    * min(nlist, |batch|·nprobe) instead of growing with the corpus's
+    * partition count. */
+  def serveSparseRoutedProbe(s: SparkSession, d: String): Probe = sparseProbe(s, d, routed = true)
+
+  private def sparseProbe(s: SparkSession, d: String, routed: Boolean): Probe = {
     implicit val sqlCtx = s.sqlContext
     import s.implicits._
     var input: MemoryStream[(Long, Seq[Long], Seq[Double])] = null
@@ -265,9 +276,26 @@ object ServingBench {
     Probe(
       build = () => {
         val tf = graft.queries.VectorQueries.sparseTf(s, d).localCheckpoint()
-        val graphs = graft.operators.Hnsw.buildPartitioned(
-          tf.withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval")),
-          "doc_id", "sv", m = 16, efC = 64, parts = 8, metric = "cosine").localCheckpoint()
+        val corpus = tf.withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval"))
+        val (graphs, route) =
+          if (!routed)
+            (graft.operators.Hnsw.buildPartitioned(corpus, "doc_id", "sv",
+              m = 16, efC = 64, parts = 8, metric = "cosine"), None)
+          else {
+            // nlist is the corpus-scale knob (the fixed-cell-size law,
+            // see the writeGraphsClustered/ProfileSparseRouted
+            // scaladoc): ~500 docs per cell pre-spill. A FIXED nlist at
+            // a 100× fixture lets cells grow with the corpus and the
+            // batch's probed union saturate — the row would then
+            // (mis)read slower than flat while measuring only the toy
+            // parameterization.
+            val routing = graft.operators.Hnsw.TermMass(math.max(16, (tf.count() / 500).toInt))
+            (graft.operators.Hnsw.buildCellRouted(corpus, "doc_id", "sv", routing,
+              spill = 2, m = 16, efC = 64, metric = "cosine",
+              // split skewed cells at ~2× the mean row count so the
+              // build is never one giant cell's serial insert loop (r16)
+              maxCell = 2048), Some((routing, 4)))
+          }
         qrows = tf.filter(col("doc_id") < BatchSize)
           .select(col("doc_id"), col("sidx"), col("sval"))
           .collect()
@@ -276,60 +304,7 @@ object ServingBench {
         q = KnnServing.serveHnsw(
           input.toDF().toDF("qid", "qidx", "qval")
             .select(col("qid"), graft.operators.Hnsw.sparseColumn("qidx", "qval").as("q")),
-          graphs, "qid", "q", K, ef = 64) { (b, _) => b.count(); () }
-        feed() // warm-up
-      },
-      probe = () => feed(),
-      stop = () => if (q != null) q.stop())
-  }
-
-  /** ROUTED sparse-query graph serving (r15): the cell-routed twin of
-    * [[serveSparseProbe]] — same store corpus, same per-batch query
-    * rows, but each query walks only its nprobe top-mass cells'
-    * graphs. The contrast row for serve_sparse_probe's P-growth band
-    * (the VERDICT r14 perf-weak): per-batch graph loads are capped by
-    * min(nlist, |batch|·nprobe) instead of growing with the corpus's
-    * partition count. */
-  def serveSparseRoutedProbe(s: SparkSession, d: String): Probe = {
-    implicit val sqlCtx = s.sqlContext
-    import s.implicits._
-    val Nprobe = 4
-    // nlist is the corpus-scale knob (the fixed-cell-size law, see
-    // the writeGraphsClustered/ProfileSparseRouted scaladoc): ~500
-    // docs per cell pre-spill. A FIXED nlist at a 100× fixture lets
-    // cells grow with the corpus and the batch's probed union
-    // saturate — the row would then (mis)read slower than flat while
-    // measuring only the toy parameterization.
-    var Nlist = 16
-    var input: MemoryStream[(Long, Seq[Long], Seq[Double])] = null
-    var q: org.apache.spark.sql.streaming.StreamingQuery = null
-    var feeds = 0L
-    var qrows: Array[(Long, Seq[Long], Seq[Double])] = null
-    def feed(): Unit = {
-      feeds += 1
-      input.addData(qrows.map { case (i, ix, v) =>
-        (i + feeds * 1000000L, ix, v) }.toIndexedSeq)
-      q.processAllAvailable()
-    }
-    Probe(
-      build = () => {
-        val tf = graft.queries.VectorQueries.sparseTf(s, d).localCheckpoint()
-        Nlist = math.max(16, (tf.count() / 500).toInt)
-        val graphs = graft.operators.Hnsw.buildCellRoutedSparse(
-          tf, "doc_id", "sidx", "sval",
-          nlist = Nlist, spill = 2, m = 16, efC = 64,
-          metric = "cosine",
-          // split skewed cells at ~2× the mean row count so the build
-          // is never one giant cell's serial insert loop (r16)
-          maxCell = 2048).localCheckpoint()
-        qrows = tf.filter(col("doc_id") < BatchSize)
-          .select(col("doc_id"), col("sidx"), col("sval"))
-          .collect()
-          .map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Double](2)))
-        input = MemoryStream[(Long, Seq[Long], Seq[Double])]
-        q = KnnServing.serveHnswSparseRouted(
-          input.toDF().toDF("qid", "qidx", "qval"), graphs, Nlist,
-          "qid", "qidx", "qval", K, nprobe = Nprobe, ef = 64) {
+          graphs.localCheckpoint(), "qid", "q", K, ef = 64, route = route) {
           (b, _) => b.count(); ()
         }
         feed() // warm-up

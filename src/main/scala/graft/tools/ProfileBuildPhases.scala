@@ -29,9 +29,11 @@ object ProfileBuildPhases {
     }
     var graphs: org.apache.spark.sql.DataFrame = null
     timed("build_cells(materialize)") {
-      graphs = graft.operators.Hnsw.buildCellRoutedSparse(
-        spark.read.parquet(tfP), "doc_id", "sidx", "sval",
-        nlist = 16, spill = 2, m = 16, efC = 64, metric = "cosine")
+      graphs = graft.operators.Hnsw.buildCellRouted(
+        spark.read.parquet(tfP)
+          .withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval")),
+        "doc_id", "sv", graft.operators.Hnsw.TermMass(16),
+        spill = 2, m = 16, efC = 64, metric = "cosine")
         .localCheckpoint(true)
     }
     timed("write_clustered") {
@@ -46,7 +48,7 @@ object ProfileBuildPhases {
     // pass mapped every row to two FIXED cells — it measured the
     // scan+explode+groupBy floor, not cell assignment):
     //  - scan_floor: the fixed-cell map — scan + explode + groupBy cost
-    //  - assign_real: the actual rankCellsSparse routing expression at
+    //  - assign_real: the actual TermMass routing function at
     //    the build's parameterization; assign_real − scan_floor is the
     //    routing arithmetic itself
     timed("scan_floor(count)") {
@@ -67,8 +69,8 @@ object ProfileBuildPhases {
           org.apache.spark.sql.functions.col("sval").cast("array<double>"))
         .as[(Long, Seq[Long], Seq[Double])]
         .flatMap { case (id, qi, qv) =>
-          graft.operators.Hnsw.rankCellsSparse(qi.toArray, qv.toArray,
-            nlist = 16, nprobe = 2).map(c => (c, id))
+          graft.operators.Hnsw.TermMass(16)
+            .cells(graft.operators.Hnsw.Sparse(qi.toArray, qv.toArray), 2).map(c => (c, id))
         }
         .toDF("c", "id").groupBy("c").count().collect()
     }

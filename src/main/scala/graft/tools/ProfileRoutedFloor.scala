@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
   *   read_df      — spark.read.parquet(store) alone (listing+schema)
   *   scan_collect — probed blobs fetched to the driver (scan + In prune)
   *   walk_driver  — driver-side Hnsw.walk over those blobs
-  *   full_routed  — Hnsw.searchRoutedSparse end to end
+  *   full_routed  — the routed Hnsw.search end to end
   *   full_flat    — Hnsw.search end to end (the contrast row)
   * full_routed − (scan_collect + walk_driver) ≈ the Spark plan floor
   * (dedup exchange, AQE stages, job scheduling).
@@ -31,7 +31,9 @@ object ProfileRoutedFloor {
     val tf = ZipfSparse.corpus(spark, 500000L)
     val q1 = tf.filter(col("doc_id") === 1L).select(col("sidx"), col("sval")).head
     val (qi, qv) = (q1.getSeq[Long](0).toArray, q1.getSeq[Double](1).toArray)
-    val cells = graft.operators.Hnsw.rankCellsSparse(qi, qv, nlist, 4)
+    val routing = graft.operators.Hnsw.TermMass(nlist)
+    val route = Some((routing, 4))
+    val cells = routing.cells(graft.operators.Hnsw.Sparse(qi, qv), 4)
     def minOf5(tag: String)(f: => Unit): Unit = {
       f // warm
       val t = (1 to 5).map { _ =>
@@ -52,9 +54,9 @@ object ProfileRoutedFloor {
         graft.operators.Hnsw.Sparse(qi, qv)))
     }
     minOf5("full_routed") {
-      graft.operators.Hnsw.searchRoutedSparse(
-        graft.operators.Hnsw.readGraphs(spark, routedP), nlist,
-        qi, qv, 10, nprobe = 4, ef = 96).collect(); ()
+      graft.operators.Hnsw.search(
+        graft.operators.Hnsw.readGraphs(spark, routedP),
+        graft.operators.Hnsw.Sparse(qi, qv), 10, ef = 96, route = route).collect(); ()
     }
     minOf5("full_flat") {
       graft.operators.Hnsw.search(graft.operators.Hnsw.readGraphs(spark, flatP),
@@ -63,16 +65,17 @@ object ProfileRoutedFloor {
     }
     // batch-16 serving shapes
     val qs = tf.filter(col("doc_id") < 16).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray)).toSeq
+      .map(r => (r.getLong(0),
+        graft.operators.Hnsw.Sparse(r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray)))
+      .toSeq
     minOf5("batch16_routed") {
-      graft.operators.Hnsw.searchBatchRoutedSparse(
-        graft.operators.Hnsw.readGraphs(spark, routedP), nlist, qs,
-        10, nprobe = 4, ef = 96).collect(); ()
+      graft.operators.Hnsw.searchBatch(
+        graft.operators.Hnsw.readGraphs(spark, routedP), qs,
+        10, ef = 96, route = route).collect(); ()
     }
     minOf5("batch16_flat") {
       graft.operators.Hnsw.searchBatch(graft.operators.Hnsw.readGraphs(spark, flatP),
-        qs.map { case (id, qi, qv) => (id, graft.operators.Hnsw.Sparse(qi, qv)) },
-        10, 96).collect(); ()
+        qs, 10, 96).collect(); ()
     }
     spark.stop()
   }

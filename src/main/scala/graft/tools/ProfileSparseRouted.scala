@@ -44,9 +44,10 @@ object ProfileSparseRouted {
           tf.withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval")),
           "doc_id", "sv", parts = 8, metric = "cosine"), flatP)
       graft.operators.Hnsw.writeGraphsClustered(
-        graft.operators.Hnsw.buildCellRoutedSparse(
-          tf, "doc_id", "sidx", "sval",
-          nlist = nlist, spill = 2, metric = "cosine"), routedP)
+        graft.operators.Hnsw.buildCellRouted(
+          tf.withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval")),
+          "doc_id", "sv", graft.operators.Hnsw.TermMass(nlist),
+          spill = 2, metric = "cosine"), routedP)
     }
     val (qi, qv) = graft.functions.SparseVec.queryOf(
       graft.queries.VectorQueries.SparseQueryTerms)
@@ -58,19 +59,21 @@ object ProfileSparseRouted {
         graft.operators.Hnsw.Sparse(qi, qv), 10, ef = 96)
         .collect(); ()
     }
+    val route = Some((graft.operators.Hnsw.TermMass(nlist), 4))
     def routedProbe(): Unit = {
-      graft.operators.Hnsw.searchRoutedSparse(
-        graft.operators.Hnsw.readGraphs(spark, routedP), nlist,
-        qi, qv, 10, nprobe = 4, ef = 96).collect(); ()
+      graft.operators.Hnsw.search(
+        graft.operators.Hnsw.readGraphs(spark, routedP),
+        graft.operators.Hnsw.Sparse(qi, qv), 10, ef = 96, route = route).collect(); ()
     }
-    // 64 corpus docs as a serving batch (the serveHnswSparseRouted shape)
+    // 64 corpus docs as a serving batch (the routed serveHnsw shape)
     val batch = tf.orderBy(col("doc_id")).limit(64).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray))
+      .map(r => (r.getLong(0),
+        graft.operators.Hnsw.Sparse(r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray)))
       .toSeq
     def routedBatch(): Unit = {
-      graft.operators.Hnsw.searchBatchRoutedSparse(
-        graft.operators.Hnsw.readGraphs(spark, routedP), nlist,
-        batch, 5, nprobe = 4, ef = 64).collect(); ()
+      graft.operators.Hnsw.searchBatch(
+        graft.operators.Hnsw.readGraphs(spark, routedP),
+        batch, 5, ef = 64, route = route).collect(); ()
     }
     val fc = timed(flatProbe()); val fw = timed(flatProbe())
     val rc = timed(routedProbe()); val rw = timed(routedProbe())

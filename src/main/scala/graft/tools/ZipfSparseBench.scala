@@ -173,11 +173,13 @@ object ZipfSparseBench {
           tf.withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval")),
           "doc_id", "sv", parts = 8, metric = "cosine"), flatP)
     }
+    val routing = graft.operators.Hnsw.TermMass(nlist)
+    val route = Some((routing, nprobe))
     val tRoutedBuild = if (skipBuild) -1.0 else timed {
       graft.operators.Hnsw.writeGraphsClustered(
-        graft.operators.Hnsw.buildCellRoutedSparse(
-          tf, "doc_id", "sidx", "sval",
-          nlist = nlist, spill = spill, metric = "cosine",
+        graft.operators.Hnsw.buildCellRouted(
+          tf.withColumn("sv", graft.operators.Hnsw.sparseColumn("sidx", "sval")),
+          "doc_id", "sv", routing, spill = spill, metric = "cosine",
           maxCell = maxCell), routedP)
     }
 
@@ -191,21 +193,22 @@ object ZipfSparseBench {
         .collect()
     val routedDeser = spark.sparkContext.longAccumulator("zipf-routed-deser")
     def routedProbe(): Unit =
-      graft.operators.Hnsw.searchRoutedSparse(
-        graft.operators.Hnsw.readGraphs(spark, routedP), nlist,
-        qi, qv, 10, nprobe = nprobe, ef = 96,
+      graft.operators.Hnsw.search(
+        graft.operators.Hnsw.readGraphs(spark, routedP),
+        graft.operators.Hnsw.Sparse(qi, qv), 10, ef = 96, route = route,
         deserCounter = Some(routedDeser)).collect()
 
     // 64-query serving batch
     val batch = tf.filter(col("doc_id") < 64L)
       .select(col("doc_id"), col("sidx"), col("sval")).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray))
+      .map(r => (r.getLong(0),
+        graft.operators.Hnsw.Sparse(r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray)))
       .toSeq
     val batchDeser = spark.sparkContext.longAccumulator("zipf-batch-deser")
     def routedBatch(): Unit =
-      graft.operators.Hnsw.searchBatchRoutedSparse(
-        graft.operators.Hnsw.readGraphs(spark, routedP), nlist,
-        batch, 5, nprobe = nprobe, ef = 64,
+      graft.operators.Hnsw.searchBatch(
+        graft.operators.Hnsw.readGraphs(spark, routedP),
+        batch, 5, ef = 64, route = route,
         deserCounter = Some(batchDeser)).collect()
 
     val fc = timed(flatProbe()); val fw = timed(flatProbe())
@@ -220,15 +223,15 @@ object ZipfSparseBench {
 
     // recall@10 of the routed operating point vs the exact answer,
     // averaged over 16 corpus-doc queries
-    val recalls = batch.take(16).map { case (_, bqi, bqv) =>
+    val recalls = batch.take(16).map { case (_, bq) =>
       val exact = tf.select(col("doc_id"),
           (lit(1.0) - graft.functions.SparseVec.cosineSimilarity(
-            col("sidx"), col("sval"), bqi, bqv)).as("dist"))
+            col("sidx"), col("sval"), bq.indices, bq.values)).as("dist"))
         .orderBy(col("dist"), col("doc_id")).limit(10)
         .collect().map(_.getLong(0)).toSet
-      val routed = graft.operators.Hnsw.searchRoutedSparse(
-        graft.operators.Hnsw.readGraphs(spark, routedP), nlist,
-        bqi, bqv, 10, nprobe = nprobe, ef = 96)
+      val routed = graft.operators.Hnsw.search(
+        graft.operators.Hnsw.readGraphs(spark, routedP), bq, 10, ef = 96,
+        route = route)
         .collect().map(_.getLong(0)).toSet
       routed.intersect(exact).size.toDouble / exact.size
     }
@@ -240,7 +243,7 @@ object ZipfSparseBench {
     // weights exist to avoid) — stamp the evidence into the artifact
     val cellSizes = tf.as[(Long, Seq[Long], Seq[Double])]
       .flatMap { case (_, ci, cv) =>
-        graft.operators.Hnsw.rankCellsSparse(ci.toArray, cv.toArray, nlist, 2) }
+        routing.cells(graft.operators.Hnsw.Sparse(ci.toArray, cv.toArray), 2) }
       .groupBy(col("value")).count()
       .select(col("count")).as[Long].collect().sorted
     val cellMax = if (cellSizes.isEmpty) 0L else cellSizes.last

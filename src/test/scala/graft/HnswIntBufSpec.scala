@@ -139,19 +139,22 @@ class HnswIntBufSpec extends AnyFunSuite {
     // a corpus with guaranteed spill copies: few cells, spill 2
     val docs = graft.tools.ZipfSparse.corpus(spark, 400L).localCheckpoint()
     val nlist = 8
-    val graphs = Hnsw.buildCellRoutedSparse(
-      docs, "doc_id", "sidx", "sval", nlist = nlist, spill = 2,
+    val graphs = Hnsw.buildCellRouted(
+      docs.withColumn("sv", Hnsw.sparseColumn("sidx", "sval")),
+      "doc_id", "sv", Hnsw.TermMass(nlist), spill = 2,
       metric = "cosine").localCheckpoint()
     val qs = docs.filter(col("doc_id") < 6).collect()
       .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray))
       .toSeq
-    val got = Hnsw.searchBatchRoutedSparse(graphs, nlist, qs, k = 5, nprobe = 3, ef = 64)
+    val got = Hnsw.searchBatch(graphs,
+      qs.map { case (qid, qi, qv) => (qid, Hnsw.Sparse(qi, qv)) }, k = 5, ef = 64,
+      route = Some((Hnsw.TermMass(nlist), 3)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     // reference: the dropDuplicates + row_number shape this replaced
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
     val cells = qs.map { case (qid, qi, qv) =>
-      qid -> Hnsw.rankCellsSparse(qi, qv, nlist, 3) }.toMap
+      qid -> Hnsw.TermMass(nlist).cells(Hnsw.Sparse(qi, qv), 3) }.toMap
     val byCell = cells.toSeq.flatMap { case (qid, cs) => cs.map(_ -> qid) }
       .groupBy(_._1).map { case (c, v) => c -> v.map(_._2) }
     val raw = graphs

@@ -26,9 +26,9 @@ class HnswSparseRoutedSpec extends SparkSpec {
 
   private lazy val store: String = {
     val dir = java.nio.file.Files.createTempDirectory("hnswsproute").toString
-    val graphs = Hnsw.buildCellRoutedSparse(
-      tf, "doc_id", "sidx", "sval",
-      nlist = Nlist, spill = Spill, metric = "cosine")
+    val graphs = Hnsw.buildCellRouted(
+      tf.withColumn("sv", Hnsw.sparseColumn("sidx", "sval")),
+      "doc_id", "sv", Hnsw.TermMass(Nlist), spill = Spill, metric = "cosine")
     Hnsw.writeGraphs(graphs, s"$dir/graphs")
     s"$dir/graphs"
   }
@@ -46,8 +46,8 @@ class HnswSparseRoutedSpec extends SparkSpec {
     val graphs = spark.read.parquet(store)
     val (qi, qv) = query
     val counter = spark.sparkContext.longAccumulator("sparse-graph-deser")
-    val result = Hnsw.searchRoutedSparse(graphs, Nlist, qi, qv, k = 10,
-      nprobe = 3, ef = 96, deserCounter = Some(counter))
+    val result = Hnsw.search(graphs, Hnsw.Sparse(qi, qv), k = 10,
+      ef = 96, route = Some((Hnsw.TermMass(Nlist), 3)), deserCounter = Some(counter))
     val plan = result.queryExecution.executedPlan.toString
     assert(plan.contains("PushedFilters") && plan.contains("In(part_id"),
       s"cell routing must prune the blob scan itself:\n$plan")
@@ -62,9 +62,9 @@ class HnswSparseRoutedSpec extends SparkSpec {
 
   test("full probe (nprobe = nlist) over spilled sparse cell graphs equals the flat layout") {
     val (qi, qv) = query
-    val routedAll = Hnsw.searchRoutedSparse(
-      spark.read.parquet(store), Nlist,
-      qi, qv, k = 10, nprobe = Nlist, ef = 512)
+    val routedAll = Hnsw.search(
+      spark.read.parquet(store),
+      Hnsw.Sparse(qi, qv), k = 10, ef = 512, route = Some((Hnsw.TermMass(Nlist), Nlist)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(routedAll == flatTop(10, 512),
       "with every cell probed and a saturating beam, routing must not change the answer")
@@ -72,9 +72,9 @@ class HnswSparseRoutedSpec extends SparkSpec {
 
   test("recall at the operating point (nprobe < nlist)") {
     val (qi, qv) = query
-    val routed = Hnsw.searchRoutedSparse(
-      spark.read.parquet(store), Nlist,
-      qi, qv, k = 10, nprobe = 3, ef = 96)
+    val routed = Hnsw.search(
+      spark.read.parquet(store),
+      Hnsw.Sparse(qi, qv), k = 10, ef = 96, route = Some((Hnsw.TermMass(Nlist), 3)))
       .collect().map(_.getLong(0)).toSet
     val exact = flatTop(10, 512).map(_._1).toSet
     val recall = routed.intersect(exact).size.toDouble / exact.size
@@ -85,9 +85,9 @@ class HnswSparseRoutedSpec extends SparkSpec {
   test("batch kernel rejects duplicate query ids instead of collapsing them (ADVICE r15)") {
     val graphs = spark.read.parquet(store)
     val (qi, qv) = query
-    val dup = Seq((7L, qi, qv), (7L, qi, qv))
+    val dup = Seq((7L, Hnsw.Sparse(qi, qv)), (7L, Hnsw.Sparse(qi, qv)))
     val e = intercept[IllegalArgumentException] {
-      Hnsw.searchBatchRoutedSparse(graphs, Nlist, dup, k = 5, nprobe = 3)
+      Hnsw.searchBatch(graphs, dup, k = 5, route = Some((Hnsw.TermMass(Nlist), 3)))
     }
     assert(e.getMessage.contains("duplicate query ids"))
     assert(e.getMessage.contains("7"))
@@ -103,29 +103,69 @@ class HnswSparseRoutedSpec extends SparkSpec {
   }
 
   test("batch serving kernel agrees with the per-query routed path") {
-    val graphs = spark.read.parquet(store)
-    // three real corpus docs as queries — the serving shape
-    val qs = tf.orderBy(col("doc_id")).limit(3)
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    // three real corpus docs as queries — the serving shape — over the
+    // sparse term-mass store and over a dense centroid-routed store
+    val sparseQs = tf.orderBy(col("doc_id")).limit(3)
       .collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray))
+      .map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Double](2)))
       .toSeq
-    val counter = spark.sparkContext.longAccumulator("batch-deser")
-    val batch = Hnsw.searchBatchRoutedSparse(graphs, Nlist, qs,
-      k = 5, nprobe = 3, ef = 96, deserCounter = Some(counter))
-      .collect()
-      .groupBy(_.getLong(0))
-      .map { case (qid, rs) =>
-        qid -> rs.map(r => (r.getLong(1), r.getDouble(2))).toSeq }
-    // ≤ min(nlist, |batch|·nprobe) graph loads, each loaded ONCE
-    assert(counter.value <= math.min(Nlist, qs.size * 3),
-      s"batch walked ${counter.value} graphs for 3 queries × nprobe=3")
-    for ((qid, qi, qv) <- qs) {
-      val single = Hnsw.searchRoutedSparse(graphs, Nlist, qi, qv,
-        k = 5, nprobe = 3, ef = 96)
-        .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-      assert(batch(qid) == single,
-        s"batch result for query $qid diverged from the per-query path:\n" +
-          s"${batch(qid)}\n$single")
+    val sparseIn = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Seq[Long], Seq[Double])]
+    sparseIn.addData(sparseQs)
+    val emb = Tables.embeddings(spark, Sf)
+    val centroids = graft.operators.IvfIndex.trainCentroids(
+      emb, "vec_id", "embedding", nlist = Nlist, iters = 2)
+    val denseRouting = Hnsw.Centroids.of(centroids)
+    val denseGraphs = Hnsw.buildCellRouted(emb.filter(col("vec_id") =!= 0),
+      "vec_id", "embedding", denseRouting, spill = Spill).localCheckpoint()
+    val denseQs = emb.filter(col("vec_id") > 0).orderBy(col("vec_id")).limit(3)
+      .select(col("vec_id"), col("embedding").cast("array<double>"))
+      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+    val denseIn = org.apache.spark.sql.execution.streaming.runtime
+      .MemoryStream[(Long, Seq[Double])]
+    denseIn.addData(denseQs)
+    val inputs = Seq(
+      ("sparse", spark.read.parquet(store), Hnsw.TermMass(Nlist): Hnsw.Routing,
+        sparseQs.map { case (id, qi, qv) =>
+          (id, Hnsw.Sparse(qi.toArray, qv.toArray): Hnsw.Query) },
+        sparseIn.toDF().toDF("qid", "qi", "qv")
+          .select(col("qid"), Hnsw.sparseColumn("qi", "qv").as("q"))),
+      ("dense", denseGraphs, denseRouting,
+        denseQs.map { case (id, v) => (id, Hnsw.Dense(v.toArray): Hnsw.Query) },
+        denseIn.toDF().toDF("qid", "q")))
+    for ((kind, graphs, routing, qs, stream) <- inputs) {
+      val route = Some((routing, 3))
+      val counter = spark.sparkContext.longAccumulator(s"$kind-batch-deser")
+      val batch = Hnsw.searchBatch(graphs, qs,
+        k = 5, ef = 96, route = route, deserCounter = Some(counter))
+        .collect()
+        .groupBy(_.getLong(0))
+        .map { case (qid, rs) =>
+          qid -> rs.map(r => (r.getLong(1), r.getDouble(2))).toSeq }
+      // ≤ min(nlist, |batch|·nprobe) graph loads, each loaded ONCE
+      assert(counter.value <= math.min(Nlist, qs.size * 3),
+        s"$kind batch walked ${counter.value} graphs for 3 queries × nprobe=3")
+      // the serving entry answers its micro-batch with the same kernel
+      val servedRows = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Double)]
+      val sq = graft.streaming.KnnServing.serveHnsw(stream, graphs, "qid", "q",
+        k = 5, ef = 96, route = route) { (b, _) =>
+        servedRows ++= b.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
+      }
+      try sq.processAllAvailable() finally sq.stop()
+      val served = servedRows.toSeq.groupBy(_._1)
+        .map { case (qid, rs) => qid -> rs.map(r => (r._2, r._3)) }
+      for ((qid, q) <- qs) {
+        val single = Hnsw.search(graphs, q, k = 5, ef = 96, route = route)
+          .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+        assert(batch(qid) == single,
+          s"$kind batch result for query $qid diverged from the per-query path:\n" +
+            s"${batch(qid)}\n$single")
+        assert(served(qid) == single,
+          s"$kind served result for query $qid diverged from the per-query path:\n" +
+            s"${served(qid)}\n$single")
+      }
     }
   }
 
@@ -181,18 +221,19 @@ class HnswSparseRoutedSpec extends SparkSpec {
         .sorted.toArray
       (id, idx.toSeq, idx.map(_ => (rnd.nextInt(5) + 1).toDouble).toSeq)
     }.toDF("doc_id", "sidx", "sval")
-    val graphs = Hnsw.buildCellRoutedSparse(
-      docs, "doc_id", "sidx", "sval", nlist = nlist, spill = 2,
+    val graphs = Hnsw.buildCellRouted(
+      docs.withColumn("sv", Hnsw.sparseColumn("sidx", "sval")),
+      "doc_id", "sv", Hnsw.TermMass(nlist), spill = 2,
       metric = "cosine").localCheckpoint()
     val nonEmptyCells = graphs.count()
     assert(nonEmptyCells > 100,
       s"vocabulary too small to exercise the bound ($nonEmptyCells cells)")
     val qs = docs.limit(16).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray))
+      .map(r => (r.getLong(0), Hnsw.Sparse(r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray)))
       .toSeq
     val counter = spark.sparkContext.longAccumulator("vocab-deser")
-    Hnsw.searchBatchRoutedSparse(graphs, nlist, qs, k = 5, nprobe = 4,
-      ef = 64, deserCounter = Some(counter)).collect()
+    Hnsw.searchBatch(graphs, qs, k = 5, ef = 64,
+      route = Some((Hnsw.TermMass(nlist), 4)), deserCounter = Some(counter)).collect()
     assert(counter.value <= 16 * 4,
       s"batch walked ${counter.value} graphs > |batch|·nprobe")
     assert(counter.value < nonEmptyCells / 2,
@@ -203,8 +244,9 @@ class HnswSparseRoutedSpec extends SparkSpec {
   test("maxCell splits over-full cells into sub-graphs without changing exact semantics (r16)") {
     import spark.implicits._
     // cap far below the fixture's cell sizes so every cell splits
-    val split = Hnsw.buildCellRoutedSparse(
-      tf, "doc_id", "sidx", "sval", nlist = Nlist, spill = 2,
+    val split = Hnsw.buildCellRouted(
+      tf.withColumn("sv", Hnsw.sparseColumn("sidx", "sval")),
+      "doc_id", "sv", Hnsw.TermMass(Nlist), spill = 2,
       metric = "cosine", maxCell = 40).localCheckpoint()
     val uncapped = spark.read.parquet(store)
     assert(split.count() > uncapped.count(),
@@ -214,21 +256,22 @@ class HnswSparseRoutedSpec extends SparkSpec {
     assert(split.select("part_id").distinct().count() ==
       uncapped.select("part_id").distinct().count())
     val (qi, qv) = query
-    val got = Hnsw.searchRoutedSparse(split, Nlist, qi, qv,
-      k = 10, nprobe = Nlist, ef = 512)
+    val got = Hnsw.search(split, Hnsw.Sparse(qi, qv),
+      k = 10, ef = 512, route = Some((Hnsw.TermMass(Nlist), Nlist)))
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(got == flatTop(10, 512),
       "saturating probe over the split store diverged from the flat exact answer")
     // batch kernel agrees with the per-query path on a split store
     val qs = tf.orderBy(col("doc_id")).limit(3).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray))
+      .map(r => (r.getLong(0), Hnsw.Sparse(r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray)))
       .toSeq
-    val batch = Hnsw.searchBatchRoutedSparse(split, Nlist, qs, k = 5, nprobe = 3, ef = 96)
+    val batch = Hnsw.searchBatch(split, qs, k = 5, ef = 96,
+      route = Some((Hnsw.TermMass(Nlist), 3)))
       .collect().groupBy(_.getLong(0))
       .map { case (qid, rs) => qid -> rs.map(r => (r.getLong(1), r.getDouble(2))).toSeq }
-    for ((qid, bqi, bqv) <- qs) {
-      val single = Hnsw.searchRoutedSparse(split, Nlist, bqi, bqv,
-        k = 5, nprobe = 3, ef = 96)
+    for ((qid, bq) <- qs) {
+      val single = Hnsw.search(split, bq,
+        k = 5, ef = 96, route = Some((Hnsw.TermMass(Nlist), 3)))
         .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
       assert(batch(qid) == single, s"split-store batch diverged for $qid")
     }
@@ -240,8 +283,9 @@ class HnswSparseRoutedSpec extends SparkSpec {
     // the fixture where term-mass routing must actually route
     val docs = graft.tools.ZipfSparse.corpus(spark, 2000L).localCheckpoint()
     val nlist = 16
-    val graphs = Hnsw.buildCellRoutedSparse(
-      docs, "doc_id", "sidx", "sval", nlist = nlist, spill = 2,
+    val graphs = Hnsw.buildCellRouted(
+      docs.withColumn("sv", Hnsw.sparseColumn("sidx", "sval")),
+      "doc_id", "sv", Hnsw.TermMass(nlist), spill = 2,
       metric = "cosine", maxCell = 2048).localCheckpoint()
     val qs = docs.filter(col("doc_id") < 8).collect()
       .map(r => (r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray))
@@ -251,8 +295,8 @@ class HnswSparseRoutedSpec extends SparkSpec {
             col("sidx"), col("sval"), qi, qv)).as("dist"))
         .orderBy(col("dist"), col("doc_id")).limit(10)
         .collect().map(_.getLong(0)).toSet
-      val routed = Hnsw.searchRoutedSparse(graphs, nlist, qi, qv,
-        k = 10, nprobe = 4, ef = 96)
+      val routed = Hnsw.search(graphs, Hnsw.Sparse(qi, qv),
+        k = 10, ef = 96, route = Some((Hnsw.TermMass(nlist), 4)))
         .collect().map(_.getLong(0)).toSet
       routed.intersect(exact).size.toDouble / exact.size
     }
@@ -280,8 +324,9 @@ class HnswSparseRoutedSpec extends SparkSpec {
     // 0.77): the sqrt-scaled default (nprobe=10) must clear 0.8
     val docs = graft.tools.ZipfSparse.corpus(spark, 4000L).localCheckpoint()
     val nlist = 100
-    val graphs = Hnsw.buildCellRoutedSparse(
-      docs, "doc_id", "sidx", "sval", nlist = nlist, spill = 2,
+    val graphs = Hnsw.buildCellRouted(
+      docs.withColumn("sv", Hnsw.sparseColumn("sidx", "sval")),
+      "doc_id", "sv", Hnsw.TermMass(nlist), spill = 2,
       metric = "cosine", maxCell = 2048).localCheckpoint()
     val qs = docs.filter(col("doc_id") < 8).collect()
       .map(r => (r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray))
@@ -291,9 +336,9 @@ class HnswSparseRoutedSpec extends SparkSpec {
             col("sidx"), col("sval"), qi, qv)).as("dist"))
         .orderBy(col("dist"), col("doc_id")).limit(10)
         .collect().map(_.getLong(0)).toSet
-      // nprobe omitted — the r17 sqrt(nlist) default is the gate
-      val routed = Hnsw.searchRoutedSparse(graphs, nlist, qi, qv,
-        k = 10, ef = 96)
+      // nprobe 0 — the r17 sqrt(nlist) default is the gate
+      val routed = Hnsw.search(graphs, Hnsw.Sparse(qi, qv),
+        k = 10, ef = 96, route = Some((Hnsw.TermMass(nlist), 0)))
         .collect().map(_.getLong(0)).toSet
       routed.intersect(exact).size.toDouble / exact.size
     }
@@ -312,8 +357,9 @@ class HnswSparseRoutedSpec extends SparkSpec {
     val docs = graft.tools.ZipfSparse.corpus(spark, 20000L).localCheckpoint()
     val nlist = 128 // > |batch|·nprobe so the union bound is non-trivial
     val nprobe = 4
-    val routedStore = Hnsw.buildCellRoutedSparse(
-      docs, "doc_id", "sidx", "sval", nlist = nlist, spill = 2,
+    val routedStore = Hnsw.buildCellRouted(
+      docs.withColumn("sv", Hnsw.sparseColumn("sidx", "sval")),
+      "doc_id", "sv", Hnsw.TermMass(nlist), spill = 2,
       metric = "cosine", maxCell = 2048).localCheckpoint()
     // flat at production granularity (~500 docs/graph): per-graph
     // size is executor-memory-bounded at 100 TB, so flat's P grows
@@ -331,8 +377,9 @@ class HnswSparseRoutedSpec extends SparkSpec {
     assert(nonEmpty > nprobe * 2,
       s"store saturated ($nonEmpty blobs) — fixture no longer exercises routing")
     val counter = spark.sparkContext.longAccumulator("zipf-gate-deser")
-    Hnsw.searchRoutedSparse(routedStore, nlist, qi, qv, k = 10,
-      nprobe = nprobe, ef = 96, deserCounter = Some(counter)).collect()
+    Hnsw.search(routedStore, Hnsw.Sparse(qi, qv), k = 10,
+      ef = 96, route = Some((Hnsw.TermMass(nlist), nprobe)),
+      deserCounter = Some(counter)).collect()
     assert(counter.value <= nprobe,
       s"routed probe deserialized ${counter.value} graphs > nprobe=$nprobe")
     // the SERVING shape (a 16-query batch — the committed artifact's
@@ -342,11 +389,11 @@ class HnswSparseRoutedSpec extends SparkSpec {
     // BENCH_zipf artifact measures; the saturated 40-word documents
     // fixture is the documented flat-is-better worst case).
     val qs = docs.filter(col("doc_id") < 16).collect()
-      .map(r => (r.getLong(0), r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray))
+      .map(r => (r.getLong(0), Hnsw.Sparse(r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray)))
       .toSeq
     val bCounter = spark.sparkContext.longAccumulator("zipf-gate-batch-deser")
-    Hnsw.searchBatchRoutedSparse(routedStore, nlist, qs, k = 10,
-      nprobe = nprobe, ef = 96, deserCounter = Some(bCounter)).collect()
+    Hnsw.searchBatch(routedStore, qs, k = 10, ef = 96,
+      route = Some((Hnsw.TermMass(nlist), nprobe)), deserCounter = Some(bCounter)).collect()
     assert(bCounter.value <= math.min(nlist, qs.size * nprobe),
       s"batch probed union ${bCounter.value} > min(nlist, batch*nprobe)")
     assert(bCounter.value < nonEmpty,
@@ -370,14 +417,13 @@ class HnswSparseRoutedSpec extends SparkSpec {
     // above and the 500k-doc artifact.
     def routedOnce(): Double = {
       val t0 = System.nanoTime()
-      Hnsw.searchBatchRoutedSparse(routedStore, nlist, qs,
-        k = 10, nprobe = nprobe, ef = 96).collect()
+      Hnsw.searchBatch(routedStore, qs,
+        k = 10, ef = 96, route = Some((Hnsw.TermMass(nlist), nprobe))).collect()
       (System.nanoTime() - t0) / 1e9
     }
     def flatOnce(): Double = {
       val t0 = System.nanoTime()
-      Hnsw.searchBatch(flatStore, qs.map { case (id, qi, qv) => (id, Hnsw.Sparse(qi, qv)) },
-        10, 96).collect()
+      Hnsw.searchBatch(flatStore, qs, 10, 96).collect()
       (System.nanoTime() - t0) / 1e9
     }
     routedOnce(); flatOnce() // warm
@@ -395,9 +441,9 @@ class HnswSparseRoutedSpec extends SparkSpec {
     val probes = tf.limit(5)
       .select(col("doc_id"), col("sidx"), col("sval")).collect()
     for (r <- probes) {
-      val hit = Hnsw.searchRoutedSparse(graphs, Nlist,
-        r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray,
-        k = 1, nprobe = 1, ef = 64).collect()
+      val hit = Hnsw.search(graphs,
+        Hnsw.Sparse(r.getSeq[Long](1).toArray, r.getSeq[Double](2).toArray),
+        k = 1, ef = 64, route = Some((Hnsw.TermMass(Nlist), 1))).collect()
       // structural: the vector was INSERTED under its top-1 mass cell
       // (spill ≥ 1) and the query ranks cells with the same function,
       // so nprobe=1 probes exactly that cell. Cosine self-distance is

@@ -120,6 +120,36 @@ class IvfIndexSpec extends SparkSpec {
     assert(!plan.contains("Window"), s"assignment uses a per-id window:\n$plan")
   }
 
+  test("a Lloyd round ranks each row's cell once, below the element explode") {
+    import org.apache.spark.sql.catalyst.expressions.Expression
+    import org.apache.spark.sql.catalyst.plans.logical.{Generate, LogicalPlan, Project}
+    // record the optimized plan of the one round trainCentroids runs
+    val rounds = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
+    val inner = graft.operators.Materializer.local()
+    val recording = new graft.operators.Materializer {
+      def mat(df: org.apache.spark.sql.DataFrame, tag: String): org.apache.spark.sql.DataFrame = {
+        if (tag == "lloyd-0") rounds += df.queryExecution.optimizedPlan
+        inner.mat(df, tag)
+      }
+      def release(df: org.apache.spark.sql.DataFrame): Unit = inner.release(df)
+      def releaseAll(): Unit = inner.releaseAll()
+    }
+    IvfIndex.trainCentroids(emb.limit(200), "vec_id", "embedding",
+      nlist = 4, iters = 1, mat = recording)
+    inner.releaseAll()
+    assert(rounds.size == 1)
+    def ranks(e: Expression): Boolean =
+      e.find(_.isInstanceOf[graft.functions.NearestCellsExpr]).isDefined
+    val ranking = rounds.head.collect {
+      case p: Project if p.projectList.exists(ranks) => p
+    }
+    assert(ranking.nonEmpty, s"no cell ranking in the round:\n${rounds.head}")
+    // a Project above the Generate evaluates once per vector ELEMENT
+    val perElement = ranking.filter(_.find(_.isInstanceOf[Generate]).isDefined)
+    assert(perElement.isEmpty,
+      s"cell ranking sits above the posexplode (d× redundant):\n${rounds.head}")
+  }
+
   test("iters=10 training stays lineage-bounded (materialized Lloyd rounds)") {
     val small = emb.limit(400)
     val t0 = System.nanoTime()

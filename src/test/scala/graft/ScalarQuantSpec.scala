@@ -67,4 +67,15 @@ class ScalarQuantSpec extends SparkSpec {
     assert(m2.toSeq == mins.toSeq && s2.toSeq == scales.toSeq,
       "persisted params must round-trip exactly")
   }
+
+  test("the SQ8 store holds its params: Sidecar.drop leaves no entry of it behind") {
+    val (build, _) = graft.queries.VectorQueries.sqBench(spark, Sf)
+    build() // drop, then ensure: a freshly built, marked store
+    val dir = new java.io.File(Sidecar.dir(graft.queries.VectorQueries.SqTag, Sf))
+    assert(new java.io.File(dir, Sidecar.Done).isFile, s"$dir not marked done")
+    Sidecar.drop(dir.toString)
+    val left = Option(dir.getParentFile.listFiles).getOrElse(Array.empty[java.io.File])
+      .map(_.getName).filter(_.startsWith(dir.getName))
+    assert(left.isEmpty, s"store entries left after drop: ${left.mkString(", ")}")
+  }
 }
