@@ -29,10 +29,13 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * `<->` — same rule here). On match it beam-walks the graph store AT
   * REWRITE TIME, on the driver, with no Spark job per query: the
   * store's `(part_id, graph)` blobs are collected once into a driver
-  * memo ([[HnswProbeRule.graphBlobs]]) and each probe takes every
-  * parsed graph from the bounded [[graft.operators.Hnsw.WalkCache]]
-  * it shares with serving — pgvector's parse-into-shared_buffers-once,
-  * walk-in-the-backend shape. It then injects
+  * memo ([[graft.operators.Hnsw.storeBlobs]]) and each probe walks
+  * them through [[graft.operators.Hnsw.walkLocal]] — the one
+  * driver-side walk, shared with flat serving
+  * ([[graft.streaming.KnnServing.serveHnsw]]) — taking every parsed
+  * graph from the bounded [[graft.operators.Hnsw.WalkCache]]:
+  * pgvector's parse-into-shared_buffers-once, walk-in-the-backend
+  * shape. It then injects
   * `id IN (<candidate ids>)` above the table scan — the Sort+Limit on
   * top then ranks the ≤ k·P survivors by EXACT distance, so the served
   * result is the exact top-k OF the graph candidates (recall = HNSW
@@ -68,41 +71,8 @@ object HnswProbeRule {
     * number (the HnswRoutedSpec accumulator trick). */
   @volatile var deserCounter: Option[org.apache.spark.util.LongAccumulator] = None
 
-  /** Driver memo of each probed store's `(part_id, graph)` blobs: store
-    * path → ([[graft.Sidecar.key]] fingerprint at load, blobs). A probe
-    * re-lists the store and reloads when the (path, length, mtime)
-    * fingerprint changed — a rebuilt or overwritten store is never
-    * served from stale bytes — and `DROP INDEX` [[evict]]s the entry.
-    * Parsed graphs are NOT held here: they live in the bounded
-    * WalkCache, keyed by blob content. */
-  private val blobMemo =
-    scala.collection.concurrent.TrieMap.empty[String, (String, Array[(Int, Array[Byte])])]
-
-  /** The store's blobs, from the memo when its fingerprint still
-    * matches, else by one collect (explicit schema: no inference job).
-    * The fingerprint is taken BEFORE the load, so a store rewritten
-    * mid-load mismatches on the next probe; a failed load leaves no
-    * entry behind. */
-  private[graft] def graphBlobs(session: SparkSession,
-      path: String): Array[(Int, Array[Byte])] = {
-    val fp = graft.Sidecar.key(path)
-    blobMemo.get(path) match {
-      case Some((`fp`, blobs)) => blobs
-      case _ =>
-        blobMemo.remove(path)
-        import session.implicits._
-        val blobs = session.read.schema("part_id INT, graph BINARY").parquet(path)
-          .as[(Int, Array[Byte])].collect()
-        blobMemo(path) = (fp, blobs)
-        blobs
-    }
-  }
-
-  /** Forget a store's blobs (`DROP INDEX`). */
-  private[graft] def evict(path: String): Unit = { blobMemo.remove(path); () }
-
   /** Test hook: whether `path`'s blobs are memoized. */
-  private[graft] def memoized(path: String): Boolean = blobMemo.contains(path)
+  private[graft] def memoized(path: String): Boolean = graft.operators.Hnsw.storeMemoized(path)
 
   def install(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraOptimizations
@@ -445,27 +415,27 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     }
 
   /** The rewrite-time probe: beam-walk every partition graph on the
-    * driver — blobs from [[HnswProbeRule.graphBlobs]], each graph
-    * parsed through the shared WalkCache — and return the union of
-    * per-graph top-`fetch` candidates as (part_id, id, distance) —
-    * strict_order's global ordered merge needs the distances;
-    * relaxed_order's global budget division (r17) needs the graph
-    * identity; partition graphs hold disjoint id sets so no cross-graph
-    * dedup is required. Walks on a shared graph serialize on its
-    * monitor (Index.searchImpl), so concurrent sessions stay exact.
-    * Any failure falls back to the exact plan. */
+    * driver through [[graft.operators.Hnsw.walkLocal]], the walk flat
+    * serving shares — blobs from the driver memo
+    * ([[graft.operators.Hnsw.storeBlobs]]), each graph parsed through
+    * the shared WalkCache, graphs walked in parallel — and return the
+    * union of per-graph top-`fetch` candidates as (part_id, id,
+    * distance) — strict_order's global ordered merge needs the
+    * distances; relaxed_order's global budget division (r17) needs the
+    * graph identity; partition graphs hold disjoint id sets so no
+    * cross-graph dedup is required. Concurrent sessions walking one
+    * cached graph each keep their own visited marks, so they stay
+    * exact without taking turns. Any failure falls back to the exact
+    * plan. */
   private def walkGraphs(e: HnswSqlCatalog.Entry, query: Query,
       fetch: Int, ef: Int): Option[Array[(Int, Long, Double)]] = {
     try {
-      val cnt = HnswProbeRule.deserCounter
       // halfvec index: the graph stores float16-rounded vectors —
       // walk with the rounded query too (pgvector casts both sides)
       val q = if (e.storage == "halfvec") graft.operators.Hnsw.halfRounded(query) else query
-      val cands = HnswProbeRule.graphBlobs(session, e.path).flatMap { case (pid, blob) =>
-        cnt.foreach(_.add(1))
-        graft.operators.Hnsw.walk(blob, fetch, ef)(q).map { case (id, d) => (pid, id, d) }
-      }.distinct
-      Some(cands)
+      val blobs = graft.operators.Hnsw.storeBlobs(session, e.path)
+      HnswProbeRule.deserCounter.foreach(_.add(blobs.length))
+      Some(graft.operators.Hnsw.walkLocal(blobs, IndexedSeq(q), fetch, ef).head.distinct)
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 

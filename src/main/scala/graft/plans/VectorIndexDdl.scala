@@ -146,7 +146,7 @@ final case class DropVectorIndexCommand(stmt: VectorIndexDdl.DropStmt)
           case "ivfflat" => IvfCatalog.invalidate(c.storePath)
           case _ =>
             HnswSqlCatalog.remove(stmt.name)
-            HnswProbeRule.evict(c.storePath)
+            graft.operators.Hnsw.forgetStore(c.storePath)
         }
         c.restoreBinding()
         // drop the materialized store (pgvector DROP INDEX frees the

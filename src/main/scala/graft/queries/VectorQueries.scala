@@ -318,15 +318,24 @@ object VectorQueries {
     * end: integer cell ranking (centroid_id tie-break) + integer
     * distances — hash-exact from birth. */
   private def ivfBitKnn(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge.{toColumn, toExpression}
     val base = ensureIvfBitStore(s, d)
-    val qWords = graft.operators.BinaryQuant.pack(
+    val qWords = ivfBitQuery(s, d)
+    ivfBitProbe(s, base, qWords, ivfBitCells(s, base, qWords))
+  }
+
+  /** The packed sign-bit words of query vector 0. */
+  private def ivfBitQuery(s: SparkSession, d: String): Array[Long] =
+    graft.operators.BinaryQuant.pack(
       Tables.embeddings(s, d).filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>"))
         .head.getSeq[Double](0).toArray)
+
+  /** The query's nprobe cells: the nlist bit centroids (driver
+    * metadata, same budget as Hnsw.Centroids) collected and ranked by
+    * (hamming, centroid_id). */
+  private def ivfBitCells(s: SparkSession, base: String, qWords: Array[Long]): Seq[Int] = {
     val qBits = graft.operators.Hnsw.expandWords(qWords)
-    // nlist rows — driver metadata, same budget as Hnsw.Centroids
-    val cells = s.read.parquet(new java.io.File(base, "centroids").toString)
+    s.read.parquet(new java.io.File(base, "centroids").toString)
       .select(col("centroid_id"), col("centroid").cast("array<double>"))
       .collect()
       .map { r =>
@@ -337,6 +346,12 @@ object VectorQueries {
         (h, r.getInt(0))
       }
       .sorted.take(IvfBitNprobe).map(_._2).toSeq
+  }
+
+  /** Exact hamming top-k over the `cells` partitions of the store. */
+  private def ivfBitProbe(s: SparkSession, base: String, qWords: Array[Long],
+      cells: Seq[Int]): DataFrame = {
+    import org.apache.spark.sql.GraftSqlBridge.{toColumn, toExpression}
     s.read.parquet(new java.io.File(base, "store").toString)
       .filter(col("centroid_id").isin(cells.map(Int.box): _*))
       .select(col("vec_id"),
@@ -375,10 +390,18 @@ object VectorQueries {
   }
 
   /** Bench split for the bit IVF: build = k-majority Lloyd + assign +
-    * partitioned write; probe = cell ranking + pruned hamming scan. */
+    * partitioned write, then the query and its cell ranking (one
+    * centroid collect); probe = the pruned hamming scan. */
   def ivfBitBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val build = () => { ensureIvfBitStore(s, d); () }
-    (build, () => ivfBitKnn(s, d))
+    var base: String = null
+    var qWords: Array[Long] = null
+    var cells: Seq[Int] = null
+    val build = () => {
+      base = ensureIvfBitStore(s, d)
+      qWords = ivfBitQuery(s, d)
+      cells = ivfBitCells(s, base, qWords)
+    }
+    (build, () => ivfBitProbe(s, base, qWords, cells))
   }
 
   // ------------------------------------ sparse HNSW (pgvector sparsevec, r14)
