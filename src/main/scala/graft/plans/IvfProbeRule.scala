@@ -504,11 +504,14 @@ final class IvfProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     * reader's snapshot ALREADY resolved (stats are looked up by file
     * name across the whole log, and files are immutable), so a
     * time-travel read probes correctly too. Conservative: a file
-    * without a log record or without centroid_id stats stays in. */
+    * without a log record or without centroid_id stats stays in. The
+    * pruned scan is the same relation over the kept files' statuses
+    * ([[graft.sources.SnapshotFileIndex]]), so nothing is listed
+    * again at optimize time. A partitioned scan is left as it is. */
   private def pruneTableFiles(lr: LogicalRelation, fs: HadoopFsRelation,
       entry: IvfCatalog.Entry, ranked: Array[Int]): LogicalPlan =
     entry.table match {
-      case Some(t) =>
+      case Some(t) if fs.partitionSchema.isEmpty =>
         try {
           import graft.sources.GraftTable.{PAttr, PFn, PLit}
           val metas = t.knownMetas
@@ -516,22 +519,18 @@ final class IvfProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
           val cellPred = ranked.map(c =>
               PFn("=", Seq(PAttr("centroid_id"), PLit(c))): graft.sources.GraftTable.Pred)
             .reduce((a, b) => PFn("or", Seq(a, b)))
-          val all = fs.location.inputFiles
+          val all = fs.location.listFiles(Nil, Nil).flatMap(_.files).map(_.fileStatus)
           val keep = all.filter { f =>
-            metas.get(f.split('/').last)
+            metas.get(f.getPath.getName)
               .forall(m => graft.sources.GraftTable.mayMatch(cellPred, m.stats, sch))
           }
           if (keep.length == all.length) lr
           else if (keep.isEmpty)
             org.apache.spark.sql.catalyst.plans.logical.LocalRelation(lr.output)
-          else {
-            val prunedDf = session.read.schema(fs.dataSchema).parquet(keep.toSeq: _*)
-            prunedDf.queryExecution.analyzed.collectFirst {
-              case nl: LogicalRelation => nl.copy(output = lr.output)
-            }.getOrElse(lr)
-          }
+          else lr.copy(relation =
+            fs.copy(location = graft.sources.SnapshotFileIndex(keep))(session))
         } catch { case scala.util.control.NonFatal(_) => lr } // prune is best-effort
-      case None => lr
+      case _ => lr
     }
 
   /** Does a user Filter over this scan carry a SELECTIVE (inclusion)

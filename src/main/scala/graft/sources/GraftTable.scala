@@ -4,8 +4,10 @@ import java.net.{URLDecoder, URLEncoder}
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.HadoopFsRelation
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -39,9 +41,11 @@ final case class FileMeta(
   *    evolution commit — the newest record ≤ a version is that
   *    version's schema), `a|rows|bytes|path|stats`, `r|path`.
   *  - `v<20-digit>.ckpt` — full live-file snapshot at that version
-  *    (same `a` records); snapshot load reads the newest ckpt ≤ v and
-  *    replays only the commit tail, so replay cost is bounded by
-  *    `checkpointInterval`, not table age.
+  *    (same `a` records, plus that version's `s|` schema and `t|` txn
+  *    markers); snapshot and schema load read the newest ckpt ≤ v and
+  *    replay only the commit tail, so replay cost is bounded by
+  *    `checkpointInterval`, not table age, and commits older than the
+  *    newest checkpoint are not needed to read the table.
   *
   * Commit protocol: actions are staged to a temp file and RENAMED to
   * `v<next>.commit` — rename-without-overwrite is atomic on POSIX and
@@ -57,7 +61,13 @@ final case class FileMeta(
   * Readers are snapshot-isolated for free: a snapshot resolves the
   * log once to an explicit file list, and the files are immutable.
   * Time travel is the same resolution at an older version (valid
-  * until [[vacuum]] drops the files it references).
+  * until [[vacuum]] drops the files it references). Every read plans
+  * its scan from the log's own add records (path and byte count, over
+  * a [[SnapshotFileIndex]]), the way Delta plans a snapshot from its
+  * log: nothing is listed, no file is checked for existence, and no
+  * Spark job runs before the scan. A version whose files were
+  * vacuumed therefore fails at scan time, with Spark's error naming
+  * the missing file.
   *
   * Scale shape: the log is KB-scale driver metadata (like the IVF
   * centroid table); all data movement is executor-side parquet jobs.
@@ -134,31 +144,41 @@ final class GraftTable private (
   def schema: StructType = schemaAt(-1L)
 
   /** Schema as of `atVersion` (latest if -1): the newest `s|` record
-    * at or below that version — commit 1 always carries one, and
-    * [[addColumns]] evolution commits write another. The scan runs
-    * newest-first over the commit names only (driver metadata,
-    * bounded by log age) and stops at the first hit. */
-  def schemaAt(atVersion: Long = -1L): StructType = {
-    val log = listLog
-    require(log.nonEmpty, s"not a GraftTable: empty log at $logDir")
-    val v = if (atVersion < 0) log.filter(!_._2).map(_._1).max else atVersion
-    val commits = log.filter { case (cv, isC) => !isC && cv <= v }
-      .map(_._1).sorted.reverse
-    commits.iterator.flatMap { cv =>
-      readLines(new Path(logDir, commitName(cv))).collectFirst {
-        case l if l.startsWith("s|") =>
-          DataType.fromJson(dec(l.drop(2))).asInstanceOf[StructType]
-      }
-    }.nextOption().getOrElse(
-      sys.error(s"no schema record at or below version $v of $path"))
-  }
+    * at or below that version. Commit 1 always carries one,
+    * [[addColumns]] evolution commits write another, and every
+    * checkpoint repeats the schema of its version. The scan runs
+    * newest-first (a checkpoint before the commit of its own version)
+    * and stops at the first hit, so it opens at most
+    * `checkpointInterval` + 1 log files, and a log whose commits below
+    * its newest checkpoint were removed still reads. Checkpoints
+    * written without the record are passed over. */
+  def schemaAt(atVersion: Long = -1L): StructType = schemaIn(listLog, atVersion)
 
   /** Live files at `version` (latest if -1): newest checkpoint ≤ v,
     * plus the commit tail replayed over it. */
-  def snapshotMetas(atVersion: Long = -1L): Seq[FileMeta] = {
-    val log = listLog
+  def snapshotMetas(atVersion: Long = -1L): Seq[FileMeta] =
+    metasIn(listLog, atVersion)
+
+  /** The version `atVersion` names in `log` (its latest commit if -1). */
+  private def resolve(log: Seq[(Long, Boolean)], atVersion: Long): Long = {
     require(log.nonEmpty, s"not a GraftTable: empty log at $logDir")
-    val v = if (atVersion < 0) log.filter(!_._2).map(_._1).max else atVersion
+    if (atVersion < 0) log.filter(!_._2).map(_._1).max else atVersion
+  }
+
+  private def schemaIn(log: Seq[(Long, Boolean)], atVersion: Long): StructType = {
+    val v = resolve(log, atVersion)
+    log.filter(_._1 <= v).sortBy { case (cv, isC) => (-cv, !isC) }
+      .iterator.flatMap { case (cv, isC) =>
+        readLines(new Path(logDir, if (isC) ckptName(cv) else commitName(cv)))
+          .collectFirst { case l if l.startsWith("s|") =>
+            DataType.fromJson(dec(l.drop(2))).asInstanceOf[StructType]
+          }
+      }.nextOption().getOrElse(
+        sys.error(s"no schema record at or below version $v of $path"))
+  }
+
+  private def metasIn(log: Seq[(Long, Boolean)], atVersion: Long): Seq[FileMeta] = {
+    val v = resolve(log, atVersion)
     require(log.contains((v, false)), s"version $v does not exist in $logDir")
     val ckpt = log.filter { case (cv, isC) => isC && cv <= v }
       .map(_._1).sorted.lastOption
@@ -186,8 +206,7 @@ final class GraftTable private (
     * watermarks forward, so idempotence survives log truncation. */
   def txnWatermarks(atVersion: Long = -1L): Map[String, Long] = {
     val log = listLog
-    require(log.nonEmpty, s"not a GraftTable: empty log at $logDir")
-    val v = if (atVersion < 0) log.filter(!_._2).map(_._1).max else atVersion
+    val v = resolve(log, atVersion)
     val ckpt = log.filter { case (cv, isC) => isC && cv <= v }
       .map(_._1).sorted.lastOption
     val marks = scala.collection.mutable.HashMap.empty[String, Long]
@@ -252,18 +271,26 @@ final class GraftTable private (
 
   /** Snapshot read (time travel via `atVersion`). The file list is
     * resolved HERE, so the returned DataFrame is immune to later
-    * commits — snapshot isolation by construction. */
-  def read(atVersion: Long = -1L): DataFrame =
-    readFiles(snapshotMetas(atVersion), schemaAt(atVersion))
-
-  private def readFiles(metas: Seq[FileMeta],
-      sch: StructType = null): DataFrame = {
-    val s0 = Option(sch).getOrElse(schema)
-    if (metas.isEmpty) spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s0)
-    else spark.read.schema(s0)
-      .parquet(metas.map(m => new Path(root, m.path).toString): _*)
+    * commits — snapshot isolation by construction. One listing of the
+    * log serves both the file list and the schema. */
+  def read(atVersion: Long = -1L): DataFrame = {
+    val log = listLog
+    readFiles(metasIn(log, atVersion), schemaIn(log, atVersion))
   }
+
+  /** Every table read: a scan planned straight from the log's add
+    * records, each file's path qualified the way Spark's own listing
+    * spells it, with the byte count the log recorded. */
+  private def readFiles(metas: Seq[FileMeta],
+      sch: StructType = null): DataFrame =
+    scan(metas.map { m =>
+        val p = new Path(root, m.path).makeQualified(fs.getUri, fs.getWorkingDirectory)
+        new FileStatus(m.bytes, false, 0, 0L, 0L, p)
+      }, Option(sch).getOrElse(schema))
+
+  private def scan(files: Seq[FileStatus], sch: StructType): DataFrame =
+    spark.baseRelationToDataFrame(HadoopFsRelation(SnapshotFileIndex(files),
+      new StructType(), asNullable(sch), None, new ParquetFileFormat, Map.empty)(spark))
 
   // ------------------------------------------------------ data skipping
 
@@ -740,7 +767,7 @@ final class GraftTable private (
       .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
     val bytesOf = files.map(st => st.getPath.getName -> st.getLen).toMap
     val present = statsCols.filter(df.columns.contains)
-    val staged = spark.read.schema(df.schema).parquet(staging.toString)
+    val staged = scan(files, df.schema)
     val aggs = count(lit(1)).as("__n") +: present.flatMap(c => Seq(
       min(col(c)).cast("string").as(s"__min_$c"),
       max(col(c)).cast("string").as(s"__max_$c")))
@@ -800,10 +827,12 @@ final class GraftTable private (
 
   private def maybeCheckpoint(v: Long): Unit =
     if (checkpointInterval > 0 && v % checkpointInterval == 0) {
+      val log = listLog
       // losing this rename (concurrent checkpointer) is harmless
       writeLinesAtomic(new Path(logDir, ckptName(v)),
-        txnWatermarks(v).toSeq.sorted.map { case (a, b) => s"t|${enc(a)}|$b" } ++
-          snapshotMetas(v).map(addLine))
+        s"s|${enc(schemaIn(log, v).json)}" +:
+          (txnWatermarks(v).toSeq.sorted.map { case (a, b) => s"t|${enc(a)}|$b" } ++
+            metasIn(log, v).map(addLine)))
     }
 
   private def requireSchema(df: DataFrame): Unit = {

@@ -21,10 +21,18 @@ better than the parent's by more than the parent's IQR. It also prints
 each run's host_steal_share (CPU time the hypervisor gave to other
 guests) and any failed operations.
 
+It refuses to start when a checkout holds a perfbench/.build whose
+sources.txt names files outside that checkout: such a build was copied
+from another checkout, its class-data archive records that checkout's
+class paths, and every run would die at JVM start with "shared class
+paths mismatch". The message names the directory to delete; the tool
+deletes nothing itself.
+
 Standard library only; it edits nothing in either checkout except what
 perfbench/run.py itself writes.
 """
 import argparse
+import glob
 import json
 import os
 import shutil
@@ -55,6 +63,19 @@ def run_once(checkout, workload, seed, seconds, trace, out_dir, tag):
     return art
 
 
+def foreign_build(checkout):
+    """The checkout's perfbench/.build when one of its sources.txt files
+    names a source outside the checkout, else None."""
+    root = os.path.realpath(checkout)
+    build = os.path.join(checkout, "perfbench", ".build")
+    for argfile in glob.glob(os.path.join(build, "*", "sources.txt")):
+        with open(argfile, encoding="utf-8") as f:
+            names = [l.strip() for l in f if l.strip()]
+        if any(os.path.commonpath([root, os.path.realpath(n)]) != root for n in names):
+            return build
+    return None
+
+
 def iqr(xs):
     if len(xs) < 2:
         return 0.0
@@ -79,6 +100,12 @@ def main():
     a = ap.parse_args()
 
     arms = {"parent": os.path.abspath(a.parent), "change": os.path.abspath(a.change)}
+    for arm, p in arms.items():
+        build = foreign_build(p)
+        if build:
+            sys.exit("%s checkout: %s was built in another checkout (its sources.txt names "
+                     "files outside %s), so its JVMs would fail with \"shared class paths "
+                     "mismatch\". Delete %s and run again." % (arm, build, p, build))
     with open(os.path.join(arms["change"], "BENCHMARK.json")) as f:
         bench = json.load(f)
     defs = bench["per_layer" if a.trace == "1" else "end_to_end"]
