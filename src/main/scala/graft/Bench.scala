@@ -32,9 +32,8 @@ object Bench {
     * and a warm re-run is measured instead. */
   private val WarmThreshold = 3.0
 
-  /** name → (build thunk, probe thunk) for queries benched split.
-    * `private[graft]` so RePin can time one phase in a fresh JVM. */
-  private[graft] def splitBench: Map[String, (SparkSession, String) => (() => Unit, () => DataFrame)] =
+  /** name → (build thunk, probe thunk) for queries benched split. */
+  private def splitBench: Map[String, (SparkSession, String) => (() => Unit, () => DataFrame)] =
     Map(
       "vs_knn_join" -> queries.VectorQueries.kjBench _,
       "vs_ivf_knn" -> queries.VectorQueries.ivfBench _,

@@ -61,8 +61,8 @@ object HnswProbeRule {
 
   /** Gates the rewrite-time graph walk (run at OPTIMIZATION time, so
     * even `explain()` on a matching plan walks, and a cold store is
-    * collected — the [[IvfProbeRule.JoinEvalKey]] precedent). Default
-    * on. */
+    * collected). Default on; "false" keeps the exact plan, which specs
+    * use as the reference the probe is checked against. */
   val EvalKey = "spark.graft.hnsw.probeEval"
 
   /** Test hook: counts graphs walked per probe — one per blob, whether

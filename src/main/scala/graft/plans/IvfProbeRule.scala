@@ -152,14 +152,6 @@ object IvfProbeRule {
     * matching the k-majority centroid representation. */
   val HammingMode = 1000
 
-  /** Session conf key gating the join-shape rewrite's query-side
-    * evaluation (a bounded limit-2 job launched at OPTIMIZATION time —
-    * so even `explain()` on a matching plan runs it). Default on;
-    * set to "false" for sessions where plan inspection must never
-    * touch the cluster. The literal-query rewrite is pure plan
-    * surgery and is never gated. */
-  val JoinEvalKey = "spark.graft.ivf.joinEval"
-
   /** Idempotent per-session installation (extraOptimizations runs as
     * the last optimizer batch, after pruning/pushdown already shaped
     * the plan). The rule instance captures ITS session, so query-side
@@ -370,7 +362,6 @@ final class IvfProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
       querySide <- sides.find(_ ne corpus)
       qAttr <- attrs.find(a => querySide.outputSet.contains(a))
       corpusAttr <- attrs.find(a => corpus.outputSet.contains(a))
-      if session.conf.get(IvfProbeRule.JoinEvalKey, "true").toBoolean
       query <- evalSingleRowVector(querySide, qAttr)
       rewritten <- injectProbe(srt.child, vde.mode, corpusAttr, query, negated)
     } yield srt.copy(child = rewritten)

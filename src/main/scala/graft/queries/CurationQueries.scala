@@ -24,9 +24,9 @@ object CurationQueries {
     * accumulation).
     *
     * The trade, MEASURED at both SFs (r12, VERDICT r11 #4 — warm
-    * TimeOne pairs, with/without the exchange): at sf1.0 the
-    * repartition wins decisively on all three flagged entries
-    * (curate_dsir 10.10 → 1.94 s, curate_funnel 1.99 → 0.92,
+    * single-entry pairs with/without the exchange, commit b950176):
+    * at sf1.0 the repartition wins decisively on all three flagged
+    * entries (curate_dsir 10.10 → 1.94 s, curate_funnel 1.99 → 0.92,
     * pack_tokens 1.06 → 0.84); at sf0.1 it wins for dsir
     * (1.93 → 1.33) and costs pack/funnel ~0.1-0.2 s each (0.48 →
     * 0.59 / 0.51 → 0.71) — the shuffle of the 580 KB fixture exceeds

@@ -283,9 +283,9 @@ object ServingBench {
               m = 16, efC = 64, parts = 8, metric = "cosine"), None)
           else {
             // nlist is the corpus-scale knob (the fixed-cell-size law,
-            // see the writeGraphsClustered/ProfileSparseRouted
-            // scaladoc): ~500 docs per cell pre-spill. A FIXED nlist at
-            // a 100× fixture lets cells grow with the corpus and the
+            // see the writeGraphsClustered scaladoc and the round-15
+            // scale A/B, commit 22177d1): ~500 docs per cell
+            // pre-spill. A FIXED nlist at a 100× fixture lets cells grow with the corpus and the
             // batch's probed union saturate — the row would then
             // (mis)read slower than flat while measuring only the toy
             // parameterization.
