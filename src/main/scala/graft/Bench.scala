@@ -12,10 +12,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * can parse it structurally even when a build tool prefixes or
   * swallows program output (VERDICT r1 "What's wrong" #6).
   *
-  * Index queries (vs_ivf_knn, vs_pq_knn) report `_build` and `_probe`
-  * separately: an index is trained once and probed many times, so a
-  * single conflated number hides probe regressions behind training
-  * cost (VERDICT r1 #5).
+  * An entry with a [[QueryDef.build]] reports `<name>_build` (the
+  * build, which rebuilds its stores from scratch) and `<name>_probe`
+  * (the entry's own `fn`, which then only reads them) separately: an
+  * index is built once and probed many times, so a single conflated
+  * number hides probe regressions behind build cost (VERDICT r1 #5).
   *
   * Warm timing (VERDICT r2 "next" #8): each sub-`WarmThreshold` cold
   * run is followed by a warm re-run whose time is reported — the
@@ -31,49 +32,6 @@ object Bench {
   /** Cold-run time under which the planning/codegen floor dominates
     * and a warm re-run is measured instead. */
   private val WarmThreshold = 3.0
-
-  /** name → (build thunk, probe thunk) for queries benched split. */
-  private def splitBench: Map[String, (SparkSession, String) => (() => Unit, () => DataFrame)] =
-    Map(
-      "vs_knn_join" -> queries.VectorQueries.kjBench _,
-      "vs_ivf_knn" -> queries.VectorQueries.ivfBench _,
-      "vs_ivf_auto" -> queries.VectorQueries.ivfAutoBench _,
-      "vs_ivf_txn" -> queries.VectorQueries.ivfTxnBench _,
-      "vs_pq_knn" -> queries.VectorQueries.pqBench _,
-      "vs_bq_knn" -> queries.VectorQueries.bqBench _,
-      "vs_sq_knn" -> queries.VectorQueries.sqBench _,
-      "vs_hnsw_knn" -> queries.VectorQueries.hnswBench _,
-      "vs_hnsw_routed" -> queries.VectorQueries.hnswRoutedBench _,
-      "vs_hnsw_bit" -> queries.VectorQueries.hnswBitBench("hamming") _,
-      "vs_hnsw_bit_jacc" -> queries.VectorQueries.hnswBitBench("jaccard") _,
-      "vs_hnsw_sparse" -> queries.VectorQueries.hnswSparseBench _,
-      "vs_hnsw_sparse_routed" -> queries.VectorQueries.hnswSparseRoutedBench _,
-      "vs_ivf_bit" -> queries.VectorQueries.ivfBitBench _,
-      "vs_ivfpq_knn" -> queries.VectorQueries.ivfPqBench _,
-      "ingest_pdf_pages" -> queries.PipelineQueries.pdfBench _,
-      "ingest_pdf_encrypted" -> queries.PipelineQueries.pdfEncBench _,
-      "ingest_pdf_modern" -> queries.PipelineQueries.pdfModBench _,
-      "ingest_pdf_store" -> queries.PipelineQueries.pdfStoreBench _,
-      "vs_registered_list" -> queries.PipelineQueries.registeredBench _,
-      "vs_failed_list" -> queries.PipelineQueries.failedBench _,
-      "txn_merge" -> queries.TxnQueries.mergeBench _,
-      "txn_changes" -> queries.TxnQueries.changesBench _,
-      "txn_timetravel" -> queries.TxnQueries.timetravelBench _,
-      "txn_restore" -> queries.TxnQueries.restoreBench _,
-      "txn_evolve" -> queries.TxnQueries.evolveBench _,
-      "txn_stats_agg" -> queries.TxnQueries.statsAggBench _,
-      "txn_stats_auto" -> queries.TxnQueries.statsAutoBench _,
-      "txn_cluster" -> queries.TxnQueries.clusterBench _,
-      "txn_clone" -> queries.TxnQueries.cloneBench _,
-      "txn_incr_view" -> queries.TxnQueries.incrViewBench _,
-      "txn_compact" -> queries.TxnQueries.compactBench _,
-      "txn_index_sync" -> queries.TxnQueries.indexSyncBench _,
-      "text_bpe_train" -> queries.TextQueries.bpeTrainBench _,
-      "text_bpe_apply" -> queries.TextQueries.bpeApplyBench _,
-      "curate_classifier" -> queries.CurationQueries.classifierBench _,
-      "events_quantiles_sketch" -> queries.AnalyticsQueries.quantilesSketchBench _,
-      "dedup_incremental" -> queries.DedupQueries.incrementalBench _,
-    )
 
   private def runNoop(df: DataFrame): Unit =
     df.write.format("noop").mode("overwrite").save()
@@ -245,25 +203,9 @@ object Bench {
     // committed row then silently reads as "builds are free". A build
     // row is stamped into the artifact's `cached` list when it BOTH
     // finished under the ensure floor AND wrote no store artifact
-    // (a Sidecar done marker, _SUCCESS or _txlog) under tmp's graft_*
-    // roots — consumers must not read stamped rows as cold build
-    // cost. Honest in-memory builds (localCheckpoint graphs, per-run
-    // txn tables) cost real time and stay unstamped; the conjunction
-    // errs conservative both ways.
+    // ([[Sidecar.wroteStores]]) — consumers must not read stamped rows
+    // as cold build cost.
     val CachedBuildMax = 0.3
-    def wroteStores(sinceMs: Long): Boolean = {
-      val tmp = new java.io.File(sys.props("java.io.tmpdir"))
-      def fresh(f: java.io.File, depth: Int): Boolean = {
-        if (Set(Sidecar.Done, "_SUCCESS", "_txlog")(f.getName))
-          f.lastModified >= sinceMs
-        else if (!f.isDirectory || depth <= 0) false
-        else Option(f.listFiles).getOrElse(Array.empty[java.io.File])
-          .exists(fresh(_, depth - 1))
-      }
-      Option(tmp.listFiles).getOrElse(Array.empty[java.io.File])
-        .filter(f => f.isDirectory && f.getName.startsWith("graft_"))
-        .exists(fresh(_, 4))
-    }
     val cachedBuilds = scala.collection.mutable.ArrayBuffer.empty[String]
 
     // between queries: free any blocks the previous query materialized
@@ -293,11 +235,10 @@ object Bench {
         spark.range(4000000L).selectExpr("sum(id) s").collect(); ()
       })
     /** Cold run; below the threshold, a warm re-run is the reported
-      * number (cold recorded alongside). No block sweep between the
-      * two runs: split-bench probes read a localCheckpoint'ed index
-      * whose lineage is truncated — unpersisting it would make the
-      * warm run unrecomputable (the sweep isolates QUERIES from each
-      * other, not a query from its own warm pass). */
+      * number (cold recorded alongside). The block sweep isolates
+      * entries from each other, not a run from its own warm pass, so
+      * none runs between the two: each pass plans the entry's `fn`
+      * anew over its persisted stores. */
     def coldThenWarm(name: String, thunk: () => Unit): Double = {
       val cold = timed(thunk)
       if (cold >= WarmThreshold) {
@@ -323,30 +264,28 @@ object Bench {
       }
     }
 
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-        .filter(q => wanted(q._1)).flatMap { case (name, fn) =>
+    // -1 marks a failed row: it can't masquerade as fast
+    def orFail(row: String)(t: => Double): Double =
+      try t catch { case e: Throwable =>
+        System.err.println(s"[bench] $row failed: ${e.getMessage}")
+        -1.0
+      }
+    val results = SparkEntry.all.toSeq.sortBy(_._1)
+        .filter(q => wanted(q._1)).flatMap { case (name, q) =>
       sweepBlocks()
-      val out = splitBench.get(name) match {
-        case Some(mk) =>
-          try {
-            val (build, probe) = mk(spark, sfDir)
-            val tWall = System.currentTimeMillis() - 1000 // FS mtime slack
-            val tb = timed(build) // builds are one-shot by design: cold
-            if (tb < CachedBuildMax && !wroteStores(tWall))
-              cachedBuilds += s"${name}_build"
-            val tp = coldThenWarm(s"${name}_probe", () => runNoop(probe()))
-            Seq(s"${name}_build" -> tb, s"${name}_probe" -> tp)
-          } catch {
-            case e: Throwable =>
-              System.err.println(s"[bench] $name failed: ${e.getMessage}")
-              Seq(name -> -1.0) // -1 marks failure; can't masquerade as fast
-          }
-        case None =>
-          try Seq(name -> coldThenWarm(name, () => runNoop(fn(spark, sfDir))))
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}")
-            Seq(name -> -1.0)
-          }
+      val probe = () => runNoop(q.fn(spark, sfDir))
+      val out = q.build match {
+        case Some(build) =>
+          // a failed build fails its probe row too; a failed probe
+          // keeps the build's time
+          val tWall = System.currentTimeMillis() - 1000 // FS mtime slack
+          val tb = orFail(s"${name}_build")(timed(() => build(spark, sfDir))) // one-shot: cold
+          if (tb >= 0 && tb < CachedBuildMax && !Sidecar.wroteStores(tWall))
+            cachedBuilds += s"${name}_build"
+          val tp = if (tb < 0) -1.0
+            else orFail(s"${name}_probe")(coldThenWarm(s"${name}_probe", probe))
+          Seq(s"${name}_build" -> tb, s"${name}_probe" -> tp)
+        case None => Seq(name -> orFail(name)(coldThenWarm(name, probe)))
       }
       canary(name)
       out
@@ -371,7 +310,7 @@ object Bench {
             // before first steady-state serve). One-shot by design: cold.
             val tWall = System.currentTimeMillis() - 1000
             val tb = timed(p.build)
-            if (tb < CachedBuildMax && !wroteStores(tWall))
+            if (tb < CachedBuildMax && !Sidecar.wroteStores(tWall))
               cachedBuilds += s"${name}_build"
             Seq(s"${name}_build" -> tb,
               name -> coldThenWarm(name, p.probe))

@@ -92,6 +92,22 @@ object Sidecar {
     dir
   }
 
+  /** Whether any store under the tmpdir's `graft_*` roots got a
+    * completion marker at or after `sinceMs`: a [[Done]] marker, a
+    * Spark `_SUCCESS` or a GraftTable `_txlog` (at most four levels
+    * down). A build that only found its stores built writes none. */
+  private[graft] def wroteStores(sinceMs: Long): Boolean = {
+    def fresh(f: java.io.File, depth: Int): Boolean =
+      if (Set(Done, "_SUCCESS", "_txlog")(f.getName)) f.lastModified >= sinceMs
+      else if (!f.isDirectory || depth <= 0) false
+      else Option(f.listFiles).getOrElse(Array.empty[java.io.File])
+        .exists(fresh(_, depth - 1))
+    Option(new java.io.File(sys.props("java.io.tmpdir")).listFiles)
+      .getOrElse(Array.empty[java.io.File])
+      .filter(f => f.isDirectory && f.getName.startsWith("graft_"))
+      .exists(fresh(_, 4))
+  }
+
   /** Delete the store (or any file tree) at `dir`; the next [[built]]
     * rebuilds it. */
   def drop(dir: String): Unit = synchronized {

@@ -30,5 +30,5 @@ object SparkEntry {
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys → rows-only check. */
   def oracleSql: Map[String, String] =
-    all.collect { case (k, QueryDef(_, Some(sql))) => k -> sql }
+    all.collect { case (k, QueryDef(_, Some(sql), _)) => k -> sql }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Sidecar, Tables}
+import graft.QueryDef.rebuild
 import graft.operators.AsOfJoin
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -411,18 +412,6 @@ object AnalyticsQueries {
       .orderBy(col("event_type"), col("p"))
   }
 
-  /** Split bench: `_build` = the corpus-scale sketch pass (store
-    * cleared first), `_probe` = the weighted-quantile select over the
-    * persisted state — without the split the warm bench would report
-    * only the KB-scale probe and hide the real work. */
-  def quantilesSketchBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val build = () => {
-      Sidecar.drop(Sidecar.dir(KllTag, d))
-      ensureKllStore(s, d); ()
-    }
-    (build, () => quantilesSketch(s, d))
-  }
-
   private def quantilesSketchSql(d: String): String = {
     val p = Sidecar.dir(KllTag, d)
     val psRows = SketchPs.map(v => s"($v)").mkString(", ")
@@ -651,7 +640,7 @@ object AnalyticsQueries {
     "events_anomaly"     -> QueryDef(anomaly _, anomalySql),
     "events_funnel"      -> QueryDef(funnel _, funnelSql),
     "events_quantiles_sketch" -> QueryDef(quantilesSketch _,
-      quantilesSketchSql(graft.OracleEnv.sfDir)),
+      Some(quantilesSketchSql(graft.OracleEnv.sfDir)), rebuild(KllTag)(ensureKllStore)),
     "events_quantiles_hist" -> QueryDef(quantilesHist _, quantilesHistSql),
     "events_asof_enrich" -> QueryDef(asofEnrich _, asofEnrichSql),
     "events_range_join"  -> QueryDef(rangeJoin _, rangeJoinSql),

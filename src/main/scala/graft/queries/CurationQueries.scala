@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Sidecar, Tables}
+import graft.QueryDef.rebuild
 import graft.functions.TextFunctions._
 import graft.operators.{Decontaminate, Pack, Pii}
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -575,18 +576,6 @@ object CurationQueries {
       }
     }
 
-  /** Split bench: `_build` = full retrain (sidecar cleared first so
-    * the one-time training cost is measured, not amortized away),
-    * `_probe` = the broadcast-weights corpus sweep — the half that
-    * touches 100 TB. */
-  def classifierBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val build = () => {
-      Sidecar.drop(Sidecar.dir(ClsGdTag, d))
-      ensureClsGdStore(s, d); ()
-    }
-    (build, () => classifier(s, d))
-  }
-
   /** Hashed-trigram count features (+ per-doc bias row) and labels —
     * shared by [[classifier]] and [[classifierNb]]. Tokens projected
     * before the shingle HOF (see dsir's trap note).
@@ -727,7 +716,7 @@ object CurationQueries {
     * at dump time (see VectorQueries.defs). */
   def defs: Map[String, QueryDef] = Map(
     "curate_classifier" -> QueryDef(classifier _,
-      classifierSql(graft.OracleEnv.sfDir)),
+      Some(classifierSql(graft.OracleEnv.sfDir)), rebuild(ClsGdTag)(ensureClsGdStore)),
     "curate_classifier_nb" -> QueryDef(classifierNb _,
       classifierNbSql(graft.OracleEnv.sfDir)),
     "curate_dsir"    -> QueryDef(dsir _, dsirSql),

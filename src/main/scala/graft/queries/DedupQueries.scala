@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Sidecar, Tables}
+import graft.QueryDef.rebuild
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions
 import graft.operators.Dedup
@@ -89,30 +90,25 @@ object DedupQueries {
   /** The STREAMING-ARRIVAL dedup shape on the oracle gate (r12 —
     * previously spec-only as [[Dedup.incrementalMinhash]]): a new
     * batch (doc_id % 10 = 0 plays the arriving shard) is checked
-    * against the EXISTING corpus's LSH bands without re-banding the
-    * corpus — the production "index once, probe per batch" path
-    * (IncrementalSpec covers the persisted-bands variant; here the
-    * corpus bands are derived in-query so the oracle sees one
-    * self-contained statement). Output: (new doc_a, corpus doc_b,
-    * exact jaccard ≥ τ). Same recall argument as dedup_minhash_lsh
+    * against the EXISTING corpus's PERSISTED LSH bands and shingles
+    * ([[ensureIncStore]], banded once) through the corpus band-key
+    * Bloom prefilter — the production "index once, probe per batch"
+    * path, which never re-bands the corpus. A Bloom filter has no
+    * false negatives, so the prefilter changes no row
+    * (IncrementalSpec). Output: (new doc_a, corpus doc_b, exact
+    * jaccard ≥ τ). Same recall argument as dedup_minhash_lsh
     * (planted dups at jaccard ≥ 0.97, 8×4 bands → miss ≈ 3e-8). */
   private def incremental(s: SparkSession, d: String): DataFrame = {
-    val all = docs(s, d)
-    val newDocs = all.filter(col("doc_id") % 10 === 0)
-    val corpus = all.filter(col("doc_id") % 10 =!= 0)
-    val corpusSh = Dedup.shingleRows(corpus, "doc_id", "text", 3)
-    val corpusBands = Dedup.lshBands(
-      Dedup.minhashSignatures(corpusSh, 32), 32, 8)
-    Dedup.incrementalMinhash(newDocs, "doc_id", "text",
-      corpusBands, corpusSh, shingleN = 3, numHashes = 32, bands = 8,
-      tau = 0.8)
+    val p = ensureIncStore(s, d)
+    Dedup.incrementalMinhash(
+      docs(s, d).filter(col("doc_id") % 10 === 0), "doc_id", "text",
+      s.read.parquet(s"$p/bands"), s.read.parquet(s"$p/sh"),
+      shingleN = 3, numHashes = 32, bands = 8, tau = 0.8,
+      bandBloom = Some(loadIncBloom(p)))
   }
 
-  /** Split bench for the incremental path: `_build` = band + persist
-    * the corpus side (the index-once half), `_probe` = the arriving
-    * batch probed against the PERSISTED bands/shingles — the
-    * per-batch cost that matters at scale, which the self-contained
-    * query above conflates with corpus banding. */
+  /** The corpus side of [[incremental]]: shingles, LSH bands and the
+    * band-key Bloom, built once per sfDir. */
   private val IncBandsTag = "incbands_v2"
 
   /** FINE row groups for the probe stores (r14): a probed key's read
@@ -163,22 +159,6 @@ object DedupQueries {
   private[graft] def loadIncBloom(p: String): org.apache.spark.util.sketch.BloomFilter = {
     val is = new java.io.FileInputStream(s"$p/bloom.bin")
     try org.apache.spark.util.sketch.BloomFilter.readFrom(is) finally is.close()
-  }
-
-  def incrementalBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val build = () => {
-      Sidecar.drop(Sidecar.dir(IncBandsTag, d))
-      ensureIncStore(s, d); ()
-    }
-    val probe = () => {
-      val p = ensureIncStore(s, d)
-      Dedup.incrementalMinhash(
-        docs(s, d).filter(col("doc_id") % 10 === 0), "doc_id", "text",
-        s.read.parquet(s"$p/bands"), s.read.parquet(s"$p/sh"),
-        shingleN = 3, numHashes = 32, bands = 8, tau = 0.8,
-        bandBloom = Some(loadIncBloom(p)))
-    }
-    (build, probe)
   }
 
   private val incrementalSql: String = s"""
@@ -429,7 +409,8 @@ object DedupQueries {
     "dedup_clusters"      -> QueryDef(clusters _, clustersSql),
     "dedup_exact"         -> QueryDef(exact _, exactSql),
     "dedup_minhash_lsh"   -> QueryDef(minhashLsh _, jaccardSql(3, 0.8)),
-    "dedup_incremental"   -> QueryDef(incremental _, incrementalSql),
+    "dedup_incremental"   -> QueryDef(incremental _, Some(incrementalSql),
+      rebuild(IncBandsTag)(ensureIncStore)),
     "dedup_ngram_jaccard" -> QueryDef(ngramJaccard _, collapsedJaccardSql(4, 0.65)),
     "dedup_survivors"     -> QueryDef(survivors _, survivorsSql),
     "dedup_simhash"       -> QueryDef(simhash _, simhashSql),

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Sidecar, Tables}
+import graft.QueryDef.rebuild
 import graft.functions.TextFunctions._
 import graft.pipeline.Ingest
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -188,25 +189,6 @@ object PipelineQueries {
   private def failed(s: SparkSession, d: String): DataFrame =
     readListing(s, ensureRegistry(s, d), completed = false)
 
-  /** Bench splits (same contract as [[pdfBench]]): `_build` = the
-    * registry table's create + re-upload mutation cycle, forced
-    * fresh; `_probe` = the snapshot listing read. */
-  private def listingBench(completed: Boolean)(s: SparkSession, d: String)
-      : (() => Unit, () => DataFrame) = {
-    var path: String = null
-    val build = () => {
-      Sidecar.drop(Sidecar.dir(RegistryTag, d))
-      path = ensureRegistry(s, d)
-    }
-    (build, () => readListing(s, path, completed))
-  }
-
-  def registeredBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    listingBench(completed = true)(s, d)
-
-  def failedBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    listingBench(completed = false)(s, d)
-
   private def listSql(pred: String): String = s"""
     WITH st AS (SELECT source AS filename, doc_id,
                        ${Ingest.statusOfSql("text")} AS status, n_chars
@@ -266,29 +248,12 @@ object PipelineQueries {
   private def ensureEncPdfBlobs(s: SparkSession, d: String): String =
     ensureBlobs(s, d, EncPdfBlobsTag, mkEncPdf(col("doc_id"), col("text")))
 
-  /** Bench build thunk: force a fresh synthesis so `_build` measures
-    * the same work on every machine (a pre-existing cache would time
-    * a no-op exists() check and make totals machine-state dependent). */
-  private def rebuildBlobs(s: SparkSession, d: String, tag: String,
-      ensure: (SparkSession, String) => String): String = {
-    Sidecar.drop(Sidecar.dir(tag, d))
-    ensure(s, d)
-  }
-
-  def rebuildPdfBlobs(s: SparkSession, d: String): String =
-    rebuildBlobs(s, d, PdfBlobsTag, ensurePdfBlobs)
-
   private def pdfPagesQ(s: SparkSession, d: String): DataFrame = {
     val pdfs = s.read.parquet(ensurePdfBlobs(s, d))
     graft.pipeline.PdfIngest.pages(pdfs, carry = Seq("doc_id"))
       .select(col("doc_id"), col("page_number"), col("page_text"))
       .orderBy(col("doc_id"), col("page_number"))
   }
-
-  /** Bench split: fixture synthesis is corpus preparation (the
-    * reference's blobs already exist), parsing is the pipeline. */
-  def pdfBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    (() => { rebuildPdfBlobs(s, d); () }, () => pdfPagesQ(s, d))
 
   /** ENCRYPTED binary PDFs (half RC4-128, half AES-128/AESV2, standard
     * security handler) through the same parse path — key derivation +
@@ -301,9 +266,6 @@ object PipelineQueries {
       .select(col("doc_id"), col("page_number"), col("page_text"))
       .orderBy(col("doc_id"), col("page_number"))
   }
-
-  def pdfEncBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    (() => { rebuildBlobs(s, d, EncPdfBlobsTag, ensureEncPdfBlobs); () }, () => pdfEncQ(s, d))
 
   private def ensureModPdfBlobs(s: SparkSession, d: String): String =
     ensureBlobs(s, d, ModPdfBlobsTag, mkModPdf(col("doc_id"), col("text")))
@@ -319,9 +281,6 @@ object PipelineQueries {
       .select(col("doc_id"), col("page_number"), col("page_text"))
       .orderBy(col("doc_id"), col("page_number"))
   }
-
-  def pdfModBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    (() => { rebuildBlobs(s, d, ModPdfBlobsTag, ensureModPdfBlobs); () }, () => pdfModQ(s, d))
 
   // --------------------------------------- cross-page chunk stitching
   /** The reference chunks each page separately (Function.java:115-135
@@ -427,19 +386,6 @@ object PipelineQueries {
       .orderBy(col("id"))
   }
 
-  /** Bench split (VERDICT r4 #1): fixture synthesis is corpus
-    * preparation (the reference's blobs already exist in storage), the
-    * parse → chunk → store flow is the pipeline. Same contract as
-    * [[pdfBench]]: `_build` forces a fresh blob synthesis so the
-    * number is machine-state independent; `_probe` times exactly the
-    * stored-blob → store-rows path and is directly comparable to
-    * ingest_pdf_pages_probe (same parse, plus chunk/status/id work).
-    * BENCH_NOTES r5 records why: the conflated r4 number (12.6 s on
-    * the driver vs 2.3-3.1 s on every builder re-run of identical
-    * code) could not be localized without the split. */
-  def pdfStoreBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    (() => { rebuildPdfBlobs(s, d); () }, () => pdfStoreQ(s, d))
-
   private val pdfStoreSql = s"""
     WITH pg AS (
       SELECT doc_id, source, CAST(gs AS BIGINT) AS page_number,
@@ -526,13 +472,19 @@ object PipelineQueries {
     "vs_chunk"           -> QueryDef(chunkQ _, chunkSql),
     "vs_chunk_lang"      -> QueryDef(chunkLangQ _, chunkLangSql),
     "vs_embed"           -> QueryDef(embedQ _, embedSql),
-    "vs_registered_list" -> QueryDef(registered _, listSql("=")),
-    "vs_failed_list"     -> QueryDef(failed _, listSql("<>")),
-    "ingest_pdf_pages"   -> QueryDef(pdfPagesQ _, pdfPagesSql),
-    "ingest_pdf_encrypted" -> QueryDef(pdfEncQ _, pdfPagesSql),
-    "ingest_pdf_modern"  -> QueryDef(pdfModQ _, pdfPagesSql),
+    "vs_registered_list" -> QueryDef(registered _, Some(listSql("=")),
+      rebuild(RegistryTag)(ensureRegistry)),
+    "vs_failed_list"     -> QueryDef(failed _, Some(listSql("<>")),
+      rebuild(RegistryTag)(ensureRegistry)),
+    "ingest_pdf_pages"   -> QueryDef(pdfPagesQ _, Some(pdfPagesSql),
+      rebuild(PdfBlobsTag)(ensurePdfBlobs)),
+    "ingest_pdf_encrypted" -> QueryDef(pdfEncQ _, Some(pdfPagesSql),
+      rebuild(EncPdfBlobsTag)(ensureEncPdfBlobs)),
+    "ingest_pdf_modern"  -> QueryDef(pdfModQ _, Some(pdfPagesSql),
+      rebuild(ModPdfBlobsTag)(ensureModPdfBlobs)),
     "vs_chunk_stitch"    -> QueryDef(chunkStitchQ _, chunkStitchSql),
-    "ingest_pdf_store"   -> QueryDef(pdfStoreQ _, pdfStoreSql),
+    "ingest_pdf_store"   -> QueryDef(pdfStoreQ _, Some(pdfStoreSql),
+      rebuild(PdfBlobsTag)(ensurePdfBlobs)),
     "status_events"      -> QueryDef(statusEventsQ _, statusEventsSql),
     "status_current"     -> QueryDef(statusCurrentQ _, statusCurrentSql),
   )

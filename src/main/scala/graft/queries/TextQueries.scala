@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Sidecar, Tables}
+import graft.QueryDef.rebuild
 import graft.functions.TextFunctions._
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -656,19 +657,6 @@ object TextQueries {
       .orderBy("doc_id")
   }
 
-  def bpeTrainBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val build = () => {
-      Sidecar.drop(Sidecar.dir(BpeTag, d))
-      ensureBpe(s, d); ()
-    }
-    (build, () => bpeTrain(s, d))
-  }
-
-  def bpeApplyBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val build = () => { ensureBpe(s, d); () } // marker-cached after train's build
-    (build, () => bpeApply(s, d))
-  }
-
   /** The apply entry's oracle (r10): GIVEN the persisted merge table
     * — the same "deterministic probe over a persisted artifact"
     * argument as the ANN replay tier — segmentation is the greedy
@@ -741,8 +729,9 @@ object TextQueries {
       "text_tfidf"       -> QueryDef(tfidf _, tfidfSql),
       "text_fingerprint" -> QueryDef(fingerprint _, fingerprintSql),
       "text_bpe_pairs"   -> QueryDef(bpePairs _, bpePairsSql),
-      "text_bpe_train"   -> QueryDef(bpeTrain _, bpeTrainSql),
-      "text_bpe_apply"   -> QueryDef(bpeApply _, bpeApplySql(d)),
+      "text_bpe_train"   -> QueryDef(bpeTrain _, Some(bpeTrainSql), rebuild(BpeTag)(ensureBpe)),
+      "text_bpe_apply"   -> QueryDef(bpeApply _, Some(bpeApplySql(d)),
+        rebuild(BpeTag)(ensureBpe)),
     )
   }
 }

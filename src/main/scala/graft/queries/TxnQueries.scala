@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Sidecar, Tables}
+import graft.QueryDef.rebuild
 import graft.sources.GraftTable
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -67,13 +68,10 @@ object TxnQueries {
     }
   }
 
-  private def readMergeSnapshot(s: SparkSession, path: String): DataFrame =
-    GraftTable.open(s, path).read()
+  private def txnMerge(s: SparkSession, d: String): DataFrame =
+    GraftTable.open(s, mergePath(s, d)).read()
       .select(partCols.map(col): _*)
       .orderBy("p_partkey")
-
-  private def txnMerge(s: SparkSession, d: String): DataFrame =
-    readMergeSnapshot(s, mergePath(s, d))
 
   private val txnMergeSql = s"""
     SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice
@@ -106,13 +104,10 @@ object TxnQueries {
     }
   }
 
-  private def readChanges(s: SparkSession, path: String): DataFrame =
-    GraftTable.open(s, path).changes(1L)
+  private def txnChanges(s: SparkSession, d: String): DataFrame =
+    GraftTable.open(s, changesPath(s, d)).changes(1L)
       .select((partCols :+ "_change_type").map(col): _*)
       .orderBy("_change_type", "p_partkey")
-
-  private def txnChanges(s: SparkSession, d: String): DataFrame =
-    readChanges(s, changesPath(s, d))
 
   private val txnChangesSql = s"""
     SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice,
@@ -130,13 +125,10 @@ object TxnQueries {
     * back — version resolution, checkpoint replay, and snapshot
     * isolation all on the hash-compared path, not just in specs.
     * Shares txn_merge's built table (same dir, same marker). */
-  private def readAtV1(s: SparkSession, path: String): DataFrame =
-    GraftTable.open(s, path).read(atVersion = 1L)
+  private def txnTimetravel(s: SparkSession, d: String): DataFrame =
+    GraftTable.open(s, mergePath(s, d)).read(atVersion = 1L)
       .select(partCols.map(col): _*)
       .orderBy("p_partkey")
-
-  private def txnTimetravel(s: SparkSession, d: String): DataFrame =
-    readAtV1(s, mergePath(s, d))
 
   private val txnTimetravelSql = s"""
     SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice
@@ -165,13 +157,10 @@ object TxnQueries {
     }
   }
 
-  private def readRestored(s: SparkSession, path: String): DataFrame =
-    GraftTable.open(s, path).read()
+  private def txnRestore(s: SparkSession, d: String): DataFrame =
+    GraftTable.open(s, restorePath(s, d)).read()
       .select(partCols.map(col): _*)
       .orderBy("p_partkey")
-
-  private def txnRestore(s: SparkSession, d: String): DataFrame =
-    readRestored(s, restorePath(s, d))
 
   // ------------------------------------------------------- txn_evolve
   /** Schema evolution through the oracle gate: create the table with
@@ -200,13 +189,10 @@ object TxnQueries {
     }
   }
 
-  private def readEvolved(s: SparkSession, path: String): DataFrame =
-    GraftTable.open(s, path).read()
+  private def txnEvolve(s: SparkSession, d: String): DataFrame =
+    GraftTable.open(s, evolvePath(s, d)).read()
       .select((evolveCols :+ "p_discounted").map(col): _*)
       .orderBy("p_partkey")
-
-  private def txnEvolve(s: SparkSession, d: String): DataFrame =
-    readEvolved(s, evolvePath(s, d))
 
   private val txnEvolveSql = s"""
     SELECT p_partkey, p_name, p_retailprice, CAST(NULL AS DOUBLE) AS p_discounted
@@ -253,13 +239,10 @@ object TxnQueries {
     }
   }
 
-  private def readClustered(s: SparkSession, path: String): DataFrame =
-    GraftTable.open(s, path).read()
+  private def txnCluster(s: SparkSession, d: String): DataFrame =
+    GraftTable.open(s, clusterPath(s, d)).read()
       .select(partCols.map(col): _*)
       .orderBy("p_partkey")
-
-  private def txnCluster(s: SparkSession, d: String): DataFrame =
-    readClustered(s, clusterPath(s, d))
 
   private val txnClusterSql = s"""
     SELECT p_partkey, p_name, p_brand, p_type, p_size, p_retailprice
@@ -339,12 +322,9 @@ object TxnQueries {
     }
   }
 
-  private def readSyncedIds(s: SparkSession, path: String): DataFrame =
-    GraftTable.open(s, path).read()
-      .select(col("vec_id")).orderBy("vec_id")
-
   private def txnIndexSync(s: SparkSession, d: String): DataFrame =
-    readSyncedIds(s, indexSyncPath(s, d))
+    GraftTable.open(s, indexSyncPath(s, d)).read()
+      .select(col("vec_id")).orderBy("vec_id")
 
   private val txnIndexSyncSql = s"""
     SELECT vec_id FROM embeddings WHERE vec_id % 7 <> 1
@@ -392,13 +372,10 @@ object TxnQueries {
     }
   }
 
-  private def readClone(s: SparkSession, path: String): DataFrame =
-    GraftTable.open(s, path).read()
+  private def txnClone(s: SparkSession, d: String): DataFrame =
+    GraftTable.open(s, clonePath(s, d)).read()
       .select(partCols.map(col): _*)
       .orderBy("p_partkey")
-
-  private def txnClone(s: SparkSession, d: String): DataFrame =
-    readClone(s, clonePath(s, d))
 
   private val txnCloneSql: String = s"""
     SELECT ${partCols.mkString(", ")}
@@ -432,8 +409,8 @@ object TxnQueries {
     }
   }
 
-  private def readIncrView(s: SparkSession, path: String): DataFrame = {
-    val t = GraftTable.open(s, path)
+  private def txnIncrView(s: SparkSession, d: String): DataFrame = {
+    val t = GraftTable.open(s, incrPath(s, d))
     val D2 = "decimal(18,2)"
     val base = t.read(1L)
       .groupBy(col("o_orderpriority"))
@@ -451,9 +428,6 @@ object TxnQueries {
         sum(col("p")).cast("double").as("total_price"))
       .orderBy(col("o_orderpriority"))
   }
-
-  private def txnIncrView(s: SparkSession, d: String): DataFrame =
-    readIncrView(s, incrPath(s, d))
 
   /** Final content: %5 keys deleted, then the %7 slice upserted with
     * doubled price (re-inserting %35 keys the delete removed). */
@@ -493,93 +467,39 @@ object TxnQueries {
     }
   }
 
-  private def readCompacted(s: SparkSession, path: String): DataFrame =
-    GraftTable.open(s, path).read()
+  private def txnCompact(s: SparkSession, d: String): DataFrame =
+    GraftTable.open(s, compactPath(s, d)).read()
       .select(col("s_suppkey"), col("s_name"), col("s_nationkey"), col("s_acctbal"))
       .orderBy(col("s_suppkey"))
-
-  private def txnCompact(s: SparkSession, d: String): DataFrame =
-    readCompacted(s, compactPath(s, d))
 
   private val txnCompactSql = """
     SELECT s_suppkey, s_name, s_nationkey, s_acctbal
     FROM supplier
     ORDER BY s_suppkey"""
 
-  // ------------------------------------------------------ bench split
-  /** Bench splits (VERDICT r7 "What's wrong" #2): the conflated
-    * entries hid the snapshot-read cost behind the one-shot table
-    * construction + mutation history. `_build` drops the store
-    * first so it is an honest cold build (create + full mutation
-    * history), `_probe` is the read the oracle checks, at the scan
-    * floor. txn_timetravel / txn_stats_agg share txn_merge's table;
-    * their `_build` is the marker-cached ensure (near-zero after
-    * txn_merge_build in the same run — the bench iterates names
-    * sorted, so txn_merge builds first), their probes are the
-    * version-resolved read and the metadata-only aggregate. */
-  private def benchSplit(
-      buildPath: (SparkSession, String) => String,
-      tag: Option[String],
-      read: (SparkSession, String) => DataFrame,
-  )(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    var path: String = null
-    val build = () => {
-      tag.foreach(t => Sidecar.drop(Sidecar.dir(t, d)))
-      path = buildPath(s, d)
-    }
-    (build, () => read(s, path))
-  }
-
-  def mergeBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(mergePath, Some(MergeTag), readMergeSnapshot)(s, d)
-
-  def changesBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(changesPath, Some(ChangesTag), readChanges)(s, d)
-
-  def timetravelBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(mergePath, None, readAtV1)(s, d)
-
-  def statsAggBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(mergePath, None,
-      (s, p) => GraftTable.open(s, p).statsAgg(Seq("p_partkey")))(s, d)
-
-  def statsAutoBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(mergePath, None, (s, _) => txnStatsAuto(s, d))(s, d)
-
-  def clusterBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(clusterPath, Some(ClusterTag), readClustered)(s, d)
-
-  def indexSyncBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(indexSyncPath, Some(IvfSyncTag), readSyncedIds)(s, d)
-
-  def restoreBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(restorePath, Some(RestoreTag), readRestored)(s, d)
-
-  def evolveBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(evolvePath, Some(EvolveTag), readEvolved)(s, d)
-
-  def cloneBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(clonePath, Some(CloneTag), readClone)(s, d)
-
-  def incrViewBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(incrPath, Some(IncrTag), readIncrView)(s, d)
-
-  def compactBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) =
-    benchSplit(compactPath, Some(CompactTag), readCompacted)(s, d)
-
   val defs: Map[String, QueryDef] = Map(
-    "txn_merge"      -> QueryDef(txnMerge _, txnMergeSql),
-    "txn_changes"    -> QueryDef(txnChanges _, txnChangesSql),
-    "txn_timetravel" -> QueryDef(txnTimetravel _, txnTimetravelSql),
-    "txn_restore"    -> QueryDef(txnRestore _, txnTimetravelSql),
-    "txn_evolve"     -> QueryDef(txnEvolve _, txnEvolveSql),
-    "txn_stats_agg"  -> QueryDef(txnStatsAgg _, txnStatsAggSql),
-    "txn_stats_auto" -> QueryDef(txnStatsAuto _, txnStatsAggSql),
-    "txn_cluster"    -> QueryDef(txnCluster _, txnClusterSql),
+    "txn_merge"      -> QueryDef(txnMerge _, Some(txnMergeSql), rebuild(MergeTag)(mergePath)),
+    "txn_changes"    -> QueryDef(txnChanges _, Some(txnChangesSql),
+      rebuild(ChangesTag)(changesPath)),
+    "txn_timetravel" -> QueryDef(txnTimetravel _, Some(txnTimetravelSql),
+      rebuild(MergeTag)(mergePath)),
+    "txn_restore"    -> QueryDef(txnRestore _, Some(txnTimetravelSql),
+      rebuild(RestoreTag)(restorePath)),
+    "txn_evolve"     -> QueryDef(txnEvolve _, Some(txnEvolveSql),
+      rebuild(EvolveTag)(evolvePath)),
+    "txn_stats_agg"  -> QueryDef(txnStatsAgg _, Some(txnStatsAggSql),
+      rebuild(MergeTag)(mergePath)),
+    "txn_stats_auto" -> QueryDef(txnStatsAuto _, Some(txnStatsAggSql),
+      rebuild(MergeTag)(mergePath)),
+    "txn_cluster"    -> QueryDef(txnCluster _, Some(txnClusterSql),
+      rebuild(ClusterTag)(clusterPath)),
     "txn_recluster"  -> QueryDef(txnRecluster _, txnReclusterSql),
-    "txn_index_sync" -> QueryDef(txnIndexSync _, txnIndexSyncSql),
-    "txn_clone"      -> QueryDef(txnClone _, txnCloneSql),
-    "txn_incr_view"  -> QueryDef(txnIncrView _, txnIncrViewSql),
-    "txn_compact"    -> QueryDef(txnCompact _, txnCompactSql),
+    "txn_index_sync" -> QueryDef(txnIndexSync _, Some(txnIndexSyncSql),
+      rebuild(IvfSyncTag)(indexSyncPath)),
+    "txn_clone"      -> QueryDef(txnClone _, Some(txnCloneSql), rebuild(CloneTag)(clonePath)),
+    "txn_incr_view"  -> QueryDef(txnIncrView _, Some(txnIncrViewSql),
+      rebuild(IncrTag)(incrPath)),
+    "txn_compact"    -> QueryDef(txnCompact _, Some(txnCompactSql),
+      rebuild(CompactTag)(compactPath)),
   )
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Sidecar, Tables}
+import graft.QueryDef.rebuild
 import graft.functions.VectorFunctions._
 import graft.operators.{IvfIndex, Knn, LshAnn, PqIndex}
 import graft.plans.{IvfCatalog, IvfProbeRule}
@@ -174,29 +175,6 @@ object VectorQueries {
     PqIndex.search(cands, "vec_id", q, cb, K, rerank = 64)
   }
 
-  def ivfPqBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    var encoded: DataFrame = null
-    var centroids: DataFrame = null
-    var cb: PqIndex.Codebooks = null
-    var q: Array[Double] = null
-    val build = () => {
-      val emb = Tables.embeddings(s, d)
-      val (ix, c) = IvfIndex.buildIndex(
-        emb, "vec_id", "embedding", nlist = IvfNlist, spill = IvfSpill)
-      cb = PqIndex.train(emb, "embedding", dims = 64, m = 16, ksub = 32)
-      encoded = PqIndex.encode(ix.filter(col("vec_id") =!= 0), "embedding", cb)
-        .localCheckpoint()
-      centroids = c
-      q = queryVec(s, d).select(col("qvec").cast("array<double>"))
-        .head.getSeq[Double](0).toArray
-    }
-    val probe = () => PqIndex.search(
-      IvfIndex.probeCandidates(encoded, centroids, queryVec(s, d), "qvec",
-        l2Distance, nprobe = IvfNprobe),
-      "vec_id", q, cb, K, rerank = 64)
-    (build, probe)
-  }
-
   // -------------------------------------------------------- HNSW graph ANN
   /** Graph ANN (pgvector's `USING hnsw` family): partition-local HNSW
     * graphs + exact cross-partition merge ([[graft.operators.Hnsw]]).
@@ -318,24 +296,18 @@ object VectorQueries {
     * end: integer cell ranking (centroid_id tie-break) + integer
     * distances — hash-exact from birth. */
   private def ivfBitKnn(s: SparkSession, d: String): DataFrame = {
+    import org.apache.spark.sql.GraftSqlBridge.{toColumn, toExpression}
     val base = ensureIvfBitStore(s, d)
-    val qWords = ivfBitQuery(s, d)
-    ivfBitProbe(s, base, qWords, ivfBitCells(s, base, qWords))
-  }
-
-  /** The packed sign-bit words of query vector 0. */
-  private def ivfBitQuery(s: SparkSession, d: String): Array[Long] =
-    graft.operators.BinaryQuant.pack(
+    // the packed sign-bit words of query vector 0
+    val qWords = graft.operators.BinaryQuant.pack(
       Tables.embeddings(s, d).filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>"))
         .head.getSeq[Double](0).toArray)
-
-  /** The query's nprobe cells: the nlist bit centroids (driver
-    * metadata, same budget as Hnsw.Centroids) collected and ranked by
-    * (hamming, centroid_id). */
-  private def ivfBitCells(s: SparkSession, base: String, qWords: Array[Long]): Seq[Int] = {
+    // the query's nprobe cells: the nlist bit centroids (driver
+    // metadata, same budget as Hnsw.Centroids) collected and ranked by
+    // (hamming, centroid_id)
     val qBits = graft.operators.Hnsw.expandWords(qWords)
-    s.read.parquet(new java.io.File(base, "centroids").toString)
+    val cells = s.read.parquet(new java.io.File(base, "centroids").toString)
       .select(col("centroid_id"), col("centroid").cast("array<double>"))
       .collect()
       .map { r =>
@@ -346,12 +318,7 @@ object VectorQueries {
         (h, r.getInt(0))
       }
       .sorted.take(IvfBitNprobe).map(_._2).toSeq
-  }
-
-  /** Exact hamming top-k over the `cells` partitions of the store. */
-  private def ivfBitProbe(s: SparkSession, base: String, qWords: Array[Long],
-      cells: Seq[Int]): DataFrame = {
-    import org.apache.spark.sql.GraftSqlBridge.{toColumn, toExpression}
+    // exact hamming top-k over those cells' partitions of the store
     s.read.parquet(new java.io.File(base, "store").toString)
       .filter(col("centroid_id").isin(cells.map(Int.box): _*))
       .select(col("vec_id"),
@@ -387,21 +354,6 @@ object VectorQueries {
     WHERE s.centroid_id IN (SELECT centroid_id FROM probed)
     ORDER BY dist, vec_id
     LIMIT $K"""
-  }
-
-  /** Bench split for the bit IVF: build = k-majority Lloyd + assign +
-    * partitioned write, then the query and its cell ranking (one
-    * centroid collect); probe = the pruned hamming scan. */
-  def ivfBitBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    var base: String = null
-    var qWords: Array[Long] = null
-    var cells: Seq[Int] = null
-    val build = () => {
-      base = ensureIvfBitStore(s, d)
-      qWords = ivfBitQuery(s, d)
-      cells = ivfBitCells(s, base, qWords)
-    }
-    (build, () => ivfBitProbe(s, base, qWords, cells))
   }
 
   // ------------------------------------ sparse HNSW (pgvector sparsevec, r14)
@@ -527,12 +479,6 @@ object VectorQueries {
     ORDER BY dist, doc_id LIMIT $K"""
   }
 
-  /** Bench split for the sparse graphs. */
-  def hnswSparseBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val build = () => { ensureHnswSparseStore(s, d); () }
-    (build, () => hnswSparseKnn(s, d))
-  }
-
   // ------------------- cell-routed sparse HNSW (r15 — VERDICT r14 #1)
   private[graft] val SparseRoutedNlist = 16
   private[graft] val SparseRoutedSpill = 2
@@ -652,41 +598,6 @@ object VectorQueries {
     FROM allres a, gg
     WHERE gg.ids[a.n + 1] IN (SELECT doc_id FROM documents WHERE source = 'src1')
     ORDER BY dist, doc_id LIMIT $K"""
-  }
-
-  /** Bench split for the routed sparse variant: build = cell
-    * assignment + per-cell sparse graphs + persist + dump; probe =
-    * nprobe-pruned sparse beam walk. */
-  def hnswSparseRoutedBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    var graphsP: String = null
-    var q: graft.operators.Hnsw.Query = null
-    val build = () => {
-      graphsP = ensureSparseRoutedGraphs(s, d)
-      val (qi, qv) = graft.functions.SparseVec.queryOf(SparseQueryTerms)
-      q = graft.operators.Hnsw.Sparse(qi, qv)
-    }
-    val probe = () => graft.operators.Hnsw.search(
-      graft.operators.Hnsw.readGraphs(s, graphsP), q, K, ef = HnswEf,
-      route = Some((SparseRouting, SparseRoutedNprobe)))
-    (build, probe)
-  }
-
-  /** Bench split for the bit graphs: build = expand + graph build +
-    * persist + dump; probe = the per-query beam walk + k·P merge. */
-  def hnswBitBench(metric: String)(
-      s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    var graphsP: String = null
-    var q: Array[Double] = null
-    val build = () => {
-      graphsP = ensureHnswBitStore(s, d, metric)._1
-      q = graft.operators.Hnsw.expandWords(graft.operators.BinaryQuant.pack(
-        Tables.embeddings(s, d).filter(col("vec_id") === 0)
-          .select(col("embedding").cast("array<double>"))
-          .head.getSeq[Double](0).toArray))
-    }
-    (build, () => graft.operators.Hnsw.search(
-      graft.operators.Hnsw.readGraphs(s, graphsP), graft.operators.Hnsw.Dense(q), K,
-      ef = HnswEf))
   }
 
   private def hnswBitOracle(d: String, metric: String): String = {
@@ -970,41 +881,6 @@ object VectorQueries {
       route = Some((graft.operators.Hnsw.Centroids.of(s.read.parquet(centP)), RoutedNprobe)))
   }
 
-  /** Bench split for the routed variant: build = train + per-cell
-    * graph construction + persist + the centroid collect; probe =
-    * nprobe-pruned beam walk. */
-  def hnswRoutedBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    var q: graft.operators.Hnsw.Query = null
-    var graphsP: String = null
-    var routing: graft.operators.Hnsw.Routing = null
-    val build = () => {
-      val (gp, centP) = ensureRoutedGraphs(s, d)
-      graphsP = gp
-      routing = graft.operators.Hnsw.Centroids.of(s.read.parquet(centP))
-      q = graft.operators.Hnsw.Dense(queryVec(s, d)
-        .select(col("qvec").cast("array<double>")).head.getSeq[Double](0).toArray)
-    }
-    val probe = () => graft.operators.Hnsw.search(
-      s.read.parquet(graphsP), q, K, ef = HnswEf, route = Some((routing, RoutedNprobe)))
-    (build, probe)
-  }
-
-  /** Bench split: graph construction is the one-time build; the probe
-    * is the per-query beam walk + k·P merge. */
-  def hnswBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    var graphs: DataFrame = null
-    var q: Array[Double] = null
-    val build = () => {
-      graphs = graft.operators.Hnsw.buildPartitioned(
-        corpus(s, d), "vec_id", "embedding",
-        m = HnswM, efC = HnswEfC, parts = 16).localCheckpoint()
-      q = queryVec(s, d).select(col("qvec").cast("array<double>"))
-        .head.getSeq[Double](0).toArray
-    }
-    (build, () => graft.operators.Hnsw.search(graphs, graft.operators.Hnsw.Dense(q), K,
-      ef = HnswEf))
-  }
-
   /** Build-once LSH bucket store: (vec_id, embedding, table_id, sig)
     * — the stored-bucketed layout the operator is designed around (at
     * 100 TB a probe reads single buckets; re-hashing the corpus per
@@ -1167,17 +1043,6 @@ object VectorQueries {
   private def knnJoinQ(s: SparkSession, d: String): DataFrame = {
     val store = s.read.parquet(ensureKjInitStore(s, d))
     Knn.knnJoinFromCells(store, "vec_id", "embedding", l2Distance, KjK)
-  }
-
-  /** Bench split (r10): the cell store is trained once (`_build`,
-    * fresh each bench run), the join itself — init + descent, the
-    * real per-refresh work — is the probe. */
-  def kjBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val build = () => {
-      Sidecar.drop(Sidecar.dir(KjInitTag, d))
-      ensureKjInitStore(s, d); ()
-    }
-    (build, () => knnJoinQ(s, d))
   }
 
   /** The full-join replay (r10): init top-kInternal from the store's
@@ -2347,17 +2212,6 @@ object VectorQueries {
       query, mins, scales, K, rerank = 64)
   }
 
-  /** Bench split for vs_sq_knn: build = train params + persist the
-    * packed sidecar (forced fresh), probe = the two-phase search. */
-  def sqBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    var path: String = null
-    val build = () => {
-      Sidecar.drop(Sidecar.dir(SqTag, d))
-      path = ensureSqStore(s, d)
-    }
-    (build, () => sqKnn(s, d))
-  }
-
   /** Build-once float16-packed store (pgvector `halfvec` analogue):
     * (vec_id, hv binary) — HALF the scan bytes of the float32 column.
     * v2: the query row (vec_id 0) is packed too, so the replay oracle
@@ -2488,25 +2342,6 @@ object VectorQueries {
     ORDER BY dist, vec_id
     LIMIT $K"""
 
-  /** Bench split for vs_bq_knn: build = persist the packed sidecar,
-    * probe = two-phase search (hamming scan + In-pushed re-rank). */
-  def bqBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val emb = Tables.embeddings(s, d)
-    var bqStore: DataFrame = null
-    var query: Array[Double] = null
-    val build = () => {
-      val p = Sidecar.dir("bq_bench", d)
-      graft.operators.BinaryQuant.writeStore(
-        emb.filter(col("vec_id") =!= 0), "vec_id", "embedding", p)
-      bqStore = s.read.parquet(p)
-      query = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head.getSeq[Double](0).toArray
-    }
-    val probe = () => graft.operators.BinaryQuant.search(
-      bqStore, emb.filter(col("vec_id") =!= 0), "vec_id", query, K, rerank = 192)
-    (build, probe)
-  }
-
   /** Build-once PQ store: (vec_id, embedding, codes) + the trained
     * codebooks persisted next to it — the memory-resident serving
     * layout, and what makes the ADC search REPLAYABLE: given the
@@ -2631,17 +2466,6 @@ object VectorQueries {
       .limit(K)
   }
 
-  /** Bench split: `_build` = index train/assign + clustered ACID
-    * table write, forced fresh; `_probe` = the optimizer-rewritten
-    * snapshot knn. */
-  def ivfTxnBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val build = () => {
-      Sidecar.drop(Sidecar.dir(IvfTxnTag, d))
-      ensureTxnStore(s, d); ()
-    }
-    (build, () => ivfTxn(s, d))
-  }
-
   /** The pgvector range shape (`WHERE embedding <-> '[...]' < τ`) over
     * the registered store with NO index call in the query: the
     * optimizer's triangle-inequality rewrite keeps only cells whose
@@ -2670,7 +2494,14 @@ object VectorQueries {
     * approximate (cell recall), like vs_ivf_knn. */
   private def ivfAuto(s: SparkSession, d: String): DataFrame = {
     val (storeP, _) = ensureAutoStore(s, d)
-    autoProbe(s, d, storeP)
+    val q = queryVec(s, d).select(col("qvec").cast("array<double>"))
+      .head.getSeq[Double](0).toArray
+    s.read.parquet(storeP)
+      .filter(col("vec_id") =!= 0)
+      .select(col("vec_id"),
+        graft.functions.VectorDistance.l2(col("embedding"), typedLit(q)).as("dist"))
+      .orderBy(col("dist"), col("vec_id"))
+      .limit(K)
   }
 
   /** IVF-accelerated BATCH ANN over the persisted cell-partitioned
@@ -2688,17 +2519,6 @@ object VectorQueries {
       s.read.parquet(storeP), "vec_id", "embedding",
       s.read.parquet(centP), q, "qid", "qvec", l2Distance, k = 5, nprobe = IvfNprobe,
       excludeSelf = true)
-  }
-
-  private def autoProbe(s: SparkSession, d: String, storeP: String): DataFrame = {
-    val q = queryVec(s, d).select(col("qvec").cast("array<double>"))
-      .head.getSeq[Double](0).toArray
-    s.read.parquet(storeP)
-      .filter(col("vec_id") =!= 0)
-      .select(col("vec_id"),
-        graft.functions.VectorDistance.l2(col("embedding"), typedLit(q)).as("dist"))
-      .orderBy(col("dist"), col("vec_id"))
-      .limit(K)
   }
 
   /** FILTERED auto search (pgvector ≥0.8 iterative-scan shape,
@@ -2740,57 +2560,6 @@ object VectorQueries {
       queryVec(s, d), "qvec", l2Distance, k = K,
       pred = col("vec_id") =!= 0 && col("label") === 3,
       nprobe0 = 1, maxProbe = IvfNlist)._1
-  }
-
-  def ivfAutoBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    var storeP: String = null
-    val build = () => {
-      // force a fresh build so `_build` measures the same work on
-      // every machine — a cache hit would time a no-op (r2 reported
-      // 0.19 s for what is really a ~3 s build)
-      Sidecar.drop(Sidecar.dir(IvfAutoTag, d))
-      storeP = ensureAutoStore(s, d)._1
-    }
-    (build, () => autoProbe(s, d, storeP))
-  }
-
-  // ------------------------------------------------- bench build/probe split
-  /** Bench-only split of the index queries: an index is built once and
-    * probed many times, so timing them together hides probe
-    * regressions behind training cost (VERDICT r1 "What's wrong" #5).
-    * The build thunk materializes the index (localCheckpoint — bench
-    * scope only; persistent serving uses writePartitioned); the probe
-    * thunk then runs against the materialized relation, never
-    * replaying build lineage. */
-  def ivfBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    var indexed: DataFrame = null
-    var centroids: DataFrame = null
-    val build = () => {
-      val (ix, c) = IvfIndex.buildIndex(
-        Tables.embeddings(s, d), "vec_id", "embedding", nlist = 16)
-      indexed = ix.localCheckpoint()
-      centroids = c
-    }
-    val probe = () => IvfIndex.search(
-      indexed.filter(col("vec_id") =!= 0), "vec_id", "embedding",
-      centroids, queryVec(s, d), "qvec", l2Distance, k = K, nprobe = IvfNprobe)
-    (build, probe)
-  }
-
-  def pqBench(s: SparkSession, d: String): (() => Unit, () => DataFrame) = {
-    val emb = Tables.embeddings(s, d)
-    var encoded: DataFrame = null
-    var cb: PqIndex.Codebooks = null
-    var query: Array[Double] = null
-    val build = () => {
-      cb = PqIndex.train(emb, "embedding", dims = 64, m = 16, ksub = 32)
-      encoded = PqIndex.encode(emb.filter(col("vec_id") =!= 0), "embedding", cb)
-        .localCheckpoint()
-      query = emb.filter(col("vec_id") === 0)
-        .select(col("embedding").cast("array<double>")).head.getSeq[Double](0).toArray
-    }
-    val probe = () => PqIndex.search(encoded, "vec_id", query, cb, K, rerank = 192)
-    (build, probe)
   }
 
   // ------------------------------------ deterministic ANN replay oracles
@@ -3184,30 +2953,40 @@ object VectorQueries {
   def defs: Map[String, QueryDef] = {
     val d = graft.OracleEnv.sfDir
     Map(
-    "vs_ivf_auto"     -> QueryDef(ivfAuto _, ivfProbeOracle(d)),
-    "vs_ivf_txn"      -> QueryDef(ivfTxn _, ivfTxnOracle(d)),
+    "vs_ivf_auto"     -> QueryDef(ivfAuto _, Some(ivfProbeOracle(d)),
+      rebuild(IvfAutoTag)(ensureAutoStore)),
+    "vs_ivf_txn"      -> QueryDef(ivfTxn _, Some(ivfTxnOracle(d)),
+      rebuild(IvfTxnTag)(ensureTxnStore)),
     "vs_knn_filtered_auto" -> QueryDef(knnFilteredAuto _, knnFilteredAutoOracle(d)),
     "vs_knn_filtered_iter" -> QueryDef(knnFilteredIter _, knnFilteredIterOracle(d)),
-    "vs_hnsw_knn"     -> QueryDef(hnswKnn _, hnswKnnOracle(d)),
-    "vs_hnsw_routed"  -> QueryDef(hnswRouted _, hnswRoutedOracle(d)),
+    "vs_hnsw_knn"     -> QueryDef(hnswKnn _, Some(hnswKnnOracle(d)),
+      rebuild(HnswFlatTag)(ensureHnswStore)),
+    "vs_hnsw_routed"  -> QueryDef(hnswRouted _, Some(hnswRoutedOracle(d)),
+      rebuild(RoutedTag)(ensureRoutedGraphs)),
     "vs_hnsw_filtered" -> QueryDef(hnswFiltered _, hnswFilteredOracle(d)),
-    "vs_hnsw_bit"     -> QueryDef(
-      (s: SparkSession, dd: String) => hnswBitKnn(s, dd, "hamming"),
-      hnswBitOracle(d, "hamming")),
-    "vs_hnsw_bit_jacc" -> QueryDef(
-      (s: SparkSession, dd: String) => hnswBitKnn(s, dd, "jaccard"),
-      hnswBitOracle(d, "jaccard")),
-    "vs_hnsw_sparse"  -> QueryDef(hnswSparseKnn _, hnswSparseOracle(d)),
-    "vs_hnsw_sparse_routed" -> QueryDef(hnswSparseRouted _, hnswSparseRoutedOracle(d)),
+    "vs_hnsw_bit"     -> QueryDef(hnswBitKnn(_, _, "hamming"),
+      Some(hnswBitOracle(d, "hamming")),
+      rebuild(hnswBitTag("hamming"))(ensureHnswBitStore(_, _, "hamming"))),
+    "vs_hnsw_bit_jacc" -> QueryDef(hnswBitKnn(_, _, "jaccard"),
+      Some(hnswBitOracle(d, "jaccard")),
+      rebuild(hnswBitTag("jaccard"))(ensureHnswBitStore(_, _, "jaccard"))),
+    "vs_hnsw_sparse"  -> QueryDef(hnswSparseKnn _, Some(hnswSparseOracle(d)),
+      rebuild(HnswSparseTag)(ensureHnswSparseStore)),
+    "vs_hnsw_sparse_routed" -> QueryDef(hnswSparseRouted _,
+      Some(hnswSparseRoutedOracle(d)), rebuild(SparseRoutedTag)(ensureSparseRoutedGraphs)),
     "vs_hnsw_sparse_filtered" -> QueryDef(hnswSparseFiltered _, hnswSparseFilteredOracle(d)),
-    "vs_ivf_bit"      -> QueryDef(ivfBitKnn _, ivfBitOracle(d)),
-    "vs_ivfpq_knn"    -> QueryDef(ivfPqKnn _, ivfPqKnnOracle(d)),
+    "vs_ivf_bit"      -> QueryDef(ivfBitKnn _, Some(ivfBitOracle(d)),
+      rebuild(IvfBitTag)(ensureIvfBitStore)),
+    "vs_ivfpq_knn"    -> QueryDef(ivfPqKnn _, Some(ivfPqKnnOracle(d)),
+      rebuild(IvfPqTag)(ensureIvfPqStore)),
     "vs_ivf_batch"    -> QueryDef(ivfBatch _, ivfBatchOracle(d)),
-    "vs_ivf_knn"      -> QueryDef(ivfKnn _, ivfProbeOracle(d)),
+    "vs_ivf_knn"      -> QueryDef(ivfKnn _, Some(ivfProbeOracle(d)),
+      rebuild(IvfAutoTag)(ensureAutoStore)),
     "vs_lsh_knn"      -> QueryDef(lshKnn _, lshKnnOracle(d)),
-    "vs_pq_knn"       -> QueryDef(pqKnn _, pqKnnOracle(d)),
-    "vs_bq_knn"       -> QueryDef(bqKnn _, bqKnnOracle),
-    "vs_sq_knn"       -> QueryDef(sqKnn _, sqKnnOracle(d)),
+    "vs_pq_knn"       -> QueryDef(pqKnn _, Some(pqKnnOracle(d)),
+      rebuild(PqTag)(ensurePqStore)),
+    "vs_bq_knn"       -> QueryDef(bqKnn _, Some(bqKnnOracle), rebuild(BqTag)(ensureBqStore)),
+    "vs_sq_knn"       -> QueryDef(sqKnn _, Some(sqKnnOracle(d)), rebuild(SqTag)(ensureSqStore)),
     "vs_knn_filtered" -> QueryDef(knnFiltered _, knnFilteredSql),
     "vs_hybrid"       -> QueryDef(hybrid _, hybridSql),
     "vs_rerank_mmr"   -> QueryDef(rerankMmr _, rerankMmrSql),
@@ -3224,7 +3003,8 @@ object VectorQueries {
     "emb_drift"       -> QueryDef(drift _, driftSql),
     "emb_pairs"       -> QueryDef(embPairs _, embPairsSql),
     "emb_pairs_blocked" -> QueryDef(embPairsBlocked _, embPairsBlockedOracle(d)),
-    "vs_knn_join"     -> QueryDef(knnJoinQ _, knnJoinSql(d)),
+    "vs_knn_join"     -> QueryDef(knnJoinQ _, Some(knnJoinSql(d)),
+      rebuild(KjInitTag)(ensureKjInitStore)),
     "vs_knn_join_init" -> QueryDef(knnJoinInitQ _, knnJoinInitOracle(d)),
     "vs_knn_l2"       -> QueryDef(knnL2 _, knnOracle(l2Sql)),
     "vs_knn_l1"       -> QueryDef(knnL1 _, knnOracle(l1Sql)),

@@ -69,8 +69,7 @@ class ScalarQuantSpec extends SparkSpec {
   }
 
   test("the SQ8 store holds its params: Sidecar.drop leaves no entry of it behind") {
-    val (build, _) = graft.queries.VectorQueries.sqBench(spark, Sf)
-    build() // drop, then ensure: a freshly built, marked store
+    SparkEntry.all("vs_sq_knn").build.get(spark, Sf) // drop, then ensure: a freshly built, marked store
     val dir = new java.io.File(Sidecar.dir(graft.queries.VectorQueries.SqTag, Sf))
     assert(new java.io.File(dir, Sidecar.Done).isFile, s"$dir not marked done")
     Sidecar.drop(dir.toString)

@@ -8,7 +8,8 @@ contended while they ran, so their times say nothing about the code.
 A dirty entry covers its own row and, for a split entry, its
 "<entry>_build" and "<entry>_probe" rows. This script drops every row
 that is dirty in EITHER arm, and every row that failed (-1) or exists
-in only one arm, before it classifies anything.
+in only one arm, before it classifies anything, and prints the
+names of the failed and one-arm rows.
 
 Each remaining row is classified by NEW/BASE time:
   regressed  NEW > BASE * 1.10 and NEW - BASE > 0.05 s
@@ -91,10 +92,19 @@ def main():
 
     show("regressed", regressed)
     show("improved", improved)
+    only_base, only_new = sorted(set(bq) - set(nq)), sorted(set(nq) - set(bq))
     print(f"dropped: {len(dirty & set(shared))} canary-dirty, {len(failed)} failed, "
-          f"{len(set(bq) ^ set(nq))} in one arm only")
+          f"{len(only_base) + len(only_new)} in one arm only")
     if dirty & set(shared):
         print("  dirty: " + ", ".join(sorted(dirty & set(shared))))
+    if failed:
+        print("  failed: " + ", ".join(
+            f"{r} ({'both' if bq[r] < 0 and nq[r] < 0 else 'base' if bq[r] < 0 else 'new'})"
+            for r in failed))
+    if only_base:
+        print("  base only: " + ", ".join(only_base))
+    if only_new:
+        print("  new only: " + ", ".join(only_new))
     tb, tn = sum(bq[r] for r in clean), sum(nq[r] for r in clean)
     ratio = tn / tb if tb > 0 else float("nan")
     print(f"clean rows: {len(clean)}  total {tb:.3f} -> {tn:.3f} s  x{ratio:.3f}  "
