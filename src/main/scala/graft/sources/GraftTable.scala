@@ -5,10 +5,11 @@ import java.nio.charset.StandardCharsets.UTF_8
 import java.util.UUID
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.execution.datasources.HadoopFsRelation
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 
 /** Per-file metadata carried by the transaction log: the file's name
@@ -71,11 +72,12 @@ final case class FileMeta(
   *
   * Scale shape: the log is KB-scale driver metadata (like the IVF
   * centroid table); all data movement is executor-side parquet jobs.
-  * Per-commit stats cost one aggregation pass over the newly written
-  * files only, grouped by `input_file_name` — never a rescan of the
-  * table. Data skipping prunes the file list on the driver before
-  * the scan plan exists, the same lever that makes a 100 TB table
-  * readable when the predicate touches one day of data. */
+  * Per-commit stats come from the write itself: the write tasks count
+  * rows and keep per-column min/max for each file they write, so an
+  * append is one Spark job and never reads back what it wrote, let
+  * alone the table. Data skipping prunes the file list on the driver
+  * before the scan plan exists, the same lever that makes a 100 TB
+  * table readable when the predicate touches one day of data. */
 final class GraftTable private (
     spark: SparkSession,
     val path: String,
@@ -282,15 +284,15 @@ final class GraftTable private (
     * records, each file's path qualified the way Spark's own listing
     * spells it, with the byte count the log recorded. */
   private def readFiles(metas: Seq[FileMeta],
-      sch: StructType = null): DataFrame =
-    scan(metas.map { m =>
-        val p = new Path(root, m.path).makeQualified(fs.getUri, fs.getWorkingDirectory)
-        new FileStatus(m.bytes, false, 0, 0L, 0L, p)
-      }, Option(sch).getOrElse(schema))
-
-  private def scan(files: Seq[FileStatus], sch: StructType): DataFrame =
+      sch: StructType = null): DataFrame = {
+    val files = metas.map { m =>
+      val p = new Path(root, m.path).makeQualified(fs.getUri, fs.getWorkingDirectory)
+      new FileStatus(m.bytes, false, 0, 0L, 0L, p)
+    }
     spark.baseRelationToDataFrame(HadoopFsRelation(SnapshotFileIndex(files),
-      new StructType(), asNullable(sch), None, new ParquetFileFormat, Map.empty)(spark))
+      new StructType(), asNullable(Option(sch).getOrElse(schema)), None,
+      new ParquetFileFormat, Map.empty)(spark))
+  }
 
   // ------------------------------------------------------ data skipping
 
@@ -320,7 +322,7 @@ final class GraftTable private (
     * verdict stays in. */
   def candidateFiles(pred: Column, atVersion: Long = -1L): Seq[FileMeta] = {
     val sch = schema
-    val tree = org.apache.spark.sql.GraftSqlBridge.foldColumn[Pred](pred)(
+    val tree = GraftSqlBridge.foldColumn[Pred](pred)(
       (n, args) => PFn(n, args), PAttr.apply, PLit.apply, () => POpaque)
     snapshotMetas(atVersion).filter(m => mayMatch(tree, m.stats, sch))
   }
@@ -756,39 +758,34 @@ final class GraftTable private (
   // ----------------------------------------------------------- commit
 
   /** Write `df` as new uniquely-named parquet files under the table
-    * root and return their add-actions. Data lands BEFORE any commit
-    * references it; a crash here leaves unreferenced files for
-    * [[vacuum]], never a torn table. Stats cost one aggregation over
-    * the new files only. */
+    * root and return their add-actions, in one Spark job: the write
+    * tasks count rows and keep min/max per stats column as they write
+    * ([[FileStatsTracker]]), and [[StagingCommitProtocol]] names the
+    * files they committed, so the add list is built with no listing
+    * and no read-back. Files land in this append's own `_staging_`
+    * directory and are renamed into the root once the job succeeds;
+    * zero-row files are left out. Data lands BEFORE any commit
+    * references it; a crash after the renames leaves unreferenced
+    * files for [[vacuum]], never a torn table. The staging directory
+    * is deleted whether the write succeeds or fails. */
   private def stageAdds(df: DataFrame): Seq[FileMeta] = {
     val staging = new Path(root, s"_staging_${UUID.randomUUID()}")
-    df.write.parquet(staging.toString)
-    val files = fs.listStatus(staging).toSeq
-      .filter(st => st.isFile && st.getPath.getName.startsWith("part-"))
-    val bytesOf = files.map(st => st.getPath.getName -> st.getLen).toMap
-    val present = statsCols.filter(df.columns.contains)
-    val staged = scan(files, df.schema)
-    val aggs = count(lit(1)).as("__n") +: present.flatMap(c => Seq(
-      min(col(c)).cast("string").as(s"__min_$c"),
-      max(col(c)).cast("string").as(s"__max_$c")))
-    val statRows = staged.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // one row per new file — driver-bounded
-    val metas = statRows.map { r =>
-      val name = r.getString(0).split('/').last
-      val stats = present.flatMap { c =>
-        val lo = r.getAs[String](s"__min_$c")
-        val hi = r.getAs[String](s"__max_$c")
-        if (lo == null || hi == null) None else Some(c -> (lo, hi))
-      }.toMap
-      FileMeta(name, r.getAs[Long]("__n"), bytesOf.getOrElse(name, 0L), stats)
-    }.toSeq
-    metas.foreach { m =>
-      require(fs.rename(new Path(staging, m.path), new Path(root, m.path)),
-        s"failed to promote staged file ${m.path}")
-    }
-    fs.delete(staging, true)
-    metas
+    try {
+      val committer = new StagingCommitProtocol(staging.toString)
+      val tracker = new FileStatsTracker(df.schema, statsCols.filter(df.columns.contains),
+        spark.conf.get(SQLConf.SESSION_LOCAL_TIMEZONE.key))
+      GraftSqlBridge.writeParquet(df, staging.toString, committer, Seq(tracker))
+      val metas = committer.files.flatMap { case (name, bytes) =>
+        val f = tracker.files.getOrElse(name,
+          sys.error(s"no write stats for staged file $name"))
+        if (f.rows == 0) None else Some(FileMeta(name, f.rows, bytes, f.stats))
+      }
+      metas.foreach { m =>
+        require(fs.rename(new Path(staging, m.path), new Path(root, m.path)),
+          s"failed to promote staged file ${m.path}")
+      }
+      metas
+    } finally { fs.delete(staging, true); () }
   }
 
   /** Blind-append retry loop: bump the version until our rename wins. */

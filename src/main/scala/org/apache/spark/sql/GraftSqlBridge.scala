@@ -44,4 +44,32 @@ object GraftSqlBridge {
   def planToDf(spark: SparkSession,
       plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Write `df` as parquet files under `path` in one Spark job,
+    * through Spark's public file writer (`FileFormatWriter.write`; its
+    * session type and the Dataset's QueryExecution are classic-only)
+    * inside one SQL execution, with the caller's commit protocol and
+    * stats trackers. Spark's own `BasicWriteJobStatsTracker` rides
+    * along, so task output metrics and the SQL write metrics are
+    * reported as for `df.write`. Used by GraftTable appends. */
+  def writeParquet(df: DataFrame, path: String,
+      committer: org.apache.spark.internal.io.FileCommitProtocol,
+      trackers: Seq[execution.datasources.WriteJobStatsTracker]): Unit = {
+    import execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter}
+    val ds = df.asInstanceOf[classic.Dataset[Row]]
+    val session = ds.sparkSession
+    val qe = ds.queryExecution
+    val hadoopConf = session.sessionState.newHadoopConf()
+    val basic = new BasicWriteJobStatsTracker(
+      new org.apache.spark.util.SerializableConfiguration(hadoopConf),
+      BasicWriteJobStatsTracker.metrics)
+    execution.SQLExecution.withNewExecutionId(qe, Some("graftTableWrite")) {
+      val plan = qe.executedPlan
+      FileFormatWriter.write(session, plan,
+        new execution.datasources.parquet.ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(path, Map.empty, plan.output), hadoopConf,
+        Nil, None, basic +: trackers, Map.empty)
+      ()
+    }
+  }
 }

@@ -33,32 +33,6 @@ class SnapshotScanSpec extends SparkSpec {
     t
   }
 
-  /** Spark jobs started while `body` runs. A sentinel job in its own
-    * group flushes the listener: events arrive in posting order, so
-    * once its start is seen every earlier start has been. */
-  private def jobsDuring(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val flush = s"snapshot-scan-flush-${System.nanoTime()}"
-    val seen = new java.util.concurrent.atomic.AtomicInteger
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull == flush)
-          flushed.countDown()
-        else { seen.incrementAndGet(); () }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setJobGroup(flush, "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener never saw the flush job")
-      seen.get
-    } finally sc.removeSparkListener(l)
-  }
-
   private def locations(df: DataFrame): Seq[FileIndex] =
     df.queryExecution.optimizedPlan.collect {
       case LogicalRelation(fs: HadoopFsRelation, _, _, _, _) => fs.location
@@ -73,7 +47,7 @@ class SnapshotScanSpec extends SparkSpec {
     val metas = t.snapshotMetas()
     assert(metas.size == 41)
     var df: DataFrame = null
-    val jobs = jobsDuring { df = t.read(); df.queryExecution.executedPlan; () }
+    val jobs = jobsStarted { df = t.read(); df.queryExecution.executedPlan; () }
     assert(jobs == 0, s"planning a 41-file read started $jobs Spark job(s)")
     val locs = locations(df)
     assert(!locs.exists(_.isInstanceOf[InMemoryFileIndex]), s"Spark listed the files: $locs")

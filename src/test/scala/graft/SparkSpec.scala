@@ -8,6 +8,32 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val Sf = "/root/testdata/sf0.001"
+
+  /** Spark jobs started while `body` runs. A sentinel job in its own
+    * group flushes the listener: events arrive in posting order, so
+    * once its start is seen every earlier start has been. */
+  def jobsStarted(body: => Unit): Int = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val flush = s"listener-flush-${System.nanoTime()}"
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val flushed = new java.util.concurrent.CountDownLatch(1)
+    val l = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull == flush)
+          flushed.countDown()
+        else { seen.incrementAndGet(); () }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(l)
+    try {
+      body
+      sc.setJobGroup(flush, "listener flush")
+      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
+      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener never saw the flush job")
+      seen.get
+    } finally sc.removeSparkListener(l)
+  }
 }
 
 object SparkSpec {

@@ -11,6 +11,14 @@ that is dirty in EITHER arm, and every row that failed (-1) or exists
 in only one arm, before it classifies anything, and prints the
 names of the failed and one-arm rows.
 
+graft.Bench reports a row's warm re-run when its cold run is under
+3.0 s (the row is then in the artifact's "cold" map) and the cold run
+otherwise, with a warm re-run in the "warm" map when cold is under
+6.0 s. A row reported warm in one arm and cold in the other is a mode
+flip: its cold arm's "warm" entry is used when there is one, so warm
+is compared with warm. A flip with no such entry is listed under
+"mode flips" and left out of regressed, improved and the totals.
+
 Each remaining row is classified by NEW/BASE time:
   regressed  NEW > BASE * 1.10 and NEW - BASE > 0.05 s
   improved   NEW < BASE / 1.10 and BASE - NEW > 0.05 s
@@ -66,6 +74,14 @@ def dirty_rows(doc):
     return rows
 
 
+def mode(doc, row):
+    """"warm" or "cold": which run the artifact reports for `row`, or
+    None for an artifact without a "cold" map."""
+    if "cold" not in doc:
+        return None
+    return "warm" if row in doc["cold"] else "cold"
+
+
 def main():
     if len(sys.argv) != 3:
         raise SystemExit("usage: bench_compare.py BASE.json NEW.json")
@@ -75,6 +91,22 @@ def main():
     shared = sorted(set(bq) & set(nq))
     failed = [r for r in shared if bq[r] < 0 or nq[r] < 0]
     clean = [r for r in shared if r not in dirty and r not in failed]
+
+    # like with like: a row reported warm in one arm and cold in the
+    # other takes its cold arm's warm re-run, or is set aside
+    bq, nq = dict(bq), dict(nq)
+    flips = []
+    for r in clean:
+        mb, mn = mode(base, r), mode(new, r)
+        if mb is None or mn is None or mb == mn:
+            continue
+        cold_doc, cold_q = (base, bq) if mb == "cold" else (new, nq)
+        warm = cold_doc.get("warm", {}).get(r)
+        if warm is not None:
+            cold_q[r] = warm
+        else:
+            flips.append(r)
+    clean = [r for r in clean if r not in flips]
 
     regressed, improved = [], []
     for r in clean:
@@ -92,6 +124,11 @@ def main():
 
     show("regressed", regressed)
     show("improved", improved)
+    if flips:
+        print(f"mode flips, left out ({len(flips)}):")
+        for r in flips:
+            print(f"  {r:40s} {bq[r]:9.3f} ({mode(base, r)}) -> "
+                  f"{nq[r]:9.3f} ({mode(new, r)}), no warm re-run in the cold arm")
     only_base, only_new = sorted(set(bq) - set(nq)), sorted(set(nq) - set(bq))
     print(f"dropped: {len(dirty & set(shared))} canary-dirty, {len(failed)} failed, "
           f"{len(only_base) + len(only_new)} in one arm only")
