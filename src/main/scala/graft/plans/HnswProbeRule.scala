@@ -30,8 +30,8 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * REWRITE TIME, on the driver, with no Spark job per query: the
   * store's `(part_id, graph)` blobs are collected once into a driver
   * memo ([[graft.operators.Hnsw.storeBlobs]]) and each probe walks
-  * them through [[graft.operators.Hnsw.walkLocal]] — the one
-  * driver-side walk, shared with flat serving
+  * them through [[graft.operators.Hnsw.walkLocal]] — the one walk
+  * executor, shared with `Hnsw.search`/`searchBatch` and serving
   * ([[graft.streaming.KnnServing.serveHnsw]]) — taking every parsed
   * graph from the bounded [[graft.operators.Hnsw.WalkCache]]:
   * pgvector's parse-into-shared_buffers-once, walk-in-the-backend
@@ -415,8 +415,8 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     }
 
   /** The rewrite-time probe: beam-walk every partition graph on the
-    * driver through [[graft.operators.Hnsw.walkLocal]], the walk flat
-    * serving shares — blobs from the driver memo
+    * driver through [[graft.operators.Hnsw.walkLocal]], the walk every
+    * search and serving path shares — blobs from the driver memo
     * ([[graft.operators.Hnsw.storeBlobs]]), each graph parsed through
     * the shared WalkCache, graphs walked in parallel — and return the
     * union of per-graph top-`fetch` candidates as (part_id, id,

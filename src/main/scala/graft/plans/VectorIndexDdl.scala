@@ -32,10 +32,13 @@ import scala.collection.concurrent.TrieMap
   *    original columns plus the clustering column `centroid_id` (the
   *    Spark analogue of a physically clustered table).
   *  - `hnsw` builds the partitioned graphs, persists them, and
-  *    registers them in [[HnswSqlCatalog]] for the serving surface
-  *    ([[graft.streaming.KnnServing.serveHnsw]] /
-  *    [[graft.operators.Hnsw.search]]); graph stores are not row
-  *    tables, so the table binding is left untouched.
+  *    registers them in [[HnswSqlCatalog]], where [[HnswProbeRule]]
+  *    finds them for the verbatim `ORDER BY … LIMIT k` SQL; the same
+  *    store, read with [[graft.operators.Hnsw.readGraphs]], serves
+  *    [[graft.operators.Hnsw.search]] and
+  *    [[graft.streaming.KnnServing.serveHnsw]], which walk it on the
+  *    driver as the probe does. Graph stores are not row tables, so
+  *    the table binding is left untouched.
   *  - pgvector option names are honored (`lists`, `m`,
   *    `ef_construction`); engine extensions: `probes` (pgvector sets
   *    this per-session via `SET ivfflat.probes`; default 1 like

@@ -163,11 +163,13 @@ object KnnServing {
     * create-env-en.sh only runs CREATE EXTENSION vector, so its own
     * table seq-scans; this is the production-indexed shape of that
     * flow, not a claim about the reference's executed plan.) Per
-    * batch: one [[graft.operators
-    * .Hnsw.searchBatch]] over the persisted partition graphs (P graph
-    * loads + |batch|·P beam walks — corpus-row-count INDEPENDENT),
-    * then the same bounded doc fetch + summarize as
-    * [[summarizeBatch]]. With `fetchDocs` backed by a range-clustered
+    * batch: one [[graft.operators.Hnsw.searchBatch]] over the
+    * partition graphs, fetched to the driver (a readGraphs store from
+    * the driver memo, any other frame by one collect) and walked there
+    * (P graph loads through the WalkCache + |batch|·P beam walks —
+    * corpus-row-count INDEPENDENT; the hits are a local frame), then the same
+    * bounded doc fetch + summarize as [[summarizeBatch]]. With
+    * `fetchDocs` backed by a range-clustered
     * [[graft.sources.GraftTable]] (`ids => table.readWhere(col(id)
     * .isin(ids: _*))`) the doc fetch stat-prunes to the files holding
     * the hits — true point reads; end-to-end per-batch cost is then
@@ -186,7 +188,7 @@ object KnnServing {
     val qs = collectQueries(batch, qIdCol, qVecCol, maxBatch, "summarizeIndexedBatch")
     val hits = graft.operators.Hnsw.searchBatch(graphs, qs, k, ef)
       .withColumnRenamed("qid", qIdCol)
-    // k·|batch| rows by construction of searchBatch — driver-bounded
+    // ≤ k·|batch| rows of a local frame: no Spark job
     val hitRows = hits.collect()
     summarizeHits(spark, hitRows, hits.schema, fetchDocs,
       qIdCol, "vec_id", docIdCol, textCol, terms, m, windowTokens)
@@ -259,30 +261,29 @@ object KnnServing {
     * ([[graft.operators.Hnsw.sparseColumn]], r14) for term queries
     * over sparse graphs — the lexical/SPLADE retrieval serving shape.
     *
-    * Per micro-batch, one bounded collect of the queries is the ONLY
-    * Spark job (a batch that collects none is skipped). The flat
-    * layout is then answered on the driver
-    * ([[graft.operators.Hnsw.searchBatchLocal]]): every partition
-    * graph walks every query, graphs in parallel over the WalkCache
-    * through the walk the SQL probe uses, and each query's top-k is
-    * merged in Spark's (dist, vec_id) order — the rows and row order
-    * of [[graft.operators.Hnsw.searchBatch]], as a local frame. The
-    * blobs are held on the driver ([[graft.operators.Hnsw
-    * .blobSource]]): a plain [[graft.operators.Hnsw.readGraphs]] frame
-    * is re-listed per batch and re-read only when the store changed;
-    * any other frame is collected once for the life of the query. So
-    * per-batch cost is |batch|·P beam walks, with no graph load after
-    * the first batch, independent of corpus row count.
+    * Per micro-batch, one bounded collect of the queries (a batch that
+    * collects none is skipped), then [[graft.operators.Hnsw
+    * .searchBatch]] on the driver through one searcher made for the
+    * stream: each graph walks the queries routed to it, graphs in
+    * parallel over the WalkCache through the walk the SQL probe uses,
+    * and each query's top-k is merged in Spark's (dist, vec_id) order,
+    * as a local frame. A flat store's blobs are held on the driver
+    * ([[graft.operators.Hnsw.blobSource]]): a plain
+    * [[graft.operators.Hnsw.readGraphs]] frame is re-listed per batch
+    * and re-read only when the store changed; any other frame is
+    * collected once for the life of the query. So a flat batch is one
+    * Spark job and |batch|·P beam walks, with no graph load after the
+    * first batch, independent of corpus row count.
     *
     * `route` = (routing, nprobe) serves a cell-routed store
     * ([[graft.operators.Hnsw.buildCellRouted]]; r15 — closes VERDICT
-    * r14's flat-sparse P-growth) with a second job per batch, on the
-    * executors, since a routed store may outgrow the driver
-    * ([[graft.operators.Hnsw.searchBatch]]): each query walks only its
-    * nprobe cells' graphs and each graph in the batch's probed UNION
-    * loads once, so per-batch cost is ≤ min(nlist, |batch|·nprobe)
-    * graph loads instead of all P partition graphs; P grows with the
-    * corpus, nprobe does not. `nprobe <= 0` resolves to ⌈√nlist⌉
+    * r14's flat-sparse P-growth): each batch collects only the graphs
+    * of its probed UNION, one more Spark job, and each query walks
+    * only its nprobe cells' graphs, so per-batch cost is
+    * ≤ min(nlist, |batch|·nprobe) graph loads instead of all P
+    * partition graphs, and driver memory grows with the probed cells,
+    * not with the store; P grows with the corpus, nprobe does not.
+    * `nprobe <= 0` resolves to ⌈√nlist⌉
     * ([[graft.operators.Hnsw.resolveNprobe]]) so recall tracks the
     * cell count (r17 — pgvector's probes-vs-lists guidance). */
   def serveHnsw(
@@ -292,13 +293,7 @@ object KnnServing {
       maxBatch: Int = 65536,
       route: Option[(graft.operators.Hnsw.Routing, Int)] = None)(
       writeBatch: (DataFrame, Long) => Unit): StreamingQuery = {
-    import graft.operators.Hnsw
-    val answer: Seq[(Long, Hnsw.Query)] => DataFrame = route match {
-      case None =>
-        val blobs = Hnsw.blobSource(graphs)
-        qs => Hnsw.searchBatchLocal(graphs.sparkSession, blobs(), qs, k, ef)
-      case Some(_) => qs => Hnsw.searchBatch(graphs, qs, k, ef, route)
-    }
+    val answer = graft.operators.Hnsw.batchSearcher(graphs, k, ef, route)
     everyBatch(queries) { (batch, batchId) =>
       val qs = collectQueries(batch, qIdCol, qVecCol, maxBatch, "serveHnsw")
       if (qs.nonEmpty) writeBatch(answer(qs).withColumnRenamed("qid", qIdCol), batchId)

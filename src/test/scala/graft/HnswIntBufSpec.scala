@@ -133,7 +133,7 @@ class HnswIntBufSpec extends AnyFunSuite {
     assert(errs.isEmpty, errs.toArray.mkString("; "))
   }
 
-  test("routed batch single-exchange dedup keeps dropDuplicates semantics") {
+  test("routed batch merge keeps dropDuplicates semantics") {
     val spark = SparkSpec.session
     import spark.implicits._
     // a corpus with guaranteed spill copies: few cells, spill 2
@@ -150,7 +150,7 @@ class HnswIntBufSpec extends AnyFunSuite {
       qs.map { case (qid, qi, qv) => (qid, Hnsw.Sparse(qi, qv)) }, k = 5, ef = 64,
       route = Some((Hnsw.TermMass(nlist), 3)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-    // reference: the dropDuplicates + row_number shape this replaced
+    // reference: the Spark-side dropDuplicates + row_number shape
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col("qid")).orderBy(col("dist"), col("vec_id"))
     val cells = qs.map { case (qid, qi, qv) =>
@@ -174,7 +174,7 @@ class HnswIntBufSpec extends AnyFunSuite {
       .orderBy(col("qid"), col("dist"), col("vec_id"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     assert(got.toSeq == raw.toSeq,
-      "single-exchange dedup+rank diverged from dropDuplicates + row_number")
+      "the driver-side merge diverged from dropDuplicates + row_number")
     // and at least one true spill duplicate was exercised by the fixture
     val dupProbe = graphs.select(col("graph")).as[Array[Byte]].collect()
       .flatMap(b => Hnsw.deser(b).ids)

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 
 /** The cell-routed graph layout's two contracts (VERDICT r6 #5):
   * (1) a query deserializes AT MOST nprobe graphs — measured by an
-  * accumulator around the actual deser call, and the cell filter is
-  * pushed into the parquet scan so un-probed blobs are never read;
+  * accumulator around the actual deser call, and the blob fetch reads
+  * only the probed cells' rows (task input records), so un-probed
+  * blobs are never read;
   * (2) recall survives the routing (the RecallGateSpec floor holds
   * the full-query gate; here a structural check that full probe
   * equals the flat layout's answer). */
@@ -22,7 +23,9 @@ class HnswRoutedSpec extends SparkSpec {
     val centroids = IvfIndex.trainCentroids(emb, "vec_id", "embedding", nlist = 8, iters = 2)
     val graphs = Hnsw.buildCellRouted(corpus, "vec_id", "embedding",
       Hnsw.Centroids.of(centroids), spill = 2)
-    Hnsw.writeGraphs(graphs, s"$dir/graphs")
+    // the routed stores' writer: one cell per row group here, so a
+    // probe's fetch can be bounded by the probed cells' blob count
+    Hnsw.writeGraphsClustered(graphs, s"$dir/graphs", buckets = 8)
     centroids.write.parquet(s"$dir/cent")
     (s"$dir/graphs", s"$dir/cent")
   }
@@ -30,14 +33,21 @@ class HnswRoutedSpec extends SparkSpec {
   test("routed search deserializes ≤ nprobe graphs; cell filter pushes into the scan") {
     val (gp, cp) = store
     val graphs = spark.read.parquet(gp)
-    val cents = spark.read.parquet(cp)
+    val routing = Hnsw.Centroids.of(spark.read.parquet(cp))
+    val q = Hnsw.Dense(query) // the query's own read stays out of the count
     val counter = spark.sparkContext.longAccumulator("graph-deser")
-    val result = Hnsw.search(graphs, Hnsw.Dense(query), k = 10,
-      ef = 96, route = Some((Hnsw.Centroids.of(cents), 3)), deserCounter = Some(counter))
-    val plan = result.queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters") && plan.contains("In(part_id"),
-      s"cell routing must prune the blob scan itself:\n$plan")
-    val rows = result.collect()
+    var rows: Array[org.apache.spark.sql.Row] = null
+    val read = recordsRead {
+      rows = Hnsw.search(graphs, q, k = 10,
+        ef = 96, route = Some((routing, 3)), deserCounter = Some(counter)).collect()
+    }
+    val probedBlobs = graphs.filter(col("part_id").isin(routing.cells(q, 3): _*))
+      .count()
+    val flatRead = recordsRead { graphs.select(col("part_id"), col("graph")).collect(); () }
+    assert(flatRead == graphs.count(), s"the listener saw $flatRead records of a full read")
+    assert(read <= probedBlobs && read <= flatRead,
+      s"routed fetch read $read blob records; the probed cells hold $probedBlobs " +
+        s"of the store's $flatRead — routing is not pruning the scan")
     assert(rows.length == 10)
     assert(counter.value <= 3,
       s"walked ${counter.value} graphs for nprobe=3 — routing is not pruning")
@@ -136,13 +146,18 @@ class HnswRoutedSpec extends SparkSpec {
     val files = Seq("src/main/scala/graft/operators/Hnsw.scala",
       "src/main/scala/graft/streaming/KnnServing.scala").map(new java.io.File(_))
     assert(files.forall(_.isFile), files)
-    val twin = """def\s+(\w+Sparse|rankCells\w*)\b""".r
+    // a Spark-side walk is a flatMap/mapPartitions closure that reaches
+    // the walk before its first closing brace (the oracle dump's
+    // flatMap parses with `deser` and walks nothing)
+    val banned = ("""def\s+(\w+Sparse|rankCells\w*|walkEach|walkBatch)\b|searchBatchLocal|""" +
+      """\.(flatMap|mapPartitions\w*)\s*\{[^}]*\b(walk|deserCached|searchKnn)\(""").r
     val hits = for {
       f <- files
-      (line, n) <- java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String])
-        .zipWithIndex
-      if twin.findFirstIn(line).isDefined
-    } yield s"${f.getName}:${n + 1}: ${line.trim}"
-    assert(hits.isEmpty, "dense/sparse routing twins are back:\n" + hits.mkString("\n"))
+      src = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+      m <- banned.findAllMatchIn(src)
+    } yield s"${f.getName}:${src.take(m.start).count(_ == '\n') + 1}: " +
+      m.matched.linesIterator.next()
+    assert(hits.isEmpty,
+      "a routing twin or a second walk executor is back:\n" + hits.mkString("\n"))
   }
 }

@@ -5,11 +5,13 @@ import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
-/** Flat `serveHnsw` answered on the driver: one Spark job per
-  * micro-batch, blobs loaded once and never stale, rows bit-identical
-  * to the executor batch search; and the two walk-state changes under
-  * it — per-walk visited marks (concurrent walkers on one cached
-  * graph) and the WalkCache identity memo. */
+/** `serveHnsw` answered on the driver: one Spark job per flat
+  * single-partition micro-batch (two over several input partitions),
+  * and one more for a routed store's probed blobs; blobs loaded once
+  * and never stale; rows bit-identical to `searchBatch` and, routed,
+  * to per-query `search`; and the two walk-state changes under it —
+  * per-walk visited marks (concurrent walkers on one cached graph)
+  * and the WalkCache identity memo. */
 class ServeDriverSpec extends SparkSpec {
 
   private lazy val emb = Tables.embeddings(spark, Sf)
@@ -52,32 +54,18 @@ class ServeDriverSpec extends SparkSpec {
       k, ef)
 
   /** (job group, micro-batch id) of every Spark job started while
-    * `body` runs. A sentinel job in its own group flushes the listener:
-    * events arrive in posting order, so once its start is seen every
-    * earlier start has been. */
+    * `body` runs. */
   private def jobsDuring(body: => Unit): Seq[(String, String)] = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-    val flush = s"serve-driver-flush-${System.nanoTime()}"
     val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]
-    val flushed = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit = {
+    listening {
+      case e: org.apache.spark.scheduler.SparkListenerJobStart =>
         val p = Option(e.properties)
-        val group = p.map(_.getProperty("spark.jobGroup.id")).orNull
-        if (group == flush) flushed.countDown()
-        else seen.add((group, p.map(_.getProperty("streaming.sql.batchId")).orNull))
-      }
-    }
-    val sc = spark.sparkContext
-    sc.addSparkListener(l)
-    try {
-      body
-      sc.setJobGroup(flush, "listener flush")
-      try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
-      assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
-        "listener never saw the flush job")
-      scala.jdk.CollectionConverters.IterableHasAsScala(seen).asScala.toSeq
-    } finally sc.removeSparkListener(l)
+        seen.add((p.map(_.getProperty("spark.jobGroup.id")).orNull,
+          p.map(_.getProperty("streaming.sql.batchId")).orNull))
+        ()
+      case _ => ()
+    }(body)
+    scala.jdk.CollectionConverters.IterableHasAsScala(seen).asScala.toSeq
   }
 
   test("flat serveHnsw runs one Spark job per micro-batch and reads the graphs once") {
@@ -100,6 +88,79 @@ class ServeDriverSpec extends SparkSpec {
         assert(mine.get(b.toString).contains(1), s"batch $b jobs: $mine")
       assert(s.batches.forall(_._2.size == 9))
     } finally s.query.stop()
+  }
+
+  test("a micro-batch spread over several input partitions collects its queries in two jobs") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val dir = tmpDir("parts")
+    Hnsw.writeGraphs(Hnsw.buildPartitioned(emb, "vec_id", "embedding", parts = 4), dir)
+    val graphs = Hnsw.readGraphs(spark, dir)
+    val input = MemoryStream[(Long, Seq[Double])](4) // rows round-robin over 4 partitions
+    val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Row])]
+    val q = graft.streaming.KnnServing.serveHnsw(
+      input.toDF().toDF("qid", "qvec"), graphs, "qid", "qvec", k = 3) { (b, id) =>
+      batches += ((id, b.collect().toSeq))
+    }
+    try {
+      val fed = (0 until 3).map(b => denseQueries((0L until 8L), 1000L * (b + 1)))
+      val jobs = jobsDuring {
+        fed.foreach { qs => input.addData(qs); q.processAllAvailable() }
+      }
+      val mine = jobs.filter(_._1 == q.runId.toString)
+        .groupBy(_._2).map { case (b, js) => b -> js.size }
+      assert(batches.map(_._1) == (0L until 3L))
+      // the query collect is limit(maxBatch + 1).collect(): one round
+      // over the first partition, one more over the other three; batch
+      // 0 also reads the graphs once
+      assert(mine.get("0").contains(3), s"first batch jobs: $mine")
+      for (b <- 1 until 3) assert(mine.get(b.toString).contains(2), s"batch $b jobs: $mine")
+      for ((qs, (_, rows)) <- fed.zip(batches))
+        assert(bits(rows) == bits(direct(graphs, qs, 3, 64).collect()))
+    } finally q.stop()
+  }
+
+  test("routed serveHnsw runs at most one Spark job beyond the query collect; rows equal per-query search") {
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    import spark.implicits._
+    val tf = graft.queries.VectorQueries.sparseTf(spark, Sf).localCheckpoint()
+    val dir = tmpDir("routed")
+    val routing: Hnsw.Routing = Hnsw.TermMass(8)
+    Hnsw.writeGraphs(Hnsw.buildCellRouted(tf.withColumn("sv", Hnsw.sparseColumn("sidx", "sval")),
+      "doc_id", "sv", routing, spill = 2, m = 8, efC = 32, metric = "cosine"), dir)
+    val graphs = Hnsw.readGraphs(spark, dir)
+    val route = Some((routing, 3))
+    val docs = tf.orderBy(col("doc_id")).limit(9).select(col("doc_id"), col("sidx"), col("sval"))
+      .collect().toSeq.map(r => (r.getLong(0), r.getSeq[Long](1), r.getSeq[Double](2)))
+    val input = MemoryStream[(Long, Seq[Long], Seq[Double])]
+    val batches = scala.collection.mutable.ArrayBuffer.empty[(Long, Seq[Row])]
+    val q = graft.streaming.KnnServing.serveHnsw(
+      input.toDF().toDF("qid", "qi", "qv")
+        .select(col("qid"), Hnsw.sparseColumn("qi", "qv").as("q")),
+      graphs, "qid", "q", k = 4, ef = 48, route = route) { (b, id) =>
+      batches += ((id, b.collect().toSeq))
+    }
+    try {
+      val fed = docs.grouped(3).toSeq.zipWithIndex.map { case (g, b) =>
+        g.map { case (id, qi, qv) => (100L * (b + 1) + id, qi, qv) }
+      }
+      val jobs = jobsDuring {
+        fed.foreach { qs => input.addData(qs); q.processAllAvailable() }
+      }
+      val mine = jobs.filter(_._1 == q.runId.toString)
+        .groupBy(_._2).map { case (b, js) => b -> js.size }
+      assert(batches.map(_._1) == (0L until 3L))
+      // the query collect, then one collect of the batch's probed blobs
+      for (b <- 0 until 3)
+        assert(mine.get(b.toString).exists(_ <= 2), s"batch $b jobs: $mine")
+      for ((qs, (_, rows)) <- fed.zip(batches); (qid, qi, qv) <- qs) {
+        val single = Hnsw.search(graphs, Hnsw.Sparse(qi.toArray, qv.toArray),
+          k = 4, ef = 48, route = route).collect()
+          .map(r => (qid, r.getLong(0), java.lang.Double.doubleToRawLongBits(r.getDouble(1))))
+        assert(single.nonEmpty && bits(rows.filter(_.getLong(0) == qid)) == single.toSeq,
+          s"served rows of query $qid diverged from per-query search")
+      }
+    } finally q.stop()
   }
 
   test("flat serveHnsw over readGraphs answers from an overwritten store on the next batch") {

@@ -9,19 +9,22 @@ trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
   val Sf = "/root/testdata/sf0.001"
 
-  /** Spark jobs started while `body` runs. A sentinel job in its own
-    * group flushes the listener: events arrive in posting order, so
-    * once its start is seen every earlier start has been. */
-  def jobsStarted(body: => Unit): Int = {
-    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+  /** Every listener event posted while `body` runs goes to `handle`.
+    * A sentinel job in its own group flushes the listener: events
+    * arrive in posting order, so once its start is seen every earlier
+    * event has been (a task's end is posted before its job returns). */
+  def listening(handle: org.apache.spark.scheduler.SparkListenerEvent => Unit)(
+      body: => Unit): Unit = {
+    import org.apache.spark.scheduler.SparkListenerJobStart
     val flush = s"listener-flush-${System.nanoTime()}"
-    val seen = new java.util.concurrent.atomic.AtomicInteger
     val flushed = new java.util.concurrent.CountDownLatch(1)
-    val l = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull == flush)
+    val l = new org.apache.spark.SparkFirehoseListener {
+      override def onEvent(e: org.apache.spark.scheduler.SparkListenerEvent): Unit = e match {
+        case j: SparkListenerJobStart
+            if Option(j.properties).map(_.getProperty("spark.jobGroup.id")).orNull == flush =>
           flushed.countDown()
-        else { seen.incrementAndGet(); () }
+        case _ => if (flushed.getCount > 0) handle(e)
+      }
     }
     val sc = spark.sparkContext
     sc.addSparkListener(l)
@@ -31,8 +34,28 @@ trait SparkSpec extends AnyFunSuite {
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
       assert(flushed.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "listener never saw the flush job")
-      seen.get
     } finally sc.removeSparkListener(l)
+  }
+
+  /** Spark jobs started while `body` runs. */
+  def jobsStarted(body: => Unit): Int = {
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    listening {
+      case _: org.apache.spark.scheduler.SparkListenerJobStart => seen.incrementAndGet(); ()
+      case _ => ()
+    }(body)
+    seen.get
+  }
+
+  /** Input records (file scan rows) read by the tasks `body` runs. */
+  def recordsRead(body: => Unit): Long = {
+    val seen = new java.util.concurrent.atomic.AtomicLong
+    listening {
+      case t: org.apache.spark.scheduler.SparkListenerTaskEnd if t.taskMetrics != null =>
+        seen.addAndGet(t.taskMetrics.inputMetrics.recordsRead); ()
+      case _ => ()
+    }(body)
+    seen.get
   }
 }
 

@@ -15,7 +15,10 @@ The output keeps the artifact shape plus:
 
 "queries" takes the per-entry minimum — contention hits different
 entries in different runs, which is exactly why min-of-totals (or
-picking the single best run) under-corrects. "value" is recomputed
+picking the single best run) under-corrects. A row's "cold" and "warm"
+entries (graft.Bench's mode maps: a row in "cold" reports its warm
+re-run) come from the run its minimum came from, so a merged row's
+mode is the mode of its time. "value" is recomputed
 as the sum of the merged per-entry minima. "calib" takes the min
 (the box's best observed speed). Top-level "contended" and
 "io_pressured" are true only if EVERY run tripped them — one clean
@@ -54,8 +57,10 @@ def main():
     if len({r.get("sf") for r in runs}) != 1:
         raise SystemExit("sf differs across runs")
 
-    merged_q = {k: round(min(r["queries"][k] for r in runs), 3)
-                for k in sorted(keysets[0])}
+    # the run each row's minimum came from (the first on a tie)
+    best = {k: min(runs, key=lambda r: r["queries"][k])
+            for k in sorted(keysets[0])}
+    merged_q = {k: round(r["queries"][k], 3) for k, r in best.items()}
 
     per_run_fields = ["value", "canary_med", "canary_max", "contended",
                       "dirty_kb", "io_probe", "io_probes", "io_floor",
@@ -64,6 +69,11 @@ def main():
 
     out = dict(runs[0])  # carry sf/subset/only/etc. from run 1
     out["queries"] = merged_q
+    for mode in ("cold", "warm"):
+        out.pop(mode, None)
+        if any(mode in r for r in runs):
+            out[mode] = {k: r[mode][k] for k, r in best.items()
+                         if k in r.get(mode, {})}
     out["value"] = round(sum(merged_q.values()), 3)
     out["runs"] = len(runs)
     out["basis"] = f"per-entry min across {len(runs)} runs"
