@@ -316,5 +316,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // sparse struct swap the dense kernel for SparseStructDistExpr
     // post-resolution ([[graft.plans.SparseColumnRule]])
     e.injectResolutionRule(_ => new graft.plans.SparseColumnRule)
+    // plans the hnsw-served top-k ([[graft.plans.HnswProbeRule]])
+    e.injectPlannerStrategy(_ => graft.plans.HnswTopKStrategy)
   }
 }

@@ -4,7 +4,7 @@ import graft.functions.{VectorDistance, VectorDistanceExpr}
 import graft.operators.Hnsw.{Dense, Query, Sparse}
 import graft.plans.ProbeMatch.{literalVector, resolveThroughProjects, resolveToAttribute}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, In, Literal, UnaryMinus}
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression, In, InSet, Literal, UnaryMinus}
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, GlobalLimit, LogicalPlan, Sort}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -22,29 +22,45 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * records the indexed table's file-source root paths + its id column
   * in [[HnswSqlCatalog]] (the hnsw build does NOT rebind the table —
   * graph blobs are not row tables). This rule matches
-  * GlobalLimit▸LocalLimit▸Sort whose leading ASCENDING key resolves to
-  * a [[VectorDistanceExpr]] between the registered embedding column
-  * and a LITERAL query vector, with the sort's metric equal to the
-  * index opclass metric (a pgvector `vector_l2_ops` index serves only
-  * `<->` — same rule here). On match it beam-walks the graph store AT
-  * REWRITE TIME, on the driver, with no Spark job per query: the
-  * store's `(part_id, graph)` blobs are collected once into a driver
-  * memo ([[graft.operators.Hnsw.storeBlobs]]) and each probe walks
-  * them through [[graft.operators.Hnsw.walkLocal]] — the one walk
-  * executor, shared with `Hnsw.search`/`searchBatch` and serving
+  * GlobalLimit▸LocalLimit▸[Project]▸Sort whose leading ASCENDING key
+  * resolves to a [[VectorDistanceExpr]] between the registered
+  * embedding column and a LITERAL query vector, with the sort's metric
+  * equal to the index opclass metric (a pgvector `vector_l2_ops` index
+  * serves only `<->` — same rule here). On match it beam-walks the
+  * graph store AT REWRITE TIME, on the driver, with no Spark job per
+  * query: the store's `(part_id, graph)` blobs are collected once into
+  * a driver memo ([[graft.operators.Hnsw.storeBlobs]]) and each probe
+  * walks them through [[graft.operators.Hnsw.walkLocal]] — the one
+  * walk executor, shared with `Hnsw.search`/`searchBatch` and serving
   * ([[graft.streaming.KnnServing.serveHnsw]]) — taking every parsed
   * graph from the bounded [[graft.operators.Hnsw.WalkCache]]:
   * pgvector's parse-into-shared_buffers-once, walk-in-the-backend
-  * shape. It then injects
-  * `id IN (<candidate ids>)` above the table scan — the Sort+Limit on
-  * top then ranks the ≤ k·P survivors by EXACT distance, so the served
-  * result is the exact top-k OF the graph candidates (recall = HNSW
-  * recall, gated in VectorIndexDdlSpec).
+  * shape.
+  *
+  * The rewrite: the candidate ids go in as `InSet(id, <candidates>)`
+  * directly above the table scan, and the matched limits, Project and
+  * Sort become one [[HnswTopK]] node, which [[HnswTopKStrategy]] plans
+  * as [[HnswTopKExec]]: one Spark job ranks the ≤ k·P survivors by
+  * EXACT distance, so the served result is the exact top-k OF the
+  * graph candidates (recall = HNSW recall, gated in
+  * VectorIndexDdlSpec). The node is the rule's fixed-point marker.
+  * The candidate filter is an `InSet` rather than an `In` because
+  * Spark generates code for a long-typed `InSet` that holds the set by
+  * reference, while an `In` inlines every id, so each new query vector
+  * would compile two new classes. This rule runs after Spark's
+  * OptimizeIn, so nothing else turns the list into a set.
+  * Known limit: Spark generates an `InSet` over an IntegerType column
+  * of at most `spark.sql.optimizer.inSetSwitchThreshold` (400) values
+  * as a `switch` with the ids inlined, so an index whose id column is
+  * an int still compiles once per query.
+  *
+  * A user IN list on the id column (an `In`, or the `InSet` OptimizeIn
+  * makes of more than ten values) keeps the exact plan.
   *
   * pgvector session knob: `SET hnsw.ef_search = N` (create-env-en.sh
   * context) is read at rewrite time — it widens the beam AND, as in
   * pgvector, caps the per-graph candidate count at N, so
-  * `ef_search < k` visibly shrinks the injected IN list.
+  * `ef_search < k` visibly shrinks the injected candidate set.
   *
   * Scale shape: rewrite cost is P beam walks over cached graphs plus
   * one store listing for the staleness check (corpus-size-independent
@@ -53,9 +69,14 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * compressed blobs on the driver (the DDL's store lives in the
   * driver's `java.io.tmpdir`), so a store must fit there; a graph
   * larger than the WalkCache bound is re-parsed on each probe. The
-  * injected IN list is k·P ids — KB-scale plan metadata. The table
-  * scan then reads only the candidate rows' row groups (the IN filter
-  * reaches the parquet scan as PushedFilters).
+  * candidate set is k·P ids — KB-scale plan metadata. It reaches the
+  * parquet scan as PushedFilters, which prunes by row-group (and, with
+  * parquet's column index, page) min/max statistics on the id column:
+  * the scan skips only the row groups whose id range holds no
+  * candidate. So it reads fewer rows only when the table has many row
+  * groups, each holding a narrow id range; a table written as one row
+  * group per file with ids spread across files is read in full (5,000
+  * of 5,000 rows on the perfbench corpus).
   */
 object HnswProbeRule {
 
@@ -74,6 +95,10 @@ object HnswProbeRule {
   /** Test hook: whether `path`'s blobs are memoized. */
   private[graft] def memoized(path: String): Boolean = graft.operators.Hnsw.storeMemoized(path)
 
+  /** Idempotent per-session installation, by the hnsw DDL. The
+    * [[HnswTopK]] nodes the rule makes are planned by
+    * [[HnswTopKStrategy]], which [[graft.GraftExtensions]] injects
+    * (the DDL parses only in a session that has them). */
   def install(spark: SparkSession): Unit = {
     val cur = spark.experimental.extraOptimizations
     if (!cur.exists(_.isInstanceOf[HnswProbeRule])) {
@@ -86,7 +111,17 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan = plan transform {
     case gl @ GlobalLimit(Literal(k: Int, IntegerType), _) =>
-      ProbeMatch.rewriteTopK(gl)(rewrite(_, k))
+      (for {
+        (projects, srt) <- ProbeMatch.topK(gl)
+        probed <- probe(srt, k)
+      } yield {
+        // the Project right above the Sort folds into the node, as
+        // Spark folds it into TakeOrderedAndProject
+        val (outer, projectList) =
+          if (projects.isEmpty) (Nil, srt.output)
+          else (projects.init, projects.last.projectList)
+        ProbeMatch.wrap(outer, HnswTopK(k, srt.order, projectList, probed))
+      }).getOrElse(gl)
   }
 
   /** pgvector's `SET hnsw.ef_search` (default 40 and range 1..1000,
@@ -113,7 +148,7 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     *    keeps its own top-`fetch` (budget P× pgvector's, documented
     *    at [[maxScanTuples]]), so under a tight budget the candidate
     *    set is NOT a global distance prefix. Output ORDER is still
-    *    exact in both modes (Spark's Sort re-ranks survivors —
+    *    exact in both modes ([[HnswTopKExec]] re-ranks survivors —
     *    a batch engine cannot emit out of order).
     *
     * DEFAULT `relaxed_order`, a named deviation from pgvector's `off`
@@ -153,7 +188,9 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
   private def maxScanTuples: Int =
     ProbeMatch.intKnob(session, "hnsw.max_scan_tuples", 1, Int.MaxValue).getOrElse(20000)
 
-  private def rewrite(srt: Sort, k: Int): Option[Sort] =
+  /** The Sort's child with the graph candidates injected, when the
+    * sort's leading key is served by a registered index. */
+  private def probe(srt: Sort, k: Int): Option[LogicalPlan] =
     for {
       head <- srt.order.headOption
       if head.direction == org.apache.spark.sql.catalyst.expressions.Ascending
@@ -161,7 +198,7 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
       vecAttr <- resolveToAttribute(key.colSide, srt.child)
       if session.conf.get(HnswProbeRule.EvalKey, "true").toBoolean
       rewritten <- injectCandidates(srt.child, vecAttr, key, k)
-    } yield srt.copy(child = rewritten)
+    } yield rewritten
 
   /** One recognized index-servable sort key: the column side, the
     * literal query (bit metrics: the packed words EXPANDED to the 0/1
@@ -304,18 +341,19 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     val iterMode = iterativeScan
     var done = false
     val out = plan transform {
-      case lr: LogicalRelation if !done && !hasProbeAbove(plan, lr) =>
+      case lr: LogicalRelation if !done =>
         (for {
           entry <- matchEntry(lr, vecAttr, key)
           idAttr <- lr.output.find(_.name == entry.idCol)
           if idAttr.dataType == LongType || idAttr.dataType == IntegerType
+          if !hasIdList(plan, lr, idAttr)
           // a user predicate between sort and scan filters the
           // candidates post-hoc — over-fetch per graph so the survivor
           // set can still fill k (the statically bounded
           // iterative-scan analogue, as in Hnsw.searchFiltered and the
           // IVF rule's widening). pgvector caps the candidate list at
           // ef_search, so `SET hnsw.ef_search` below k visibly shrinks
-          // the injected IN list.
+          // the injected candidate set.
           iterating = hasUserFilter(plan, lr) && iterMode != "off"
           widen = if (iterating) 8 else 1
           ef = efSearch
@@ -343,11 +381,11 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
           if ids.nonEmpty
         } yield {
           done = true
-          val lits = ids.sorted.toIndexedSeq.map[Expression] { id =>
-            if (idAttr.dataType == LongType) Literal(id, LongType)
-            else Literal(id.toInt, IntegerType)
-          }
-          Filter(In(idAttr, lits), lr)
+          // an InSet, not an In: see the object doc
+          val set: Set[Any] =
+            if (idAttr.dataType == LongType) ids.iterator.map(id => id: Any).toSet
+            else ids.iterator.map(id => id.toInt: Any).toSet
+          Filter(InSet(idAttr, set), lr)
         }).getOrElse(lr)
     }
     if (done) Some(out) else None
@@ -439,18 +477,20 @@ final class HnswProbeRule(session: SparkSession) extends Rule[LogicalPlan] {
     } catch { case scala.util.control.NonFatal(_) => None }
   }
 
-  /** Fixed-point guard: an IN-on-the-id-column filter above this scan
-    * means the probe already fired (a USER id-IN filter also
-    * suppresses the probe — conservative: the exact plan is always
-    * correct). */
-  private def hasProbeAbove(plan: LogicalPlan, lr: LogicalRelation): Boolean =
+  /** A user IN list on the id column above this scan (an `In`, or
+    * the `InSet` Spark's OptimizeIn makes of a long one), or the
+    * candidate set an enclosing probe already injected, keeps the
+    * exact plan: conservative, since the exact plan is always
+    * correct. */
+  private def hasIdList(plan: LogicalPlan, lr: LogicalRelation,
+      idAttr: AttributeReference): Boolean =
     plan.collect {
-      case Filter(cond, child) if cond.exists {
-        case In(a: AttributeReference, _) =>
-          HnswSqlCatalog.all.exists(_._2.idCol == a.name)
-        case _ => false
-      } && child.collectLeaves().exists(_ eq lr) => true
-    }.nonEmpty
+      case Filter(cond, child) if child.collectLeaves().exists(_ eq lr) => cond
+    }.exists(_.exists {
+      case In(a: AttributeReference, _) => a.exprId == idAttr.exprId
+      case InSet(a: AttributeReference, _) => a.exprId == idAttr.exprId
+      case _ => false
+    })
 
   private def hasUserFilter(plan: LogicalPlan, lr: LogicalRelation): Boolean =
     plan.collect {

@@ -15,32 +15,40 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
 private[plans] object ProbeMatch {
 
   /** GlobalLimit▸LocalLimit▸global Sort — the top-k shape — with any
-    * Project nodes between LocalLimit and Sort peeled (a projection
-    * after the knn, e.g. a user `.select(...)`, optimizes into that
-    * spot) and re-wrapped unchanged around the rewritten Sort. Returns
-    * `gl` itself when the shape or `rewrite` does not match. */
-  def rewriteTopK(gl: GlobalLimit)(rewrite: Sort => Option[Sort]): LogicalPlan =
+    * Project nodes between LocalLimit and Sort (a projection after the
+    * knn, e.g. a user `.select(...)`, optimizes into that spot) peeled
+    * off, outermost first. */
+  def topK(gl: GlobalLimit): Option[(List[Project], Sort)] =
     gl.child match {
       case ll: LocalLimit =>
-        val (rewrap, core) = peelProjects(ll.child)
+        val (projects, core) = peelProjects(ll.child)
         core match {
-          case srt: Sort if srt.global =>
-            rewrite(srt)
-              .map(s => gl.withNewChildren(Seq(ll.withNewChildren(Seq(rewrap(s))))))
-              .getOrElse(gl)
-          case _ => gl
+          case srt: Sort if srt.global => Some((projects, srt))
+          case _ => None
         }
-      case _ => gl
+      case _ => None
     }
 
-  /** Peel consecutive Project nodes, returning a function that
-    * re-wraps a replacement plan in the same projections. */
-  private def peelProjects(p: LogicalPlan): (LogicalPlan => LogicalPlan, LogicalPlan) =
+  /** Re-wrap `plan` in `projects`, outermost first. */
+  def wrap(projects: List[Project], plan: LogicalPlan): LogicalPlan =
+    projects.foldRight(plan)((p, child) => p.withNewChildren(Seq(child)))
+
+  /** [[topK]] with the Sort replaced by `rewrite` and the limits and
+    * projections re-wrapped unchanged around it. Returns `gl` itself
+    * when the shape or `rewrite` does not match. */
+  def rewriteTopK(gl: GlobalLimit)(rewrite: Sort => Option[Sort]): LogicalPlan =
+    (for {
+      (projects, srt) <- topK(gl)
+      rewritten <- rewrite(srt)
+    } yield gl.withNewChildren(Seq(gl.child.withNewChildren(Seq(wrap(projects, rewritten))))))
+      .getOrElse(gl)
+
+  private def peelProjects(p: LogicalPlan): (List[Project], LogicalPlan) =
     p match {
       case proj: Project =>
         val (inner, core) = peelProjects(proj.child)
-        (child => proj.withNewChildren(Seq(inner(child))), core)
-      case other => (identity, other)
+        (proj :: inner, core)
+      case other => (Nil, other)
     }
 
   /** Follow an attribute through Project aliases down the child chain. */

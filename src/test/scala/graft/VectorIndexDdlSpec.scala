@@ -124,12 +124,7 @@ class VectorIndexDdlSpec extends SparkSpec {
             LIMIT 10""")
       val got = df.collect().map(_.getLong(0)).toSeq
       assert(got.length == 10)
-      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
-      val probed = df.queryExecution.optimizedPlan.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          f.condition.collect {
-            case In(a: AttributeReference, _) if a.name == "vec_id" => true }
-      }.flatten.nonEmpty
+      val probed = candidateIds(df, "vec_id").nonEmpty
       assert(probed, "halfvec hnsw index did not serve the <-> sort")
       val exact = graft.operators.Knn.topK(
         Tables.embeddings(s, Sf), "vec_id", "embedding",
@@ -227,14 +222,7 @@ class VectorIndexDdlSpec extends SparkSpec {
         .select(col("embedding").cast("array<double>"))
         .head.getSeq[Double](0)
       val vecText = vec.mkString("[", ",", "]")
-      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
-      def probed(df: org.apache.spark.sql.DataFrame): Boolean =
-        df.queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition.collect {
-              case In(a: AttributeReference, _) if a.name == "vec_id" => true
-            }
-        }.flatten.nonEmpty
+      def probed(df: org.apache.spark.sql.DataFrame): Boolean = candidateIds(df, "vec_id").nonEmpty
       def recallVs(got: Seq[Long],
           distFn: (org.apache.spark.sql.Column, org.apache.spark.sql.Column) => org.apache.spark.sql.Column): Double = {
         val exact = graft.operators.Knn.topK(
@@ -302,14 +290,7 @@ class VectorIndexDdlSpec extends SparkSpec {
         Tables.embeddings(s, Sf).filter(col("vec_id") === 0)
           .select(col("embedding").cast("array<double>"))
           .head.getSeq[Double](0).toArray)
-      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
-      def probed(df: org.apache.spark.sql.DataFrame): Boolean =
-        df.queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition.collect {
-              case In(a: AttributeReference, _) if a.name == "vec_id" => true
-            }
-        }.flatten.nonEmpty
+      def probed(df: org.apache.spark.sql.DataFrame): Boolean = candidateIds(df, "vec_id").nonEmpty
       import org.apache.spark.sql.GraftSqlBridge.{toColumn, toExpression}
 
       // --- hamming (<~> ↔ bit_hamming_ops)
@@ -511,13 +492,7 @@ class VectorIndexDdlSpec extends SparkSpec {
               col("sidx"), col("sval"), qi, qv)).as("dist"))
         .orderBy(col("dist"), col("doc_id"))
         .limit(10)
-      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
-      val hasIdIn = probedDf.queryExecution.optimizedPlan.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          f.condition.collect {
-            case In(a: AttributeReference, _) if a.name == "doc_id" => true
-          }
-      }.flatten.nonEmpty
+      val hasIdIn = candidateIds(probedDf, "doc_id").nonEmpty
       assert(hasIdIn, "sparse sort key not served by the hnsw probe rule:\n" +
         probedDf.queryExecution.optimizedPlan)
       // served-through-the-rule results match the direct graph walk's
@@ -535,12 +510,7 @@ class VectorIndexDdlSpec extends SparkSpec {
             graft.functions.SparseVec.cosineSimilarity(
               col("sidx"), col("sval"), qi, qv)).as("dist"))
         .orderBy(col("dist"), col("doc_id")).limit(10)
-      val stillProbed = after.queryExecution.optimizedPlan.collect {
-        case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-          f.condition.collect {
-            case In(a: AttributeReference, _) if a.name == "doc_id" => true
-          }
-      }.flatten.nonEmpty
+      val stillProbed = candidateIds(after, "doc_id").nonEmpty
       assert(!stillProbed, "sparse probe still firing after DROP INDEX")
     }
   }
@@ -564,14 +534,7 @@ class VectorIndexDdlSpec extends SparkSpec {
           (lit(1.0) - graft.functions.SparseVec.cosineSimilarity(
             col("sidx"), col("sval"), qi, qv)).as("dist"))
         .orderBy(col("dist"), col("doc_id")).limit(5)
-      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
-      def inListSize(df: org.apache.spark.sql.DataFrame): Int =
-        df.queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition.collect {
-              case In(a: AttributeReference, list) if a.name == "doc_id" => list.size
-            }
-        }.flatten.foldLeft(0)(math.max)
+      def inListSize(df: org.apache.spark.sql.DataFrame): Int = candidateIds(df, "doc_id").size
       val plainList = inListSize(sorted(s.table("ddl_sparse_w")))
       assert(plainList > 0, "sparse probe inactive on the plain top-k")
       // a metadata predicate between sort and scan widens the sparse
@@ -657,14 +620,7 @@ class VectorIndexDdlSpec extends SparkSpec {
       val plain = s"""SELECT vec_id FROM ddl_hnsw_sc
                   ORDER BY embedding <-> '${vec.mkString("[", ",", "]")}'::vector
                   LIMIT 5"""
-      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
-      def inListSize(df: org.apache.spark.sql.DataFrame): Int =
-        df.queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition.collect {
-              case In(a: AttributeReference, list) if a.name == "vec_id" => list.size
-            }
-        }.flatten.foldLeft(0)(math.max)
+      def inListSize(df: org.apache.spark.sql.DataFrame): Int = candidateIds(df, "vec_id").size
       val defaultList = inListSize(s.sql(plain))
       assert(defaultList > 0, "probe inactive on the plain top-k")
       // ADVICE r14: the cap bounds ONLY iterative (filtered) scans —
@@ -712,16 +668,7 @@ class VectorIndexDdlSpec extends SparkSpec {
                   WHERE label = 3
                   ORDER BY embedding <-> '${vec.mkString("[", ",", "]")}'::vector
                   LIMIT 5"""
-      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
-      def inList(df: org.apache.spark.sql.DataFrame): Seq[Long] =
-        df.queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition.collect {
-              case In(a: AttributeReference, list) if a.name == "vec_id" =>
-                list.map(_.asInstanceOf[org.apache.spark.sql.catalyst
-                  .expressions.Literal].value.asInstanceOf[Long])
-            }
-        }.flatten.maxByOption(_.size).getOrElse(Nil)
+      def inList(df: org.apache.spark.sql.DataFrame): Seq[Long] = candidateIds(df, "vec_id")
       try {
         // first capture the UNTRUNCATED per-graph union (a budget far
         // above the 4 graphs' combined fetch) — the reference set the
@@ -802,14 +749,7 @@ class VectorIndexDdlSpec extends SparkSpec {
             .as("dist"))
         .orderBy(col("dist"), col("doc_id"))
         .limit(10)
-      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
-      def hasIdIn(df: org.apache.spark.sql.DataFrame): Boolean =
-        df.queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition.collect {
-              case In(a: AttributeReference, _) if a.name == "doc_id" => true
-            }
-        }.flatten.nonEmpty
+      def hasIdIn(df: org.apache.spark.sql.DataFrame): Boolean = candidateIds(df, "doc_id").nonEmpty
       assert(hasIdIn(probedDf), "sparse L2 sort key not served:\n" +
         probedDf.queryExecution.optimizedPlan)
       // top-1 agreement with the exact union-merge scan (integer
@@ -872,14 +812,7 @@ class VectorIndexDdlSpec extends SparkSpec {
                WITH (m = 8, ef_construction = 48, parts = 2, id = 'doc_id')""")
       val ent = HnswSqlCatalog.get("idx_sp_struct").get
       assert(ent.storage == "sparsevec" && ent.vecCol == "sv" && ent.metric == "l2")
-      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
-      def hasIdIn(df: org.apache.spark.sql.DataFrame): Boolean =
-        df.queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition.collect {
-              case In(a: AttributeReference, _) if a.name == "doc_id" => true
-            }
-        }.flatten.nonEmpty
+      def hasIdIn(df: org.apache.spark.sql.DataFrame): Boolean = candidateIds(df, "doc_id").nonEmpty
       val qText = "{3:2,17:1,40:3}/" + D
       // pgvector's verbatim one-column form, served from the graph
       val served = s.sql(
@@ -938,14 +871,7 @@ class VectorIndexDdlSpec extends SparkSpec {
       val q = Tables.embeddings(s, Sf).filter(col("vec_id") === 0)
         .select(col("embedding").cast("array<double>")).head.getSeq[Double](0).toArray
       val qHalf = graft.functions.Half.unpackToDouble(graft.functions.Half.pack(q))
-      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
-      def hasIdIn(df: org.apache.spark.sql.DataFrame): Boolean =
-        df.queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition.collect {
-              case In(a: AttributeReference, _) if a.name == "vec_id" => true
-            }
-        }.flatten.nonEmpty
+      def hasIdIn(df: org.apache.spark.sql.DataFrame): Boolean = candidateIds(df, "vec_id").nonEmpty
       def knnDf(mode: Int) = s.table("ddl_hv_sidecar")
         .select(col("vec_id"), toColumn(graft.functions.HalfDistExpr(
           toExpression(col("hv")), qHalf, mode)).as("dist"))
@@ -1095,14 +1021,8 @@ class VectorIndexDdlSpec extends SparkSpec {
         // the candidate filter reached the optimized plan as an IN on
         // the id column over the ORIGINAL table scan (hnsw never
         // rebinds the table)
-        import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
-        val inLists = df.queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition.collect {
-              case In(a: AttributeReference, list) if a.name == "vec_id" => list.size
-            }
-        }.flatten
-        assert(inLists.nonEmpty, s"no injected vec_id IN filter:\n${df.queryExecution.optimizedPlan}")
+        val inLists = candidateIds(df, "vec_id")
+        assert(inLists.nonEmpty, s"no injected vec_id candidate filter:\n${df.queryExecution.optimizedPlan}")
         val scans = df.queryExecution.executedPlan.collect {
           case sc: FileSourceScanExec => sc }
         assert(scans.exists(_.relation.location.rootPaths.exists(
@@ -1135,6 +1055,29 @@ class VectorIndexDdlSpec extends SparkSpec {
     Tables.embeddings(s, Sf).filter(col("vec_id") === id)
       .select(col("embedding").cast("array<double>"))
       .head.getSeq[Double](0)
+
+  /** The candidate ids on `idCol` in `df`'s optimized plan: the
+    * largest id list of any Filter, read from an `In` or an `InSet`,
+    * sorted; empty when there is none. */
+  private def candidateIds(df: org.apache.spark.sql.DataFrame, idCol: String): Seq[Long] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In, InSet, Literal}
+    df.queryExecution.optimizedPlan.collect {
+      case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
+        f.condition.collect {
+          case In(a: AttributeReference, list) if a.name == idCol =>
+            list.collect { case Literal(v: Number, _) => v.longValue }
+          case InSet(a: AttributeReference, set) if a.name == idCol =>
+            set.toSeq.map(_.asInstanceOf[Number].longValue)
+        }
+    }.flatten.map(_.sorted).maxByOption(_.size).getOrElse(Nil)
+  }
+
+  /** Janino compilations (Spark's codegen metric) while `body` runs. */
+  private def compiledDuring(body: => Unit): Long = {
+    val before = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    body
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+  }
 
   /** Spark jobs this thread starts while `body` runs. A sentinel job
     * in another group flushes the listener: events arrive in posting
@@ -1258,14 +1201,10 @@ class VectorIndexDdlSpec extends SparkSpec {
                WITH (m = 8, ef_construction = 32, parts = 2, id = 'vec_id')""")
       s.sql("SET hnsw.ef_search = 200")
       try {
-        import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
         val qs = (0L until 8L).map(i => verbatimTop5("ddl_hnsw_conc", embeddingOf(s, i)))
         def ids(i: Int): Seq[Long] = s.sql(qs(i)).collect().map(_.getLong(0)).toSeq
-        // the injected candidate list: the walk's output, bit for bit
-        def candidates(i: Int): Seq[String] =
-          s.sql(qs(i)).queryExecution.optimizedPlan.flatMap(_.expressions.flatMap(_.collect {
-            case In(a: AttributeReference, list) if a.name == "vec_id" => list.map(_.sql)
-          })).flatten
+        // the injected candidate set: the walk's output, bit for bit
+        def candidates(i: Int): Seq[Long] = candidateIds(s.sql(qs(i)), "vec_id")
         val serialIds = qs.indices.map(ids)
         val serialCands = qs.indices.map(candidates)
         assert(serialCands.forall(_.nonEmpty), "probe did not fire")
@@ -1309,6 +1248,107 @@ class VectorIndexDdlSpec extends SparkSpec {
     }
   }
 
+  test("exact top-k on an unindexed table compiles no class per query") {
+    withExtSession { s =>
+      HnswSqlCatalog.clear()
+      Tables.embeddings(s, Sf).createOrReplaceTempView("ddl_exact_cg")
+      val qs = (0L until 13L).map(i => verbatimTop5("ddl_exact_cg", embeddingOf(s, i)))
+      qs.take(3).foreach(q => s.sql(q).collect())
+      val compiled = compiledDuring(qs.drop(3).foreach(q => assert(s.sql(q).collect().length == 5)))
+      assert(compiled == 0, s"10 exact top-k queries compiled $compiled classes")
+    }
+  }
+
+  test("hnsw probe: warm verbatim probes compile no class and run one Spark job each") {
+    withExtSession { s =>
+      HnswSqlCatalog.clear()
+      Tables.embeddings(s, Sf).createOrReplaceTempView("ddl_hnsw_cg")
+      assert(s.table("ddl_hnsw_cg").schema("vec_id").dataType ==
+        org.apache.spark.sql.types.LongType)
+      s.sql("""CREATE INDEX idx_hnsw_cg ON ddl_hnsw_cg
+               USING hnsw (embedding vector_l2_ops)
+               WITH (m = 8, ef_construction = 32, parts = 4, id = 'vec_id')""")
+      def query(v: Seq[Double]): String =
+        s"""SELECT vec_id, label FROM ddl_hnsw_cg
+            ORDER BY embedding <-> '${v.mkString("[", ",", "]")}'::vector LIMIT 5"""
+      val qs = (0L until 13L).map(i => query(embeddingOf(s, i)))
+      try {
+        qs.take(3).foreach(q => s.sql(q).collect())
+        val served = scala.collection.mutable.ArrayBuffer.empty[(Seq[org.apache.spark.sql.Row], Int)]
+        val compiled = compiledDuring(qs.drop(3).foreach { q =>
+          var rows: Seq[org.apache.spark.sql.Row] = Nil
+          val jobs = jobsStartedBy(s) { rows = s.sql(q).collect().toSeq }
+          served += ((rows, jobs))
+        })
+        assert(compiled == 0, s"10 warm probes with distinct vectors compiled $compiled classes")
+        assert(served.forall(_._2 == 1), s"jobs per probe: ${served.map(_._2)}")
+        // each probe's rows: the exact top-k of its own candidates
+        qs.drop(3).zip(served).foreach { case (q, (rows, _)) =>
+          val cands = candidateIds(s.sql(q), "vec_id")
+          assert(cands.nonEmpty, "probe did not fire")
+          s.conf.set(graft.plans.HnswProbeRule.EvalKey, "false")
+          val want = try s.sql(q.replace("ORDER BY",
+              s"WHERE vec_id IN (${cands.mkString(", ")}) ORDER BY")).collect().toSeq
+            finally s.conf.unset(graft.plans.HnswProbeRule.EvalKey)
+          assert(rows.length == 5 && rows == want, s"probe rows $rows vs candidate top-k $want")
+        }
+        // the same query through execute(): count(), show() and the rdd
+        val df = s.sql(qs.last)
+        assert(df.count() == 5)
+        df.show()
+        assert(df.rdd.collect().toSeq == served.last._1)
+      } finally s.sql("DROP INDEX idx_hnsw_cg")
+    }
+  }
+
+  test("hnsw probe: a user id IN list keeps the exact plan") {
+    withExtSession { s =>
+      import graft.plans.{HnswTopK, HnswTopKExec}
+      import org.apache.spark.sql.catalyst.expressions.{In, InSet}
+      HnswSqlCatalog.clear()
+      Tables.embeddings(s, Sf).createOrReplaceTempView("ddl_hnsw_userin")
+      s.sql("""CREATE INDEX idx_hnsw_userin ON ddl_hnsw_userin
+               USING hnsw (embedding vector_l2_ops)
+               WITH (m = 8, ef_construction = 32, parts = 4, id = 'vec_id')""")
+      val v = embeddingOf(s, 0)
+      def topKNodes(df: org.apache.spark.sql.DataFrame): Int =
+        df.queryExecution.optimizedPlan.collect { case t: HnswTopK => t }.size
+      try {
+        // the control: without a user list the index serves the query,
+        // planned as HnswTopKExec and not as TakeOrderedAndProjectExec
+        val plain = s.sql(verbatimTop5("ddl_hnsw_userin", v))
+        assert(topKNodes(plain) == 1)
+        val exec = plain.queryExecution.executedPlan
+        assert(exec.collect { case e: HnswTopKExec => e }.size == 1, exec.toString)
+        assert(exec.collect {
+          case e: org.apache.spark.sql.execution.TakeOrderedAndProjectExec => e }.isEmpty)
+        val ids = Tables.embeddings(s, Sf).select("vec_id").orderBy("vec_id")
+          .collect().map(_.getLong(0)).toSeq
+        Seq(5, 20).foreach { n =>
+          val list = ids.grouped(ids.size / n).map(_.head).take(n).toSeq
+          val q = verbatimTop5("ddl_hnsw_userin", v)
+            .replace("ORDER BY", s"WHERE vec_id IN (${list.mkString(", ")}) ORDER BY")
+          val df = s.sql(q)
+          val conds = df.queryExecution.optimizedPlan.collect {
+            case f: org.apache.spark.sql.catalyst.plans.logical.Filter => f.condition }
+          // 5 ids stay an In; 20 become an InSet in Spark's OptimizeIn
+          assert(conds.exists(_.exists {
+            case _: In => n == 5
+            case _: InSet => n == 20
+            case _ => false
+          }), s"$n ids: ${conds.mkString("; ")}")
+          assert(topKNodes(df) == 0, s"$n-id user list was probed:\n${df.queryExecution.optimizedPlan}")
+          assert(candidateIds(df, "vec_id") == list.sorted)
+          val got = df.collect().map(_.getLong(0)).toSeq
+          s.conf.set(graft.plans.HnswProbeRule.EvalKey, "false")
+          val want = try s.sql(q).collect().map(_.getLong(0)).toSeq
+            finally s.conf.unset(graft.plans.HnswProbeRule.EvalKey)
+          assert(got.length == 5 && got == want, s"$n ids: $got vs exact $want")
+        }
+      } finally s.sql("DROP INDEX idx_hnsw_userin")
+    }
+  }
+
   test("hnsw probe soundness: metric mismatch and probeEval=false keep the exact plan") {
     withExtSession { s =>
       graft.plans.HnswSqlCatalog.clear()
@@ -1322,14 +1362,7 @@ class VectorIndexDdlSpec extends SparkSpec {
         .select(col("embedding").cast("array<double>"))
         .head.getSeq[Double](0)
       val vecText = vec.mkString("[", ",", "]")
-      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
-      def probed(df: org.apache.spark.sql.DataFrame): Boolean =
-        df.queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition.collect {
-              case In(a: AttributeReference, _) if a.name == "vec_id" => true
-            }
-        }.flatten.nonEmpty
+      def probed(df: org.apache.spark.sql.DataFrame): Boolean = candidateIds(df, "vec_id").nonEmpty
       val cosine = s.sql(
         s"""SELECT vec_id FROM ddl_hnsw_neg
             ORDER BY embedding <=> '$vecText'::vector LIMIT 5""")
@@ -1366,14 +1399,11 @@ class VectorIndexDdlSpec extends SparkSpec {
       val q = s"""SELECT vec_id FROM ddl_hnsw_ef
                   ORDER BY embedding <-> '${vec.mkString("[", ",", "]")}'::vector
                   LIMIT 5"""
-      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
-      def inListSize(df: org.apache.spark.sql.DataFrame): Int =
-        df.queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition.collect {
-              case In(a: AttributeReference, list) if a.name == "vec_id" => list.size
-            }
-        }.flatten.max
+      def inListSize(df: org.apache.spark.sql.DataFrame): Int = {
+        val ids = candidateIds(df, "vec_id")
+        assert(ids.nonEmpty, "probe did not fire")
+        ids.size
+      }
       val wide = s.sql(q)
       assert(wide.collect().length == 5)
       val wideList = inListSize(wide)
@@ -1406,14 +1436,7 @@ class VectorIndexDdlSpec extends SparkSpec {
                   WHERE label = 3
                   ORDER BY embedding <-> '${vec.mkString("[", ",", "]")}'::vector
                   LIMIT 5"""
-      import org.apache.spark.sql.catalyst.expressions.{AttributeReference, In}
-      def inListSize(df: org.apache.spark.sql.DataFrame): Int =
-        df.queryExecution.optimizedPlan.collect {
-          case f: org.apache.spark.sql.catalyst.plans.logical.Filter =>
-            f.condition.collect {
-              case In(a: AttributeReference, list) if a.name == "vec_id" => list.size
-            }
-        }.flatten.foldLeft(0)(math.max)
+      def inListSize(df: org.apache.spark.sql.DataFrame): Int = candidateIds(df, "vec_id").size
       val wideList = inListSize(s.sql(q))
       assert(wideList > 5, s"filtered over-fetch inactive by default ($wideList)")
       // off: no widening — the pgvector off-mode may under-fill k

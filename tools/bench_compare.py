@@ -21,10 +21,16 @@ is compared with warm. A flip with no such entry is listed under
 
 Each remaining row is classified by NEW/BASE time:
   regressed  NEW > BASE * 1.10 and NEW - BASE > 0.05 s
+             and NEW / BASE > both arms' spread
   improved   NEW < BASE / 1.10 and BASE - NEW > 0.05 s
+             and BASE / NEW > both arms' spread
   flat       otherwise
 The absolute floor keeps scheduler jitter on fast rows out of both
-lists.
+lists. A row's spread is max / min of its times across the runs an
+artifact merged (the "spread" map bench_merge_min.py writes); a
+single-run artifact has none and counts as 1.0. Rows that pass the
+10 % and 0.05 s rule but not the spread rule are listed as "within
+spread": the change is no larger than the row's own run-to-run noise.
 
 Inputs may be a raw {"metric":"total",...} line (a bench_out.json or a
 bench_merge_min.py output), an sbt-prefixed capture of that line, or a
@@ -108,13 +114,16 @@ def main():
             flips.append(r)
     clean = [r for r in clean if r not in flips]
 
-    regressed, improved = [], []
+    def floor(r):
+        return max(base.get("spread", {}).get(r, 1.0), new.get("spread", {}).get(r, 1.0))
+
+    regressed, improved, within = [], [], []
     for r in clean:
         b, n = bq[r], nq[r]
         if n > b * (1 + RATIO) and n - b > FLOOR_S:
-            regressed.append(r)
+            (regressed if b > 0 and n / b > floor(r) else within).append(r)
         elif n * (1 + RATIO) < b and b - n > FLOOR_S:
-            improved.append(r)
+            (improved if n > 0 and b / n > floor(r) else within).append(r)
 
     def show(title, rows):
         print(f"{title} ({len(rows)}):")
@@ -124,6 +133,11 @@ def main():
 
     show("regressed", regressed)
     show("improved", improved)
+    if within:
+        print(f"within spread, left flat ({len(within)}):")
+        for r in sorted(within):
+            print(f"  {r:40s} {bq[r]:9.3f} -> {nq[r]:9.3f}  x{nq[r] / bq[r]:.3f}  "
+                  f"spread x{floor(r):.3f}")
     if flips:
         print(f"mode flips, left out ({len(flips)}):")
         for r in flips:
@@ -146,7 +160,8 @@ def main():
     ratio = tn / tb if tb > 0 else float("nan")
     print(f"clean rows: {len(clean)}  total {tb:.3f} -> {tn:.3f} s  x{ratio:.3f}  "
           f"({len(regressed)} regressed, {len(improved)} improved, "
-          f"{len(clean) - len(regressed) - len(improved)} flat)")
+          f"{len(clean) - len(regressed) - len(improved)} flat, {len(within)} of them "
+          f"within spread)")
 
 
 if __name__ == "__main__":

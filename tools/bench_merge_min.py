@@ -12,6 +12,9 @@ The output keeps the artifact shape plus:
   runs:    N (how many runs the minima were taken over)
   basis:   "per-entry min across N runs"
   per_run: each run's own total/canary/io/calib stamps, for auditing
+  spread:  per row, max / min of its times across the N runs: the
+           row's own noise floor, which tools/bench_compare.py uses
+           (rows that failed, -1, in any run have none)
 
 "queries" takes the per-entry minimum — contention hits different
 entries in different runs, which is exactly why min-of-totals (or
@@ -74,6 +77,8 @@ def main():
         if any(mode in r for r in runs):
             out[mode] = {k: r[mode][k] for k, r in best.items()
                          if k in r.get(mode, {})}
+    out["spread"] = {k: round(max(r["queries"][k] for r in runs) / merged_q[k], 3)
+                     for k in merged_q if merged_q[k] > 0}
     out["value"] = round(sum(merged_q.values()), 3)
     out["runs"] = len(runs)
     out["basis"] = f"per-entry min across {len(runs)} runs"
